@@ -45,6 +45,32 @@ Two implementations:
   small/frequent batches (:func:`keyed_merge_mor`: O(batch) delta-file
   commits, reader-side precedence, :func:`compact_keyed_table` to fold —
   the Iceberg-MOR/Delta-DV idea; see the MOR section below).
+
+  **Commit kernel.**  Every commit that writes data files goes through
+  one private routine, :func:`_commit_files`: write the frame bucketed
+  under a fresh ``data/<commit>`` directory, list what landed, build
+  the next manifest from the base snapshot (stamp superseded files as
+  retired, carry retirees that still exist, keep stats/blooms of
+  surviving files and compute stats for new ones, record the schema),
+  and publish it through :func:`_commit_optimistic`.  Each public path
+  supplies only its row scope and one of three manifest edits:
+
+  - *replace buckets* — a listed subset (:func:`keyed_overwrite_parquet`,
+    :func:`compact_keyed_table`, :func:`optimize_keyed_table`) or every
+    bucket (a table's first commit, :func:`rebucket_keyed_table`,
+    :func:`widen_keyed_table`, :func:`purge_column_mapping`,
+    :func:`cluster_keyed_table`, :func:`zorder_keyed_table`);
+  - *add base files* — :func:`keyed_append`;
+  - *add delta files* — :func:`keyed_merge_mor`,
+    :func:`keyed_delete_where`, :func:`keyed_update_where`,
+    :func:`merge_into`, :func:`apply_changes`.
+
+  Conflict rules: the CoW merge and the append rebase over any commit
+  that leaves their affected buckets, the bucket count and their txn
+  watermark unchanged; delta commits rebase only over row-preserving
+  commits (``_REBASE_SAFE_OPS``) that leave the buckets they write
+  unchanged (the blind MOR upsert guards no bucket); the maintenance
+  rewrites rebase over nothing — any intervening commit fails them.
 - **JDBC (Postgres) stage-then-merge**: stage the batch with
   ``df.write.jdbc`` (parallel INSERT at COPY-like speed), then one
   driver-side transaction ``DELETE target USING stage; INSERT SELECT`` —
@@ -703,15 +729,21 @@ def _commit_optimistic(
     for attempt in range(OPTIMISTIC_RETRIES + 1):
         manifest = build(base)
         try:
+            # a base without a version is the empty table: initial commit
             _commit_manifest(
-                target, manifest, expected_version=base["version"], store=store
+                target, manifest, expected_version=base.get("version"),
+                store=store,
             )
             return manifest
         except ConcurrentWriteError:
             if attempt == OPTIMISTIC_RETRIES:
                 raise
             current = _load_manifest(target, store)
-            if current is None or current["version"] <= base["version"]:
+            if (
+                current is None
+                or "version" not in base
+                or current["version"] <= base["version"]
+            ):
                 raise  # manifest went backwards/away: not a rebase case
             for v in range(base["version"] + 1, current["version"] + 1):
                 inter = (
@@ -759,30 +791,6 @@ _REBASE_SAFE_OPS = {
     "set_minhash_policy",
     "commit",
 }
-
-
-def _disjoint_bucket_conflict(
-    original: dict, affected: list[str]
-) -> "callable":
-    """Conflict rule shared by the CoW merge and the new-key append:
-    rebase is sound iff every bucket THIS commit rewrote is byte-
-    identical (same base files, same pending deltas) between the
-    snapshot the commit was computed from and the winner's — then the
-    rows this commit read/replaced are provably untouched.  Any other
-    bucket may differ freely.  Layout changes (rebucket/widen/restore)
-    rewrite every bucket, so they trip this check by construction."""
-
-    def check(current: dict) -> str | None:
-        for b in affected:
-            if current["buckets"].get(b) != original["buckets"].get(b):
-                return f"bucket {b} was rewritten concurrently"
-            if current.get("deltas", {}).get(b) != original.get(
-                "deltas", {}
-            ).get(b):
-                return f"bucket {b} gained concurrent MOR deltas"
-        return None
-
-    return check
 
 
 def _footer_stats_one(
@@ -1025,6 +1033,332 @@ def _list_commit_buckets(
     return out
 
 
+def _open_table(target: str, store=LOCAL_STORE) -> tuple[dict, str, int]:
+    """``(manifest, key, num_buckets)`` of a committed keyed table — the
+    preamble of every operation that needs an existing table."""
+    manifest = _load_manifest(target, store)
+    if manifest is None:
+        raise FileNotFoundError(f"no committed keyed table at {target}")
+    spec = store.read_json(_spec_path(target))
+    if spec is None:
+        raise ValueError(f"{target} has a manifest but no bucket spec")
+    return manifest, spec["key"], spec["num_buckets"]
+
+
+def _open_or_bootstrap(target, key, num_buckets, store, op: str):
+    """:func:`_open_table` for the CDC entry points, which may create the
+    table: with no table yet, ``(None, key, num_buckets)`` as passed —
+    ``key`` is then required to bootstrap from the batch."""
+    try:
+        manifest, key, num_buckets = _open_table(target, store)
+    except FileNotFoundError:
+        if key is None:
+            raise ValueError(
+                f"no table at {target}: pass key= (and num_buckets=) to "
+                "bootstrap from this batch"
+            ) from None
+        return None, key, num_buckets
+    # re-interprets user SQL/frames against the table mid-merge — not
+    # column-mapping-aware
+    _require_unmapped(manifest, op)
+    return manifest, key, num_buckets
+
+
+def _txn_of(txn_app: str | None, txn_seq: int | None) -> tuple | None:
+    """The writer-transaction watermark a write records (Delta's ``txn``
+    action), or None."""
+    if (txn_app is None) != (txn_seq is None):
+        raise ValueError("txn_app and txn_seq must be passed together")
+    return None if txn_app is None else (txn_app, int(txn_seq))
+
+
+def _txn_applied(manifest: dict | None, txn: tuple | None) -> bool:
+    """Whether ``manifest`` already records this writer at ``txn``'s seq
+    or later — a replayed epoch (return without writing) or, seen in a
+    concurrent commit, a zombie writer (hard conflict)."""
+    if txn is None or manifest is None:
+        return False
+    applied = manifest.get("txns", {}).get(txn[0])
+    return applied is not None and txn[1] <= int(applied)
+
+
+def _admit_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    target: str,
+    manifest: dict | None,
+    key: str,
+    num_buckets: int,
+    store,
+    stats_cols: list[str] | None = None,
+):
+    """Admission of an incoming user batch, before any file lands: the
+    column-mapping boundary (the batch and ``stats_cols`` speak LOGICAL
+    names, everything after is physical), type reconciliation against
+    the table's schema — BEFORE bucketing, so an implicit key upcast
+    happens before ``_bucket_expr`` hashes it (see
+    :func:`_align_batch_types`) — the ≤ num_buckets affected-bucket
+    probe and the CHECK constraints.
+
+    Returns ``(bucketed, affected buckets, physical stats_cols)``, or
+    None for a zero-row batch: an empty batch must be a true no-op (no
+    commit dir, no manifest version bump) — otherwise every empty
+    streaming micro-batch or no-new-files rerun churns the manifest and
+    leaves orphan commit dirs for vacuum to collect."""
+    batch = _translate_batch(batch, manifest)
+    if stats_cols:
+        cmap, _ = _mapping_of(manifest)
+        stats_cols = [_phys_name(c, cmap) for c in stats_cols]
+    if manifest is not None:
+        # the manifest-recorded schema (when present) IS the live files'
+        # union schema, so the footer-inference read is skipped outright
+        schema = _manifest_schema(manifest)
+        if schema is None:
+            live = [
+                f for fs in manifest["buckets"].values() for f in fs
+            ] + _delta_files_of(manifest)
+            schema = _read_files(spark, target, live).schema if live else None
+        if schema is not None:
+            batch = _align_batch_types(
+                batch, _strip_dropped_fields(schema, manifest), key
+            )
+    bucketed = batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
+    # Measured NON-optimization (r11, kept as a record — same class as
+    # the _write_bucketed coalesce finding): eagerly localCheckpoint-ing
+    # the merge batch here (so the affected-bucket probe and the merge
+    # write share one materialization instead of re-executing the batch
+    # upstream) read NEUTRAL in an interleaved same-session A/B over 4
+    # lifecycle queries (best-of-3 on/off: 9.7/10.0, 6.8/7.2, 3.50/3.48,
+    # 9.1/8.3) — per-commit cost at this batch size is Catalyst planning
+    # + fixed job overhead, not recompute — and an unconditional
+    # checkpoint would double-spill unbounded backfill batches at scale.
+    # CDC/merge SOURCES (small by contract) are checkpointed instead at
+    # their call sites (apply_changes/_scd2, merge_into).
+    # ≤ num_buckets tiny rows — a scalar-class driver action, not data.
+    affected = sorted(
+        r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()
+    )
+    if not affected:
+        return None
+    _enforce_constraints(bucketed, target, store)
+    return bucketed, [str(b) for b in affected], stats_cols
+
+
+def _commit_files(
+    spark: SparkSession,
+    target: str,
+    frame: DataFrame,
+    base: dict | None,
+    key: str,
+    num_buckets: int,
+    edit: str,
+    buckets: list[str] | None = None,
+    guard: list[str] | None = None,
+    txn: tuple | None = None,
+    stats_cols: list[str] | None = None,
+    carry_stats_cols: bool = True,
+    full_schema: bool = False,
+    range_by: tuple | None = None,
+    extra: dict | None = None,
+    store=LOCAL_STORE,
+) -> tuple[dict, dict[str, list[str]]]:
+    """THE data commit (module docstring, "Commit kernel"): write
+    ``frame`` bucketed by ``key`` (the bucket column is derived when
+    absent) as one new commit directory, then publish one manifest
+    built on ``base`` (None = the table's first commit, which also pins
+    the bucket spec) through :func:`_commit_optimistic`.  Returns the
+    committed manifest and ``{bucket: new files}``.
+
+    ``edit`` is the manifest edit: ``"replace"`` swaps ``buckets`` (all
+    buckets when None) for the new files — their base files and pending
+    deltas retire, and the recorded schema is ``frame``'s own when
+    ``full_schema`` or when every bucket is rewritten (the frame then
+    carries every live column), else base ∪ frame; ``"append"`` adds the
+    new files to their buckets' file lists; ``"delta"`` records them as
+    MOR delta files whose seq is the version the commit lands as (a
+    rebase IS "this writer committed second", and highest-seq-wins
+    precedence makes that exact).
+
+    Conflict rule: ``guard`` lists the buckets whose base state the
+    commit's rows were decided from — it rebases over any commit that
+    leaves them (and the bucket count, and its ``txn`` watermark)
+    unchanged.  A delta edit additionally rebases only over
+    row-preserving operations (``_REBASE_SAFE_OPS``: a layout/type
+    rewrite invalidates already-written delta files), and its ``guard``
+    defaults to the buckets it writes.  A rewrite without ``guard``
+    rebases over nothing: any intervening commit fails it.
+
+    Stats are kept for surviving files and computed from the new files'
+    footers for the base's tracked columns (unless
+    ``carry_stats_cols=False``) plus ``stats_cols``; ``range_by=
+    (files_per_bucket, [cols])`` range-partitions each bucket into
+    value-contiguous files (cluster / z-order); ``txn=(app, seq)``
+    records the writer watermark monotonically; ``extra`` sets further
+    manifest keys explicitly (they beat :func:`_commit_manifest`'s
+    carry)."""
+    if BUCKET_COL not in frame.columns:
+        frame = frame.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
+    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
+    layout = {} if range_by is None else {"range_by": range_by}
+    _write_bucketed(frame, os.path.join(target, commit_rel), num_buckets, **layout)
+    if base is None:
+        _write_spec(target, key, num_buckets, store)
+    written = _list_commit_buckets(target, commit_rel, store)
+    new_files = [f for fs in written.values() for f in fs]
+    full_schema = full_schema or (edit == "replace" and buckets is None)
+
+    def build(cur: dict) -> dict:
+        version = cur.get("version", 0) + 1
+        new_buckets = dict(cur["buckets"])
+        deltas = {b: list(es) for b, es in cur.get("deltas", {}).items()}
+        superseded: list[str] = []
+        if edit == "delta":
+            for b, files in written.items():
+                deltas.setdefault(b, []).extend(
+                    {"path": f, "seq": version} for f in files
+                )
+        elif edit == "append":
+            for b, files in written.items():
+                new_buckets[b] = new_buckets.get(b, []) + files
+        elif buckets is None:
+            superseded = [
+                f for fs in cur["buckets"].values() for f in fs
+            ] + _delta_files_of(cur)
+            new_buckets, deltas = dict(written), {}
+        else:
+            for b in buckets:
+                superseded += cur["buckets"].get(b, [])
+                superseded += [e["path"] for e in deltas.pop(b, [])]
+                if b in written:
+                    new_buckets[b] = written[b]
+                else:
+                    new_buckets.pop(b, None)
+        # carry forward retirees whose files still exist (vacuum hasn't
+        # collected them yet; probed through the store so a non-local
+        # deployment prunes correctly); stamp the files this commit
+        # supersedes.  The timestamp is what makes a retention window
+        # possible at all — a file's mtime says when it was WRITTEN, not
+        # when it stopped being part of the snapshot.  It is the WRITER's
+        # clock: with multiple writers on shared storage, skew between
+        # writer clocks can shorten the effective retention window — size
+        # retention_s with clock-skew headroom (NTP ≪ the 1 h default).
+        now = time.time()
+        retired = [
+            e
+            for e in cur.get("retired", [])
+            if store.exists(os.path.join(target, e["path"]))
+        ] + [{"path": f, "ts": now} for f in superseded]
+        live = {f for fs in new_buckets.values() for f in fs}
+        live.update(e["path"] for es in deltas.values() for e in es)
+        stats = {f: s for f, s in cur.get("stats", {}).items() if f in live}
+        tracked = set(stats_cols or ())
+        if carry_stats_cols:
+            tracked.update(_stats_cols_of(cur))
+        if tracked and edit != "delta":
+            stats.update(
+                _file_stats(
+                    target, new_files, sorted(tracked), spark=spark, store=store
+                )
+            )
+        out = {
+            "version": version,
+            "buckets": new_buckets,
+            "deltas": deltas,
+            "retired": retired,
+            "stats": stats,
+            "blooms": _carry_blooms(cur, live),
+            **(extra or {}),
+        }
+        schema = (
+            _schema_entry(frame.schema)
+            if full_schema
+            else _schema_union_entry(cur, frame.schema)
+        )
+        if schema is not None:
+            out["schema"] = schema
+        if txn is not None:
+            # explicit txns beat the carry; merged with the base's so an
+            # unrelated writer's watermark survives, and MONOTONE across
+            # a rebase (r9 advisor finding) — the conflict rule below
+            # also hard-fails the zombie-writer race first
+            txns = dict(cur.get("txns", {}))
+            txns[txn[0]] = max(txn[1], int(txns.get(txn[0], txn[1])))
+            out["txns"] = txns
+        return out
+
+    def conflict(current: dict) -> str | None:
+        op = current.get("operation")
+        if (edit == "delta" and op not in _REBASE_SAFE_OPS) or (
+            edit != "delta" and guard is None
+        ):
+            return f"concurrent {op!r} commit"
+        # a bucket-count change re-routes every key, even when this
+        # commit's buckets happen to be empty in both snapshots
+        if current.get("num_buckets", num_buckets) != num_buckets:
+            return "bucket count changed concurrently"
+        # Delta's ConcurrentTransaction check: an intervening commit that
+        # advanced THIS txn app to >= our seq means the batch was already
+        # applied (or is stale) — rebasing would re-apply old data
+        if _txn_applied(current, txn):
+            return (
+                f"txn {txn[0]!r} advanced to seq "
+                f"{current['txns'][txn[0]]} concurrently; this batch "
+                f"(seq {txn[1]}) is already applied or stale"
+            )
+        # rebase is sound iff every guarded bucket is byte-identical
+        # (same base files, same pending deltas) between the snapshot
+        # this commit was computed from and the winner's
+        for b in sorted(written) if guard is None else guard:
+            if current["buckets"].get(b) != base["buckets"].get(b):
+                return f"bucket {b} was rewritten concurrently"
+            if current.get("deltas", {}).get(b) != base.get(
+                "deltas", {}
+            ).get(b):
+                return f"bucket {b} gained concurrent MOR deltas"
+        return None
+
+    committed = _commit_optimistic(
+        target, base or {"buckets": {}}, build, conflict, store
+    )
+    return committed, written
+
+
+def _scope_rows(
+    spark: SparkSession,
+    target: str,
+    manifest: dict,
+    key: str,
+    buckets=None,
+) -> DataFrame | None:
+    """Live rows of the given buckets (every bucket when None) with MOR
+    precedence resolved and no bucket column: clean buckets' files are
+    read directly (file-level pruning), delta-bearing ones through
+    :func:`_resolve_dirty`.  None when no listed bucket holds data.  The
+    one row-scope read behind every rewrite, bucket-pruned DML and
+    point lookups — O(listed buckets), not O(table)."""
+    deltas = manifest.get("deltas", {})
+    want = None if buckets is None else {str(b) for b in buckets}
+    clean = [
+        f
+        for b, fs in manifest["buckets"].items()
+        if b not in deltas and (want is None or b in want)
+        for f in fs
+    ]
+    dirty = sorted(b for b in deltas if want is None or b in want)
+    frames = []
+    if clean:
+        frames.append(
+            _read_files(spark, target, clean, schema=_manifest_schema(manifest))
+        )
+    if dirty:
+        frames.append(_resolve_dirty(spark, target, manifest, key, dirty))
+    if not frames:
+        return None
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    ).drop(BUCKET_COL)
+
+
 @_records_op("merge")
 def keyed_overwrite_parquet(
     spark: SparkSession,
@@ -1074,242 +1408,49 @@ def keyed_overwrite_parquet(
     ``vacuum=False`` defers cleanup entirely to an explicit
     :func:`vacuum_keyed_table` schedule.
     """
-    if (txn_app is None) != (txn_seq is None):
-        raise ValueError("txn_app and txn_seq must be passed together")
+    txn = _txn_of(txn_app, txn_seq)
     os.makedirs(target, exist_ok=True)
     num_buckets = _load_or_check_spec(target, key, num_buckets, store)
     manifest = _load_manifest(target, store)
-    if txn_app is not None and manifest is not None:
-        applied = manifest.get("txns", {}).get(txn_app)
-        if applied is not None and int(txn_seq) <= int(applied):
-            return
-    # column-mapping boundary: the user batch speaks LOGICAL names;
-    # everything below (alignment, bucketing, file writes, stats) is
-    # physical.  stats_cols name logical columns too.
-    batch = _translate_batch(batch, manifest)
-    if stats_cols:
-        _cm, _ = _mapping_of(manifest)
-        stats_cols = [_phys_name(c, _cm) for c in stats_cols]
-    stored_schema = _manifest_schema(manifest)
-    if manifest is not None:
-        # schema reconciliation BEFORE bucketing: an implicit key upcast
-        # must happen before _bucket_expr hashes it (see _align_batch_types).
-        # The manifest-recorded schema (when present) IS the live files'
-        # union schema, so the footer-inference read is skipped outright.
-        if stored_schema is not None:
-            batch = _align_batch_types(
-                batch, _strip_dropped_fields(stored_schema, manifest), key
-            )
-        else:
-            live = [
-                f for fs in manifest["buckets"].values() for f in fs
-            ] + _delta_files_of(manifest)
-            if live:
-                batch = _align_batch_types(
-                    batch,
-                    _strip_dropped_fields(
-                        _read_files(spark, target, live).schema, manifest
-                    ),
-                    key,
-                )
-    bucketed = batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    # Measured NON-optimization (r11, kept as a record — same class as
-    # the _write_bucketed coalesce finding): eagerly localCheckpoint-ing
-    # the merge batch here (so the affected-bucket probe and the merge
-    # write share one materialization instead of re-executing the batch
-    # upstream) read NEUTRAL in an interleaved same-session A/B over 4
-    # lifecycle queries (best-of-3 on/off: 9.7/10.0, 6.8/7.2, 3.50/3.48,
-    # 9.1/8.3) — per-commit cost at this batch size is Catalyst planning
-    # + fixed job overhead, not recompute — and an unconditional
-    # checkpoint would double-spill unbounded backfill batches at scale.
-    # CDC/merge SOURCES (small by contract) are checkpointed instead at
-    # their call sites (apply_changes/_scd2, merge_into).
-    # ≤ num_buckets tiny rows — a scalar-class driver action, not data.
-    # Doubles as the empty-batch guard: a zero-row batch must be a true
-    # no-op (no commit dir, no manifest version bump) — otherwise every
-    # empty streaming micro-batch or no-new-files rerun churns the
-    # manifest and leaves orphan commit dirs for vacuum to collect.
-    affected = sorted(
-        r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()
+    if _txn_applied(manifest, txn):
+        return
+    admitted = _admit_batch(
+        spark, batch, target, manifest, key, num_buckets, store, stats_cols
     )
-    if not affected:
+    if admitted is None:
         return
-    _enforce_constraints(bucketed, target, store)
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    commit_dir = os.path.join(target, commit_rel)
-
-    if manifest is None:
-        _write_bucketed(bucketed, commit_dir, num_buckets)
-        _write_spec(target, key, num_buckets, store)
-        first_buckets = _list_commit_buckets(target, commit_rel, store)
-        first_files = [f for fs in first_buckets.values() for f in fs]
-        _commit_manifest(
-            target,
-            {
-                "version": 1,
-                "buckets": first_buckets,
-                "schema": _schema_entry(bucketed.schema),
-                "retired": [],
-                "stats": _file_stats(target, first_files, stats_cols, spark=spark, store=store)
-                if stats_cols
-                else {},
-                **(
-                    {"txns": {txn_app: int(txn_seq)}}
-                    if txn_app is not None
-                    else {}
-                ),
-            },
-            expected_version=None,
-            store=store,
-        )
-        return
-
-    deltas = manifest.get("deltas", {})
-    affected_str = [str(b) for b in affected]
+    bucketed, affected, stats_cols = admitted
+    merged = bucketed
     # file-level pruning: only the affected buckets' live files are read.
     # An affected bucket with pending MOR deltas contributes its RESOLVED
-    # rows (base + deltas, precedence applied) and this commit folds
-    # those deltas away; unaffected buckets' deltas carry forward intact.
-    clean_current = [
-        f
-        for b in affected_str
-        if b not in deltas
-        for f in manifest["buckets"].get(b, [])
-    ]
-    dirty_affected = sorted(b for b in affected_str if b in deltas)
-    if clean_current or dirty_affected:
-        # data files don't store the bucket column (partitionBy consumed
-        # it); re-derive it — xxhash64 is deterministic, same key → same
-        # bucket, always (read idiom notes on _read_files).
-        parts = []
-        if clean_current:
-            parts.append(
-                _read_files(spark, target, clean_current, schema=stored_schema)
-            )
-        if dirty_affected:
-            parts.append(
-                _resolve_dirty(spark, target, manifest, key, dirty_affected)
-            )
-        current = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-        )
-        # ADDITIVE schema evolution only (missing-column rejection and
-        # type reconciliation already ran in _align_batch_types above,
-        # against the FULL live schema).
-        keys = bucketed.select(key).distinct()
+    # rows and this commit folds those deltas away; unaffected buckets'
+    # deltas carry forward intact.
+    current = (
+        None
+        if manifest is None
+        else _scope_rows(spark, target, manifest, key, affected)
+    )
+    if current is not None:
         # anti-join on key: keep only rows NOT being replaced.  Spark
-        # broadcasts `keys` when small; at 100 TB this is a shuffled hash
-        # anti-join over k/N of the table — same cost class as the insert.
-        kept = current.join(keys, key, "left_anti").withColumn(
-            BUCKET_COL, _bucket_expr(key, num_buckets)
-        )
+        # broadcasts the keys when small; at 100 TB this is a shuffled
+        # hash anti-join over k/N of the table — same cost class as the
+        # insert.  Data files don't store the bucket column (partitionBy
+        # consumed it); re-derive it — xxhash64 is deterministic.
+        kept = current.join(
+            bucketed.select(key).distinct(), key, "left_anti"
+        ).withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
         merged = kept.unionByName(bucketed, allowMissingColumns=True)
-    else:
-        merged = bucketed
-    _write_bucketed(merged, commit_dir, num_buckets)
-
-    written = _list_commit_buckets(target, commit_rel, store)
-    new_file_list = [f for fs in written.values() for f in fs]
-
-    def _build(base: dict) -> dict:
-        base_deltas = base.get("deltas", {})
-        new_buckets = dict(base["buckets"])
-        superseded = []
-        for b in affected_str:
-            superseded.extend(base["buckets"].get(b, []))
-            superseded.extend(e["path"] for e in base_deltas.get(b, []))
-            files = written.get(b)
-            if files:
-                new_buckets[b] = files
-            else:
-                new_buckets.pop(b, None)
-        remaining_deltas = {
-            b: entries
-            for b, entries in base_deltas.items()
-            if b not in affected_str
-        }
-        # carry forward retirees whose files still exist (vacuum hasn't
-        # collected them yet; probed through the store so a non-local
-        # deployment prunes correctly); stamp the files this commit
-        # supersedes.  The timestamp is what makes a retention window
-        # possible at all — a file's mtime says when it was WRITTEN, not
-        # when it stopped being part of the snapshot.  It is the WRITER's
-        # clock: with multiple writers on shared storage, skew between
-        # writer clocks can shorten the effective retention window — size
-        # retention_s with clock-skew headroom (NTP ≪ the 1 h default).
-        now = time.time()
-        retired = [
-            e
-            for e in base.get("retired", [])
-            if store.exists(os.path.join(target, e["path"]))
-        ] + [{"path": f, "ts": now} for f in superseded]
-        # stats: keep entries for surviving files, compute for new ones;
-        # the tracked column set is remembered from the manifest and
-        # widened by any explicitly-passed stats_cols.
-        tracked = sorted(set(_stats_cols_of(base)) | set(stats_cols or []))
-        live = {f for fs in new_buckets.values() for f in fs}
-        stats = {f: s for f, s in base.get("stats", {}).items() if f in live}
-        if tracked:
-            stats.update(_file_stats(target, new_file_list, tracked, spark=spark, store=store))
-        return {
-            "version": base["version"] + 1,
-            "buckets": new_buckets,
-            # merged's schema IS the union live schema: the batch must
-            # carry every existing column (missing ones raise in
-            # _align_batch_types), so kept ∪ batch covers all buckets
-            "schema": _schema_entry(merged.schema),
-            "deltas": remaining_deltas,
-            "retired": retired,
-            "stats": stats,
-            "blooms": _carry_blooms(base, live),
-            # explicit txns beat the carry; merge with the base's so an
-            # unrelated writer's watermark survives this commit.  The
-            # watermark is MONOTONE even across a rebase: max() against
-            # the rebase base's value, so an intervening higher-seq
-            # commit from the same txn_app is never regressed (r9
-            # advisor finding; the conflict check below also hard-fails
-            # that zombie-writer race before this line can matter)
-            **(
-                {
-                    "txns": {
-                        **base.get("txns", {}),
-                        txn_app: max(
-                            int(txn_seq),
-                            int(base.get("txns", {}).get(txn_app, txn_seq)),
-                        ),
-                    }
-                }
-                if txn_app is not None
-                else {}
-            ),
-        }
-
-    # optimistic rebase: a concurrent commit to OTHER buckets re-bases
-    # this one instead of failing it (_commit_optimistic); only a
-    # concurrent rewrite of one of THIS merge's buckets — or a bucket-
-    # count change, which re-routes every key even when this merge's
-    # buckets happen to be empty in both snapshots — is a conflict
-    strict = _disjoint_bucket_conflict(manifest, affected_str)
-
-    def _conflict(current: dict) -> str | None:
-        if current.get("num_buckets", num_buckets) != num_buckets:
-            return "bucket count changed concurrently"
-        # Delta's ConcurrentTransaction check: an intervening commit
-        # that advanced THIS txn_app to >= our seq means this batch was
-        # already applied (or is stale) under the winner — rebasing it
-        # on top would re-apply old data over newer.  Hard-conflict so
-        # the zombie writer fails loudly instead of silently regressing.
-        if txn_app is not None:
-            adv = current.get("txns", {}).get(txn_app)
-            if adv is not None and int(adv) >= int(txn_seq):
-                return (
-                    f"txn {txn_app!r} advanced to seq {adv} concurrently; "
-                    f"this batch (seq {txn_seq}) is already applied or stale"
-                )
-        return strict(current)
-
-    _commit_optimistic(target, manifest, _build, _conflict, store)
-    if vacuum:
+    # merged's schema IS the union live schema: the batch must carry
+    # every existing column (missing ones raise in _align_batch_types),
+    # so kept ∪ batch covers all buckets.  Optimistic rebase: a
+    # concurrent commit to OTHER buckets re-bases this one; a concurrent
+    # rewrite of one of THIS merge's buckets is a conflict.
+    _commit_files(
+        spark, target, merged, manifest, key, num_buckets, "replace",
+        buckets=None if manifest is None else affected, guard=affected,
+        txn=txn, stats_cols=stats_cols, full_schema=True, store=store,
+    )
+    if vacuum and manifest is not None:
         vacuum_keyed_table(target, retention_s=retention_s, store=store)
 
 
@@ -1695,28 +1836,6 @@ def _resolve_dirty(
     return out
 
 
-def _live_rows(
-    spark: SparkSession, target: str, manifest: dict, key: str
-) -> DataFrame:
-    """Every live row of the snapshot (deltas resolved, no bucket col) —
-    the input to full-table reorganizations (rebucket / cluster)."""
-    deltas = manifest.get("deltas", {})
-    clean = [
-        f
-        for b, fs in manifest["buckets"].items()
-        if b not in deltas
-        for f in fs
-    ]
-    frames = []
-    if clean:
-        frames.append(
-            _read_files(spark, target, clean, schema=_manifest_schema(manifest))
-        )
-    if deltas:
-        frames.append(_resolve_dirty(spark, target, manifest, key, sorted(deltas)))
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-
-
 def table_delta_depth(target: str, store=LOCAL_STORE) -> int:
     """Max per-bucket pending delta-file count — the compaction trigger
     signal (0 = fully compacted; readers pay one window per dirty
@@ -1758,144 +1877,15 @@ def keyed_merge_mor(
         )
         return
     num_buckets = _load_or_check_spec(target, key, num_buckets, store)
-    # column-mapping boundary: logical batch -> physical delta files
-    batch = _translate_batch(batch, manifest)
-    # schema reconciliation — same guard chain as the CoW path (missing
-    # columns rejected, lossless upcasts applied, conflicts raised NOW,
-    # before any delta file lands).  Schema comes from the manifest's
-    # recorded entry when present (no footer inference at all), else
-    # straight from the live files' merged footers.
-    stored_schema = _manifest_schema(manifest)
-    if stored_schema is not None:
-        batch = _align_batch_types(
-            batch, _strip_dropped_fields(stored_schema, manifest), key
-        )
-    else:
-        live_files = [
-            f for fs in manifest["buckets"].values() for f in fs
-        ] + _delta_files_of(manifest)
-        batch = _align_batch_types(
-            batch,
-            _strip_dropped_fields(
-                _read_files(spark, target, live_files).schema, manifest
-            ),
-            key,
-        )
-    bucketed = batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    affected = sorted(
-        r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()
-    )
-    if not affected:  # empty batch: true no-op, no version churn
+    admitted = _admit_batch(spark, batch, target, manifest, key, num_buckets, store)
+    if admitted is None:
         return
-    _enforce_constraints(bucketed, target, store)
-    _append_delta_commit(bucketed, target, manifest, num_buckets, store, strict_buckets=False)
-
-
-def _append_delta_commit(
-    bucketed: DataFrame,
-    target: str,
-    manifest: dict,
-    num_buckets: int,
-    store,
-    strict_buckets: bool = True,
-) -> None:
-    """Write an already-bucketed frame as per-bucket DELTA files and
-    publish it as one CAS manifest commit (the shared tail of
-    :func:`keyed_merge_mor` / :func:`keyed_delete_where` /
-    :func:`keyed_update_where`).  No existing file is read or rewritten —
-    write cost is O(frame).
-
-    Commits with optimistic rebase (:func:`_commit_optimistic`).
-    ``strict_buckets=True`` (the DML / merge-into / CDC callers, whose
-    row-level DECISIONS were computed from the base snapshot) addition-
-    ally requires the touched buckets to be unchanged under the winner;
-    a blind upsert (``keyed_merge_mor``) passes False — layering a
-    higher-seq delta over ANY row-preserving concurrent commit is
-    exactly last-writer-wins."""
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    _write_bucketed(bucketed, os.path.join(target, commit_rel), num_buckets)
-    written = _list_commit_buckets(target, commit_rel, store)
-
-    def _build(base: dict) -> dict:
-        # the delta entries' seq restamps onto whatever version this
-        # commit finally lands as — a rebase IS "this writer committed
-        # second", and highest-seq-wins precedence makes that exact
-        new_version = base["version"] + 1
-        deltas = {
-            b: list(entries) for b, entries in base.get("deltas", {}).items()
-        }
-        for b, files in written.items():
-            deltas.setdefault(b, []).extend(
-                {"path": f, "seq": new_version} for f in files
-            )
-        retired = [
-            e
-            for e in base.get("retired", [])
-            if store.exists(os.path.join(target, e["path"]))
-        ]
-        out = {
-            "version": new_version,
-            "buckets": base["buckets"],
-            "deltas": deltas,
-            "retired": retired,
-            "stats": base.get("stats", {}),
-            "blooms": base.get("blooms", {}),
-        }
-        entry = _schema_union_entry(base, bucketed.schema)
-        if entry is not None:
-            out["schema"] = entry
-        return out
-
-    strict = _disjoint_bucket_conflict(
-        manifest, sorted(written) if strict_buckets else []
+    # a blind upsert guards no bucket: layering a higher-seq delta over
+    # ANY row-preserving concurrent commit is exactly last-writer-wins
+    _commit_files(
+        spark, target, admitted[0], manifest, key, num_buckets, "delta",
+        guard=[], store=store,
     )
-
-    def _conflict(current: dict) -> str | None:
-        # a layout/type rewrite (rebucket, widen, restore) invalidates
-        # already-written delta files — hard conflict; row-preserving
-        # commits are safe to layer a higher seq onto
-        if current.get("operation") not in _REBASE_SAFE_OPS:
-            return f"concurrent {current.get('operation')!r} commit"
-        if current.get("num_buckets", num_buckets) != num_buckets:
-            return "bucket count changed concurrently"
-        return strict(current)
-
-    _commit_optimistic(target, manifest, _build, _conflict, store)
-
-
-def _bucket_rows(
-    spark: SparkSession,
-    target: str,
-    manifest: dict,
-    key: str,
-    wanted: set[int],
-) -> DataFrame | None:
-    """Live resolved rows of ONLY the given buckets (clean files read
-    directly, dirty buckets through MOR precedence), no bucket column.
-    None when no listed bucket holds data — the bucket-pruned read that
-    keeps point DML O(affected buckets) instead of O(table)."""
-    deltas = manifest.get("deltas", {})
-    clean_rel = [
-        f
-        for b, fs in manifest["buckets"].items()
-        if int(b) in wanted and b not in deltas
-        for f in fs
-    ]
-    dirty = sorted(b for b in deltas if int(b) in wanted)
-    frames = []
-    if clean_rel:
-        frames.append(
-            _read_files(
-                spark, target, clean_rel, schema=_manifest_schema(manifest)
-            )
-        )
-    if dirty:
-        frames.append(_resolve_dirty(spark, target, manifest, key, dirty))
-    if not frames:
-        return None
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    ).drop(BUCKET_COL)
 
 
 def _dml_scope(
@@ -1910,13 +1900,7 @@ def _dml_scope(
     finds the affected buckets and the matching-row count (a ≤num_buckets
     scalar collect), then a bucket-pruned second read returns the
     resolved rows of only those buckets."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
+    manifest, key, num_buckets = _open_table(target, store)
     pred_true = F.expr(predicate).eqNullSafe(F.lit(True))
     per_bucket = (
         read_keyed_table(spark, target, store, where=where, where_eq=where_eq)
@@ -1933,7 +1917,7 @@ def _dml_scope(
     cmap, cdropped = _mapping_of(manifest)
     rows = (
         _to_logical_df(
-            _bucket_rows(spark, target, manifest, key, wanted), cmap, cdropped
+            _scope_rows(spark, target, manifest, key, wanted), cmap, cdropped
         )
         if wanted
         else None
@@ -2007,8 +1991,9 @@ def keyed_delete_where(
     _enforce_constraints(
         _to_physical_df(survivors.drop(TOMBSTONE_COL), cmap), target, store
     )
-    bucketed = delta.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    _append_delta_commit(bucketed, target, manifest, num_buckets, store)
+    _commit_files(
+        spark, target, delta, manifest, key, num_buckets, "delta", store=store
+    )
     return n_matched
 
 
@@ -2069,8 +2054,9 @@ def keyed_update_where(
     cmap, _cd = _mapping_of(manifest)
     updated = _to_physical_df(updated, cmap)
     _enforce_constraints(updated, target, store)
-    bucketed = updated.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    _append_delta_commit(bucketed, target, manifest, num_buckets, store)
+    _commit_files(
+        spark, target, updated, manifest, key, num_buckets, "delta", store=store
+    )
     return n_matched
 
 
@@ -2089,65 +2075,13 @@ def compact_keyed_table(
     manifest churn).  Commits through the manifest CAS; the folded base
     and delta files retire under the normal retention window so
     in-flight readers finish their snapshot."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    deltas = manifest.get("deltas", {})
-    if not deltas:
+    manifest, key, num_buckets = _open_table(target, store)
+    dirty = sorted(manifest.get("deltas", {}))
+    if not dirty:
         return 0
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
-
-    dirty = sorted(deltas)
-    resolved = _resolve_dirty(spark, target, manifest, key, dirty).withColumn(
-        BUCKET_COL, _bucket_expr(key, num_buckets)
-    )
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    _write_bucketed(resolved, os.path.join(target, commit_rel), num_buckets)
-    written = _list_commit_buckets(target, commit_rel, store)
-
-    new_buckets = dict(manifest["buckets"])
-    superseded = []
-    for b in dirty:
-        superseded.extend(manifest["buckets"].get(b, []))
-        superseded.extend(e["path"] for e in deltas[b])
-        files = written.get(b)
-        if files:
-            new_buckets[b] = files
-        else:
-            new_buckets.pop(b, None)
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    tracked = _stats_cols_of(manifest)
-    live = {f for fs in new_buckets.values() for f in fs}
-    stats = {f: s for f, s in manifest.get("stats", {}).items() if f in live}
-    if tracked:
-        new_files = [f for fs in written.values() for f in fs]
-        stats.update(_file_stats(target, new_files, tracked, spark=spark, store=store))
-    new_manifest = {
-        "version": manifest["version"] + 1,
-        "buckets": new_buckets,
-        "deltas": {},
-        "retired": retired,
-        "stats": stats,
-        "blooms": _carry_blooms(manifest, live),
-    }
-    # compaction rewrites only the dirty buckets; clean buckets may hold
-    # columns the resolved frame lacks, so the entry is base ∪ resolved
-    entry = _schema_union_entry(manifest, resolved.schema)
-    if entry is not None:
-        new_manifest["schema"] = entry
-    _commit_manifest(
-        target,
-        new_manifest,
-        expected_version=manifest["version"],
-        store=store,
+    _commit_files(
+        spark, target, _scope_rows(spark, target, manifest, key, dirty),
+        manifest, key, num_buckets, "replace", buckets=dirty, store=store,
     )
     return len(dirty)
 
@@ -2159,8 +2093,8 @@ def rebucket_keyed_table(
     new_num_buckets: int,
     store=LOCAL_STORE,
 ) -> None:
-    """Change a keyed table's bucket count, committed through the same
-    manifest CAS as the merge path.
+    """Change a keyed table's bucket count, committed through the commit
+    kernel (:func:`_commit_files`) like every data write.
 
     Why it exists: the bucket layout is pinned for a target's lifetime
     (``_load_or_check_spec`` rejects mismatched writers), which is right
@@ -2181,51 +2115,17 @@ def rebucket_keyed_table(
     Superseded files retire under the normal retention window so
     in-flight readers finish their snapshot.
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key = spec["key"]
-    if spec["num_buckets"] == new_num_buckets:
+    manifest, key, num_buckets = _open_table(target, store)
+    if num_buckets == new_num_buckets:
         return
-
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    commit_dir = os.path.join(target, commit_rel)
-    # _live_rows resolves any pending MOR deltas — a rebucket is a full
-    # rewrite, so it doubles as a compaction
-    rows = _live_rows(spark, target, manifest, key).withColumn(
-        BUCKET_COL, _bucket_expr(key, new_num_buckets)
-    )
-    _write_bucketed(rows, commit_dir, new_num_buckets)
-
-    superseded = [
-        f for files in manifest["buckets"].values() for f in files
-    ] + _delta_files_of(manifest)
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    rebucketed = _list_commit_buckets(target, commit_rel, store)
-    tracked = _stats_cols_of(manifest)
-    all_new = [f for fs in rebucketed.values() for f in fs]
-    _commit_manifest(
-        target,
-        {
-            "version": manifest["version"] + 1,
-            "buckets": rebucketed,
-            "schema": _schema_entry(rows.schema),
-            "retired": retired,
-            "num_buckets": new_num_buckets,
-            # data-skipping stats survive the layout change: recompute
-            # from the new files' footers for the columns already tracked
-            "stats": _file_stats(target, all_new, tracked, spark=spark, store=store) if tracked else {},
-        },
-        expected_version=manifest["version"],
-        store=store,
+    # _scope_rows resolves any pending MOR deltas — a rebucket is a full
+    # rewrite, so it doubles as a compaction.  Data-skipping stats
+    # survive the layout change: the kernel recomputes them from the new
+    # files' footers for the columns already tracked.
+    _commit_files(
+        spark, target, _scope_rows(spark, target, manifest, key), manifest,
+        key, new_num_buckets, "replace",
+        extra={"num_buckets": new_num_buckets}, store=store,
     )
     _write_spec(target, key, new_num_buckets, store)
 
@@ -2252,19 +2152,12 @@ def widen_keyed_table(
     footers; bloom indexes are dropped (value hashes are type-dependent)
     — re-run ``add_bloom_index`` after.  Content must not change
     (test-pinned: read-back equals cast of read-before)."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
-
+    manifest, key, num_buckets = _open_table(target, store)
     # widen rewrites PHYSICAL files; the caller names logical columns
     types = {
         _phys_name(c, _mapping_of(manifest)[0]): t for c, t in types.items()
     }
-    rows = _live_rows(spark, target, manifest, key)
+    rows = _scope_rows(spark, target, manifest, key)
     cur = {f.name: f.dataType.simpleString() for f in rows.schema.fields}
     for c, t in types.items():
         if c not in cur:
@@ -2274,38 +2167,15 @@ def widen_keyed_table(
                 f"cannot widen column {c!r}: {cur[c]} -> {t} is not a "
                 "lossless conversion"
             )
+    # the kernel re-hashes buckets from the CAST key
     rows = rows.select(
         *[
             F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
             for c in rows.columns
         ]
-    ).withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    _write_bucketed(rows, os.path.join(target, commit_rel), num_buckets)
-    superseded = [
-        f for files in manifest["buckets"].values() for f in files
-    ] + _delta_files_of(manifest)
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    new_buckets = _list_commit_buckets(target, commit_rel, store)
-    tracked = _stats_cols_of(manifest)
-    all_new = [f for fs in new_buckets.values() for f in fs]
-    _commit_manifest(
-        target,
-        {
-            "version": manifest["version"] + 1,
-            "buckets": new_buckets,
-            "schema": _schema_entry(rows.schema),
-            "retired": retired,
-            "stats": _file_stats(target, all_new, tracked, spark=spark, store=store) if tracked else {},
-        },
-        expected_version=manifest["version"],
-        store=store,
+    )
+    _commit_files(
+        spark, target, rows, manifest, key, num_buckets, "replace", store=store
     )
 
 
@@ -2877,63 +2747,37 @@ def purge_column_mapping(
     target: str,
     store=LOCAL_STORE,
 ) -> int:
-    """Physicalize the column mapping: ONE full rewrite (same shape as
-    :func:`rebucket_keyed_table` — pending deltas fold, so it doubles
-    as a compaction) that writes files under the LOGICAL names, actually
+    """Physicalize the column mapping: ONE full rewrite (the commit
+    kernel's replace-every-bucket edit, :func:`_commit_files` — pending
+    deltas fold, so it doubles as a compaction) that writes files under the LOGICAL names, actually
     deletes dropped columns' bytes, and clears the mapping.  The escape
     hatch that re-enables the gated operations (merge_into,
     apply_changes*) and constraint additions after renames/drops.
     Tracked data-skipping stats follow the rename; bloom indexes are
     dropped (they are keyed by physical file+column) — re-run
     ``add_bloom_index`` after.  Returns the new version."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest, key, num_buckets = _open_table(target, store)
     mapping, dropped = _mapping_of(manifest)
     if not mapping and not dropped:
         return manifest["version"]
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
-
     rows = _to_logical_df(
-        _live_rows(spark, target, manifest, key), mapping, dropped
-    ).withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    _write_bucketed(rows, os.path.join(target, commit_rel), num_buckets)
-
-    superseded = [
-        f for files in manifest["buckets"].values() for f in files
-    ] + _delta_files_of(manifest)
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    new_buckets = _list_commit_buckets(target, commit_rel, store)
+        _scope_rows(spark, target, manifest, key), mapping, dropped
+    )
     reverse = {p: l for l, p in mapping.items()}
-    gone = set(dropped)
     tracked = [
-        reverse.get(c, c) for c in _stats_cols_of(manifest) if c not in gone
+        reverse.get(c, c)
+        for c in _stats_cols_of(manifest)
+        if c not in set(dropped)
     ]
-    all_new = [f for fs in new_buckets.values() for f in fs]
-    new_manifest = {
-        "version": manifest["version"] + 1,
-        "buckets": new_buckets,
-        "schema": _schema_entry(rows.schema),
-        "retired": retired,
-        "stats": _file_stats(target, all_new, tracked, spark=spark, store=store) if tracked else {},
+    committed, _ = _commit_files(
+        spark, target, rows, manifest, key, num_buckets, "replace",
+        stats_cols=tracked, carry_stats_cols=False,
         # explicit empties: block the commit-time carry — the mapping
         # is GONE, not inherited
-        "column_mapping": {},
-        "dropped_columns": [],
-    }
-    _commit_manifest(
-        target, new_manifest, expected_version=manifest["version"], store=store
+        extra={"column_mapping": {}, "dropped_columns": []},
+        store=store,
     )
-    return new_manifest["version"]
+    return committed["version"]
 
 
 @_records_op("cluster_by")
@@ -2956,7 +2800,7 @@ def cluster_keyed_table(
     still the unit the merge rewrites), but within it land in
     value-contiguous files whose footer ranges barely overlap; a range
     read then opens ~1/files_per_bucket of each bucket.  The 1-D cousin
-    of Delta's OPTIMIZE ZORDER.  Commits through the same manifest CAS
+    of Delta's OPTIMIZE ZORDER.  Commits through the commit kernel
     (readers flip atomically, a racing merge wins cleanly, superseded
     files retire under retention); stats for ``by_col`` and all
     previously-tracked columns are recorded from the new footers.
@@ -2965,54 +2809,19 @@ def cluster_keyed_table(
     scattered values — a merge rewriting a clustered bucket collapses
     that bucket back to one blended file until the next clustering.
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
+    manifest, key, num_buckets = _open_table(target, store)
     # clustering reorganizes PHYSICAL files; the caller names a logical
     # column — translate once here
     by_col = _phys_name(by_col, _mapping_of(manifest)[0])
-
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    commit_dir = os.path.join(target, commit_rel)
     # resolves pending MOR deltas too — clustering is a full rewrite of
-    # every bucket, so it doubles as a compaction
-    rows = _live_rows(spark, target, manifest, key).withColumn(
-        BUCKET_COL, _bucket_expr(key, num_buckets)
-    )
-    # range partitioning on (bucket, value): each output task holds one
-    # contiguous (bucket, value) slice, so each bucket dir receives
-    # ~files_per_bucket files, each covering a narrow value range.
-    clustered = rows.repartitionByRange(
-        num_buckets * files_per_bucket, F.col(BUCKET_COL), F.col(by_col)
-    )
-    clustered.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
-
-    superseded = [
-        f for files in manifest["buckets"].values() for f in files
-    ] + _delta_files_of(manifest)
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    new_buckets = _list_commit_buckets(target, commit_rel, store)
-    tracked = sorted(set(_stats_cols_of(manifest)) | {by_col})
-    all_new = [f for fs in new_buckets.values() for f in fs]
-    _commit_manifest(
-        target,
-        {
-            "version": manifest["version"] + 1,
-            "buckets": new_buckets,
-            "schema": _schema_entry(rows.schema),
-            "retired": retired,
-            "stats": _file_stats(target, all_new, tracked, spark=spark, store=store),
-        },
-        expected_version=manifest["version"],
+    # every bucket, so it doubles as a compaction.  Range partitioning on
+    # (bucket, value): each output task holds one contiguous (bucket,
+    # value) slice, so each bucket dir receives ~files_per_bucket files,
+    # each covering a narrow value range.
+    _commit_files(
+        spark, target, _scope_rows(spark, target, manifest, key), manifest,
+        key, num_buckets, "replace",
+        range_by=(files_per_bucket, [F.col(by_col)]), stats_cols=[by_col],
         store=store,
     )
 
@@ -3077,7 +2886,7 @@ def zorder_keyed_table(
     ..), (b, ..)])``) prunes on every Z-ordered column at once.  Stats
     are recorded for all ``cols`` (plus previously tracked columns);
     rows stay in their key-hash buckets, so later merges are untouched.
-    Commits through the manifest CAS like every other reorganization and
+    Commits through the commit kernel like every other reorganization and
     resolves any pending MOR deltas (it is a full rewrite).
 
     Cell scaling uses each column's global min/max (two scalar
@@ -3085,17 +2894,10 @@ def zorder_keyed_table(
     cells, the standard trade-off vs rank-based Z-ordering (which would
     cost a global sort per column).
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
-
+    manifest, key, num_buckets = _open_table(target, store)
     # z-order rewrites PHYSICAL files; the caller names logical columns
     cols = [_phys_name(c, _mapping_of(manifest)[0]) for c in cols]
-    base = _live_rows(spark, target, manifest, key)
+    base = _scope_rows(spark, target, manifest, key)
     missing = set(cols) - set(base.columns)
     if missing:
         raise ValueError(f"z-order columns not in table: {sorted(missing)}")
@@ -3106,48 +2908,28 @@ def zorder_keyed_table(
     ).collect()[0]
     mins = {c: rng[f"__mn_{i}"] for i, c in enumerate(cols)}
     maxes = {c: rng[f"__mx_{i}"] for i, c in enumerate(cols)}
-
-    rows = base.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets)).withColumn(
-        "__z", _zvalue_expr(cols, mins, maxes)
-    )
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    commit_dir = os.path.join(target, commit_rel)
     # each output task holds one contiguous (bucket, z-curve) slice —
     # ~files_per_bucket files per bucket, each a small value-space cube
-    zord = rows.repartitionByRange(
-        num_buckets * files_per_bucket, F.col(BUCKET_COL), F.col("__z")
-    ).drop("__z")
-    zord.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(commit_dir)
-
-    superseded = [
-        f for files in manifest["buckets"].values() for f in files
-    ] + _delta_files_of(manifest)
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    new_buckets = _list_commit_buckets(target, commit_rel, store)
-    tracked = sorted(set(_stats_cols_of(manifest)) | set(cols))
-    all_new = [f for fs in new_buckets.values() for f in fs]
-    _commit_manifest(
-        target,
-        {
-            "version": manifest["version"] + 1,
-            "buckets": new_buckets,
-            # zord, not rows: the transient __z sort column was dropped
-            # before the write, so the recorded schema must not carry it
-            "schema": _schema_entry(zord.schema),
-            "retired": retired,
-            "stats": _file_stats(target, all_new, tracked, spark=spark, store=store),
-        },
-        expected_version=manifest["version"],
-        store=store,
+    _commit_files(
+        spark, target, base, manifest, key, num_buckets, "replace",
+        range_by=(files_per_bucket, [_zvalue_expr(cols, mins, maxes)]),
+        stats_cols=cols, store=store,
     )
 
 
-def _write_bucketed(df: DataFrame, path: str, num_buckets: int) -> None:
+def _write_bucketed(
+    df: DataFrame, path: str, num_buckets: int, range_by: tuple | None = None
+) -> None:
+    """The one parquet write of the commit kernel: one directory per
+    bucket.  ``range_by=(files_per_bucket, [cols])`` range-partitions
+    on (bucket, cols) instead, so each bucket lands as ~files_per_bucket
+    value-contiguous files (cluster / z-order)."""
+    if range_by is not None:
+        files_per_bucket, cols = range_by
+        df.repartitionByRange(
+            num_buckets * files_per_bucket, F.col(BUCKET_COL), *cols
+        ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
+        return
     # co-locate each bucket's rows before the partitioned write: without
     # this every task writes a file into every bucket directory (tasks ×
     # buckets small files — measured 2.3× slower ingest locally, and the
@@ -3192,7 +2974,7 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     :func:`purge_column_mapping` first)."""
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     spec = store.read_json(_spec_path(target)) or {}
     buckets = manifest["buckets"]
     deltas = manifest.get("deltas", {})
@@ -3299,7 +3081,7 @@ def read_keyed_table(
     if version is None:
         manifest = _load_manifest(target, store)
         if manifest is None:
-            raise FileNotFoundError(f"no keyed table committed at {target}")
+            raise FileNotFoundError(f"no committed keyed table at {target}")
     else:
         manifest = store.read_json(_version_manifest_path(target, version))
         if manifest is None:
@@ -3443,13 +3225,7 @@ def lookup_keys(
     N-bucket table reads ~k/N of the files regardless of table size —
     the difference between a point query and a table scan at 100 TB.
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
+    manifest, key, num_buckets = _open_table(target, store)
 
     keys_df = spark.createDataFrame([(k,) for k in keys], [key])
     # driver-side scalar collect of ≤ len(keys) ints — same class as
@@ -3464,7 +3240,7 @@ def lookup_keys(
     }
     # pending MOR deltas in a probed bucket resolve precedence for just
     # that bucket before the key semi-join (still ~k/N of files)
-    rows = _bucket_rows(spark, target, manifest, key, wanted)
+    rows = _scope_rows(spark, target, manifest, key, wanted)
     if rows is None:
         return read_keyed_table(spark, target, store).filter(F.lit(False))
     cmap, cdropped = _mapping_of(manifest)
@@ -3547,7 +3323,7 @@ def table_stats(target: str, store=LOCAL_STORE) -> dict:
     """
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     live = sorted(
         f for files in manifest.get("buckets", {}).values() for f in files
     )
@@ -3962,20 +3738,14 @@ def merge_into(
 
     Scale shape: source keys hash to their buckets (≤ num_buckets scalar
     collect), ONLY those buckets' live rows are read
-    (:func:`_bucket_rows`), the join is key-equi (source side broadcasts
+    (:func:`_scope_rows`), the join is key-equi (source side broadcasts
     when dim-sized), and the write is O(affected keys' rows + inserts) —
     merging 1k CDC rows into a 100 TB table touches k buckets.
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+    manifest, key, num_buckets = _open_table(target, store)
     # merge_into re-interprets user SQL against BOTH the table's rows
     # and the source frame mid-merge — not column-mapping-aware
     _require_unmapped(manifest, "merge_into")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
     if key not in source.columns:
         raise ValueError(f"source is missing the key column {key!r}")
     if when_matched_update:
@@ -4015,7 +3785,7 @@ def merge_into(
             "one source row (resolve duplicates before the merge)"
         )
     wanted = set(probe["__bk"] or [])
-    rows = _bucket_rows(spark, target, manifest, key, wanted) if wanted else None
+    rows = _scope_rows(spark, target, manifest, key, wanted) if wanted else None
 
     deleted = updated = inserted = 0
     parts: list[DataFrame] = []
@@ -4126,8 +3896,8 @@ def merge_into(
         # scope is defined by ABSENCE from the source, so every live
         # bucket must be scanned (see docstring caveat) — but only keys
         # the clause changes are restated
-        all_rows = _bucket_rows(
-            spark, target, manifest, key, set(range(num_buckets))
+        all_rows = _scope_rows(
+            spark, target, manifest, key, range(num_buckets)
         )
         if all_rows is not None:
             nm = all_rows.join(
@@ -4211,8 +3981,10 @@ def merge_into(
     visible = delta.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
     _enforce_constraints(visible, target, store)
     if deleted or updated or inserted:
-        bucketed = delta.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-        _append_delta_commit(bucketed, target, manifest, num_buckets, store)
+        _commit_files(
+            spark, target, delta, manifest, key, num_buckets, "delta",
+            store=store,
+        )
     return {"updated": updated, "deleted": deleted, "inserted": inserted}
 
 
@@ -4305,26 +4077,16 @@ def apply_changes(
     Scale shape: net resolution is one window over the batch (CDC
     batches are small by construction); the batch's keys hash to their
     buckets (≤ num_buckets scalar collect) and ONLY those buckets' live
-    rows are read for the stored-sequence probe (:func:`_bucket_rows`);
+    rows are read for the stored-sequence probe (:func:`_scope_rows`);
     the write is ONE O(net-change) MOR delta commit — applying 1k CDC
     rows to a 100 TB table touches k buckets and rewrites nothing.
     """
     for c in (seq_col, op_col):
         if c not in changes.columns:
             raise ValueError(f"changes frame is missing column {c!r}")
-    manifest = _load_manifest(target, store)
-    _require_unmapped(manifest, "apply_changes")
-    if manifest is None:
-        if key is None:
-            raise ValueError(
-                f"no table at {target}: pass key= (and num_buckets=) to "
-                "bootstrap from this batch"
-            )
-    else:
-        spec = store.read_json(_spec_path(target))
-        if spec is None:
-            raise ValueError(f"{target} has a manifest but no bucket spec")
-        key, num_buckets = spec["key"], spec["num_buckets"]
+    manifest, key, num_buckets = _open_or_bootstrap(
+        target, key, num_buckets, store, "apply_changes"
+    )
     if key not in changes.columns:
         raise ValueError(f"changes frame is missing the key column {key!r}")
     if (
@@ -4373,7 +4135,7 @@ def apply_changes(
             ).distinct().collect()
         }
         rows = (
-            _bucket_rows(spark, target, manifest, key, wanted)
+            _scope_rows(spark, target, manifest, key, wanted)
             if wanted
             else None
         )
@@ -4399,7 +4161,7 @@ def apply_changes(
             ).distinct().collect()
         }
         trows = (
-            _bucket_rows(spark, tomb_path, tmanifest, key, twanted)
+            _scope_rows(spark, tomb_path, tmanifest, key, twanted)
             if twanted
             else None
         )
@@ -4497,8 +4259,10 @@ def apply_changes(
             target,
             store,
         )
-        bucketed = delta.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-        _append_delta_commit(bucketed, target, manifest, num_buckets, store)
+        _commit_files(
+            spark, target, delta, manifest, key, num_buckets, "delta",
+            store=store,
+        )
 
     if deleted:
         # sequenced delete memory: replace-by-key keeps each key's
@@ -4567,16 +4331,9 @@ def apply_changes_scd2(
     for c in (seq_col, op_col, *track_cols):
         if c not in changes.columns:
             raise ValueError(f"changes frame is missing column {c!r}")
-    manifest = _load_manifest(target, store)
-    _require_unmapped(manifest, "apply_changes_scd2")
-    if manifest is not None:
-        spec = store.read_json(_spec_path(target))
-        key, num_buckets = spec["key"], spec["num_buckets"]
-    elif key is None:
-        raise ValueError(
-            f"no table at {target}: pass key= (and num_buckets=) to "
-            "bootstrap from this batch"
-        )
+    manifest, key, num_buckets = _open_or_bootstrap(
+        target, key, num_buckets, store, "apply_changes_scd2"
+    )
     # materialize the deduped batch ONCE (r11): the conflict check, the
     # bucket probe, the touched-key set and the replay feed below each
     # execute this frame — without the checkpoint each re-ran the
@@ -4611,7 +4368,7 @@ def apply_changes_scd2(
         r[0]
         for r in ch.select(_bucket_expr(key, num_buckets)).distinct().collect()
     }
-    stored = _bucket_rows(spark, target, manifest, key, wanted)
+    stored = _scope_rows(spark, target, manifest, key, wanted)
     batch_keys = ch.select(key).distinct()
     if stored is not None:
         stored = stored.join(batch_keys, key, "inner").localCheckpoint(
@@ -4762,7 +4519,7 @@ def restore_keyed_table(
     """
     cur = _load_manifest(target, store)
     if cur is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     if version == cur.get("version"):
         return version  # already there: no-op, no version churn
     snap = store.read_json(_version_manifest_path(target, version))
@@ -4861,7 +4618,7 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     """
     manifest = _load_manifest(src, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {src}")
+        raise FileNotFoundError(f"no committed keyed table at {src}")
     # _load_manifest (not a bare manifest read) so a pre-manifest legacy
     # layout at dest also refuses — clone never overwrites data
     if _load_manifest(dest, store) is not None:
@@ -4969,8 +4726,7 @@ def keyed_append(
     (merge/compact/optimize/restore) and RESET by clone — a clone is a
     new table to every writer.
     """
-    if (txn_app is None) != (txn_seq is None):
-        raise ValueError("txn_app and txn_seq must be passed together")
+    txn = _txn_of(txn_app, txn_seq)
     os.makedirs(target, exist_ok=True)
     manifest = _load_manifest(target, store)
     if manifest is None:
@@ -4985,134 +4741,46 @@ def keyed_append(
         )
         m = _load_manifest(target, store)
         return sum(len(fs) for fs in m["buckets"].values()) if m else 0
-    if txn_app is not None:
-        applied = manifest.get("txns", {}).get(txn_app)
-        if applied is not None and int(txn_seq) <= int(applied):
-            return 0
-    num_buckets = _load_or_check_spec(target, key, num_buckets, store)
-    # column-mapping boundary: logical batch -> physical append files
-    batch = _translate_batch(batch, manifest)
-    if stats_cols:
-        _cm, _ = _mapping_of(manifest)
-        stats_cols = [_phys_name(c, _cm) for c in stats_cols]
-    stored_schema = _manifest_schema(manifest)
-    if stored_schema is not None:
-        batch = _align_batch_types(
-            batch, _strip_dropped_fields(stored_schema, manifest), key
-        )
-    else:
-        live = [
-            f for fs in manifest["buckets"].values() for f in fs
-        ] + _delta_files_of(manifest)
-        if live:
-            batch = _align_batch_types(
-                batch,
-                _strip_dropped_fields(
-                    _read_files(spark, target, live).schema, manifest
-                ),
-                key,
-            )
-    bucketed = batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    affected = sorted(
-        r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()
-    )
-    if not affected:
+    if _txn_applied(manifest, txn):
         return 0
-    _enforce_constraints(bucketed, target, store)
+    num_buckets = _load_or_check_spec(target, key, num_buckets, store)
+    admitted = _admit_batch(
+        spark, batch, target, manifest, key, num_buckets, store, stats_cols
+    )
+    if admitted is None:
+        return 0
+    bucketed, affected, stats_cols = admitted
     deltas = manifest.get("deltas", {})
-    affected_str = [str(b) for b in affected]
-    if verify_new:
-        probe_files = [
-            f
-            for b in affected_str
-            for f in manifest["buckets"].get(b, [])
-        ] + [
-            e["path"] for b in affected_str for e in deltas.get(b, [])
-        ]
-        if probe_files:
-            # probe the TABLE side against the broadcast batch keys: the
-            # batch is the small side by construction, and a semi-join
-            # the other way around would shuffle (or broadcast) the
-            # table's key column instead — measured 9.0 s vs 1.3 s on a
-            # 9.6M-row table for a 1,500-key batch
-            existing = _read_files(
-                spark, target, probe_files, schema=stored_schema
-            ).select(key)
-            hit = (
-                existing.join(
-                    F.broadcast(bucketed.select(key).distinct()),
-                    key,
-                    "left_semi",
-                )
-                .limit(1)
-                .collect()
+    probe_files = [
+        f for b in affected for f in manifest["buckets"].get(b, [])
+    ] + [e["path"] for b in affected for e in deltas.get(b, [])]
+    if verify_new and probe_files:
+        # probe the TABLE side against the broadcast batch keys: the
+        # batch is the small side by construction, and a semi-join the
+        # other way around would shuffle (or broadcast) the table's key
+        # column instead — measured 9.0 s vs 1.3 s on a 9.6M-row table
+        # for a 1,500-key batch
+        hit = (
+            _read_files(
+                spark, target, probe_files, schema=_manifest_schema(manifest)
             )
-            if hit:
-                raise ValueError(
-                    f"append key {hit[0][0]!r} already exists in {target} "
-                    "(live or tombstoned) — use a merge to replace keys"
-                )
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    _write_bucketed(bucketed, os.path.join(target, commit_rel), num_buckets)
-    written = _list_commit_buckets(target, commit_rel, store)
-    new_file_list = [f for fs in written.values() for f in fs]
-
-    def _build(base: dict) -> dict:
-        new_buckets = dict(base["buckets"])
-        for b, files in written.items():
-            new_buckets[b] = new_buckets.get(b, []) + files
-        tracked = sorted(set(_stats_cols_of(base)) | set(stats_cols or []))
-        stats = dict(base.get("stats", {}))
-        if tracked:
-            stats.update(_file_stats(target, new_file_list, tracked, spark=spark, store=store))
-        retired = [
-            e
-            for e in base.get("retired", [])
-            if store.exists(os.path.join(target, e["path"]))
-        ]
-        live_now = {f for fs in new_buckets.values() for f in fs}
-        txns = dict(base.get("txns", {}))
-        if txn_app is not None:
-            # monotone across rebase (see keyed_overwrite_parquet's
-            # _build): never regress an intervening higher watermark
-            txns[txn_app] = max(
-                int(txn_seq), int(txns.get(txn_app, txn_seq))
+            .select(key)
+            .join(F.broadcast(bucketed.select(key).distinct()), key, "left_semi")
+            .limit(1)
+            .collect()
+        )
+        if hit:
+            raise ValueError(
+                f"append key {hit[0][0]!r} already exists in {target} "
+                "(live or tombstoned) — use a merge to replace keys"
             )
-        out = {
-            "version": base["version"] + 1,
-            "buckets": new_buckets,
-            "deltas": base.get("deltas", {}),
-            "retired": retired,
-            "stats": stats,
-            "blooms": _carry_blooms(base, live_now),
-            "txns": txns,
-        }
-        entry = _schema_union_entry(base, bucketed.schema)
-        if entry is not None:
-            out["schema"] = entry
-        return out
-
-    strict = _disjoint_bucket_conflict(manifest, affected_str)
-
-    def _conflict(current: dict) -> str | None:
-        # the new-key verification probed the BASE's affected buckets —
-        # they must be untouched under the winner; a bucket-count change
-        # invalidates the batch's bucketing outright
-        if current.get("num_buckets", num_buckets) != num_buckets:
-            return "bucket count changed concurrently"
-        # ConcurrentTransaction: same-app intervening advance means
-        # this epoch already applied — rebasing would double-append
-        if txn_app is not None:
-            adv = current.get("txns", {}).get(txn_app)
-            if adv is not None and int(adv) >= int(txn_seq):
-                return (
-                    f"txn {txn_app!r} advanced to seq {adv} concurrently; "
-                    f"this batch (seq {txn_seq}) is already applied or stale"
-                )
-        return strict(current)
-
-    _commit_optimistic(target, manifest, _build, _conflict, store)
-    return len(new_file_list)
+    # the new-key verification probed the BASE's affected buckets — they
+    # must be untouched under any winner the commit rebases over
+    _, written = _commit_files(
+        spark, target, bucketed, manifest, key, num_buckets, "append",
+        guard=affected, txn=txn, stats_cols=stats_cols, store=store,
+    )
+    return sum(len(fs) for fs in written.values())
 
 
 @_records_op("optimize")
@@ -5145,14 +4813,7 @@ def optimize_keyed_table(
     Returns the number of buckets packed (0 = nothing to do, no
     manifest churn).
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    key, num_buckets = spec["key"], spec["num_buckets"]
-    deltas = manifest.get("deltas", {})
+    manifest, key, num_buckets = _open_table(target, store)
     packable = sorted(
         b
         for b, fs in manifest["buckets"].items()
@@ -5160,78 +4821,9 @@ def optimize_keyed_table(
     )
     if not packable:
         return 0
-    clean = [b for b in packable if b not in deltas]
-    dirty = [b for b in packable if b in deltas]
-    parts = []
-    if clean:
-        parts.append(
-            _read_files(
-                spark,
-                target,
-                [f for b in clean for f in manifest["buckets"][b]],
-                schema=_manifest_schema(manifest),
-            )
-        )
-    if dirty:
-        parts.append(_resolve_dirty(spark, target, manifest, key, dirty))
-    rows = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-    ).withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
-    _write_bucketed(rows, os.path.join(target, commit_rel), num_buckets)
-    written = _list_commit_buckets(target, commit_rel, store)
-
-    new_buckets = dict(manifest["buckets"])
-    superseded = []
-    for b in packable:
-        superseded.extend(manifest["buckets"].get(b, []))
-        superseded.extend(e["path"] for e in deltas.get(b, []))
-        files = written.get(b)
-        if files:
-            new_buckets[b] = files
-        else:
-            new_buckets.pop(b, None)
-    remaining_deltas = {
-        b: entries for b, entries in deltas.items() if b not in packable
-    }
-    now = time.time()
-    retired = [
-        e
-        for e in manifest.get("retired", [])
-        if store.exists(os.path.join(target, e["path"]))
-    ] + [{"path": f, "ts": now} for f in superseded]
-    tracked = _stats_cols_of(manifest)
-    live_now = {f for fs in new_buckets.values() for f in fs}
-    stats = {
-        f: s for f, s in manifest.get("stats", {}).items() if f in live_now
-    }
-    if tracked:
-        stats.update(
-            _file_stats(
-                target,
-                [f for fs in written.values() for f in fs],
-                tracked,
-                spark=spark,
-                store=store,
-            )
-        )
-    optimized = {
-        "version": manifest["version"] + 1,
-        "buckets": new_buckets,
-        "deltas": remaining_deltas,
-        "retired": retired,
-        "stats": stats,
-        "blooms": _carry_blooms(manifest, live_now),
-    }
-    # bin-packing rewrites a bucket subset: base ∪ packed frame
-    entry = _schema_union_entry(manifest, rows.schema)
-    if entry is not None:
-        optimized["schema"] = entry
-    _commit_manifest(
-        target,
-        optimized,
-        expected_version=manifest["version"],
-        store=store,
+    _commit_files(
+        spark, target, _scope_rows(spark, target, manifest, key, packable),
+        manifest, key, num_buckets, "replace", buckets=packable, store=store,
     )
     return len(packable)
 
@@ -5498,7 +5090,7 @@ def adopt_foreign_files(target: str, store=LOCAL_STORE) -> int:
 
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
 
     moved: dict[str, str] = {}
 
@@ -5579,7 +5171,7 @@ def expire_snapshots(
         raise ValueError("keep_last must be >= 1")
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     versions = table_history(target, store)
     current = manifest["version"]
     protected = set(

@@ -127,7 +127,7 @@ def refresh_aggregate_view(
         )
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     cur_v = manifest["version"]
     meta = store.read_json(_meta_path(mv_path))
     if meta is not None and (
@@ -276,7 +276,7 @@ def refresh_minmax_view(
         )
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     cur_v = manifest["version"]
     meta = store.read_json(_meta_path(mv_path))
     if meta is not None and (
@@ -510,7 +510,7 @@ def refresh_star_view(
     for p in paths:
         m = _load_manifest(p, store)
         if m is None:
-            raise FileNotFoundError(f"no keyed table committed at {p}")
+            raise FileNotFoundError(f"no committed keyed table at {p}")
         manifests.append(m)
     versions = [m["version"] for m in manifests]
     meta = store.read_json(_meta_path(mv_path))
@@ -820,7 +820,7 @@ def _refresh_sketch_view(
     """
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     cur_v = manifest["version"]
     meta = store.read_json(_meta_path(mv_path))
     if meta is not None and (
@@ -1130,7 +1130,7 @@ def refresh_cms_view(
     shape = {"item_col": item_col, "depth": depth, "width": width}
     manifest = _load_manifest(target, store)
     if manifest is None:
-        raise FileNotFoundError(f"no keyed table committed at {target}")
+        raise FileNotFoundError(f"no committed keyed table at {target}")
     cur_v = manifest["version"]
     meta = store.read_json(_meta_path(mv_path))
     if meta is not None and (

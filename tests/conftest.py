@@ -41,11 +41,30 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="full tier: run with SPARK_GRAFT_FULL_TESTS=1"
     )
+    named = _named_node_ids(config)
+    # a named test's parametrized cases and a named class's tests count
+    named_prefixes = tuple(n + s for n in named for s in ("[", "::"))
     for item in items:
+        if item.nodeid in named or item.nodeid.startswith(named_prefixes):
+            continue  # asked for by name: run it whatever its tier
         if item.nodeid in ids or (
             prefixes and item.nodeid.startswith(prefixes)
         ):
             item.add_marker(skip)
+
+
+def _named_node_ids(config) -> set[str]:
+    """Node ids the command line names explicitly (``file::test``),
+    rewritten relative to the rootdir the way pytest prints them."""
+    out = set()
+    for arg in config.args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        full = os.path.join(str(config.invocation_params.dir), path)
+        rel = os.path.relpath(os.path.abspath(full), str(config.rootpath))
+        out.add(rel.replace(os.sep, "/") + "::" + rest)
+    return out
 
 
 @pytest.fixture(scope="session")
