@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import sink
 from .operators.ingest import build_events, build_tracking, filter_after_high_water_mark
 from .sink import keyed_overwrite_parquet, read_keyed_table
 from .sources.csv_source import read_tracking_csv
@@ -22,16 +23,32 @@ from .sources.csv_source import read_tracking_csv
 def parquet_high_water_mark(
     spark: SparkSession, target: str, column: str = "fileName"
 ) -> str | None:
-    """S8 against the parquet mirror: max(fileName) already loaded."""
+    """S8 against the parquet mirror: max(fileName) already loaded.
+
+    Stats first: :func:`incremental_load` keeps footer min/max stats for
+    ``fileName`` on the tracking table, so the answer is the manifest's
+    ``max`` (:func:`sink.table_stats` of the loaded snapshot) —
+    O(manifest) driver work and no Spark job, however large the table.  It scans (``max`` over
+    :func:`sink.read_keyed_table`) whenever the manifest cannot answer
+    exactly: the snapshot has pending merge-on-read deltas (they shadow
+    base rows), some live file has no recorded range for the column (a
+    table written before the stats were kept, or a footer range that
+    could not be recorded), or the table has renamed or dropped columns
+    (stats are keyed by physical names).  An all-null column answers
+    None either way."""
     if not os.path.isdir(target):
         return None
-    try:
-        df = read_keyed_table(spark, target)
-    except FileNotFoundError:
+    manifest = sink._load_manifest(target)
+    if manifest is None:
         # directory exists but nothing was ever committed (e.g. a crash
         # before the first manifest swap) — same as no table.
         return None
-    return df.agg(F.max(column)).collect()[0][0]
+    if not any(sink._mapping_of(manifest)):
+        meta = sink._table_stats_of(manifest)
+        stat = meta["columns"].get(column) if meta["clean"] else None
+        if stat is not None:
+            return stat["max"]
+    return read_keyed_table(spark, target).agg(F.max(column)).collect()[0][0]
 
 
 def _fetch_one(con, sql: str):
@@ -202,7 +219,12 @@ def incremental_load(
         # advance LAST — a failure between the two merges then replays both
         # (harmless under replace-by-key) instead of silently skipping events.
         keyed_overwrite_parquet(spark, events, events_target, key)
-        keyed_overwrite_parquet(spark, tracking, tracking_target, key)
+        # fileName stats let the next cycle read its high-water mark from
+        # the manifest (parquet_high_water_mark); footers the commit's
+        # row-count fill opens anyway, so no extra Spark job
+        keyed_overwrite_parquet(
+            spark, tracking, tracking_target, key, stats_cols=["fileName"]
+        )
     finally:
         tracking.unpersist()
         events.unpersist()

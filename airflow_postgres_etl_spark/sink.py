@@ -2935,24 +2935,33 @@ def _write_bucketed(
     # buckets small files — measured 2.3× slower ingest locally, and the
     # classic small-file problem on a real cluster).
     #
-    # Measured NON-optimization (r11, kept as a record): replacing the
-    # repartition with coalesce(1) for provably-small commits (bounded
-    # via the batch's bucket counts + the manifest rows index) read
-    # NEUTRAL-to-WORSE in an interleaved same-session A/B (ratios
-    # 0.99-1.17 over 4 lifecycle queries, best-of-3) — per-commit cost
-    # here is Catalyst planning + fixed job overhead, not this tiny
-    # exchange, and coalesce(1) serializes the upstream merge compute.
+    # The exchange is sized by AQE, not by the bucket count: a
+    # repartition by column alone starts at spark.sql.shuffle.partitions
+    # and AQE's partition coalescing shrinks it to the data (a fixed
+    # repartition(num_buckets, ...) is exempt from coalescing).  A bucket
+    # hashes to exactly one reduce partition and coalescing only merges
+    # whole partitions, so a commit still writes one file per bucket.
+    # Measured on etlbench cdc_trickle (a 100-row file merged into
+    # 300-row, 64-bucket tables; 4-core VM): each merge's tasks 129 -> 19
+    # (traced, seed 1).  With the session's listing threshold and the
+    # manifest high-water mark, op CPU-s fell 43.8 -> 31.3 (median of 10
+    # interleaved seed pairs, 10 of 10 won); with those two alone it read
+    # 40-44 against 34-37 (3 seeds).  Large writes keep AQE's
+    # parallelism-first sizing.
     #
-    # Measured NON-optimization #2 (r12): toggling AQE OFF around this
-    # write cut 2-9 jobs per lifecycle query but REGRESSED wall-clock
-    # +14-15% wherever the commit's upstream plan is non-trivial
-    # (table_append_optimize 5.64->6.43 s, view_star_ivm 10.44->12.01 s
-    # best-of-3 interleaved at sf0.1): the conf applies to the WHOLE
-    # query planned at the write action, so the upstream merge loses
-    # AQE's runtime broadcast/coalesce re-planning.  AQE stays on.
-    df.repartition(num_buckets, F.col(BUCKET_COL)).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(path)
+    # Two earlier attempts at the small-commit cost, kept as a record:
+    # - r11: coalesce(1) for provably-small commits read NEUTRAL-to-WORSE
+    #   (ratios 0.99-1.17 over 4 lifecycle queries, best-of-3): it
+    #   collapsed the upstream merge compute into one task.  The AQE
+    #   exchange above keeps the map side parallel.
+    # - r12: AQE OFF around this write cut 2-9 jobs per lifecycle query
+    #   but REGRESSED wall-clock +14-15% (table_append_optimize
+    #   5.64->6.43 s, view_star_ivm 10.44->12.01 s at sf0.1): the conf
+    #   applies to the WHOLE query planned at the write action, so the
+    #   upstream merge loses AQE's runtime re-planning.  AQE stays on.
+    df.repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
+        BUCKET_COL
+    ).parquet(path)
 
 
 def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
@@ -3317,13 +3326,20 @@ def table_stats(target: str, store=LOCAL_STORE) -> dict:
     carry a count (pre-feature manifests don't until their next commit).
     Otherwise ``row_count`` is None — never an estimate.  Column
     entries appear only for stats-tracked columns whose min/max covers
-    EVERY live file (a single untracked file makes the bound unsound —
-    omitted, not widened); ``null_count`` additionally requires the
-    4-element stats form everywhere, else None.
+    EVERY live file (a single untracked file, or a file whose footer
+    range is unrecordable for a non-null column, makes the bound
+    unsound — omitted, not widened; all-null files need no range);
+    ``null_count`` additionally requires the 4-element stats form
+    everywhere, else None.
     """
     manifest = _load_manifest(target, store)
     if manifest is None:
         raise FileNotFoundError(f"no committed keyed table at {target}")
+    return _table_stats_of(manifest)
+
+
+def _table_stats_of(manifest: dict) -> dict:
+    """:func:`table_stats` of one loaded snapshot."""
     live = sorted(
         f for files in manifest.get("buckets", {}).values() for f in files
     )
@@ -3340,8 +3356,13 @@ def table_stats(target: str, store=LOCAL_STORE) -> dict:
         per_file = [stats.get(f, {}).get(col) for f in live]
         if any(e is None for e in per_file):
             continue  # a file without the entry = unknown range
-        # all-null files ([None, None, n, r]) carry no range but don't
-        # invalidate the others' bounds — nulls sort nowhere
+        # a rangeless entry [None, None, n, r] is either an all-null file
+        # (n == r: no range, and nulls sort nowhere, so the others'
+        # bounds stand) or a populated column whose footer range could
+        # not be recorded (n < r: date/timestamp/decimal, undecodable
+        # bytes) — that file's values are unknown, so the bound is too
+        if any(e[0] is None and e[2] < e[3] for e in per_file):
+            continue
         ranged = [e for e in per_file if e[0] is not None]
         if not ranged:
             lo = hi = None

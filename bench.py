@@ -525,6 +525,13 @@ def main() -> None:
     # (thread-local metadata, zero timing effect; the library never sets
     # groups of its own) and the min across reps is recorded — reps are
     # plan-deterministic, min guards against a stray AQE re-plan.
+    #
+    # The group is a THREAD-LOCAL property: jobs a query launches from
+    # another thread (a streaming query, an async action, a Py4J
+    # callback) land outside it and go uncounted.  Every headline query
+    # runs at least one job on this thread (2 at the least, in
+    # BENCH_LOCAL.json), so a rep that records 0 is that blind spot, and
+    # it raises instead of entering the channel as 0.
     sc = spark.sparkContext
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
@@ -536,6 +543,11 @@ def main() -> None:
         fn(spark, sf_dir).collect()
         el = time.perf_counter() - t0
         n = len(sc.statusTracker().getJobIdsForGroup(group))
+        if n == 0:
+            raise RuntimeError(
+                f"{name}: 0 Spark jobs in its job group; its jobs ran "
+                "outside this thread, so the jobs channel cannot count them"
+            )
         return el, n
 
     for name in HEADLINE:

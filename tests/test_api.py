@@ -335,6 +335,56 @@ def test_metadata_only_table_stats(spark, tmp_path):
     assert sink.table_stats(str(tmp_path / "s"))["row_count"] is None
 
 
+def test_table_stats_unrecorded_range_is_unknown_not_null(spark, tmp_path):
+    """A stats column whose footer range can't be recorded (here a date)
+    is unknown, not all-null: table_stats omits it rather than report
+    min/max None.  An all-null file still leaves the other files'
+    bounds standing."""
+    import datetime
+
+    from airflow_postgres_etl_spark import sink
+
+    t = str(tmp_path / "d")
+    sink.keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame(
+            [(i, datetime.date(2024, 1, 1 + i), None) for i in range(20)],
+            "k long, d date, u string",
+        ),
+        t,
+        key="k",
+        num_buckets=2,
+        stats_cols=["d", "u"],
+    )
+    cols = sink.table_stats(t)["columns"]
+    assert "d" not in cols
+    assert cols["u"] == {"min": None, "max": None, "null_count": 20}
+
+    # bucket 0 gets values, bucket 1 stays all-null
+    b0 = [
+        r.k
+        for r in sink.read_keyed_table(spark, t)
+        .select("k", sink._bucket_expr("k", 2).alias("b"))
+        .collect()
+        if r.b == 0
+    ]
+    sink.keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame(
+            [(k, datetime.date(2024, 1, 1), f"u{k:02d}") for k in b0],
+            "k long, d date, u string",
+        ),
+        t,
+        key="k",
+    )
+    want = sorted(f"u{k:02d}" for k in b0)
+    assert sink.table_stats(t)["columns"]["u"] == {
+        "min": want[0],
+        "max": want[-1],
+        "null_count": 20 - len(b0),
+    }
+
+
 def test_auto_compact_bounds_delta_depth(spark, tmp_path):
     """merge_mor(auto_compact_depth=N): the delta chain self-compacts at
     depth N — read amplification stays bounded with no maintenance

@@ -210,7 +210,7 @@ def test_crash_before_commit_keeps_snapshot_then_retry_lands(
     assert _table_parquet(target) == live
 
 
-def _jobs_of(spark, fn) -> int:
+def _job_ids_of(spark, fn) -> list[int]:
     sc = spark.sparkContext
     group = f"jobpin-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
@@ -219,7 +219,11 @@ def _jobs_of(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_of(spark, fn) -> int:
+    return len(_job_ids_of(spark, fn))
 
 
 @pytest.mark.parametrize("op", sorted({**OPS, **JOB_ONLY_OPS}))
@@ -233,3 +237,61 @@ def test_write_path_job_budget_and_manifest_invariants(spark, tmp_path, op):
     assert after["version"] == before["version"] + 1
     check_manifest(after, before)
     assert jobs == JOB_BUDGET[op], f"{op}: {jobs} jobs"
+
+
+def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
+    spark, tmp_path
+):
+    """At the default 64-bucket layout (more live files than Spark's
+    default listing threshold of 32): a table read and the high-water
+    mark run no Spark job, and a 2-row merge keeps its job count, writes
+    through at most ``defaultParallelism`` tasks, and adds exactly one
+    file to each bucket it touches."""
+    from airflow_postgres_etl_spark.pipeline import parquet_high_water_mark
+
+    sc = spark.sparkContext
+    target = str(tmp_path / "t")
+    schema = "oid__id string, fileName string, v int"
+    sink.keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame(
+            [(f"k{i}", f"f{i % 7:03d}.csv", i) for i in range(200)], schema
+        ),
+        target,
+        stats_cols=["fileName"],
+    )
+    before = sink._load_manifest(target)
+    assert len(_live(before)) > 32
+
+    assert _jobs_of(spark, lambda: sink.read_keyed_table(spark, target)) == 0
+    hwm = []
+    assert _jobs_of(
+        spark, lambda: hwm.append(parquet_high_water_mark(spark, target))
+    ) == 0
+    assert hwm == ["f006.csv"]
+
+    jobs = _job_ids_of(
+        spark,
+        lambda: sink.keyed_overwrite_parquet(
+            spark,
+            spark.createDataFrame(
+                [("k1", "f900.csv", 10), ("k2", "f901.csv", 20)], schema
+            ),
+            target,
+        ),
+    )
+    assert len(jobs) == 7
+    tracker = sc.statusTracker()
+    # the write is the merge's last job; its result stage is the write
+    write_stage = max(tracker.getJobInfo(max(jobs)).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks <= sc.defaultParallelism
+
+    after = sink._load_manifest(target)
+    check_manifest(after, before)
+    changed = {
+        b
+        for b in set(before["buckets"]) | set(after["buckets"])
+        if before["buckets"].get(b) != after["buckets"].get(b)
+    }
+    assert 1 <= len(changed) <= 2
+    assert all(len(after["buckets"][b]) == 1 for b in changed)

@@ -299,11 +299,16 @@ def test_legacy_band_key_index_reads_and_appends_compatibly(
     assert got2 == set()
 
 
-def test_band_hi_lo_bijection_roundtrips_md5():
+def test_band_hi_lo_bijection_roundtrips_md5(spark):
     """The (hi, lo) signed-long decomposition must be an exact bijection
     with the 32-char md5 hex — equality on the longs IS equality on the
-    string, which is what keeps every candidate set unchanged."""
+    string, which is what keeps every candidate set unchanged.  Both
+    production expressions run through Spark over md5 digests and the
+    boundary patterns (min/max long, all-zero, all-one halves), and are
+    compared with a Python model of the decomposition."""
     import hashlib
+
+    from pyspark.sql import functions as F
 
     import airflow_postgres_etl_spark.operators.dedup as D
 
@@ -313,19 +318,24 @@ def test_band_hi_lo_bijection_roundtrips_md5():
 
         return signed(int(h[:16], 16)), signed(int(h[16:], 16))
 
-    def py_back(hi: int, lo: int) -> str:
-        return f"{hi & (2**64 - 1):016x}{lo & (2**64 - 1):016x}"
-
-    for s in [b"", b"a", b"band|0|1", b"\xff" * 33, b"edge"]:
-        h = hashlib.md5(s).hexdigest()
-        hi, lo = py_hi_lo(h)
-        assert py_back(hi, lo) == h
-    # boundary patterns (min/max long, all-zero, all-one halves)
-    for h in [
+    hexes = [
+        hashlib.md5(s).hexdigest()
+        for s in [b"", b"a", b"band|0|1", b"\xff" * 33, b"edge"]
+    ] + [
         "0" * 32,
         "f" * 32,
         "8000000000000000" + "7fffffffffffffff",
         "7fffffffffffffff" + "8000000000000000",
-    ]:
-        hi, lo = py_hi_lo(h)
-        assert py_back(hi, lo) == h
+        "0000000000000001" + "ffffffffffffffff",
+    ]
+    hi, lo = D._band_hi_lo(F.col("h"))
+    rows = (
+        spark.createDataFrame([(h,) for h in hexes], "h string")
+        .select("h", hi.alias("hi"), lo.alias("lo"))
+        .select("h", "hi", "lo", D._legacy_band_key(F.col("hi"), F.col("lo")).alias("back"))
+        .collect()
+    )
+    assert len(rows) == len(hexes)
+    for r in rows:
+        assert (r.hi, r.lo) == py_hi_lo(r.h), r.h
+        assert r.back == r.h

@@ -208,6 +208,68 @@ def test_incremental_load_end_to_end(spark, staged_dirs):
     assert orphan.count() == 0
 
 
+def _scan_max(spark, target, column="fileName"):
+    return read_keyed_table(spark, target).agg(F.max(column)).collect()[0][0]
+
+
+def _hwm_and_jobs(spark, target):
+    from .test_commit_kernel import _jobs_of
+
+    got = []
+    jobs = _jobs_of(spark, lambda: got.append(parquet_high_water_mark(spark, target)))
+    return got[0], jobs
+
+
+def test_high_water_mark_from_manifest_equals_scan(spark, tmp_path):
+    """parquet_high_water_mark answers from the manifest's fileName stats
+    when they are exact, and equals max(fileName) from a scan in every
+    case: a pipeline-written table (no Spark job), a table written
+    before the stats were kept and a snapshot with pending MOR deltas
+    (both fall back to the scan), and an all-null column (None)."""
+    from airflow_postgres_etl_spark.sink import keyed_merge_mor
+
+    csv_dir, tr, ev = (str(tmp_path / d) for d in ("csv", "tracking", "events"))
+    generate(csv_dir, n_files=2, rows_per_file=10)
+    incremental_load(spark, csv_dir, tr, ev)
+    hwm, jobs = _hwm_and_jobs(spark, tr)
+    assert jobs == 0
+    assert hwm == _scan_max(spark, tr) == sorted(os.listdir(csv_dir))[-1]
+
+    schema = "oid__id string, fileName string"
+    rows = [(f"k{i}", f"f{i:03d}.csv") for i in range(40)]
+    old = str(tmp_path / "pre_stats")
+    keyed_overwrite_parquet(spark, spark.createDataFrame(rows, schema), old)
+    # a later stats-keeping merge covers only the buckets it rewrites
+    keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame([("k0", "f000.csv")], schema),
+        old,
+        stats_cols=["fileName"],
+    )
+    hwm, jobs = _hwm_and_jobs(spark, old)
+    assert jobs > 0 and hwm == _scan_max(spark, old) == "f039.csv"
+
+    mor = str(tmp_path / "mor")
+    keyed_overwrite_parquet(
+        spark, spark.createDataFrame(rows, schema), mor, stats_cols=["fileName"]
+    )
+    assert parquet_high_water_mark(spark, mor) == "f039.csv"
+    # the delta replaces the max row: the base files' stats now overstate it
+    keyed_merge_mor(spark, spark.createDataFrame([("k39", "f000.csv")], schema), mor)
+    hwm, jobs = _hwm_and_jobs(spark, mor)
+    assert jobs > 0 and hwm == _scan_max(spark, mor) == "f038.csv"
+
+    nulls = str(tmp_path / "nulls")
+    keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame([(f"k{i}", None) for i in range(40)], schema),
+        nulls,
+        stats_cols=["fileName"],
+    )
+    assert _hwm_and_jobs(spark, nulls) == (None, 0)
+    assert _scan_max(spark, nulls) is None
+
+
 # ---------------------------------------------------------------------------
 # JDBC stage-then-merge, executed end-to-end against DuckDB as the
 # in-process database stand-in: the DELETE-USING / INSERT / DROP ordering,
