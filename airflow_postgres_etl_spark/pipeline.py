@@ -26,28 +26,26 @@ def parquet_high_water_mark(
     """S8 against the parquet mirror: max(fileName) already loaded.
 
     Stats first: :func:`incremental_load` keeps footer min/max stats for
-    ``fileName`` on the tracking table, so the answer is the manifest's
-    ``max`` (:func:`sink.table_stats` of the loaded snapshot) —
-    O(manifest) driver work and no Spark job, however large the table.  It scans (``max`` over
+    ``fileName`` on the tracking table, so the answer is the ``max`` that
+    :func:`sink.table_stats` reports: O(manifest) driver work and no
+    Spark job, however large the table.  It scans (``max`` over
     :func:`sink.read_keyed_table`) whenever the manifest cannot answer
     exactly: the snapshot has pending merge-on-read deltas (they shadow
-    base rows), some live file has no recorded range for the column (a
-    table written before the stats were kept, or a footer range that
-    could not be recorded), or the table has renamed or dropped columns
-    (stats are keyed by physical names).  An all-null column answers
+    base rows), or ``table_stats`` leaves the column out (a live file
+    without a recorded range, e.g. a table written before the stats were
+    kept, or a renamed or dropped column).  An all-null column answers
     None either way."""
     if not os.path.isdir(target):
         return None
-    manifest = sink._load_manifest(target)
-    if manifest is None:
+    try:
+        meta = sink.table_stats(target)
+    except FileNotFoundError:
         # directory exists but nothing was ever committed (e.g. a crash
         # before the first manifest swap) — same as no table.
         return None
-    if not any(sink._mapping_of(manifest)):
-        meta = sink._table_stats_of(manifest)
-        stat = meta["columns"].get(column) if meta["clean"] else None
-        if stat is not None:
-            return stat["max"]
+    stat = meta["columns"].get(column) if meta["clean"] else None
+    if stat is not None:
+        return stat["max"]
     return read_keyed_table(spark, target).agg(F.max(column)).collect()[0][0]
 
 

@@ -2941,24 +2941,9 @@ def _write_bucketed(
     # repartition(num_buckets, ...) is exempt from coalescing).  A bucket
     # hashes to exactly one reduce partition and coalescing only merges
     # whole partitions, so a commit still writes one file per bucket.
-    # Measured on etlbench cdc_trickle (a 100-row file merged into
-    # 300-row, 64-bucket tables; 4-core VM): each merge's tasks 129 -> 19
-    # (traced, seed 1).  With the session's listing threshold and the
-    # manifest high-water mark, op CPU-s fell 43.8 -> 31.3 (median of 10
-    # interleaved seed pairs, 10 of 10 won); with those two alone it read
-    # 40-44 against 34-37 (3 seeds).  Large writes keep AQE's
-    # parallelism-first sizing.
-    #
-    # Two earlier attempts at the small-commit cost, kept as a record:
-    # - r11: coalesce(1) for provably-small commits read NEUTRAL-to-WORSE
-    #   (ratios 0.99-1.17 over 4 lifecycle queries, best-of-3): it
-    #   collapsed the upstream merge compute into one task.  The AQE
-    #   exchange above keeps the map side parallel.
-    # - r12: AQE OFF around this write cut 2-9 jobs per lifecycle query
-    #   but REGRESSED wall-clock +14-15% (table_append_optimize
-    #   5.64->6.43 s, view_star_ivm 10.44->12.01 s at sf0.1): the conf
-    #   applies to the WHOLE query planned at the write action, so the
-    #   upstream merge loses AQE's runtime re-planning.  AQE stays on.
+    # Not coalesce(1): it collapses the upstream merge into one task.
+    # Not AQE off around the write: the conf covers the whole query
+    # planned at the write action, so the merge loses AQE's re-planning.
     df.repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
         BUCKET_COL
     ).parquet(path)
@@ -3330,16 +3315,15 @@ def table_stats(target: str, store=LOCAL_STORE) -> dict:
     range is unrecordable for a non-null column, makes the bound
     unsound — omitted, not widened; all-null files need no range);
     ``null_count`` additionally requires the 4-element stats form
-    everywhere, else None.
+    everywhere, else None.  Stats are keyed by physical column name, so
+    on a table with renamed or dropped columns a column appears only
+    where its physical and logical names are the same column.
     """
     manifest = _load_manifest(target, store)
     if manifest is None:
         raise FileNotFoundError(f"no committed keyed table at {target}")
-    return _table_stats_of(manifest)
-
-
-def _table_stats_of(manifest: dict) -> dict:
-    """:func:`table_stats` of one loaded snapshot."""
+    mapping, dropped = _mapping_of(manifest)
+    remapped = set(dropped) | set(mapping) | set(mapping.values())
     live = sorted(
         f for files in manifest.get("buckets", {}).values() for f in files
     )
@@ -3353,6 +3337,8 @@ def _table_stats_of(manifest: dict) -> dict:
     stats = manifest.get("stats", {})
     columns: dict[str, dict] = {}
     for col in _stats_cols_of(manifest):
+        if col in remapped:
+            continue  # physical name ≠ this logical column
         per_file = [stats.get(f, {}).get(col) for f in live]
         if any(e is None for e in per_file):
             continue  # a file without the entry = unknown range

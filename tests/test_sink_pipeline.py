@@ -22,6 +22,8 @@ from airflow_postgres_etl_spark.sink import (
     keyed_overwrite_parquet,
     merge_sql,
     read_keyed_table,
+    rename_column,
+    table_stats,
     vacuum_keyed_table,
 )
 
@@ -224,8 +226,9 @@ def test_high_water_mark_from_manifest_equals_scan(spark, tmp_path):
     """parquet_high_water_mark answers from the manifest's fileName stats
     when they are exact, and equals max(fileName) from a scan in every
     case: a pipeline-written table (no Spark job), a table written
-    before the stats were kept and a snapshot with pending MOR deltas
-    (both fall back to the scan), and an all-null column (None)."""
+    before the stats were kept, a snapshot with pending MOR deltas and
+    a table whose fileName stats belong to a renamed column (all fall
+    back to the scan), and an all-null column (None)."""
     from airflow_postgres_etl_spark.sink import keyed_merge_mor
 
     csv_dir, tr, ev = (str(tmp_path / d) for d in ("csv", "tracking", "events"))
@@ -268,6 +271,24 @@ def test_high_water_mark_from_manifest_equals_scan(spark, tmp_path):
     )
     assert _hwm_and_jobs(spark, nulls) == (None, 0)
     assert _scan_max(spark, nulls) is None
+
+    # swapped names: the physical fileName column (stats and all) now
+    # holds the logical "fn"; the logical fileName is physical "x"
+    swapped = str(tmp_path / "swapped")
+    keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame(
+            [(f"k{i}", f"f{i:03d}.csv", f"x{i:03d}.csv") for i in range(40)],
+            "oid__id string, fileName string, x string",
+        ),
+        swapped,
+        stats_cols=["fileName"],
+    )
+    rename_column(spark, swapped, "fileName", "fn")
+    rename_column(spark, swapped, "x", "fileName")
+    assert "fileName" not in table_stats(swapped)["columns"]
+    hwm, jobs = _hwm_and_jobs(spark, swapped)
+    assert jobs > 0 and hwm == _scan_max(spark, swapped) == "x039.csv"
 
 
 # ---------------------------------------------------------------------------
