@@ -71,6 +71,18 @@ Two implementations:
   commits (``_REBASE_SAFE_OPS``) that leave the buckets they write
   unchanged (the blind MOR upsert guards no bucket); the maintenance
   rewrites rebase over nothing — any intervening commit fails them.
+
+  Row-level DML builds its delta frame in one step,
+  :func:`_restate_keys`: per key with at least one row deleted or
+  assigned, the surviving rows (assignments applied) or one tombstone.
+  :func:`keyed_delete_where`, :func:`keyed_update_where` and both
+  :func:`merge_into` clause families differ only in the rows, the
+  delete condition and the assignments they hand it; assignment targets
+  are checked up front (:func:`_check_assignments`).  Metadata-only
+  commits of the ambient policies (drift, IVF, MinHash) are driven by
+  one table, ``_POLICIES``: their setters commit through
+  :func:`_policy_commit`, and the manifest carry, :func:`rename_column`
+  and :func:`drop_column` (via :func:`_mapping_commit`) loop over it.
 - **JDBC (Postgres) stage-then-merge**: stage the batch with
   ``df.write.jdbc`` (parallel INSERT at COPY-like speed), then one
   driver-side transaction ``DELETE target USING stage; INSERT SELECT`` —
@@ -587,6 +599,39 @@ def _fill_row_counts(
     return out
 
 
+def _field_policy(label: str, *fields: str) -> tuple:
+    """:data:`_POLICIES` entry for a policy whose columns are named by
+    top-level fields."""
+    return (
+        label,
+        lambda p: [p.get(f) for f in fields],
+        lambda p, old, new: {**p, **{f: new for f in fields if p.get(f) == old}},
+    )
+
+
+#: The ambient table policies, by manifest key (each set by
+#: ``set_<key>`` and read by ``<key>``): a label for errors, the logical
+#: columns a policy references, and the policy with one column renamed.
+#: Every policy rides each commit (:func:`_commit_manifest`'s carry),
+#: follows :func:`rename_column` and blocks :func:`drop_column` of a
+#: column it references.
+_POLICIES = {
+    "drift_policy": (
+        "drift-policy rules",
+        lambda p: [s.get("col") for s in p.get("rules", [])],
+        lambda p, old, new: {
+            **p,
+            "rules": [
+                {**s, "col": new} if s.get("col") == old else s
+                for s in p.get("rules", [])
+            ],
+        },
+    ),
+    "ivf_policy": _field_policy("IVF policy", "id_col", "vec_col"),
+    "minhash_policy": _field_policy("MinHash policy", "id_col", "text_col"),
+}
+
+
 def _commit_manifest(
     target: str, manifest: dict, expected_version: int | None, store=LOCAL_STORE
 ) -> None:
@@ -618,30 +663,21 @@ def _commit_manifest(
     # optimizes and restores.  Writers that SET one (keyed_append with
     # txn_app=) pass the merged dict explicitly; clone resets it to {}
     # explicitly (a clone is a new table to every streaming writer).
-    carry_txns = "txns" not in manifest
+    #
+    # The ambient policies (_POLICIES) ride the same carry: an armed
+    # policy survives every ordinary commit, compaction and restore;
+    # rename_column rewrites it explicitly, its setter sets/clears it
+    # explicitly (None clears — key present beats carry).
+    carry = [k for k in ("txns", *_POLICIES) if k not in manifest]
     carry_map = (
         "column_mapping" not in manifest and "dropped_columns" not in manifest
     )
-    # drift policy (set_drift_policy) rides the same carry: the armed
-    # circuit breaker survives every ordinary commit, compaction and
-    # restore; rename_column rewrites it explicitly, set_drift_policy
-    # sets/clears it explicitly (None clears — key present beats carry).
-    # The ambient IVF-health policy (set_ivf_policy, r10) rides
-    # identically.
-    carry_policy = "drift_policy" not in manifest
-    carry_ivf = "ivf_policy" not in manifest
-    carry_mh = "minhash_policy" not in manifest
-    if carry_txns or carry_map or carry_policy or carry_ivf or carry_mh:
+    if carry or carry_map:
         cur = store.read_json(_manifest_path(target))
         if cur:
-            if carry_txns and cur.get("txns"):
-                manifest["txns"] = cur["txns"]
-            if carry_policy and cur.get("drift_policy"):
-                manifest["drift_policy"] = cur["drift_policy"]
-            if carry_ivf and cur.get("ivf_policy"):
-                manifest["ivf_policy"] = cur["ivf_policy"]
-            if carry_mh and cur.get("minhash_policy"):
-                manifest["minhash_policy"] = cur["minhash_policy"]
+            for k in carry:
+                if cur.get(k):
+                    manifest[k] = cur[k]
             # carry the column mapping (rename/drop metadata) the same
             # way as txns: every ordinary commit inherits the tip's
             # mapping unchanged.  Callers that SET or must pin it write
@@ -783,13 +819,10 @@ _REBASE_SAFE_OPS = {
     "vacuum",
     "adopt_foreign",
     "apply_changes",
-    # metadata-only, data-preserving: arming/disarming the drift or
-    # ambient-IVF policy never invalidates a concurrent writer's files
-    # or bucket layout
-    "set_drift_policy",
-    "set_ivf_policy",
-    "set_minhash_policy",
     "commit",
+    # metadata-only, data-preserving: arming/disarming an ambient policy
+    # never invalidates a concurrent writer's files or bucket layout
+    *(f"set_{name}" for name in _POLICIES),
 }
 
 
@@ -1082,6 +1115,20 @@ def _txn_applied(manifest: dict | None, txn: tuple | None) -> bool:
     return applied is not None and txn[1] <= int(applied)
 
 
+def _table_schema(spark: SparkSession, target: str, manifest: dict):
+    """Physical data schema of a snapshot: the manifest-recorded one
+    (the live files' union schema, no footer read), else the footer
+    union of the live base and delta files; None when there are none."""
+    schema = _manifest_schema(manifest)
+    if schema is None:
+        live = [
+            f for fs in manifest["buckets"].values() for f in fs
+        ] + _delta_files_of(manifest)
+        if live:
+            schema = _read_files(spark, target, live).schema
+    return schema
+
+
 def _admit_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -1109,19 +1156,11 @@ def _admit_batch(
     if stats_cols:
         cmap, _ = _mapping_of(manifest)
         stats_cols = [_phys_name(c, cmap) for c in stats_cols]
-    if manifest is not None:
-        # the manifest-recorded schema (when present) IS the live files'
-        # union schema, so the footer-inference read is skipped outright
-        schema = _manifest_schema(manifest)
-        if schema is None:
-            live = [
-                f for fs in manifest["buckets"].values() for f in fs
-            ] + _delta_files_of(manifest)
-            schema = _read_files(spark, target, live).schema if live else None
-        if schema is not None:
-            batch = _align_batch_types(
-                batch, _strip_dropped_fields(schema, manifest), key
-            )
+    schema = None if manifest is None else _table_schema(spark, target, manifest)
+    if schema is not None:
+        batch = _align_batch_types(
+            batch, _strip_dropped_fields(schema, manifest), key
+        )
     bucketed = batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
     # Measured NON-optimization (r11, kept as a record — same class as
     # the _write_bucketed coalesce finding): eagerly localCheckpoint-ing
@@ -1323,6 +1362,11 @@ def _commit_files(
     return committed, written
 
 
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """Union by column name; a column missing from a frame reads NULL."""
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
 def _scope_rows(
     spark: SparkSession,
     target: str,
@@ -1354,9 +1398,7 @@ def _scope_rows(
         frames.append(_resolve_dirty(spark, target, manifest, key, dirty))
     if not frames:
         return None
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    ).drop(BUCKET_COL)
+    return _union(frames).drop(BUCKET_COL)
 
 
 @_records_op("merge")
@@ -1818,9 +1860,7 @@ def _resolve_dirty(
         )
         for seq in sorted(groups)
     ]
-    rows = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    )
+    rows = _union(frames)
     w = Window.partitionBy(key)
     out = (
         rows.withColumn("__maxseq", F.max("__seq").over(w))
@@ -1888,6 +1928,113 @@ def keyed_merge_mor(
     )
 
 
+def _check_assignments(spark, target, manifest, key, store, *assignments):
+    """Reject an assignment to the key, an internal column or a column
+    the table lacks — against the snapshot's logical columns (the
+    manifest alone when it records a schema), before any Spark job and
+    whether or not any row matches."""
+    given = [a for a in assignments if a]
+    if not given:
+        return
+    logical = set(_logical_columns(spark, target, manifest, store))
+    for a in given:
+        bad = set(a) & {key, BUCKET_COL, TOMBSTONE_COL}
+        if bad:
+            raise ValueError(
+                f"cannot assign to key/internal column(s) {sorted(bad)}"
+            )
+        unknown = set(a) - logical
+        if unknown:
+            raise ValueError(f"assignment to unknown column(s) {sorted(unknown)}")
+
+
+def _holds(pred):
+    """Per-row Column: the SQL predicate evaluates to TRUE (FALSE and
+    NULL do not hold — WHERE semantics).  ``True`` holds for every row;
+    None/False gives None, no condition."""
+    if not pred:
+        return None
+    return F.lit(True) if pred is True else F.expr(pred).eqNullSafe(F.lit(True))
+
+
+def _restate_keys(
+    rows: DataFrame,
+    key: str,
+    cols: list[str],
+    delete=None,
+    assign: dict[str, str] | None = None,
+    assign_if=None,
+    materialize: bool = False,
+    count: bool = False,
+):
+    """THE key-restatement step of row-level DML (module docstring,
+    "Commit kernel").  The table's replace unit is the key, so a change
+    to some of a key's rows is written as MOR delta rows restating the
+    whole key: its surviving rows with ``assign`` applied (SQL over the
+    OLD row, cast back to the column's type so the schema cannot drift),
+    or exactly one ``TOMBSTONE_COL`` row when no row survives.
+
+    ``rows`` are the candidate rows — they may carry extra columns the
+    expressions read, e.g. MERGE's ``s_*`` source columns — and ``cols``
+    the table columns restated.  ``delete`` is a per-row boolean Column
+    (None: nothing deletes); ``assign_if`` gates ``assign`` per row
+    (None: every surviving row is assigned).  The scope is the keys with
+    at least one row deleted or assigned: one key window, skipped when
+    every row qualifies already (an assignment to every survivor).
+    ``materialize`` checkpoints the scoped rows once for the consumers
+    below; ``count`` returns their ``(deleted, assigned)`` row counts.
+
+    Returns ``(delta, visible, counts)``: ``visible`` is the restated
+    rows CHECK constraints must pass — tombstones represent absence, not
+    data."""
+    marked = rows.withColumn(
+        "__del", F.lit(False) if delete is None else delete
+    )
+    marked = marked.withColumn(
+        "__set",
+        ~F.col("__del")
+        & (F.lit(assign is not None) if assign_if is None else assign_if),
+    )
+    w = Window.partitionBy(key)
+    if assign is None or assign_if is not None:
+        hit = (F.col("__del") | F.col("__set")).cast("int")
+        marked = marked.withColumn("__any", F.max(hit).over(w)).filter(
+            "__any = 1"
+        )
+    if materialize:
+        marked = marked.localCheckpoint(eager=True)
+    counts = None
+    if count:
+        r = marked.agg(
+            F.sum(F.col("__del").cast("long")), F.sum(F.col("__set").cast("long"))
+        ).collect()[0]
+        counts = (int(r[0] or 0), int(r[1] or 0))
+    dtypes = dict(rows.dtypes)
+    visible = marked.filter(~F.col("__del")).select(
+        *[
+            F.when(F.col("__set"), F.expr(assign[c]).cast(dtypes[c]))
+            .otherwise(F.col(c))
+            .alias(c)
+            if assign and c in assign
+            else F.col(c)
+            for c in cols
+        ]
+    )
+    if delete is None:
+        return visible, visible, counts
+    dead = (
+        marked.withColumn("__surv", F.max((~F.col("__del")).cast("int")).over(w))
+        .filter("__surv = 0")
+        .select(key)
+        .distinct()
+        .withColumn(TOMBSTONE_COL, F.lit(True))
+    )
+    delta = visible.withColumn(TOMBSTONE_COL, F.lit(False)).unionByName(
+        dead, allowMissingColumns=True
+    )
+    return delta, visible, counts
+
+
 def _dml_scope(
     spark: SparkSession,
     target: str,
@@ -1895,13 +2042,16 @@ def _dml_scope(
     store,
     where,
     where_eq,
+    assignments=None,
 ):
-    """Shared front half of predicate DML: one stats/bloom-prunable scan
-    finds the affected buckets and the matching-row count (a ≤num_buckets
-    scalar collect), then a bucket-pruned second read returns the
-    resolved rows of only those buckets."""
+    """Shared front half of predicate DML: validate ``assignments``,
+    then one stats/bloom-prunable scan finds the affected buckets and
+    the matching-row count (a ≤num_buckets scalar collect), then a
+    bucket-pruned second read returns the resolved rows of only those
+    buckets."""
     manifest, key, num_buckets = _open_table(target, store)
-    pred_true = F.expr(predicate).eqNullSafe(F.lit(True))
+    _check_assignments(spark, target, manifest, key, store, assignments)
+    pred_true = _holds(predicate)
     per_bucket = (
         read_keyed_table(spark, target, store, where=where, where_eq=where_eq)
         .filter(pred_true)
@@ -1909,20 +2059,32 @@ def _dml_scope(
         .count()
         .collect()
     )
-    wanted = {r[0] for r in per_bucket}
     n_matched = sum(r[1] for r in per_bucket)
+    if not n_matched:
+        return None
     # DML predicates and assignments speak LOGICAL names; the resolved
-    # rows come back physical — translate here, and the writers
-    # translate the delta back before anything lands (boundary rule)
+    # rows come back physical — translate here, and _dml_commit
+    # translates the delta back before anything lands (boundary rule)
     cmap, cdropped = _mapping_of(manifest)
-    rows = (
-        _to_logical_df(
-            _scope_rows(spark, target, manifest, key, wanted), cmap, cdropped
-        )
-        if wanted
-        else None
+    rows = _to_logical_df(
+        _scope_rows(spark, target, manifest, key, {r[0] for r in per_bucket}),
+        cmap,
+        cdropped,
     )
     return manifest, key, num_buckets, pred_true, n_matched, rows
+
+
+def _dml_commit(spark, target, manifest, key, num_buckets, restated, store):
+    """Back half of predicate DML: the restated ``(delta, visible, _)``
+    (logical names) goes physical; CHECK constraints — bound to physical
+    names — run on the visible rows, then one delta commit."""
+    cmap, _cd = _mapping_of(manifest)
+    delta, visible, _counts = restated
+    _enforce_constraints(_to_physical_df(visible, cmap), target, store)
+    _commit_files(
+        spark, target, _to_physical_df(delta, cmap), manifest, key,
+        num_buckets, "delta", store=store,
+    )
 
 
 @_records_op("delete_where")
@@ -1955,44 +2117,13 @@ def keyed_delete_where(
     (``_resolve_dirty``) and are folded away by
     :func:`compact_keyed_table`; :func:`table_changes` reports the keys
     as ``delete`` rows with no extra bookkeeping."""
-    manifest, key, num_buckets, pred_true, n_matched, rows = _dml_scope(
-        spark, target, predicate, store, where, where_eq
-    )
-    if not n_matched or rows is None:
+    scope = _dml_scope(spark, target, predicate, store, where, where_eq)
+    if scope is None:
         return 0
-    w = Window.partitionBy(key)
-    marked = (
-        rows.withColumn("__del", pred_true)
-        .withColumn("__any", F.max(F.col("__del").cast("int")).over(w))
-        .filter(F.col("__any") == 1)
-        .withColumn("__surv", F.max((~F.col("__del")).cast("int")).over(w))
-    )
-    survivors = (
-        marked.filter(~F.col("__del"))
-        .drop("__del", "__any", "__surv")
-        .withColumn(TOMBSTONE_COL, F.lit(False))
-    )
-    # keys with no surviving row: ONE tombstone row (key + marker; every
-    # other column null via allowMissingColumns)
-    dead = (
-        marked.filter(F.col("__surv") == 0)
-        .select(key)
-        .distinct()
-        .withColumn(TOMBSTONE_COL, F.lit(True))
-    )
-    cmap, _cd = _mapping_of(manifest)
-    delta = _to_physical_df(
-        survivors.unionByName(dead, allowMissingColumns=True), cmap
-    )
-    # constraints guard VISIBLE rows only — tombstones carry nulls by
-    # construction and represent absence, not data.  Enforcement runs on
-    # the PHYSICAL frame: constraint SQL binds to physical names (the
-    # names current when the constraint was added).
-    _enforce_constraints(
-        _to_physical_df(survivors.drop(TOMBSTONE_COL), cmap), target, store
-    )
-    _commit_files(
-        spark, target, delta, manifest, key, num_buckets, "delta", store=store
+    manifest, key, num_buckets, pred_true, n_matched, rows = scope
+    _dml_commit(
+        spark, target, manifest, key, num_buckets,
+        _restate_keys(rows, key, rows.columns, delete=pred_true), store,
     )
     return n_matched
 
@@ -2023,39 +2154,18 @@ def keyed_update_where(
     prunable match probe, bucket-pruned re-read, O(affected keys' rows)
     write, constraints enforced on the updated rows before any file
     lands."""
-    manifest, key, num_buckets, pred_true, n_matched, rows = _dml_scope(
-        spark, target, predicate, store, where, where_eq
+    scope = _dml_scope(
+        spark, target, predicate, store, where, where_eq, assignments
     )
-    bad = set(assignments) & {key, BUCKET_COL, TOMBSTONE_COL}
-    if bad:
-        raise ValueError(f"cannot assign to key/internal column(s) {sorted(bad)}")
-    if not n_matched or rows is None:
+    if scope is None:
         return 0
-    unknown = set(assignments) - set(rows.columns)
-    if unknown:
-        raise ValueError(f"assignment to unknown column(s) {sorted(unknown)}")
-    w = Window.partitionBy(key)
-    marked = (
-        rows.withColumn("__del", pred_true)
-        .withColumn("__any", F.max(F.col("__del").cast("int")).over(w))
-        .filter(F.col("__any") == 1)
-    )
-    dtypes = dict(marked.dtypes)
-    updated = marked.select(
-        *[
-            F.when(F.col("__del"), F.expr(assignments[c]).cast(dtypes[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in rows.columns
-        ]
-    )
-    cmap, _cd = _mapping_of(manifest)
-    updated = _to_physical_df(updated, cmap)
-    _enforce_constraints(updated, target, store)
-    _commit_files(
-        spark, target, updated, manifest, key, num_buckets, "delta", store=store
+    manifest, key, num_buckets, pred_true, n_matched, rows = scope
+    _dml_commit(
+        spark, target, manifest, key, num_buckets,
+        _restate_keys(
+            rows, key, rows.columns, assign=assignments, assign_if=pred_true
+        ),
+        store,
     )
     return n_matched
 
@@ -2180,21 +2290,12 @@ def widen_keyed_table(
 
 
 def _logical_columns(spark, target, manifest, store) -> list[str]:
-    """The user-visible column set of the CURRENT snapshot: union of
-    live files' physical schemas (footer metadata only), dropped
-    physicals hidden, renames applied."""
-    stored = _manifest_schema(manifest)
-    if stored is not None:
-        phys = stored.names
-    else:
-        live = [
-            f for fs in manifest["buckets"].values() for f in fs
-        ] + _delta_files_of(manifest)
-        if not live:
-            raise ValueError(
-                f"{target} has no live files to resolve a schema from"
-            )
-        phys = _read_files(spark, target, live).schema.names
+    """The user-visible column set of a snapshot (:func:`_table_schema`),
+    dropped physicals hidden, renames applied."""
+    schema = _table_schema(spark, target, manifest)
+    if schema is None:
+        raise ValueError(f"{target} has no live files to resolve a schema from")
+    phys = schema.names
     mapping, dropped = _mapping_of(manifest)
     reverse = {p: l for l, p in mapping.items()}
     gone = set(dropped) | {BUCKET_COL, TOMBSTONE_COL}
@@ -2202,38 +2303,37 @@ def _logical_columns(spark, target, manifest, store) -> list[str]:
 
 
 def _mapping_commit(
-    target, manifest, mapping, dropped, store, drift_policy_update=None,
-    validate_base=None, ivf_policy_update=None, minhash_policy_update=None,
+    target, manifest, mapping, dropped, store, renamed=None, dropping=None
 ) -> int:
     """Metadata-only mapping change committed with optimistic
     concurrency: rebases freely over data commits (they never touch
     the mapping — physical names are fixed), conflicts with concurrent
-    layout/schema ops exactly like a merge would.
-    ``drift_policy_update`` (rename only): a col-name rewriter applied
-    to the stored drift policy so the circuit breaker follows the
-    rename instead of wedging on a stale name.
-    ``validate_base`` (drop only): re-checked against EVERY base the
-    commit is built on — content guards evaluated only against the
-    caller's stale manifest are bypassed by the rebase (r9 review
-    finding: a concurrent ``set_drift_policy`` landing between load and
-    CAS would let a drop of the referenced column rebase through and
-    wedge every later ``maintain``)."""
+    layout/schema ops exactly like a merge would.  Each stored ambient
+    policy (:data:`_POLICIES`) follows ``renamed=(old, new)`` instead of
+    wedging on a stale name, and a policy referencing the ``dropping``
+    column fails the drop.  Both are applied to EVERY base the commit is
+    built on — a guard evaluated only against the caller's stale
+    manifest is bypassed by the rebase: a policy armed concurrently,
+    between load and CAS, would let a drop of a column it references
+    rebase through and wedge every later ``maintain``."""
 
     def build(base: dict) -> dict:
-        if validate_base is not None:
-            validate_base(base)
-        m = dict(base)
-        m["version"] = base["version"] + 1
-        m["column_mapping"] = mapping
-        m["dropped_columns"] = dropped
-        if drift_policy_update is not None and base.get("drift_policy"):
-            m["drift_policy"] = drift_policy_update(base["drift_policy"])
-        if ivf_policy_update is not None and base.get("ivf_policy"):
-            m["ivf_policy"] = ivf_policy_update(base["ivf_policy"])
-        if minhash_policy_update is not None and base.get("minhash_policy"):
-            m["minhash_policy"] = minhash_policy_update(
-                base["minhash_policy"]
-            )
+        m = {
+            **base,
+            "version": base["version"] + 1,
+            "column_mapping": mapping,
+            "dropped_columns": dropped,
+        }
+        for name, (label, cols_of, rename) in _POLICIES.items():
+            if not base.get(name):
+                continue
+            if dropping is not None and dropping in cols_of(base[name]):
+                raise ValueError(
+                    f"column {dropping!r} is referenced by the ambient "
+                    f"{label}; update it first (set_{name})"
+                )
+            if renamed is not None:
+                m[name] = rename(base[name], *renamed)
         return m
 
     def conflict(inter: dict) -> str | None:
@@ -2245,6 +2345,41 @@ def _mapping_commit(
     return _commit_optimistic(target, manifest, build, conflict, store)[
         "version"
     ]
+
+
+def _policy_commit(spark, target, name, policy, store) -> int:
+    """Store ``policy`` (None disarms) as ``manifest[name]`` in ONE
+    metadata commit; returns the new version.  The columns it references
+    (:data:`_POLICIES`) are checked against EVERY base the commit is
+    built on — a concurrent rename/drop of one between load and CAS must
+    fail THIS commit, not wedge every later maintain — and no
+    concurrent commit conflicts with it: it moves no data."""
+    manifest = _load_manifest(target, store)
+    if manifest is None:
+        raise FileNotFoundError(f"no committed keyed table at {target}")
+    label, cols_of, _rename = _POLICIES[name]
+
+    def build(base: dict) -> dict:
+        if policy is not None:
+            logical = _logical_columns(spark, target, base, store)
+            missing = set(cols_of(policy)) - set(logical)
+            if missing:
+                raise ValueError(
+                    f"{label} references missing columns "
+                    f"{sorted(missing)} (have {logical})"
+                )
+        return {**base, "version": base["version"] + 1, name: policy}
+
+    return _commit_optimistic(
+        target, manifest, build, lambda _inter: None, store
+    )["version"]
+
+
+def _stored_policy(target: str, name: str, store) -> dict | None:
+    manifest = _load_manifest(target, store)
+    if manifest is None:
+        raise FileNotFoundError(f"no committed keyed table at {target}")
+    return manifest.get(name) or None
 
 
 @_records_op("set_drift_policy")
@@ -2272,9 +2407,6 @@ def set_drift_policy(
     the new version."""
     from .operators.expectations import distribution_rule_to_spec
 
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
     thresholds = dict(fail_thresholds or {})
     if not rules:
         policy = None
@@ -2291,47 +2423,13 @@ def set_drift_policy(
                 f"thresholds reference unknown rules: {sorted(unknown)}"
             )
         policy = {"rules": specs, "thresholds": thresholds}
-
-    def columns_exist(base: dict) -> None:
-        if policy is None:
-            return
-        logical = _logical_columns(spark, target, base, store)
-        missing = {s["col"] for s in policy["rules"]} - set(logical)
-        if missing:
-            raise ValueError(
-                f"policy references missing columns {sorted(missing)} "
-                f"(have {logical})"
-            )
-
-    columns_exist(manifest)  # fast loud failure against the loaded tip
-
-    def build(base: dict) -> dict:
-        # re-validated against EVERY rebase base: a concurrent
-        # rename/drop of a referenced column between load and CAS must
-        # fail THIS commit, not wedge every later maintain (r9 review)
-        columns_exist(base)
-        m = dict(base)
-        m["version"] = base["version"] + 1
-        m["drift_policy"] = policy
-        return m
-
-    def conflict(inter: dict) -> str | None:
-        # a policy commit moves no data; content safety (the referenced
-        # columns still exist) is re-proven by build() on every base
-        return None
-
-    return _commit_optimistic(target, manifest, build, conflict, store)[
-        "version"
-    ]
+    return _policy_commit(spark, target, "drift_policy", policy, store)
 
 
 def drift_policy(target: str, store=LOCAL_STORE) -> dict | None:
     """The stored drift policy (``{"rules": [spec...], "thresholds":
     {...}}``) or None when disarmed."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    return manifest.get("drift_policy") or None
+    return _stored_policy(target, "drift_policy", store)
 
 
 def check_drift_policy(
@@ -2412,9 +2510,6 @@ def set_ivf_policy(
     new version."""
     from .operators.similarity import _ivf_meta_path
 
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
     if index_path is None:
         policy = None
     else:
@@ -2440,44 +2535,12 @@ def set_ivf_policy(
             "recall_queries": int(recall_queries),
             "min_recall": float(min_recall),
         }
-
-    def columns_exist(base: dict) -> None:
-        if policy is None:
-            return
-        logical = _logical_columns(spark, target, base, store)
-        missing = {policy["id_col"], policy["vec_col"]} - set(logical)
-        if missing:
-            raise ValueError(
-                f"ivf policy references missing columns {sorted(missing)} "
-                f"(have {logical})"
-            )
-
-    columns_exist(manifest)
-
-    def build(base: dict) -> dict:
-        # re-validated against every rebase base, same reasoning as
-        # set_drift_policy: a concurrent rename/drop of a referenced
-        # column must fail THIS commit, not wedge every later maintain
-        columns_exist(base)
-        m = dict(base)
-        m["version"] = base["version"] + 1
-        m["ivf_policy"] = policy
-        return m
-
-    def conflict(inter: dict) -> str | None:
-        return None  # metadata only; build() re-proves column safety
-
-    return _commit_optimistic(target, manifest, build, conflict, store)[
-        "version"
-    ]
+    return _policy_commit(spark, target, "ivf_policy", policy, store)
 
 
 def ivf_policy(target: str, store=LOCAL_STORE) -> dict | None:
     """The stored ambient IVF-health policy, or None when disarmed."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    return manifest.get("ivf_policy") or None
+    return _stored_policy(target, "ivf_policy", store)
 
 
 @_records_op("set_minhash_policy")
@@ -2515,9 +2578,6 @@ def set_minhash_policy(
     version."""
     from .operators.dedup import _index_manifest_path
 
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
     if index_path is None:
         policy = None
     else:
@@ -2541,45 +2601,12 @@ def set_minhash_policy(
                 None if max_band_size is None else int(max_band_size)
             ),
         }
-
-    def columns_exist(base: dict) -> None:
-        if policy is None:
-            return
-        logical = _logical_columns(spark, target, base, store)
-        missing = {policy["id_col"], policy["text_col"]} - set(logical)
-        if missing:
-            raise ValueError(
-                f"minhash policy references missing columns "
-                f"{sorted(missing)} (have {logical})"
-            )
-
-    columns_exist(manifest)
-
-    def build(base: dict) -> dict:
-        # re-validated against every rebase base (same reasoning as
-        # set_drift_policy/set_ivf_policy): a concurrent rename/drop of
-        # a referenced column must fail THIS commit, not wedge every
-        # later maintain
-        columns_exist(base)
-        m = dict(base)
-        m["version"] = base["version"] + 1
-        m["minhash_policy"] = policy
-        return m
-
-    def conflict(inter: dict) -> str | None:
-        return None  # metadata only; build() re-proves column safety
-
-    return _commit_optimistic(target, manifest, build, conflict, store)[
-        "version"
-    ]
+    return _policy_commit(spark, target, "minhash_policy", policy, store)
 
 
 def minhash_policy(target: str, store=LOCAL_STORE) -> dict | None:
     """The stored ambient MinHash-compaction policy, or None."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    return manifest.get("minhash_policy") or None
+    return _stored_policy(target, "minhash_policy", store)
 
 
 @_records_op("rename_column")
@@ -2631,43 +2658,8 @@ def rename_column(
     phys = mapping.pop(old, old)
     if new != phys:
         mapping[new] = phys
-
-    def follow_rename(pol: dict) -> dict:
-        pol = dict(pol)
-        pol["rules"] = [
-            {**s, "col": new} if s.get("col") == old else s
-            for s in pol.get("rules", [])
-        ]
-        return pol
-
-    def follow_rename_ivf(pol: dict) -> dict:
-        # the ambient IVF policy follows the rename the same way the
-        # drift rules do — a renamed id/vector column must not wedge
-        # the next scheduled maintain
-        return {
-            **pol,
-            **{
-                k: new
-                for k in ("id_col", "vec_col")
-                if pol.get(k) == old
-            },
-        }
-
-    def follow_rename_mh(pol: dict) -> dict:
-        return {
-            **pol,
-            **{
-                k: new
-                for k in ("id_col", "text_col")
-                if pol.get(k) == old
-            },
-        }
-
     return _mapping_commit(
-        target, manifest, mapping, list(dropped), store,
-        drift_policy_update=follow_rename,
-        ivf_policy_update=follow_rename_ivf,
-        minhash_policy_update=follow_rename_mh,
+        target, manifest, mapping, list(dropped), store, renamed=(old, new)
     )
 
 
@@ -2701,43 +2693,15 @@ def drop_column(
     mapping, dropped = _mapping_of(manifest)
     mapping = dict(mapping)
     phys = mapping.pop(col, col)
-    import re as _re
-
     for name, sql in table_constraints(target, store).items():
-        if _re.search(rf"\b{_re.escape(col)}\b|\b{_re.escape(phys)}\b", sql):
+        if re.search(rf"\b{re.escape(col)}\b|\b{re.escape(phys)}\b", sql):
             raise ValueError(
                 f"column {col!r} is referenced by CHECK constraint "
                 f"{name!r} ({sql}); drop the constraint first"
             )
-    def no_policy_reference(base: dict) -> None:
-        pol = base.get("drift_policy") or {}
-        for s in pol.get("rules", []):
-            if s.get("col") == col:
-                raise ValueError(
-                    f"column {col!r} is referenced by drift-policy rule "
-                    f"{s.get('name')!r}; update the policy first "
-                    "(set_drift_policy)"
-                )
-        ipol = base.get("ivf_policy") or {}
-        if col in (ipol.get("id_col"), ipol.get("vec_col")):
-            raise ValueError(
-                f"column {col!r} is referenced by the ambient IVF "
-                "policy; update it first (set_ivf_policy)"
-            )
-        mpol = base.get("minhash_policy") or {}
-        if col in (mpol.get("id_col"), mpol.get("text_col")):
-            raise ValueError(
-                f"column {col!r} is referenced by the ambient MinHash "
-                "policy; update it first (set_minhash_policy)"
-            )
-
-    # checked here for the fast loud failure AND re-checked against
-    # every rebase base inside _mapping_commit (a concurrent
-    # set_drift_policy must not be dropped-under)
-    no_policy_reference(manifest)
     return _mapping_commit(
         target, manifest, mapping, sorted(set(dropped) | {phys}), store,
-        validate_base=no_policy_reference,
+        dropping=col,
     )
 
 
@@ -3183,13 +3147,7 @@ def read_keyed_table(
         frames.append(
             _resolve_dirty(spark, target, manifest, spec["key"], sorted(deltas))
         )
-    df = _to_logical_df(
-        reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-        ).drop(BUCKET_COL),
-        cmap,
-        cdropped,
-    )
+    df = _to_logical_df(_union(frames).drop(BUCKET_COL), cmap, cdropped)
     if prune_all:
         return df.filter(F.lit(False))
     for col, lo, hi in preds:
@@ -3755,12 +3713,11 @@ def merge_into(
     _require_unmapped(manifest, "merge_into")
     if key not in source.columns:
         raise ValueError(f"source is missing the key column {key!r}")
-    if when_matched_update:
-        bad = set(when_matched_update) & {key, BUCKET_COL, TOMBSTONE_COL}
-        if bad:
-            raise ValueError(
-                f"cannot assign to key/internal column(s) {sorted(bad)}"
-            )
+    nb_upd = when_not_matched_by_source_update
+    nb_del = when_not_matched_by_source_delete
+    _check_assignments(
+        spark, target, manifest, key, store, when_matched_update, nb_upd
+    )
     # materialize the source ONCE (r11, the Delta MERGE move): the
     # duplicate-key/bucket probe, the matched join, the insert
     # anti-join + count and the by-source anti-join below each execute
@@ -3795,202 +3752,83 @@ def merge_into(
     rows = _scope_rows(spark, target, manifest, key, wanted) if wanted else None
 
     deleted = updated = inserted = 0
-    parts: list[DataFrame] = []
-    src_cols = [c for c in source.columns]
-    if rows is not None:
-        m = rows.join(src, rows[key] == src["__sk"], "inner")
-        del_flag = (
-            F.expr(when_matched_delete).eqNullSafe(F.lit(True))
-            if when_matched_delete
-            else F.lit(False)
+    deltas: list[DataFrame] = []
+    visible: list[DataFrame] = []
+
+    def restate(scope, cols, delete, assign, materialize):
+        nonlocal deleted, updated
+        delta, vis, (d, u) = _restate_keys(
+            scope, key, cols, delete=delete, assign=assign,
+            materialize=materialize, count=True,
         )
-        marked = m.withColumn("__del", del_flag)
-        if not when_matched_update:
-            # delete-only merge: restate ONLY keys that actually lose a
-            # row — an untouched matched key must not churn the delta
-            # (phantom CDF updates, pointless write volume)
-            marked = marked.withColumn(
-                "__any",
-                F.max(F.col("__del").cast("int")).over(
-                    Window.partitionBy(rows[key])
-                ),
-            ).filter(F.col("__any") == 1).drop("__any")
-        # materialize the MATCHED join output once (r12, guide §1.2/§5):
-        # the counts aggregate below, the survivor/tombstone projections
-        # and the final delta write each execute this subtree — without
-        # the checkpoint the bucket-pruned table read + join ran once
-        # per consumer (profiled: 2 full executions per merge).  Bounded
-        # by the matched scope (inner join with the small-by-contract
-        # source), i.e. exactly the rows the merge restates — the same
-        # trade as the r11 source materialization, spilling
-        # MEMORY_AND_DISK, never an OOM.
-        marked = marked.localCheckpoint(eager=True)
-        counts = marked.agg(
-            F.sum(F.col("__del").cast("long")).alias("d"),
-            F.sum((~F.col("__del")).cast("long")).alias("u"),
-        ).collect()[0]
-        deleted = int(counts.d or 0)
-        updated = int(counts.u or 0) if when_matched_update else 0
-        dtypes = dict(rows.dtypes)
-        surv = marked.filter(~F.col("__del"))
-        if when_matched_update:
-            unknown = set(when_matched_update) - set(rows.columns)
-            if unknown:
-                raise ValueError(
-                    f"assignment to unknown column(s) {sorted(unknown)}"
-                )
-            surv = surv.select(
-                *[
-                    F.expr(when_matched_update[c]).cast(dtypes[c]).alias(c)
-                    if c in when_matched_update
-                    else rows[c]
-                    for c in rows.columns
-                ],
-                "__sk",
-            )
-        else:
-            surv = surv.select(*[rows[c] for c in rows.columns], "__sk")
-        parts.append(
-            surv.drop("__sk").withColumn(TOMBSTONE_COL, F.lit(False))
+        deleted, updated = deleted + d, updated + u
+        deltas.append(delta)
+        visible.append(vis)
+
+    if rows is not None and (when_matched_update or when_matched_delete):
+        # the MATCHED join output is materialized once (r12, guide
+        # §1.2/§5): the counts aggregate, the restated rows and the
+        # delta write each execute it — without the checkpoint the
+        # bucket-pruned table read + join ran once per consumer.
+        # Bounded by the matched scope (inner join with the
+        # small-by-contract source), spilling MEMORY_AND_DISK.
+        restate(
+            rows.join(src, rows[key] == src["__sk"], "inner"),
+            rows.columns,
+            _holds(when_matched_delete),
+            when_matched_update,
+            True,
         )
-        # matched keys with zero survivors -> one tombstone each
-        dead = (
-            marked.withColumn(
-                "__surv",
-                F.max((~F.col("__del")).cast("int")).over(
-                    Window.partitionBy(rows[key])
-                ),
-            )
-            .filter(F.col("__surv") == 0)
-            .select(rows[key].alias(key))
-            .distinct()
-            .withColumn(TOMBSTONE_COL, F.lit(True))
-        )
-        parts.append(dead)
-        if when_not_matched_insert:
-            # checkpointed for the same reason as `marked`: the count
-            # below and the delta write otherwise each run the
-            # anti-join's bucket-pruned table read.  Bounded by the
-            # source.
+    if when_not_matched_insert:
+        ins = src
+        if rows is not None:
             ins = src.join(
                 rows.select(key), src["__sk"] == rows[key], "left_anti"
-            ).select(
-                *[F.col(f"s_{c}").alias(c) for c in src_cols]
-            ).localCheckpoint(eager=True)
-            inserted = ins.count()
-            if inserted:
-                # insert-ALL semantics (Delta's whenNotMatchedInsertAll):
-                # source-only columns evolve the table additively — but
-                # only when a row actually inserts; an all-matched merge
-                # must not leak the source's control columns into the
-                # table schema
-                parts.append(ins.withColumn(TOMBSTONE_COL, F.lit(False)))
-    elif when_not_matched_insert:
-        ins = src.select(*[F.col(f"s_{c}").alias(c) for c in src_cols])
+            )
+        ins = ins.select(*[F.col(f"s_{c}").alias(c) for c in source.columns])
+        if rows is not None:
+            # checkpointed for the same reason as the matched scope: the
+            # count below and the delta write otherwise each run the
+            # anti-join's bucket-pruned table read.  Bounded by the source.
+            ins = ins.localCheckpoint(eager=True)
         inserted = ins.count()
         if inserted:
-            parts.append(ins.withColumn(TOMBSTONE_COL, F.lit(False)))
-
-    nb_upd = when_not_matched_by_source_update
-    nb_del = when_not_matched_by_source_delete
+            # insert-ALL semantics (Delta's whenNotMatchedInsertAll):
+            # source-only columns evolve the table additively — but only
+            # when a row actually inserts; an all-matched merge must not
+            # leak the source's control columns into the table schema
+            deltas.append(ins)
+            visible.append(ins)
     if nb_upd or nb_del:
-        if nb_upd:
-            bad = set(nb_upd) & {key, BUCKET_COL, TOMBSTONE_COL}
-            if bad:
-                raise ValueError(
-                    f"cannot assign to key/internal column(s) {sorted(bad)}"
-                )
         # scope is defined by ABSENCE from the source, so every live
-        # bucket must be scanned (see docstring caveat) — but only keys
-        # the clause changes are restated
-        all_rows = _scope_rows(
-            spark, target, manifest, key, range(num_buckets)
-        )
+        # bucket must be scanned (see docstring caveat)
+        all_rows = _scope_rows(spark, target, manifest, key, range(num_buckets))
         if all_rows is not None:
-            nm = all_rows.join(
-                src.select("__sk"), all_rows[key] == F.col("__sk"), "left_anti"
+            # delete-only: the key window bounds the scope to the keys
+            # this clause deletes, so it is materialized once (r12) for
+            # the counts, the restated rows and the delta write, which
+            # otherwise each re-ran the full live-bucket scan +
+            # anti-join.  The update form stays streaming: its scope is
+            # the whole table, and checkpointing a table-sized frame
+            # would double the I/O the write already pays.
+            restate(
+                all_rows.join(
+                    src.select("__sk"), all_rows[key] == F.col("__sk"),
+                    "left_anti",
+                ),
+                all_rows.columns,
+                _holds(nb_del),
+                nb_upd,
+                not nb_upd,
             )
-            del_flag2 = (
-                F.expr(nb_del).eqNullSafe(F.lit(True))
-                if isinstance(nb_del, str)
-                else F.lit(bool(nb_del))
-            )
-            marked2 = nm.withColumn("__del", del_flag2)
-            if not nb_upd:
-                # delete-only: restate only keys that actually lose a row
-                marked2 = (
-                    marked2.withColumn(
-                        "__any",
-                        F.max(F.col("__del").cast("int")).over(
-                            Window.partitionBy(key)
-                        ),
-                    )
-                    .filter(F.col("__any") == 1)
-                    .drop("__any")
-                )
-                # the filter above bounds marked2 to the keys this
-                # clause actually deletes — exactly the restated scope —
-                # so it is safe to materialize ONCE (r12, guide §1.2/§5)
-                # for the counts aggregate, the survivor/tombstone
-                # projections and the delta write, which otherwise each
-                # re-ran the FULL live-bucket scan + anti-join the
-                # by-source clause requires (profiled: the table was
-                # scanned twice per by-source merge).  The update form
-                # stays streaming: its unmatched scope is the whole
-                # table, and checkpointing a table-sized frame would
-                # double the I/O the write already pays.
-                marked2 = marked2.localCheckpoint(eager=True)
-            counts2 = marked2.agg(
-                F.sum(F.col("__del").cast("long")).alias("d"),
-                F.sum((~F.col("__del")).cast("long")).alias("u"),
-            ).collect()[0]
-            deleted += int(counts2.d or 0)
-            if nb_upd:
-                updated += int(counts2.u or 0)
-            dtypes2 = dict(nm.dtypes)
-            surv2 = marked2.filter(~F.col("__del"))
-            if nb_upd:
-                unknown = set(nb_upd) - set(nm.columns)
-                if unknown:
-                    raise ValueError(
-                        f"assignment to unknown column(s) {sorted(unknown)}"
-                    )
-                surv2 = surv2.select(
-                    *[
-                        F.expr(nb_upd[c]).cast(dtypes2[c]).alias(c)
-                        if c in nb_upd
-                        else F.col(c)
-                        for c in nm.columns
-                    ]
-                )
-            else:
-                surv2 = surv2.select(*nm.columns)
-            parts.append(surv2.withColumn(TOMBSTONE_COL, F.lit(False)))
-            dead2 = (
-                marked2.withColumn(
-                    "__surv",
-                    F.max((~F.col("__del")).cast("int")).over(
-                        Window.partitionBy(key)
-                    ),
-                )
-                .filter(F.col("__surv") == 0)
-                .select(key)
-                .distinct()
-                .withColumn(TOMBSTONE_COL, F.lit(True))
-            )
-            parts.append(dead2)
 
-    if not parts:
+    if not deltas:
         return {"updated": 0, "deleted": 0, "inserted": 0}
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionByName(p, allowMissingColumns=True)
-    visible = delta.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
-    _enforce_constraints(visible, target, store)
+    _enforce_constraints(_union(visible), target, store)
     if deleted or updated or inserted:
         _commit_files(
-            spark, target, delta, manifest, key, num_buckets, "delta",
-            store=store,
+            spark, target, _union(deltas), manifest, key, num_buckets,
+            "delta", store=store,
         )
     return {"updated": updated, "deleted": deleted, "inserted": inserted}
 
@@ -4242,17 +4080,9 @@ def apply_changes(
             # existing column must raise NOW — on a replace-by-key
             # table a silently-narrower upsert row is data loss, not
             # evolution (additive new columns still pass)
-            stored = _manifest_schema(manifest)
-            if stored is not None:
-                ups = _align_batch_types(ups, stored, key)
-            else:
-                live_files = [
-                    f for fs in manifest["buckets"].values() for f in fs
-                ] + _delta_files_of(manifest)
-                if live_files:
-                    ups = _align_batch_types(
-                        ups, _read_files(spark, target, live_files).schema, key
-                    )
+            schema = _table_schema(spark, target, manifest)
+            if schema is not None:
+                ups = _align_batch_types(ups, schema, key)
         dels = (
             j.filter(F.col("__del") & exists)
             .select(F.col("__ck").alias(key))

@@ -251,7 +251,7 @@ def refresh_minmax_view(
     the recompute scan — pruned via the table's min/max stats when the
     (single) group column is stats-tracked and no touched group is NULL
     — excludes every historical file by its footer (measured flat at
-    64× growth, tools/scale_stress_r7i.py).  A CoW merge is coarser: it
+    64× growth, SCALE.md).  A CoW merge is coarser: it
     rewrites whole hash buckets, and a hash bucket contains EVERY
     group, so a scattered update batch touches them all and the refresh
     degrades to a full-scan recompute — correct, just not incremental.
@@ -440,7 +440,7 @@ def refresh_join_view(
     against the dim delta, no shuffle).  At 100 TB that asymmetry is the
     whole point: the 100 TB side is only ever read incrementally.
     Measured flat at 64× fact growth for a fixed batch
-    (tools/scale_stress_r7h.py, SCALE.md).
+    (SCALE.md).
 
     The k-dim generalization is :func:`refresh_star_view`; this is its
     k=1 case, kept as the named two-table API.  Same scope rules as

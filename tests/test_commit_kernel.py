@@ -122,16 +122,19 @@ OPS = {
         _base,
         lambda s, t: sink.zorder_keyed_table(s, t, ["v", "w"], files_per_bucket=2),
     ),
-}
-
-#: write paths whose bodies stay outside the kernel (only their final
-#: delta commit goes through it); pinned for their job budget only
-JOB_ONLY_OPS = {
     "merge_into": (
         _base,
         lambda s, t: sink.merge_into(
             s, t, _rows(s, [("k1", 10, 0.5), ("n1", 1, 0.5)]),
             when_matched_update={"v": "s_v"},
+        ),
+    ),
+    "merge_into_by_source": (
+        _base,
+        lambda s, t: sink.merge_into(
+            s, t, _rows(s, [("k1", 10, 0.5)]),
+            when_not_matched_insert=False,
+            when_not_matched_by_source_delete="v IN (2, 3)",
         ),
     ),
     "apply_changes": (
@@ -164,18 +167,22 @@ JOB_BUDGET = {
     "purge_mapping": 2,
     "cluster": 3,
     "zorder": 5,
-    "merge_into": 15,
+    "merge_into": 14,
+    "merge_into_by_source": 13,
     "apply_changes": 17,
 }
 
 
 def _table_parquet(target: str) -> set[str]:
-    return {
+    """The table's own parquet files: ``_``-prefixed subtrees are other
+    tables nested under it (``apply_changes``' ``_cdc_tombstones``)."""
+    rels = (
         os.path.normpath(os.path.relpath(os.path.join(r, f), target))
         for r, _d, fs in os.walk(target)
         for f in fs
         if f.endswith(".parquet")
-    }
+    )
+    return {rel for rel in rels if not rel.startswith("_")}
 
 
 @pytest.mark.parametrize("op", sorted(OPS))
@@ -210,6 +217,56 @@ def test_crash_before_commit_keeps_snapshot_then_retry_lands(
     assert _table_parquet(target) == live
 
 
+def test_apply_changes_crash_before_delete_memory_commit(
+    spark, tmp_path, monkeypatch
+):
+    """``apply_changes`` commits twice: the target delta, then the
+    delete memory (``_cdc_tombstones``).  A crash between the two leaves
+    the deletes applied but unremembered; a retry of the same batch must
+    report what an uncrashed run reports, converge to the same table and
+    record the memory, so an upsert sequenced before the delete stays
+    fenced.  The batch holds deletes only: an upsert that already landed
+    is a redelivered change on the retry, counted as ``ignored``."""
+    deletes = spark.createDataFrame(
+        [("k2", 5, "D", None, None), ("k3", 5, "D", None, None)],
+        "oid__id string, seq bigint, op string, v int, w double",
+    )
+    stale = spark.createDataFrame(
+        [("k2", 4, "U", 99, 9.9)],
+        "oid__id string, seq bigint, op string, v int, w double",
+    )
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    _base(spark, clean)
+    _base(spark, crashed)
+    expected = sink.apply_changes(spark, clean, deletes, "seq")
+    assert expected == {"upserted": 0, "deleted": 2, "ignored": 0}
+
+    real_commit = sink._commit_manifest
+    calls = []
+
+    def crash_second(*a, **k):
+        calls.append(a[0])
+        if len(calls) == 2:
+            monkeypatch.setattr(sink, "_commit_manifest", real_commit)
+            raise OSError("simulated crash before the delete memory commit")
+        return real_commit(*a, **k)
+
+    monkeypatch.setattr(sink, "_commit_manifest", crash_second)
+    with pytest.raises(OSError, match="simulated crash"):
+        sink.apply_changes(spark, crashed, deletes, "seq")
+    assert calls == [crashed, sink._cdc_tomb_path(crashed)]
+    assert sink._load_manifest(sink._cdc_tomb_path(crashed)) is None
+
+    assert sink.apply_changes(spark, crashed, deletes, "seq") == expected
+    assert _snapshot(spark, crashed) == _snapshot(spark, clean)
+    for t in (clean, crashed):
+        assert sink.apply_changes(spark, t, stale, "seq") == {
+            "upserted": 0, "deleted": 0, "ignored": 1,
+        }
+    assert _snapshot(spark, crashed) == _snapshot(spark, clean)
+    assert "k2" not in {r[0] for r in _snapshot(spark, crashed)}
+
+
 def _job_ids_of(spark, fn) -> list[int]:
     sc = spark.sparkContext
     group = f"jobpin-{uuid.uuid4().hex[:8]}"
@@ -226,9 +283,9 @@ def _jobs_of(spark, fn) -> int:
     return len(_job_ids_of(spark, fn))
 
 
-@pytest.mark.parametrize("op", sorted({**OPS, **JOB_ONLY_OPS}))
+@pytest.mark.parametrize("op", sorted(OPS))
 def test_write_path_job_budget_and_manifest_invariants(spark, tmp_path, op):
-    setup, run = {**OPS, **JOB_ONLY_OPS}[op]
+    setup, run = OPS[op]
     target = str(tmp_path / "t")
     setup(spark, target)
     before = sink._load_manifest(target)

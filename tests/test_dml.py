@@ -22,6 +22,7 @@ from airflow_postgres_etl_spark.sink import (
     keyed_overwrite_parquet,
     keyed_update_where,
     lookup_keys,
+    merge_into,
     read_keyed_table,
     table_changes,
     table_delta_depth,
@@ -202,11 +203,16 @@ def test_update_casts_back_to_column_type(spark, tmp_path):
 
 
 def test_update_rejects_key_and_unknown_columns(spark, tmp_path):
+    """Assignment targets are validated whether or not any row matches
+    the predicate."""
     target = _mk(spark, tmp_path)
-    with pytest.raises(ValueError, match="key/internal"):
-        keyed_update_where(spark, target, {"oid__id": "'z'"}, "v = 1")
-    with pytest.raises(ValueError, match="unknown column"):
-        keyed_update_where(spark, target, {"nope": "1"}, "v = 1")
+    v0 = table_version(target)
+    for pred in ("v = 1", "v = 99"):
+        with pytest.raises(ValueError, match="key/internal"):
+            keyed_update_where(spark, target, {"oid__id": "'z'"}, pred)
+        with pytest.raises(ValueError, match="unknown column"):
+            keyed_update_where(spark, target, {"nope": "1"}, pred)
+    assert table_version(target) == v0
 
 
 def test_update_enforces_constraints(spark, tmp_path):
@@ -221,7 +227,8 @@ def test_update_enforces_constraints(spark, tmp_path):
 
 
 def test_dml_differential_random_sequence(spark, tmp_path):
-    """Randomized merge/delete/update sequence vs an in-memory model."""
+    """Randomized merge/delete/update/MERGE INTO sequence vs an
+    in-memory model."""
     import random
 
     rng = random.Random(7)
@@ -241,11 +248,51 @@ def test_dml_differential_random_sequence(spark, tmp_path):
             keyed_overwrite_parquet(spark, df, target, num_buckets=4)
             model_initialized[0] = True
 
+    def src(keys):
+        return spark.createDataFrame(
+            [(f"k{k}", rng.randrange(100), "abc"[k % 3]) for k in keys],
+            ["oid__id", "v", "tag"],
+        )
+
     model_initialized = [False]
     apply_merge([(f"k{i}", i, "abc"[i % 3]) for i in range(12)])
-    for step in range(8):
-        op = rng.choice(["merge", "delete", "update", "compact"])
-        if op == "merge":
+    ops = ["merge", "delete", "update", "compact", "merge_into", "by_source"]
+    for step in range(12):
+        op = rng.choice(ops)
+        if op == "merge_into":
+            # matched rows with v < s_v delete, the rest update; new
+            # keys insert
+            batch = src(rng.sample(range(16), 4)).collect()
+            merge_into(
+                spark,
+                target,
+                spark.createDataFrame(batch),
+                when_matched_update={"v": "v + s_v", "tag": "s_tag"},
+                when_matched_delete="v < s_v",
+            )
+            for k, sv, st in batch:
+                if k not in model:
+                    model[k] = [(k, sv, st)]
+                    continue
+                model[k] = [(k, v + sv, st) for _, v, _t in model[k] if v >= sv]
+                if not model[k]:
+                    del model[k]
+        elif op == "by_source":
+            # keys absent from the source lose their rows with v >= lim
+            keep = sorted(rng.sample(range(16), 5))
+            lim = rng.randrange(100)
+            merge_into(
+                spark,
+                target,
+                src(keep),
+                when_not_matched_insert=False,
+                when_not_matched_by_source_delete=f"v >= {lim}",
+            )
+            for k in [k for k in model if int(k[1:]) not in keep]:
+                model[k] = [r for r in model[k] if r[1] < lim]
+                if not model[k]:
+                    del model[k]
+        elif op == "merge":
             ks = rng.sample(range(16), 3)
             apply_merge([(f"k{k}", rng.randrange(100), "abc"[k % 3]) for k in ks])
         elif op == "delete":
@@ -374,6 +421,34 @@ def test_merge_into_rejects_duplicate_source_keys(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="duplicate keys"):
         t.merge_into(src, when_matched_update={"v": "s_v"})
+
+
+def test_merge_into_validates_assignments_before_matching(spark, tmp_path):
+    """Assignment targets are checked whether or not any target row
+    matches — here the only source key hashes to an empty bucket — and
+    nothing commits."""
+    from airflow_postgres_etl_spark import sink
+
+    t = _mi_table(spark, tmp_path)  # a, b, c in 4 buckets
+    live = set(sink._load_manifest(t.path)["buckets"])
+    keys = spark.createDataFrame([(k,) for k in "defghijk"], "oid__id string")
+    lone = next(
+        r[0]
+        for r in keys.select("oid__id", sink._bucket_expr("oid__id", 4)).collect()
+        if str(r[1]) not in live
+    )
+    source = spark.createDataFrame([(lone, 1)], "oid__id string, v long")
+    v0 = t.version()
+    for kw, err in (
+        ({"when_matched_update": {"nope": "s_v"}}, "unknown column"),
+        ({"when_matched_update": {"oid__id": "s_oid__id"}}, "key/internal"),
+        ({"when_not_matched_by_source_update": {"nope": "1"}}, "unknown column"),
+        ({"when_not_matched_by_source_update": {"oid__id": "'z'"}}, "key/internal"),
+    ):
+        with pytest.raises(ValueError, match=err):
+            t.merge_into(source, **kw)
+    assert t.version() == v0
+    assert lone not in {r.oid__id for r in t.read().collect()}
 
 
 def test_merge_into_noop_when_nothing_matches(spark, tmp_path):
