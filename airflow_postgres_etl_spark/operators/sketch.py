@@ -60,22 +60,29 @@ def kmv_sketch(
 
     Salted two-level top-k keeps every window bounded: a group with a
     billion distinct items never sorts more than ~distinct/S rows in one
-    level-1 partition, and level 2 sees exactly ≤ S·k rows per group."""
-    hashes = df.select(*group_cols, kmv_hash_expr(item).alias("h")).distinct()
-    w1 = Window.partitionBy(*group_cols, "salt").orderBy("h")
-    w2 = Window.partitionBy(*group_cols).orderBy("h")
-    return (
-        hashes.withColumn("salt", F.pmod(F.col("h"), F.lit(n_salts)))
-        .withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= k)
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .groupBy(*group_cols)
-        .agg(
-            F.sort_array(F.collect_list("h")).alias("ks"),
-            F.count("*").cast("long").alias("n_k"),
-            F.max("h").alias("kth"),
-        )
+    level-1 partition, and level 2 sees exactly ≤ S·k rows per group.
+    Internal columns are ``__``-prefixed so no group column shadows
+    them."""
+    hashes = df.select(*group_cols, kmv_hash_expr(item).alias("__h")).distinct()
+    w1 = Window.partitionBy(*group_cols, "__salt").orderBy("__h")
+    w2 = Window.partitionBy(*group_cols).orderBy("__h")
+    return _kmv_rows(
+        hashes.withColumn("__salt", F.pmod(F.col("__h"), F.lit(n_salts)))
+        .withColumn("__rn", F.row_number().over(w1))
+        .filter(F.col("__rn") <= k)
+        .withColumn("__rn", F.row_number().over(w2))
+        .filter(F.col("__rn") <= k),
+        group_cols,
+    )
+
+
+def _kmv_rows(hashes: DataFrame, group_cols: list[str]) -> DataFrame:
+    """Collect each group's surviving ``__h`` values into the sketch
+    schema ``group_cols…, ks, n_k, kth``."""
+    return hashes.groupBy(*group_cols).agg(
+        F.sort_array(F.collect_list("__h")).alias("ks"),
+        F.count("*").cast("long").alias("n_k"),
+        F.max("__h").alias("kth"),
     )
 
 
@@ -100,18 +107,13 @@ def kmv_merge_sketches(
     rows need only ``group_cols…, ks``; output matches
     :func:`kmv_sketch`'s schema.  Cost is O(rows · k) — sketches, not
     data, move."""
-    w = Window.partitionBy(*group_cols).orderBy("h")
-    return (
-        sketches.select(*group_cols, F.explode("ks").alias("h"))
+    w = Window.partitionBy(*group_cols).orderBy("__h")
+    return _kmv_rows(
+        sketches.select(*group_cols, F.explode("ks").alias("__h"))
         .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .groupBy(*group_cols)
-        .agg(
-            F.sort_array(F.collect_list("h")).alias("ks"),
-            F.count("*").cast("long").alias("n_k"),
-            F.max("h").alias("kth"),
-        )
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k),
+        group_cols,
     )
 
 

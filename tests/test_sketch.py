@@ -79,6 +79,34 @@ def test_kmv_salting_does_not_change_result(spark):
     assert ra == rb
 
 
+def test_kmv_group_columns_named_like_internals(spark):
+    """A group column may carry any name: one called ``salt``, ``rn``
+    or ``h`` must not shadow the sketch's internal columns, in the
+    sketch or in its merge — each equals the same data grouped under
+    ``grp``."""
+    rows = [("a", f"i{i}") for i in range(10)] + [("b", f"i{i}") for i in range(3)]
+    base = spark.createDataFrame(rows, ["grp", "item"])
+
+    def sketches(df, g):
+        return {
+            (r[g], tuple(r.ks), r.n_k, r.kth) for r in df.collect()
+        }
+
+    want = sketches(K.kmv_sketch(base, ["grp"], F.col("item"), k=8), "grp")
+    assert {w[0]: w[2] for w in want} == {"a": 8, "b": 3}
+    for name in ("salt", "rn", "h"):
+        df = base.withColumnRenamed("grp", name)
+        sk = K.kmv_sketch(df, [name], F.col("item"), k=8)
+        assert sketches(sk, name) == want, name
+        halves = K.kmv_sketch(
+            df.filter(F.col("item") < "i5"), [name], F.col("item"), k=8
+        ).unionByName(
+            K.kmv_sketch(df.filter(F.col("item") >= "i5"), [name], F.col("item"), k=8)
+        )
+        merged = K.kmv_merge_sketches(halves, [name], k=8)
+        assert sketches(merged, name) == want, name
+
+
 def test_kmv_jaccard_accuracy(spark):
     """Sketch Jaccard vs exact token-set Jaccard per source pair."""
     toks = _toks(spark).distinct()

@@ -139,25 +139,194 @@ def test_mor_deltas_force_full_fallback_until_compacted(spark, tmp_path):
     _check(spark, target, mv)
 
 
-def test_vacuumed_old_files_force_full_fallback(spark, tmp_path):
-    from airflow_postgres_etl_spark.sink import vacuum_keyed_table
+# ---------------------------------------------------------------------------
+# The endpoint matrix: every view kind through every endpoint rule of the
+# shared refresh skeleton, the view equal to a full recompute after each
+# ---------------------------------------------------------------------------
 
-    target, mv = str(tmp_path / "t"), str(tmp_path / "mv")
+_KINDS = ["aggregate", "star", "minmax", "distinct", "quantile", "cms"]
+
+_BASE_META = {"source_version", "data", "group_cols", "sum_cols"}
+_META_KEYS = {
+    "aggregate": _BASE_META,
+    "star": _BASE_META | {"kind", "ons", "versions"},
+    "minmax": _BASE_META | {"kind", "agg_cols"},
+    "distinct": _BASE_META | {"kind", "item_col", "k"},
+    "quantile": _BASE_META | {"kind", "value_col", "key_col", "k"},
+    "cms": _BASE_META | {"kind", "item_col", "depth", "width"},
+}
+
+
+def _refresh_kind(kind, spark, target, dim, mv, group=None):
+    from airflow_postgres_etl_spark import views as V
+
+    if kind == "aggregate":
+        return V.refresh_aggregate_view(spark, target, mv, group or ["grp"], ["v"])
+    if kind == "star":
+        return V.refresh_star_view(
+            spark, target, [(dim, "grp")], mv, group or ["seg"], ["v"]
+        )
+    if kind == "minmax":
+        return V.refresh_minmax_view(spark, target, mv, group or ["grp"], ["v"])
+    if kind == "distinct":
+        return V.refresh_distinct_view(
+            spark, target, mv, group or ["grp"], "item", k=4
+        )
+    if kind == "quantile":
+        return V.refresh_quantile_view(
+            spark, target, mv, group or ["grp"], "v", "oid__id", k=4
+        )
+    return V.refresh_cms_view(
+        spark, target, mv, group or ["grp"], "item", depth=2, width=8
+    )
+
+
+#: one output column per kind, used as a group column it must collide
+_CLASH = {"aggregate": "n", "star": "sum_v", "minmax": "max_v",
+          "distinct": "kth", "quantile": "smp", "cms": "cnt"}
+
+
+def _recompute_rows(kind, spark, target, dim):
+    """The view each kind must hold, computed directly from the table."""
+    from pyspark.sql import functions as F
+
+    from airflow_postgres_etl_spark.operators import sketch as S
+
+    t = read_keyed_table(spark, target)
+    if kind == "star":
+        t = t.join(read_keyed_table(spark, dim), "grp")
+    g = "seg" if kind == "star" else "grp"
+    if kind in ("aggregate", "star", "minmax"):
+        aggs = [F.count(F.lit(1)).alias("n"), F.sum("v").alias("sum_v")]
+        if kind == "minmax":
+            aggs += [F.min("v").alias("min_v"), F.max("v").alias("max_v")]
+        df = t.groupBy(g).agg(*aggs)
+    elif kind == "distinct":
+        df = S.kmv_sketch(t, ["grp"], F.col("item"), k=4)
+    elif kind == "cms":
+        df = S.cms_sketch(t, ["grp"], F.col("item"), depth=2, width=8)
+    else:
+        smp = S.bottomk_sample(
+            t.select("grp", F.col("v").alias("__v"), "oid__id"),
+            ["grp"], F.col("oid__id"), k=4,
+        )
+        df = smp.groupBy("grp").agg(
+            F.sort_array(F.collect_list(
+                F.struct(F.col("__h").alias("h"), F.col("__v").alias("v"))
+            )).alias("smp"),
+            F.count("*").cast("long").alias("n_smp"),
+        )
+    return _sorted_rows(df)
+
+
+def _sorted_rows(df):
+    return sorted(str(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _mv_files(mv):
+    import os
+
+    return sorted(
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(mv, "data"))
+        for f in fs
+    )
+
+
+@pytest.mark.parametrize("kind", _KINDS)
+def test_refresh_endpoint_matrix(spark, tmp_path, kind):
+    """Each view kind through the shared endpoint rules, in order: first
+    refresh -> full; same version -> noop; CoW merge -> incremental; a
+    metadata-only commit -> incremental reading nothing and writing only
+    the meta; a pending MOR delta -> full; compaction while the recorded
+    endpoint is still the unclean one -> full; a zero-retention vacuum
+    of a removed file -> full.  After every step the view equals a full
+    recompute of the kind's aggregate straight from the table, and the
+    meta carries exactly the kind's key set.  Each kind also rejects a
+    group column named like one of its output columns."""
+    from airflow_postgres_etl_spark.operators.expectations import (
+        expect_distribution,
+    )
+    from airflow_postgres_etl_spark.sink import (
+        set_drift_policy,
+        vacuum_keyed_table,
+    )
+    from airflow_postgres_etl_spark.storage import LOCAL_STORE
+    from airflow_postgres_etl_spark.views import _meta_path, _read_view_frame
+
+    target, dim, mv = (str(tmp_path / d) for d in ("t", "d", "mv"))
+    schema = "oid__id string, grp string, v double, item string"
+
+    def rows(data):
+        return spark.createDataFrame(data, schema)
+
+    with pytest.raises(ValueError, match="collide"):
+        _refresh_kind(kind, spark, target, dim, mv, group=[_CLASH[kind]])
     keyed_overwrite_parquet(
         spark,
-        _rows(spark, [(f"k{i}", "g", float(i)) for i in range(10)]),
-        target,
-        vacuum=False,
+        rows([(f"k{i}", f"g{i % 3}", float(i + 1), f"it{i % 7}")
+              for i in range(30)]),
+        target, num_buckets=2, vacuum=False,
     )
-    refresh_aggregate_view(spark, target, mv, ["grp"], ["v"])
+    if kind == "star":
+        keyed_overwrite_parquet(
+            spark,
+            spark.createDataFrame(
+                [("g0", "east"), ("g1", "west"), ("g2", "east")], ["grp", "seg"]
+            ),
+            dim, key="grp", num_buckets=1, vacuum=False,
+        )
+
+    def step(expected_mode):
+        r = _refresh_kind(kind, spark, target, dim, mv)
+        assert r["mode"] == expected_mode, r
+        meta = LOCAL_STORE.read_json(_meta_path(mv))
+        assert set(meta) == _META_KEYS[kind]
+        view = _read_view_frame(spark, mv, LOCAL_STORE)
+        assert _sorted_rows(view) == _recompute_rows(kind, spark, target, dim)
+        return r, meta
+
+    step("full")
+    step("noop")
     keyed_overwrite_parquet(
-        spark, _rows(spark, [("k0", "g", -1.0)]), target, vacuum=False
+        spark, rows([("k1", "g0", 100.0, "it1"), ("k99", "g2", 7.0, "new")]),
+        target, vacuum=False,
     )
-    # the superseded files (the incremental delta's minus side) are gone
+    step("incremental")
+
+    # a metadata-only commit moves the version but no base file: the
+    # refresh reads nothing and rewrites only the meta
+    before_meta = LOCAL_STORE.read_json(_meta_path(mv))
+    before_files = _mv_files(mv)
+    set_drift_policy(
+        spark, target, [expect_distribution("d", "grp", {"g0": 0.5, "g1": 0.5})]
+    )
+    r, meta = step("incremental")
+    reads = (
+        r["fact_files_read"] + r["dim_files_read"] if kind == "star"
+        else r["files_read"]
+    )
+    assert reads == 0
+    assert meta["data"] == before_meta["data"]
+    assert _mv_files(mv) == before_files
+    if kind == "star":
+        assert meta["versions"][0] == before_meta["versions"][0] + 1
+    else:
+        assert meta["source_version"] == before_meta["source_version"] + 1
+
+    # MOR delta pending: the file multiset is unsound -> full ...
+    keyed_merge_mor(spark, rows([("k0", "g1", 50.0, "it3")]), target)
+    step("full")
+    # ... and stays full while the recorded endpoint is the unclean one
+    compact_keyed_table(spark, target)
+    step("full")
+    # both endpoints clean, but the superseded files (the delta's minus
+    # side) are vacuumed -> full
+    keyed_overwrite_parquet(
+        spark, rows([("k6", "g2", -1.0, "it6")]), target, vacuum=False
+    )
     vacuum_keyed_table(target, retention_s=0)
-    r = refresh_aggregate_view(spark, target, mv, ["grp"], ["v"])
-    assert r["mode"] == "full"
-    _check(spark, target, mv)
+    step("full")
 
 
 def test_mismatched_view_definition_rejected(spark, tmp_path):
@@ -716,6 +885,91 @@ def test_minmax_view_touched_group_cap_forces_full(spark, tmp_path):
         for x in views.read_aggregate_view(spark, mv).collect()
     }
     assert got["g7"] == 8.0
+
+
+def _nan_group_table(spark, target):
+    """30 rows over float groups {1.0, 2.0, NaN}, ``g`` stats-tracked so
+    the touched-group recompute range-prunes, then a 2-row CoW merge
+    touching 1.0 and NaN."""
+    schema = "oid__id string, g double, v double, item string"
+    groups = [1.0, 2.0, float("nan")]
+    keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame(
+            [(f"k{i}", groups[i % 3], float(i), f"it{i % 4}") for i in range(30)],
+            schema,
+        ),
+        target, num_buckets=4, stats_cols=["g"], vacuum=False,
+    )
+    return spark.createDataFrame(
+        [("k0", 1.0, 100.0, "new"), ("k2", float("nan"), 200.0, "it9")], schema
+    )
+
+
+def test_minmax_view_nan_group_keeps_every_touched_group(spark, tmp_path):
+    """A NaN group among the touched groups must not narrow the
+    stats-pruned recompute scan: a min/max range over NaN is input-order
+    dependent in Python and matches only NaN in Spark, so the prune is
+    skipped, as for a NULL group."""
+    from pyspark.sql import functions as F
+
+    from airflow_postgres_etl_spark.views import (
+        read_aggregate_view,
+        refresh_minmax_view,
+    )
+
+    target, mv = str(tmp_path / "t"), str(tmp_path / "mv")
+    batch = _nan_group_table(spark, target)
+    refresh_minmax_view(spark, target, mv, ["g"], ["v"])
+    keyed_overwrite_parquet(spark, batch, target, vacuum=False)
+    r = refresh_minmax_view(spark, target, mv, ["g"], ["v"])
+    assert r["mode"] == "incremental" and r["groups_recomputed"] > 0
+
+    def keyed(rows):
+        return {str(x.g): (x.n, x.sum_v, x.min_v, x.max_v) for x in rows}
+
+    exp = keyed(
+        read_keyed_table(spark, target)
+        .groupBy("g")
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.sum(F.col("v").cast("double")).alias("sum_v"),
+             F.min("v").alias("min_v"), F.max("v").alias("max_v"))
+        .collect()
+    )
+    assert set(exp) == {"1.0", "2.0", "nan"}
+    assert keyed(read_aggregate_view(spark, mv).collect()) == exp
+
+
+def test_distinct_view_nan_group_removal(spark, tmp_path):
+    """The same NaN prune hazard on a sketch view: a CoW merge removes
+    files, so the refresh takes the touched-group recompute, and every
+    group must equal the sketch built over the final table directly."""
+    from pyspark.sql import functions as F
+
+    from airflow_postgres_etl_spark.operators.sketch import kmv_sketch
+    from airflow_postgres_etl_spark.views import (
+        read_distinct_view,
+        refresh_distinct_view,
+    )
+
+    target, mv = str(tmp_path / "t"), str(tmp_path / "mv")
+    batch = _nan_group_table(spark, target)
+    refresh_distinct_view(spark, target, mv, ["g"], "item", k=3)
+    keyed_overwrite_parquet(spark, batch, target, vacuum=False)
+    r = refresh_distinct_view(spark, target, mv, ["g"], "item", k=3)
+    assert r["mode"] == "incremental" and r["groups_recomputed"] > 0
+    exp = {
+        str(x.g): (x.n_k, x.kth)
+        for x in kmv_sketch(
+            read_keyed_table(spark, target), ["g"],
+            F.col("item").cast("string"), k=3,
+        ).collect()
+    }
+    assert set(exp) == {"1.0", "2.0", "nan"}
+    got = {
+        str(x.g): (x.n_k, x.kth) for x in read_distinct_view(spark, mv).collect()
+    }
+    assert got == exp
 
 
 def test_view_lifecycle_goes_through_store_seam(spark, tmp_path, monkeypatch):
