@@ -37,9 +37,13 @@ SENTINELS = ["NaN", "NaT", "None", ""]
 
 def filter_after_high_water_mark(df: DataFrame, hwm: str | None) -> DataFrame:
     """T1: strictly-greater lexical predicate on ``fileName``
-    (reference ``events_table.py:90-91``).  As a plan-level filter this
-    prunes entire files when ``fileName`` derives from ``input_file_name``
-    partitions; the streaming variant replaces it with source checkpointing.
+    (reference ``events_table.py:90-91``), row by row.  It prunes no file:
+    ``fileName`` derives from ``input_file_name()``, which Spark cannot
+    push into the scan, so every file handed to the read is still opened.
+    The batch pipeline therefore cuts its file LIST at the high-water
+    mark first (``pipeline._landed_batch``) and keeps this filter as the
+    row-level guarantee; the streaming variant replaces it with source
+    checkpointing.
     """
     if hwm is None:
         return df

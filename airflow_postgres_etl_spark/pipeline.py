@@ -1,10 +1,16 @@
 """Incremental batch pipeline — the reference's two DAGs as one lazy plan.
 
 Reference flow (SURVEY §3.1): list files → read high-water mark → filter
-``file > hwm`` → per-3-files pandas loop → delete+insert.  Here: one
-multi-file scan, plan-level HWM filter, one keyed-overwrite merge.  The
-micro-batch accumulate/flush loop (T2) disappears — partitioned execution
-is Spark's native memory bounding.
+``file > hwm`` → per-3-files pandas loop → delete+insert.  Here the same
+list-then-read order: the landing directory is listed on the driver
+(``csv_source.list_landed``), only the files named past the high-water
+mark are handed to one multi-file scan, and nothing is read — no Spark
+job at all — when none is new.  The new rows are scanned once and feed
+both targets, the literal parse runs once, and each target lands in one
+keyed-overwrite merge whose affected-bucket probe also counts the rows
+it merges.  The
+micro-batch accumulate/flush loop (T2) disappears — partitioned
+execution is Spark's native memory bounding.
 """
 
 from __future__ import annotations
@@ -17,7 +23,7 @@ from pyspark.sql import functions as F
 from . import sink
 from .operators.ingest import build_events, build_tracking, filter_after_high_water_mark
 from .sink import keyed_overwrite_parquet, read_keyed_table
-from .sources.csv_source import read_tracking_csv
+from .sources.csv_source import list_landed, read_tracking_csv
 
 
 def parquet_high_water_mark(
@@ -47,6 +53,33 @@ def parquet_high_water_mark(
     if stat is not None:
         return stat["max"]
     return read_keyed_table(spark, target).agg(F.max(column)).collect()[0][0]
+
+
+def _landed_batches(
+    spark: SparkSession, csv_dir: str, hwm: str | None
+) -> tuple[DataFrame, DataFrame, DataFrame] | None:
+    """``(raw, tracking, events)`` for the files in ``csv_dir`` named past
+    ``hwm``, all three persisted — or None, before any Spark job, when
+    no file is new.
+
+    The cut happens on the listing, so the scan opens only the new
+    files; the row-level ``fileName > hwm`` filter stays on the read as
+    the guarantee, and costs nothing once the list is pruned.  The CSV
+    rows are scanned once (``raw``) and each target dedups them keep-last
+    on its own: a persisted dedup would keep its shuffle's full
+    partition count (Spark does not coalesce a cached plan's final
+    shuffle), and the literal parse over it then pays the Python
+    worker's fixed per-task cost (~0.3 s) once per shuffle partition,
+    where AQE coalesces a small batch to one.  ``events`` is persisted
+    so the parse runs once for the merge's probe and its write."""
+    paths = [
+        p for name, p in list_landed(spark, csv_dir) if hwm is None or name > hwm
+    ]
+    if not paths:
+        return None
+    raw = filter_after_high_water_mark(read_tracking_csv(spark, paths), hwm)
+    raw = raw.persist()
+    return raw, build_tracking(raw).persist(), build_events(raw).persist()
 
 
 def _fetch_one(con, sql: str):
@@ -154,19 +187,17 @@ def incremental_load_relational(
     Same idempotence story as :func:`incremental_load`: events merge
     first, the tracking table (the HWM carrier) advances LAST, so a
     failure between the merges replays both — harmless under
-    replace-by-key.  Returns rows merged per table."""
-    raw = read_tracking_csv(spark, os.path.join(csv_dir, "*.csv"))
+    replace-by-key.  Returns rows merged per table; the relational merge
+    has no probe to count in, so the counts cost a job per table."""
     con = connection_factory()
     try:
         hwm = relational_high_water_mark(con, tracking_table)
     finally:
         con.close()
-    fresh = filter_after_high_water_mark(raw, hwm)
-    if not fresh.take(1):
+    batches = _landed_batches(spark, csv_dir, hwm)
+    if batches is None:
         return {"tracking": 0, "events": 0}
-
-    tracking = build_tracking(fresh).persist()
-    events = build_events(fresh).persist()
+    _, tracking, events = batches
     try:
         counts = {"tracking": tracking.count(), "events": events.count()}
         for df, table in ((events, events_table), (tracking, tracking_table)):
@@ -179,8 +210,8 @@ def incremental_load_relational(
                 key=key,
             )
     finally:
-        tracking.unpersist()
-        events.unpersist()
+        for df in batches:
+            df.unpersist()
     return counts
 
 
@@ -193,40 +224,33 @@ def incremental_load(
     key: str = "oid__id",
 ) -> dict[str, int]:
     """Run one incremental cycle: new files only → tracking + events →
-    keyed-overwrite merge.  Returns rows merged per table.
+    keyed-overwrite merge.  Returns rows merged per table, as counted by
+    each merge's own probe.
 
-    Idempotent: re-running with no new files merges nothing; re-running
-    after a partial failure replays the same keys (replace-by-key makes
-    the replay harmless).
+    Idempotent: re-running with no new files merges nothing and runs no
+    Spark job; re-running after a partial failure lists and replays the
+    same files (replace-by-key makes the replay harmless).
     """
-    raw = read_tracking_csv(spark, os.path.join(csv_dir, "*.csv"))
     hwm = parquet_high_water_mark(spark, tracking_target)
-    fresh = filter_after_high_water_mark(raw, hwm)
-    if not fresh.take(1):
+    batches = _landed_batches(spark, csv_dir, hwm)
+    if batches is None:
         return {"tracking": 0, "events": 0}
-
-    # persist the built batches: count + merge would otherwise re-execute
-    # the full parse/dedup/explode chain once per action (~4x total work).
-    # At cluster scale this is the standard stage-the-batch pattern
-    # (MEMORY_AND_DISK spills instead of recomputing).
-    tracking = build_tracking(fresh).persist()
-    events = build_events(fresh).persist()
+    _, tracking, events = batches
     try:
-        counts = {"tracking": tracking.count(), "events": events.count()}
         # events first: the HWM is read from the tracking mirror, so it must
         # advance LAST — a failure between the two merges then replays both
         # (harmless under replace-by-key) instead of silently skipping events.
-        keyed_overwrite_parquet(spark, events, events_target, key)
+        n_events = keyed_overwrite_parquet(spark, events, events_target, key)
         # fileName stats let the next cycle read its high-water mark from
         # the manifest (parquet_high_water_mark); footers the commit's
         # row-count fill opens anyway, so no extra Spark job
-        keyed_overwrite_parquet(
+        n_tracking = keyed_overwrite_parquet(
             spark, tracking, tracking_target, key, stats_cols=["fileName"]
         )
     finally:
-        tracking.unpersist()
-        events.unpersist()
-    return counts
+        for df in batches:
+            df.unpersist()
+    return {"tracking": n_tracking, "events": n_events}
 
 
 def load_outputs(

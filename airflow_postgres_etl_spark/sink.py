@@ -1147,9 +1147,11 @@ def _admit_batch(
     :func:`_align_batch_types`) — the ≤ num_buckets affected-bucket
     probe and the CHECK constraints.
 
-    Returns ``(bucketed, affected buckets, physical stats_cols)``, or
-    None for a zero-row batch: an empty batch must be a true no-op (no
-    commit dir, no manifest version bump) — otherwise every empty
+    Returns ``(bucketed, affected buckets, physical stats_cols, batch
+    row count)`` — the probe counts per bucket, so the count costs no
+    job of its own — or None for a zero-row batch: an empty batch must
+    be a true no-op (no commit dir, no manifest version bump) —
+    otherwise every empty
     streaming micro-batch or no-new-files rerun churns the manifest and
     leaves orphan commit dirs for vacuum to collect."""
     batch = _translate_batch(batch, manifest)
@@ -1174,13 +1176,12 @@ def _admit_batch(
     # CDC/merge SOURCES (small by contract) are checkpointed instead at
     # their call sites (apply_changes/_scd2, merge_into).
     # ≤ num_buckets tiny rows — a scalar-class driver action, not data.
-    affected = sorted(
-        r[0] for r in bucketed.select(BUCKET_COL).distinct().collect()
-    )
-    if not affected:
+    per_bucket = bucketed.groupBy(BUCKET_COL).count().collect()
+    if not per_bucket:
         return None
     _enforce_constraints(bucketed, target, store)
-    return bucketed, [str(b) for b in affected], stats_cols
+    affected = [str(b) for b in sorted(r[0] for r in per_bucket)]
+    return bucketed, affected, stats_cols, sum(r[1] for r in per_bucket)
 
 
 def _commit_files(
@@ -1414,8 +1415,12 @@ def keyed_overwrite_parquet(
     stats_cols: list[str] | None = None,
     txn_app: str | None = None,
     txn_seq: int | None = None,
-) -> None:
+) -> int:
     """Bucket-pruned replace-by-key merge, committed via manifest swap.
+    Returns the number of batch rows the merge admitted: 0 when the
+    batch is empty or the ``txn`` epoch was already applied (nothing is
+    written then).  The count comes from the affected-bucket probe, so
+    it costs no Spark job of its own.
 
     ``txn_app``/``txn_seq`` (r9): the same idempotent-writer watermark
     as ``keyed_append`` (Delta's ``txn`` action), recorded INSIDE the
@@ -1455,13 +1460,13 @@ def keyed_overwrite_parquet(
     num_buckets = _load_or_check_spec(target, key, num_buckets, store)
     manifest = _load_manifest(target, store)
     if _txn_applied(manifest, txn):
-        return
+        return 0
     admitted = _admit_batch(
         spark, batch, target, manifest, key, num_buckets, store, stats_cols
     )
     if admitted is None:
-        return
-    bucketed, affected, stats_cols = admitted
+        return 0
+    bucketed, affected, stats_cols, n_rows = admitted
     merged = bucketed
     # file-level pruning: only the affected buckets' live files are read.
     # An affected bucket with pending MOR deltas contributes its RESOLVED
@@ -1494,6 +1499,7 @@ def keyed_overwrite_parquet(
     )
     if vacuum and manifest is not None:
         vacuum_keyed_table(target, retention_s=retention_s, store=store)
+    return n_rows
 
 
 def _vacuum_candidates(
@@ -4586,7 +4592,7 @@ def keyed_append(
     )
     if admitted is None:
         return 0
-    bucketed, affected, stats_cols = admitted
+    bucketed, affected, stats_cols, _ = admitted
     deltas = manifest.get("deltas", {})
     probe_files = [
         f for b in affected for f in manifest["buckets"].get(b, [])

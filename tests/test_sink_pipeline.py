@@ -65,7 +65,7 @@ def test_empty_batch_merge_is_a_true_noop(spark, tmp_path):
     before = _bucket_file_state(target)
 
     empty = batch.where(F.lit(False))
-    keyed_overwrite_parquet(spark, empty, target)
+    assert keyed_overwrite_parquet(spark, empty, target) == 0
     assert table_version(target) == v1
     assert _bucket_file_state(target) == before
     assert read_keyed_table(spark, target).count() == 2
@@ -76,6 +76,22 @@ def test_empty_batch_merge_is_a_true_noop(spark, tmp_path):
     assert table_version(fresh) is None
     with pytest.raises(FileNotFoundError):
         read_keyed_table(spark, fresh)
+
+
+def test_keyed_overwrite_returns_the_rows_it_merged(spark, tmp_path):
+    """The merge reports the batch rows it admitted (duplicate keys
+    included), and 0 when it writes nothing: an empty batch or a
+    replayed ``txn`` epoch."""
+    target = str(tmp_path / "t")
+    batch = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 3)], ["oid__id", "v"]
+    )
+    assert keyed_overwrite_parquet(spark, batch, target) == 3
+    assert keyed_overwrite_parquet(spark, batch.limit(1), target) == 1
+    assert keyed_overwrite_parquet(spark, batch.limit(0), target) == 0
+    txn = dict(txn_app="w", txn_seq=1)
+    assert keyed_overwrite_parquet(spark, batch, target, **txn) == 3
+    assert keyed_overwrite_parquet(spark, batch, target, **txn) == 0
 
 
 def _bucket_file_state(target):
@@ -208,6 +224,250 @@ def test_incremental_load_end_to_end(spark, staged_dirs):
     events = read_keyed_table(spark, ev)
     orphan = events.join(tracking.select("oid__id"), "oid__id", "left_anti")
     assert orphan.count() == 0
+
+
+def _scala_iter(coll):
+    it = coll.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _csv_files_read(spark, job_ids) -> int:
+    """CSV files the given jobs opened: the "number of files read"
+    metric of every ``Scan csv`` node of the SQL executions that ran
+    them, from the SQL status store (a persisted batch's scan is the
+    cached plan under its in-memory scan, so a file read once counts
+    once)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    jobs, total = set(job_ids), 0
+    recent = store.executionsList(max(0, store.executionsCount() - 200), 200)
+    for ex in _scala_iter(recent):
+        if not jobs & {int(j) for j in _scala_iter(ex.jobs().keys())}:
+            continue
+        values = store.executionMetrics(ex.executionId())
+        for node in _scala_iter(store.planGraph(ex.executionId()).allNodes()):
+            if not node.name().startswith("Scan csv"):
+                continue
+            for m in _scala_iter(node.metrics()):
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of files read" and v.isDefined():
+                    total += int(v.get().replace(",", ""))
+    return total
+
+
+def _land(src, csv_dir, names):
+    """Copy fixture files into the landing dir; ``names`` maps a fixture
+    file to the name it lands under (a list lands them as they are)."""
+    if not isinstance(names, dict):
+        names = {n: n for n in names}
+    os.makedirs(csv_dir, exist_ok=True)
+    for f, name in names.items():
+        shutil.copy(os.path.join(src, f), os.path.join(csv_dir, name))
+
+
+def _with_jobs(spark, fn):
+    """``fn()``'s result and the Spark jobs it ran."""
+    from .test_commit_kernel import _job_ids_of
+
+    out = []
+    jobs = _job_ids_of(spark, lambda: out.append(fn()))
+    return out[0], list(jobs)
+
+
+def _cycle(spark, csv_dir, tr, ev):
+    return _with_jobs(spark, lambda: incremental_load(spark, csv_dir, tr, ev))
+
+
+def _assert_equals_full_load(spark, csv_dir, tr, ev, tmp_path):
+    """The incrementally loaded targets hold what one full load of
+    every landed file gives: the same (key, surviving fileName) pairs
+    and as many event rows."""
+    full_tr, full_ev = str(tmp_path / "full_tr"), str(tmp_path / "full_ev")
+    full = incremental_load(spark, csv_dir, full_tr, full_ev)
+    pairs = [
+        {
+            tuple(r)
+            for r in read_keyed_table(spark, t)
+            .select("oid__id", "fileName")
+            .collect()
+        }
+        for t in (tr, full_tr)
+    ]
+    assert pairs[0] == pairs[1]
+    assert full["tracking"] == len(pairs[1])
+    n_events = read_keyed_table(spark, ev).count()
+    assert n_events == read_keyed_table(spark, full_ev).count() == full["events"]
+
+
+def test_incremental_cycle_reads_only_the_files_that_landed(spark, tmp_path):
+    """A cycle opens each new CSV file exactly once and no old one, a
+    cycle with no new file (an empty landing dir included) runs no Spark
+    job, the counts come back from the merges, and the two-phase load
+    equals one full load."""
+    src, csv_dir = str(tmp_path / "src"), str(tmp_path / "csv")
+    tr, ev = str(tmp_path / "tracking"), str(tmp_path / "events")
+    files = generate(src, n_files=4, rows_per_file=20)
+
+    with pytest.raises(FileNotFoundError):
+        incremental_load(spark, csv_dir, tr, ev)
+    os.makedirs(csv_dir)
+    assert _cycle(spark, csv_dir, tr, ev) == ({"tracking": 0, "events": 0}, [])
+    assert not os.path.exists(tr)
+
+    _land(src, csv_dir, files[:3])
+    c1, jobs = _cycle(spark, csv_dir, tr, ev)
+    assert _csv_files_read(spark, jobs) == 3
+    assert c1["tracking"] == read_keyed_table(spark, tr).count()
+    assert c1["events"] == read_keyed_table(spark, ev).count()
+
+    _land(src, csv_dir, files[3:])
+    c2, jobs = _cycle(spark, csv_dir, tr, ev)
+    assert _csv_files_read(spark, jobs) == 1
+    newest = read_keyed_table(spark, tr).where(F.col("fileName") == files[3])
+    assert c2["tracking"] == newest.count()
+
+    assert _cycle(spark, csv_dir, tr, ev) == ({"tracking": 0, "events": 0}, [])
+    _assert_equals_full_load(spark, csv_dir, tr, ev, tmp_path)
+
+
+def test_high_water_mark_compares_names_as_file_name_stores_them(
+    spark, tmp_path
+):
+    """``fileName`` is URI-encoded (``a b.csv`` is stored as
+    ``a%20b.csv``), and the raw and encoded orders differ: raw
+    ``"a b.csv" < "a!.csv"``, encoded ``"a%20b.csv" > "a!.csv"``.  The
+    listing cut must compare encoded names, or ``a b.csv`` landing after
+    ``a!.csv`` would be skipped.  A listed name holding a glob
+    metacharacter (``a[1].csv``) is read as itself, not as a pattern."""
+    src, csv_dir = str(tmp_path / "src"), str(tmp_path / "csv")
+    tr, ev = str(tmp_path / "tracking"), str(tmp_path / "events")
+    files = generate(src, n_files=4, rows_per_file=20)
+
+    _land(src, csv_dir, {files[0]: "a!.csv"})
+    _cycle(spark, csv_dir, tr, ev)
+    assert parquet_high_water_mark(spark, tr) == "a!.csv"
+
+    _land(
+        src, csv_dir, {files[1]: "a b.csv", files[2]: "a%.csv", files[3]: "a[1].csv"}
+    )
+    _, jobs = _cycle(spark, csv_dir, tr, ev)
+    assert _csv_files_read(spark, jobs) == 3
+    assert parquet_high_water_mark(spark, tr) == "a%5B1%5D.csv"
+    assert _cycle(spark, csv_dir, tr, ev) == ({"tracking": 0, "events": 0}, [])
+    _assert_equals_full_load(spark, csv_dir, tr, ev, tmp_path)
+
+
+def _rows_of(spark, target):
+    from collections import Counter
+
+    df = read_keyed_table(spark, target).drop("uploadDate")
+    return Counter(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def test_crash_between_the_two_commits_replays_the_same_files(
+    spark, tmp_path, monkeypatch
+):
+    """The events commit lands, then the tracking merge dies: the
+    high-water mark (read from tracking) has not moved, so the retry
+    lists and reads the same files, and both tables end equal to an
+    uncrashed run's."""
+    import airflow_postgres_etl_spark.pipeline as pipeline
+    from airflow_postgres_etl_spark.sink import table_version
+
+    src, csv_dir = str(tmp_path / "src"), str(tmp_path / "csv")
+    tr, ev = str(tmp_path / "tracking"), str(tmp_path / "events")
+    ref_tr, ref_ev = str(tmp_path / "ref_tr"), str(tmp_path / "ref_ev")
+    files = generate(src, n_files=3, rows_per_file=20)
+    _land(src, csv_dir, files[:2])
+    incremental_load(spark, csv_dir, tr, ev)
+    incremental_load(spark, csv_dir, ref_tr, ref_ev)
+    hwm = parquet_high_water_mark(spark, tr)
+    _land(src, csv_dir, files[2:])
+    incremental_load(spark, csv_dir, ref_tr, ref_ev)
+
+    read, real_read = [], pipeline.read_tracking_csv
+    real_merge = pipeline.keyed_overwrite_parquet
+
+    def spy_read(spark, paths, **kw):
+        read.append(list(paths))
+        return real_read(spark, paths, **kw)
+
+    def crash_on_tracking(spark, batch, target, *a, **kw):
+        if target == tr:
+            raise RuntimeError("injected crash before the tracking commit")
+        return real_merge(spark, batch, target, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "read_tracking_csv", spy_read)
+    monkeypatch.setattr(pipeline, "keyed_overwrite_parquet", crash_on_tracking)
+    ev_version = table_version(ev)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        incremental_load(spark, csv_dir, tr, ev)
+    assert table_version(ev) == ev_version + 1  # the events commit landed
+    assert parquet_high_water_mark(spark, tr) == hwm
+
+    monkeypatch.setattr(pipeline, "keyed_overwrite_parquet", real_merge)
+    retry = incremental_load(spark, csv_dir, tr, ev)
+    assert len(read) == 2 and read[0] == read[1] and len(read[0]) == 1
+    assert retry["tracking"] > 0 and retry["events"] > 0
+    assert parquet_high_water_mark(spark, tr) == files[2]
+    assert _rows_of(spark, tr) == _rows_of(spark, ref_tr)
+    assert _rows_of(spark, ev) == _rows_of(spark, ref_ev)
+
+
+def test_incremental_load_relational_lists_then_reads(spark, tmp_path):
+    """The relational loader against DuckDB: a cycle reads only the new
+    file, a cycle with no new file runs no Spark job, and the target
+    ends with the (key, fileName) pairs of one full parquet load."""
+    import duckdb
+
+    from airflow_postgres_etl_spark.pipeline import incremental_load_relational
+
+    db = str(tmp_path / "wh.duckdb")
+
+    def stage_writer_factory(cols):
+        def write(df, stage):
+            con = duckdb.connect(db)
+            try:
+                _duck_stage_writer(con)(df, stage)
+            finally:
+                con.close()
+
+        return write
+
+    def cycle():
+        return _with_jobs(
+            spark,
+            lambda: incremental_load_relational(
+                spark, csv_dir, "tracking", "events",
+                connection_factory=lambda: duckdb.connect(db),
+                stage_writer_factory=stage_writer_factory,
+            ),
+        )
+
+    src, csv_dir = str(tmp_path / "src"), str(tmp_path / "csv")
+    files = generate(src, n_files=3, rows_per_file=20)
+    _land(src, csv_dir, files[:2])
+    cycle()
+    assert cycle() == ({"tracking": 0, "events": 0}, [])
+    _land(src, csv_dir, files[2:])
+    c2, jobs = cycle()
+    assert _csv_files_read(spark, jobs) == 1
+
+    con = duckdb.connect(db)
+    try:
+        pairs = set(
+            con.execute('SELECT "oid__id", "fileName" FROM "tracking"').fetchall()
+        )
+        n_events = con.execute('SELECT count(*) FROM "events"').fetchone()[0]
+    finally:
+        con.close()
+    full = incremental_load(spark, csv_dir, str(tmp_path / "tr"), str(tmp_path / "ev"))
+    want = read_keyed_table(spark, str(tmp_path / "tr")).select("oid__id", "fileName")
+    assert pairs == {tuple(r) for r in want.collect()}
+    assert n_events == full["events"]
+    assert c2["tracking"] == sum(1 for _, f in pairs if f == files[2])
 
 
 def _scan_max(spark, target, column="fileName"):
