@@ -11,17 +11,33 @@ expectations, expressed as plain DataFrame ops.
 Rule kinds and their 100 TB shapes:
 
 - ``expect(name, predicate)`` — row predicate (NULL = violation, the
-  CHECK semantic).  ALL predicate rules for a frame evaluate in ONE
-  aggregate pass (a ``sum(not pred)`` per rule inside a single agg —
-  no per-rule scans).
-- ``expect_unique(name, cols)`` — key uniqueness.  One hash aggregate
-  on the cols; violations = rows beyond the first per duplicate group.
+  CHECK semantic): a 0/1 violation flag per row.
 - ``expect_foreign_key(name, col, parent_df, parent_col)`` — referential
-  integrity.  One left-anti join; broadcast when the parent's key set is
-  dim-sized, shuffled otherwise (Catalyst/AQE decides).
+  integrity: a LEFT join against the parent's distinct non-NULL keys
+  (broadcast when the key set is dim-sized, shuffled otherwise —
+  Catalyst/AQE decides); a row with a value and no matching key is an
+  orphan.  Each row matches at most one key, so the row count holds.
 - ``expect_fresh(name, ts_col, max_lag_s)`` — staleness vs the frame's
   own max timestamp: rows older than ``max(ts) - max_lag_s`` violate.
-  Two aggregates (max, then count) — a scalar broadcast, no window.
+  The thresholds come from one ``max`` aggregate of their own, joined
+  back as a broadcast scalar row — no window.
+- ``expect_unique(name, cols)`` — key uniqueness: a hash aggregate on
+  the cols; violations = rows beyond the first per duplicate group.
+- ``expect_distribution(...)`` — drift (PSI) against a reference; see
+  its docstring.
+
+The passes over the checked frame a report costs, by rule mix:
+
+- every predicate, fresh and FK rule plus the FIRST unique rule: ONE
+  pass.  The row flags are summed in one global aggregate; with a
+  unique rule, its group-by carries each group's flag sums and row
+  count first, and the global aggregate then also yields the
+  duplicate excess and the row count.  Rule count does not multiply
+  scans;
+- fresh rules, any number: one more pass, for ``max(ts)``;
+- each unique rule after the first: one group-by pass of its own (the
+  sum of its group counts is the row count, so no count scan);
+- distribution rules, any number: one more pass, shared by all of them.
 
 All counting is exact and engine-agnostic arithmetic, so the driver
 queries built on this module are hash-stable against their DuckDB twins.
@@ -238,122 +254,130 @@ def _violation_flag(pred: str) -> Column:
     return (~F.expr(pred).eqNullSafe(F.lit(True))).cast("long")
 
 
-def check_expectations(df: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Violation report: one row per rule —
-    ``(rule, kind, n_violations, n_rows)`` — built from as few passes as
-    the rule mix allows (all predicate+fresh rules share one aggregate;
-    each unique/FK rule is one aggregate/anti-join of its own; all
-    distribution rules share one batch pass).  Row ORDER groups by rule
-    kind — predicate+fresh first, then unique/FK, then distribution as
-    a trailing block (each in rule-list order within its group) — so
-    consumers must key rows by ``rule``, not position.  Returns a
-    DataFrame so the report itself can be stored, trended, or gated
-    on."""
-    spark = df.sparkSession
-    reports: list[DataFrame] = []
+def _row_flag(r: Rule, j: int) -> Column:
+    """The 0/1 violation flag of a row-local rule at position ``j`` of its
+    pass (its threshold or parent key columns carry that index)."""
+    if r.kind == "predicate":
+        return _violation_flag(r.predicate)
+    if r.kind == "fresh":
+        return (
+            F.col(r.ts_col)
+            < F.col(f"__mx_{j}") - F.expr(f"INTERVAL {r.max_lag_s} SECOND")
+        ).cast("long")
+    return (F.col(r.cols[0]).isNotNull() & F.col(f"__fk_{j}").isNull()).cast(
+        "long"
+    )
 
-    pred_rules = [r for r in rules if r.kind == "predicate"]
-    fresh_rules = [r for r in rules if r.kind == "fresh"]
-    if pred_rules or fresh_rules:
-        base = df
-        # freshness thresholds: scalar max(ts) per ts_col, one broadcast
-        if fresh_rules:
-            mx = df.agg(
-                *[
-                    F.max(r.ts_col).alias(f"__mx_{i}")
-                    for i, r in enumerate(fresh_rules)
-                ]
+
+def _pass_report(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """The report rows of row-flag rules and at most one unique rule,
+    from ONE pass over ``df`` (plus one ``max(ts)`` pass for fresh
+    rules)."""
+    base = df
+    # freshness thresholds: scalar max(ts) per ts_col, one broadcast
+    mx = [
+        F.max(r.ts_col).alias(f"__mx_{j}")
+        for j, r in enumerate(rules)
+        if r.kind == "fresh"
+    ]
+    if mx:
+        base = base.crossJoin(F.broadcast(df.agg(*mx)))
+    # FK rules: a LEFT join against the parent's distinct non-NULL keys —
+    # each row matches at most one key, so the row count holds and
+    # "value present, key absent" is the orphan flag
+    for j, r in enumerate(rules):
+        if r.kind == "foreign_key":
+            keys = (
+                r.parent.select(F.col(r.parent_col).alias(f"__fk_{j}"))
+                .filter(F.col(f"__fk_{j}").isNotNull())
+                .distinct()
             )
-            base = df.crossJoin(F.broadcast(mx))
-        aggs = [
-            _violation_flag(r.predicate).alias(r.name) for r in pred_rules
-        ] + [
-            (
-                F.col(r.ts_col)
-                < F.col(f"__mx_{i}") - F.expr(f"INTERVAL {r.max_lag_s} SECOND")
-            )
-            .cast("long")
-            .alias(r.name)
-            for i, r in enumerate(fresh_rules)
-        ]
+            base = base.join(keys, F.col(r.cols[0]) == F.col(f"__fk_{j}"), "left")
+    flags = [(j, _row_flag(r, j)) for j, r in enumerate(rules) if r.kind != "unique"]
+    u = next((j for j, r in enumerate(rules) if r.kind == "unique"), None)
+    if u is None:
         row = base.agg(
-            *[F.sum(a).alias(f"__v_{j}") for j, a in enumerate(aggs)],
+            *[F.sum(f).alias(f"__v_{j}") for j, f in flags],
             F.count(F.lit(1)).alias("__n"),
         )
-        ordered = pred_rules + fresh_rules
-        # ONE report plan for every shared-aggregate rule: explode an
-        # array-of-structs off the single aggregate row.  A per-rule
-        # row.select(...) unioned N ways re-executes the full scan+agg
-        # subtree once per rule (measured 0.8 s -> 4.16 s for 1 -> 8
-        # rules at 64x sf0.1 before this fix); the explode keeps the
-        # report one job at any rule count.
-        reports.append(
-            row.select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(r.name).alias("rule"),
-                                F.lit(r.kind).alias("kind"),
-                                F.coalesce(F.col(f"__v_{j}"), F.lit(0)).alias(
-                                    "n_violations"
-                                ),
-                                F.col("__n").alias("n_rows"),
-                            )
-                            for j, r in enumerate(ordered)
-                        ]
-                    )
-                ).alias("__r")
-            ).select("__r.*")
+    else:
+        # the unique rule's group-by carries each group's flag sums; the
+        # global aggregate over the groups yields the flag totals, the
+        # rows beyond the first per group and (sum of counts) the row count
+        row = (
+            base.groupBy(*rules[u].cols)
+            .agg(
+                F.count(F.lit(1)).alias("__c"),
+                *[F.sum(f).alias(f"__v_{j}") for j, f in flags],
+            )
+            .agg(
+                *[F.sum(f"__v_{j}").alias(f"__v_{j}") for j, _f in flags],
+                F.sum(F.when(F.col("__c") > 1, F.col("__c") - 1)).alias(
+                    f"__v_{u}"
+                ),
+                F.coalesce(F.sum("__c"), F.lit(0)).alias("__n"),
+            )
         )
+    # ONE report plan for every rule of the pass: explode an
+    # array-of-structs off the single aggregate row.  A per-rule
+    # row.select(...) unioned N ways re-executes the full scan+agg
+    # subtree once per rule (measured 0.8 s -> 4.16 s for 1 -> 8
+    # predicate rules at 64x sf0.1 before this fix); the explode keeps
+    # the report one job at any rule count.
+    return row.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(r.name).alias("rule"),
+                        F.lit(r.kind).alias("kind"),
+                        F.coalesce(F.col(f"__v_{j}"), F.lit(0)).alias(
+                            "n_violations"
+                        ),
+                        F.col("__n").alias("n_rows"),
+                    )
+                    for j, r in enumerate(rules)
+                ]
+            )
+        ).alias("__r")
+    ).select("__r.*")
 
-    # unique/FK rules each need a plan of their own (a shuffle / anti-join),
-    # but they can all share ONE total-row-count subtree instead of paying a
-    # full count scan apiece.
-    total = None
-    if any(r.kind in ("unique", "foreign_key") for r in rules):
-        total = df.agg(F.count(F.lit(1)).alias("n_rows"))
-    for r in rules:
-        if r.kind == "unique":
-            dup = (
-                df.groupBy(*r.cols)
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .filter(F.col("__c") > 1)
-                .agg(
-                    F.coalesce(
-                        F.sum(F.col("__c") - 1), F.lit(0)
-                    ).alias("n_violations")
-                )
-            )
-            reports.append(
-                dup.crossJoin(total).select(
-                    F.lit(r.name).alias("rule"),
-                    F.lit(r.kind).alias("kind"),
-                    F.col("n_violations").cast("long"),
-                    "n_rows",
-                )
-            )
-        elif r.kind == "foreign_key":
-            col = r.cols[0]
-            orphans = (
-                df.filter(F.col(col).isNotNull())
-                .join(
-                    r.parent.select(
-                        F.col(r.parent_col).alias(col)
-                    ).distinct(),
-                    col,
-                    "left_anti",
-                )
-                .agg(F.count(F.lit(1)).alias("n_violations"))
-            )
-            reports.append(
-                orphans.crossJoin(total).select(
-                    F.lit(r.name).alias("rule"),
-                    F.lit(r.kind).alias("kind"),
-                    F.col("n_violations").cast("long"),
-                    "n_rows",
-                )
-            )
+
+def check_expectations(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """Violation report: one row per rule —
+    ``(rule, kind, n_violations, n_rows)`` — built from as few passes
+    over ``df`` as the rule mix allows (module docstring): every
+    predicate, fresh and foreign-key rule and the first unique rule
+    share ONE pass (plus one ``max(ts)`` pass when there are fresh
+    rules), each further unique rule is one group-by pass, and all
+    distribution rules share one more.
+
+    Row ORDER follows the passes: the shared pass's rows first —
+    predicate rules, then fresh rules, then the FK rules and the first
+    unique rule in rule-list order — then the further unique rules,
+    then the distribution rules, each in rule-list order.  Consumers
+    must key rows by ``rule``, not position.  Returns a DataFrame so
+    the report itself can be stored, trended, or gated on."""
+    spark = df.sparkSession
+    uniques = [i for i, r in enumerate(rules) if r.kind == "unique"]
+    first_unique = uniques[0] if uniques else -1
+    # the one pass: every row-flag rule (predicate, fresh, foreign key)
+    # plus the first unique rule; each further unique rule is a pass of
+    # its own
+    shared = (
+        [r for r in rules if r.kind == "predicate"]
+        + [r for r in rules if r.kind == "fresh"]
+        + [
+            r
+            for i, r in enumerate(rules)
+            if r.kind == "foreign_key" or i == first_unique
+        ]
+    )
+    reports = [
+        _pass_report(df, p)
+        for p in [shared] + [[rules[i]] for i in uniques[1:]]
+        if p
+    ]
 
     dist_rules = [r for r in rules if r.kind == "distribution"]
     if dist_rules:

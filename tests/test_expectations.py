@@ -73,20 +73,150 @@ def test_split_with_no_predicate_rules_is_identity(spark):
     assert clean.count() == df.count() and bad.count() == 0
 
 
-def test_report_plan_is_single_pass_for_predicates(spark):
-    """All predicate rules must share ONE aggregate over the frame —
-    rule count must not multiply scans."""
-    df = _fixture(spark)
-    rules = [E.expect(f"r{i}", f"v > {i}") for i in range(8)]
-    plan = (
-        E.check_expectations(df, rules)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def _pass_rules(spark, mix):
+    if mix == "predicates":
+        return [E.expect(f"r{i}", f"v > {i}") for i in range(8)]
+    parent = spark.createDataFrame([(i,) for i in range(8)], "pid long")
+    return [
+        E.expect("v_pos", "v > 0"),
+        E.expect_unique("id_unique", ["id"]),
+        E.expect("v_small", "v < 6"),
+        E.expect_foreign_key("ref_fk", "ref", parent, "pid"),
+    ]
+
+
+#: Spark jobs of one report collect.  The predicate+unique+FK mix ran 10
+#: jobs when each unique and FK rule (and their shared row count) read
+#: the frame on its own; the one pass runs 6.
+REPORT_JOBS = {"predicates": 2, "predicate_unique_fk": 6}
+
+
+@pytest.mark.parametrize("mix", sorted(REPORT_JOBS))
+def test_report_plan_is_single_pass_for_predicates(spark, mix):
+    """Every predicate, unique and foreign-key rule of a report shares
+    ONE pass over the checked frame — rule count must not multiply
+    scans, and the report's job count is pinned."""
+    from .test_commit_kernel import _jobs_of
+
+    df = spark.range(0, 40).select(
+        "id",
+        (F.col("id") % 7).alias("v"),
+        (F.col("id") % 11).cast("int").alias("ref"),
     )
+    report = E.check_expectations(df, _pass_rules(spark, mix))
+    plan = report._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
-    # one scan feeding one aggregate chain: the fixture appears once
-    assert plan.count("LocalTableScan") <= 2  # union side may re-list
+    # the checked frame appears once in the plan, whatever the rule count
+    assert plan.count("Range (0, 40") == 1, plan
+    assert _jobs_of(spark, report.collect) == REPORT_JOBS[mix]
+
+
+def _random_frames(rng, n_rows):
+    """Seeded child/parent rows with NULLs in the unique and FK columns,
+    duplicate keys, and duplicate and NULL parent keys."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def maybe(x, p=0.2):
+        return None if rng.random() < p else x
+
+    child = [
+        (
+            i,
+            maybe(rng.randrange(n_rows // 2 + 1)),
+            maybe(rng.randrange(12)),
+            maybe(rng.randrange(6)),
+            maybe(t0 + dt.timedelta(hours=rng.randrange(200)), 0.1),
+            maybe(rng.uniform(-5.0, 20.0), 0.1),
+        )
+        for i in range(n_rows)
+    ]
+    parent1 = [(maybe(rng.randrange(10)),) for _ in range(rng.randrange(1, 15))]
+    parent2 = [(maybe(rng.randrange(4)),) for _ in range(rng.randrange(0, 6))]
+    return child, parent1, parent2
+
+
+#: the DuckDB model of each rule: its violation count over table ``t``
+_MODEL_SQL = {
+    "v_pos": "SELECT count(*) FROM t WHERE NOT coalesce(v > 0, false)",
+    "k_present": "SELECT count(*) FROM t WHERE k IS NULL",
+    "id_not_mult3": "SELECT count(*) FROM t WHERE NOT coalesce(id % 3 != 0, false)",
+    "k_unique": "SELECT coalesce(sum(c - 1), 0) FROM "
+    "(SELECT count(*) AS c FROM t GROUP BY k HAVING count(*) > 1)",
+    "k_fk_unique": "SELECT coalesce(sum(c - 1), 0) FROM "
+    "(SELECT count(*) AS c FROM t GROUP BY k, fk HAVING count(*) > 1)",
+    "fk_p1": "SELECT count(*) FROM t WHERE fk IS NOT NULL AND NOT EXISTS "
+    "(SELECT 1 FROM p1 WHERE p1.pid = t.fk)",
+    "fk2_p2": "SELECT count(*) FROM t WHERE fk2 IS NOT NULL AND NOT EXISTS "
+    "(SELECT 1 FROM p2 WHERE p2.pid2 = t.fk2)",
+    "fresh_5d": "SELECT count(*) FROM t WHERE ts < "
+    "(SELECT max(ts) FROM t) - INTERVAL 432000 SECOND",
+}
+
+
+def _model_rules(p1, p2):
+    return [
+        E.expect("v_pos", "v > 0"),
+        E.expect_unique("k_unique", ["k"]),
+        E.expect_foreign_key("fk_p1", "fk", p1, "pid"),
+        E.expect("k_present", "k IS NOT NULL"),
+        E.expect_fresh("fresh_5d", "ts", 5 * 24 * 3600),
+        E.expect_unique("k_fk_unique", ["k", "fk"]),
+        E.expect_foreign_key("fk2_p2", "fk2", p2, "pid2"),
+        E.expect("id_not_mult3", "id % 3 != 0"),
+    ]
+
+
+@pytest.mark.parametrize("seed,n_rows", [(1, 60), (2, 25), (3, 0), (4, 90)])
+def test_report_matches_duckdb_model_on_random_frames(spark, seed, n_rows):
+    """check_expectations against a DuckDB model over seeded random
+    frames: NULL and duplicate unique/FK values, duplicate and NULL
+    parent keys, an empty frame, an int FK column against a long parent
+    key, and a mix of two unique rules, two FK rules, a fresh rule and
+    predicates — in full and as the rule subsets a report can take
+    (no unique rule; unique rules only)."""
+    import random
+
+    import duckdb
+
+    child, parent1, parent2 = _random_frames(random.Random(seed), n_rows)
+    schema = "id int, k long, fk int, fk2 long, ts timestamp, v double"
+    df = spark.createDataFrame(child, schema)
+    p1 = spark.createDataFrame(parent1, "pid long")
+    p2 = spark.createDataFrame(parent2, "pid2 long")
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t (id INTEGER, k BIGINT, fk INTEGER, fk2 BIGINT,"
+        " ts TIMESTAMP, v DOUBLE)"
+    )
+    con.execute("CREATE TABLE p1 (pid BIGINT)")
+    con.execute("CREATE TABLE p2 (pid2 BIGINT)")
+    if child:
+        con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?)", child)
+    if parent1:
+        con.executemany("INSERT INTO p1 VALUES (?)", parent1)
+    if parent2:
+        con.executemany("INSERT INTO p2 VALUES (?)", parent2)
+    n = con.execute("SELECT count(*) FROM t").fetchone()[0]
+
+    rules = _model_rules(p1, p2)
+    for mix in (
+        rules,
+        [r for r in rules if r.kind != "unique"],
+        [r for r in rules if r.kind == "unique"],
+    ):
+        got = {
+            r.rule: (r.kind, r.n_violations, r.n_rows)
+            for r in E.check_expectations(df, mix).collect()
+        }
+        want = {
+            r.name: (r.kind, con.execute(_MODEL_SQL[r.name]).fetchone()[0], n)
+            for r in mix
+        }
+        assert got == want, (seed, [r.name for r in mix])
+    con.close()
 
 
 # ---------------------------------------------------------------------------

@@ -299,6 +299,49 @@ def test_legacy_band_key_index_reads_and_appends_compatibly(
     assert got2 == set()
 
 
+def test_legacy_band_key_index_smoke(spark, tmp_path):
+    """Default-tier smoke of the pre-r12 index format (the full read,
+    dedup and append check is
+    ``test_legacy_band_key_index_reads_and_appends_compatibly``): a
+    forged legacy index — ``band_key`` hex, no ``format`` in the
+    manifest — reads back as exactly the band longs a new-format build
+    stores, and dedups a batch against them."""
+    import json
+    import os
+
+    import airflow_postgres_etl_spark.operators.dedup as D
+
+    base = "the quick brown fox jumps over the lazy dog by the river bank today"
+    hist = spark.createDataFrame(
+        [(1, base), (2, "an unrelated note on spark engines and parquet files")],
+        ["doc_id", "text"],
+    )
+    idx = str(tmp_path / "legacy")
+    D._index_frame(hist, "text", "doc_id", 3, None, fmt=1).write.partitionBy(
+        "band_idx"
+    ).parquet(f"{idx}/data-legacy")
+    with open(os.path.join(idx, "_index_manifest.json"), "w") as fh:
+        json.dump(
+            {"version": 1, "data_dir": "data-legacy", "retired": [],
+             "n_base": 2, "n_appended": 0},
+            fh,
+        )
+
+    read = D.read_minhash_index(spark, idx)
+    assert "band_key" not in read.columns
+    cols = ["doc_id", "band_idx", *D.BAND_COLS]
+    fresh = D._index_frame(hist, "text", "doc_id", 3, None)
+    assert sorted(read.select(cols).collect()) == sorted(
+        fresh.select(cols).collect()
+    )
+
+    batch = spark.createDataFrame(
+        [(500, base + " again"), (501, "a postgres airflow pipeline with celery workers")],
+        ["doc_id", "text"],
+    )
+    assert {r.doc_id for r in dedup_against_index(batch, idx).collect()} == {501}
+
+
 def test_band_hi_lo_bijection_roundtrips_md5(spark):
     """The (hi, lo) signed-long decomposition must be an exact bijection
     with the 32-char md5 hex — equality on the longs IS equality on the
