@@ -41,7 +41,7 @@ def filter_after_high_water_mark(df: DataFrame, hwm: str | None) -> DataFrame:
     ``fileName`` derives from ``input_file_name()``, which Spark cannot
     push into the scan, so every file handed to the read is still opened.
     The batch pipeline therefore cuts its file LIST at the high-water
-    mark first (``pipeline._landed_batch``) and keeps this filter as the
+    mark first (``pipeline._landed_batches``) and keeps this filter as the
     row-level guarantee; the streaming variant replaces it with source
     checkpointing.
     """
@@ -213,7 +213,13 @@ def sentinels_to_null(df: DataFrame, columns: list[str] | None = None) -> DataFr
 def build_tracking(raw: DataFrame, *, keep_last: bool = True) -> DataFrame:
     """Raw CSV scan → ``tracking`` table (1 row per ``oid__id``).
 
-    Chain: T3 → T7 → T10 → T11(+audit) → T12 → T13.
+    Chain: T3 → T7 → T10 → T11(+audit) → T12 → T13.  With ``keep_last``
+    T13's ``distinct`` is skipped: after the keep-last dedup the frame
+    holds one row per raw ``oid__id``, so the distinct could only merge
+    rows whose keys T12 maps to NULL (``''``, ``'None'``, ``'NaN'``,
+    ``'NaT'``) and that agree on every other column.  Those rows stay
+    apart — one NULL-key row per raw sentinel key — and the plan saves
+    a shuffle.
     """
     df = raw
     if keep_last:
@@ -222,7 +228,7 @@ def build_tracking(raw: DataFrame, *, keep_last: bool = True) -> DataFrame:
     df = add_audit_columns(df)
     df = project(df, TRACKING_COLUMNS + AUDIT_COLUMNS)
     df = sentinels_to_null(df, ["oid__id", "Op"])
-    return df.distinct()
+    return df if keep_last else df.distinct()
 
 
 def build_events(

@@ -6,11 +6,11 @@ list-then-read order: the landing directory is listed on the driver
 (``csv_source.list_landed``), only the files named past the high-water
 mark are handed to one multi-file scan, and nothing is read — no Spark
 job at all — when none is new.  The new rows are scanned once and feed
-both targets, the literal parse runs once, and each target lands in one
-keyed-overwrite merge whose affected-bucket probe also counts the rows
-it merges.  The
-micro-batch accumulate/flush loop (T2) disappears — partitioned
-execution is Spark's native memory bounding.
+both targets, and each target lands in one keyed-overwrite merge, which
+materializes its batch once (the literal parse included) in the same
+pass that counts the rows it merges.  The micro-batch accumulate/flush
+loop (T2) disappears — partitioned execution is Spark's native memory
+bounding.
 """
 
 from __future__ import annotations
@@ -59,8 +59,8 @@ def _landed_batches(
     spark: SparkSession, csv_dir: str, hwm: str | None
 ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
     """``(raw, tracking, events)`` for the files in ``csv_dir`` named past
-    ``hwm``, all three persisted — or None, before any Spark job, when
-    no file is new.
+    ``hwm``, ``raw`` persisted — or None, before any Spark job, when no
+    file is new.
 
     The cut happens on the listing, so the scan opens only the new
     files; the row-level ``fileName > hwm`` filter stays on the read as
@@ -70,8 +70,9 @@ def _landed_batches(
     partition count (Spark does not coalesce a cached plan's final
     shuffle), and the literal parse over it then pays the Python
     worker's fixed per-task cost (~0.3 s) once per shuffle partition,
-    where AQE coalesces a small batch to one.  ``events`` is persisted
-    so the parse runs once for the merge's probe and its write."""
+    where AQE coalesces a small batch to one.  ``tracking`` and
+    ``events`` stay lazy: the keyed merge materializes its batch once
+    (``sink._admit_batch``), so the parse already runs once there."""
     paths = [
         p for name, p in list_landed(spark, csv_dir) if hwm is None or name > hwm
     ]
@@ -79,7 +80,7 @@ def _landed_batches(
         return None
     raw = filter_after_high_water_mark(read_tracking_csv(spark, paths), hwm)
     raw = raw.persist()
-    return raw, build_tracking(raw).persist(), build_events(raw).persist()
+    return raw, build_tracking(raw), build_events(raw)
 
 
 def _fetch_one(con, sql: str):
@@ -188,7 +189,9 @@ def incremental_load_relational(
     first, the tracking table (the HWM carrier) advances LAST, so a
     failure between the merges replays both — harmless under
     replace-by-key.  Returns rows merged per table; the relational merge
-    has no probe to count in, so the counts cost a job per table."""
+    has no probe to count in, so the counts cost a job per table, and
+    both targets are persisted here so the count and the merge share
+    one execution."""
     con = connection_factory()
     try:
         hwm = relational_high_water_mark(con, tracking_table)
@@ -197,7 +200,8 @@ def incremental_load_relational(
     batches = _landed_batches(spark, csv_dir, hwm)
     if batches is None:
         return {"tracking": 0, "events": 0}
-    _, tracking, events = batches
+    raw, tracking, events = batches
+    tracking, events = tracking.persist(), events.persist()
     try:
         counts = {"tracking": tracking.count(), "events": events.count()}
         for df, table in ((events, events_table), (tracking, tracking_table)):
@@ -210,7 +214,7 @@ def incremental_load_relational(
                 key=key,
             )
     finally:
-        for df in batches:
+        for df in (raw, tracking, events):
             df.unpersist()
     return counts
 
@@ -225,7 +229,7 @@ def incremental_load(
 ) -> dict[str, int]:
     """Run one incremental cycle: new files only → tracking + events →
     keyed-overwrite merge.  Returns rows merged per table, as counted by
-    each merge's own probe.
+    the pass in which each merge materializes its batch.
 
     Idempotent: re-running with no new files merges nothing and runs no
     Spark job; re-running after a partial failure lists and replays the
@@ -235,7 +239,7 @@ def incremental_load(
     batches = _landed_batches(spark, csv_dir, hwm)
     if batches is None:
         return {"tracking": 0, "events": 0}
-    _, tracking, events = batches
+    raw, tracking, events = batches
     try:
         # events first: the HWM is read from the tracking mirror, so it must
         # advance LAST — a failure between the two merges then replays both
@@ -248,8 +252,7 @@ def incremental_load(
             spark, tracking, tracking_target, key, stats_cols=["fileName"]
         )
     finally:
-        for df in batches:
-            df.unpersist()
+        raw.unpersist()
     return {"tracking": n_tracking, "events": n_events}
 
 

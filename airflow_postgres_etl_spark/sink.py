@@ -99,11 +99,12 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 import time
 import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -188,13 +189,16 @@ def _constraints_path(target: str) -> str:
     return os.path.join(target, "_constraints.json")
 
 
+def _fails(predicate: str):
+    """Per-row Column: ``predicate`` is FALSE or NULL — the Delta CHECK
+    semantic: a constraint must evaluate to TRUE, so a NULL result is a
+    violation, not a pass."""
+    return ~F.expr(predicate).eqNullSafe(F.lit(True))
+
+
 def _violations(df: DataFrame, predicate: str):
-    """First row (if any) where ``predicate`` is FALSE or NULL — the
-    Delta CHECK semantic: a constraint must evaluate to TRUE, so a NULL
-    result is a violation, not a pass."""
-    return (
-        df.filter(~F.expr(predicate).eqNullSafe(F.lit(True))).limit(1).collect()
-    )
+    """First row (if any) where ``predicate`` fails (:func:`_fails`)."""
+    return df.filter(_fails(predicate)).limit(1).collect()
 
 
 def add_table_constraint(
@@ -236,12 +240,20 @@ def table_constraints(target: str, store=LOCAL_STORE) -> dict[str, str]:
     return store.read_json(_constraints_path(target)) or {}
 
 
-def _enforce_constraints(batch: DataFrame, target: str, store) -> None:
+def _enforce_constraints(
+    batch: DataFrame, target: str, store, constraints: dict | None = None
+) -> None:
     """Reject the whole batch on the first violating row — BEFORE any
     file is written, so a rejected merge leaves no commit dir and no
-    version bump (test-pinned).  Cost: one scan of the (small) batch per
-    constraint; cache the batch upstream if that matters."""
-    for name, pred in table_constraints(target, store).items():
+    version bump (test-pinned).  Cost: one scan of the batch per
+    constraint checked.  ``constraints`` (default: the table's) narrows
+    the check: :func:`_admit_batch` counts every constraint's violations
+    in the pass that materializes the batch and passes only those it saw
+    violated, so a passing batch costs no job here and a failing one
+    one scan, for the example row."""
+    if constraints is None:
+        constraints = table_constraints(target, store)
+    for name, pred in constraints.items():
         bad = _violations(batch, pred)
         if bad:
             raise ConstraintViolation(
@@ -507,6 +519,34 @@ def _require_unmapped(manifest: dict | None, op: str) -> None:
 # as the commit protocol itself.
 _CURRENT_OP: list[str] = []
 
+# The local checkpoints each running @_records_op frame holds, innermost
+# frame last; per thread, so concurrent writers never release each
+# other's.  Filled by _checkpoint, emptied when the frame's op returns or
+# raises.
+_HELD = threading.local()
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, released (unpersisted) when
+    the enclosing ``@_records_op`` entry point returns or raises — its
+    commit has landed or failed by then, and nothing it returns reads
+    the checkpoint.  Outside any op the checkpoint is left to the
+    caller, as a bare ``localCheckpoint`` would be."""
+    cp = df.localCheckpoint(eager=True)
+    frames = getattr(_HELD, "frames", None)
+    if frames:
+        frames[-1].append(cp)
+    return cp
+
+
+def _release(checkpoints: list[DataFrame]) -> None:
+    # the checkpointed RDD sits under the LogicalRDD the checkpoint
+    # returns; dropping its blocks through the context skips the warning
+    # RDD.unpersist logs for every locally checkpointed RDD
+    for cp in checkpoints:
+        rdd = cp._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), False)
+
 
 def _records_op(name: str):
     import functools
@@ -515,10 +555,15 @@ def _records_op(name: str):
         @functools.wraps(fn)
         def wrapped(*a, **kw):
             _CURRENT_OP.append(name)
+            frames = _HELD.__dict__.setdefault("frames", [])
+            held: list[DataFrame] = []
+            frames.append(held)
             try:
                 return fn(*a, **kw)
             finally:
+                frames.pop()
                 _CURRENT_OP.pop()
+                _release(held)
 
         return wrapped
 
@@ -1144,16 +1189,24 @@ def _admit_batch(
     names, everything after is physical), type reconciliation against
     the table's schema — BEFORE bucketing, so an implicit key upcast
     happens before ``_bucket_expr`` hashes it (see
-    :func:`_align_batch_types`) — the ≤ num_buckets affected-bucket
-    probe and the CHECK constraints.
+    :func:`_align_batch_types`) — then ONE pass over the batch that
+    both materializes it and answers every pre-write question: an
+    eager, observed local checkpoint whose ``Observation`` returns the
+    row count, the affected buckets and each CHECK constraint's
+    violating-row count.
 
     Returns ``(bucketed, affected buckets, physical stats_cols, batch
-    row count)`` — the probe counts per bucket, so the count costs no
-    job of its own — or None for a zero-row batch: an empty batch must
-    be a true no-op (no commit dir, no manifest version bump) —
-    otherwise every empty
-    streaming micro-batch or no-new-files rerun churns the manifest and
-    leaves orphan commit dirs for vacuum to collect."""
+    row count)``, where ``bucketed`` IS the checkpoint: every later step
+    (the CoW anti-join and union, the MOR delta write, the append's key
+    check and write) reads that one copy, so the batch's upstream plan
+    runs once, and a batch that would not re-run identically (a
+    nondeterministic key) commits exactly the rows and buckets the
+    probe saw.  The checkpoint is released when the calling write op
+    returns (:func:`_checkpoint`).  None for a zero-row batch: an empty
+    batch must be a true no-op (no commit dir, no manifest version
+    bump) — otherwise every empty streaming micro-batch or no-new-files
+    rerun churns the manifest and leaves orphan commit dirs for vacuum
+    to collect."""
     batch = _translate_batch(batch, manifest)
     if stats_cols:
         cmap, _ = _mapping_of(manifest)
@@ -1163,25 +1216,43 @@ def _admit_batch(
         batch = _align_batch_types(
             batch, _strip_dropped_fields(schema, manifest), key
         )
-    bucketed = batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
-    # Measured NON-optimization (r11, kept as a record — same class as
-    # the _write_bucketed coalesce finding): eagerly localCheckpoint-ing
-    # the merge batch here (so the affected-bucket probe and the merge
-    # write share one materialization instead of re-executing the batch
-    # upstream) read NEUTRAL in an interleaved same-session A/B over 4
-    # lifecycle queries (best-of-3 on/off: 9.7/10.0, 6.8/7.2, 3.50/3.48,
-    # 9.1/8.3) — per-commit cost at this batch size is Catalyst planning
-    # + fixed job overhead, not recompute — and an unconditional
-    # checkpoint would double-spill unbounded backfill batches at scale.
-    # CDC/merge SOURCES (small by contract) are checkpointed instead at
-    # their call sites (apply_changes/_scd2, merge_into).
-    # ≤ num_buckets tiny rows — a scalar-class driver action, not data.
-    per_bucket = bucketed.groupBy(BUCKET_COL).count().collect()
-    if not per_bucket:
+    # Measured (4 cores, etlbench cdc_trickle, 11 interleaved seed
+    # pairs): this checkpoint replaced a groupBy(bucket).count() probe
+    # that ran the batch's plan, and a write that ran it again.  The op
+    # went from 29 to 22 Spark jobs (the events merge 10 → 7; tracking
+    # 9 → 5, with build_tracking's final distinct gone) and its median
+    # CPU-s from 28.3 to 26.7, inside a one-op run's JIT warm-up noise.
+    # A 200k-row batch merged into a 2M-row table read the same CPU-s
+    # either way.  localCheckpoint spills MEMORY_AND_DISK, so an
+    # unbounded backfill batch costs one disk round-trip, never an OOM.
+    cons = table_constraints(target, store)
+    obs = Observation()
+    bucketed = _checkpoint(
+        batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets)).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(BUCKET_COL).alias("buckets"),
+            *[
+                F.count_if(_fails(pred)).alias(f"bad{i}")
+                for i, pred in enumerate(cons.values())
+            ],
+        )
+    )
+    seen = obs.get
+    if not seen["n"]:
         return None
-    _enforce_constraints(bucketed, target, store)
-    affected = [str(b) for b in sorted(r[0] for r in per_bucket)]
-    return bucketed, affected, stats_cols, sum(r[1] for r in per_bucket)
+    _enforce_constraints(
+        bucketed,
+        target,
+        store,
+        {
+            name: pred
+            for i, (name, pred) in enumerate(cons.items())
+            if seen[f"bad{i}"]
+        },
+    )
+    affected = [str(b) for b in sorted(seen["buckets"])]
+    return bucketed, affected, stats_cols, seen["n"]
 
 
 def _commit_files(
@@ -1419,8 +1490,9 @@ def keyed_overwrite_parquet(
     """Bucket-pruned replace-by-key merge, committed via manifest swap.
     Returns the number of batch rows the merge admitted: 0 when the
     batch is empty or the ``txn`` epoch was already applied (nothing is
-    written then).  The count comes from the affected-bucket probe, so
-    it costs no Spark job of its own.
+    written then).  The count is observed by the pass that materializes
+    the batch (:func:`_admit_batch`), so it costs no Spark job of its
+    own.
 
     ``txn_app``/``txn_seq`` (r9): the same idempotent-writer watermark
     as ``keyed_append`` (Delta's ``txn`` action), recorded INSIDE the
@@ -1483,9 +1555,11 @@ def keyed_overwrite_parquet(
         # hash anti-join over k/N of the table — same cost class as the
         # insert.  Data files don't store the bucket column (partitionBy
         # consumed it); re-derive it — xxhash64 is deterministic.
-        kept = current.join(
-            bucketed.select(key).distinct(), key, "left_anti"
-        ).withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
+        # No .distinct() on the build side: duplicate batch keys cannot
+        # change an anti-join's result.
+        kept = current.join(bucketed.select(key), key, "left_anti").withColumn(
+            BUCKET_COL, _bucket_expr(key, num_buckets)
+        )
         merged = kept.unionByName(bucketed, allowMissingColumns=True)
     # merged's schema IS the union live schema: the batch must carry
     # every existing column (missing ones raise in _align_batch_types),
@@ -2008,7 +2082,7 @@ def _restate_keys(
             "__any = 1"
         )
     if materialize:
-        marked = marked.localCheckpoint(eager=True)
+        marked = _checkpoint(marked)
     counts = None
     if count:
         r = marked.agg(
@@ -3186,9 +3260,9 @@ def lookup_keys(
     manifest, key, num_buckets = _open_table(target, store)
 
     keys_df = spark.createDataFrame([(k,) for k in keys], [key])
-    # driver-side scalar collect of ≤ len(keys) ints — same class as
-    # the merge's affected-bucket probe; the hash MUST be computed by
-    # Spark (xxhash64's exact seed/variant), never reimplemented here.
+    # driver-side scalar collect of ≤ len(keys) ints; the hash MUST be
+    # computed by Spark (xxhash64's exact seed/variant), never
+    # reimplemented here.
     # No .distinct(): keys is a driver-side list, so the probe would pay
     # a full shuffle + an extra AQE job just to dedupe what this set
     # comprehension dedupes for free (guide §2.4 — r11).
@@ -3731,10 +3805,12 @@ def merge_into(
     # upstream from scratch (up to 5 executions per merge).
     # localCheckpoint spills MEMORY_AND_DISK, so a large source
     # degrades to one disk round-trip, never an OOM.
-    src = source.select(
-        F.col(key).alias("__sk"),
-        *[F.col(c).alias(f"s_{c}") for c in source.columns],
-    ).localCheckpoint(eager=True)
+    src = _checkpoint(
+        source.select(
+            F.col(key).alias("__sk"),
+            *[F.col(c).alias(f"s_{c}") for c in source.columns],
+        )
+    )
     # ONE probe answers both pre-flight questions (r12, guide §1.2):
     # the max per-key multiplicity (Delta's at-most-one-match rule) and
     # the ≤ num_buckets affected-bucket set — previously two separate
@@ -3796,7 +3872,7 @@ def merge_into(
             # checkpointed for the same reason as the matched scope: the
             # count below and the delta write otherwise each run the
             # anti-join's bucket-pruned table read.  Bounded by the source.
-            ins = ins.localCheckpoint(eager=True)
+            ins = _checkpoint(ins)
         inserted = ins.count()
         if inserted:
             # insert-ALL semantics (Delta's whenNotMatchedInsertAll):
@@ -3971,12 +4047,14 @@ def apply_changes(
     # (the net window included) from scratch, 3 full executions per
     # apply.  CDC batches are small by construction (module contract),
     # so the checkpoint is one batch-sized job.
-    src = net.select(
-        F.col(key).alias("__ck"),
-        F.col(seq_col).alias("__cseq"),
-        (F.col(op_col) == delete_op).alias("__cdel"),
-        F.struct(*payload).alias("__crow"),
-    ).localCheckpoint(eager=True)
+    src = _checkpoint(
+        net.select(
+            F.col(key).alias("__ck"),
+            F.col(seq_col).alias("__cseq"),
+            (F.col(op_col) == delete_op).alias("__cdel"),
+            F.struct(*payload).alias("__crow"),
+        )
+    )
 
     if manifest is not None:
         wanted = {
@@ -4053,10 +4131,10 @@ def apply_changes(
     ) & (
         F.col("__tomb_seq").isNull() | (F.col("__cseq") > F.col("__tomb_seq"))
     )
-    j = (
-        j.withColumn("__up", fresh & ~F.col("__cdel"))
-        .withColumn("__del", fresh & F.col("__cdel"))
-        .localCheckpoint(eager=True)
+    j = _checkpoint(
+        j.withColumn("__up", fresh & ~F.col("__cdel")).withColumn(
+            "__del", fresh & F.col("__cdel")
+        )
     )
     counts = j.agg(
         F.sum(F.col("__up").cast("long")).alias("u"),
@@ -4182,10 +4260,8 @@ def apply_changes_scd2(
     # execute this frame — without the checkpoint each re-ran the
     # distinct (a full shuffle of the batch) plus the feed's upstream,
     # 4 executions per apply.  CDC batches are small by construction.
-    ch = (
-        changes.select(key, seq_col, op_col, *track_cols)
-        .distinct()
-        .localCheckpoint(eager=True)
+    ch = _checkpoint(
+        changes.select(key, seq_col, op_col, *track_cols).distinct()
     )
     if (
         ch.groupBy(key, seq_col).count().filter("count > 1").limit(1).collect()
@@ -4214,9 +4290,7 @@ def apply_changes_scd2(
     stored = _scope_rows(spark, target, manifest, key, wanted)
     batch_keys = ch.select(key).distinct()
     if stored is not None:
-        stored = stored.join(batch_keys, key, "inner").localCheckpoint(
-            eager=True
-        )
+        stored = _checkpoint(stored.join(batch_keys, key, "inner"))
         open_rows = stored.filter(F.col("is_current"))
         frontier = stored.groupBy(key).agg(
             F.max(
@@ -4266,7 +4340,7 @@ def apply_changes_scd2(
         )
     else:
         feed = feed.withColumn("__keep", F.lit(True))
-    feed = feed.localCheckpoint(eager=True)
+    feed = _checkpoint(feed)
     # ignored counts genuinely stale BATCH rows only (the synthetic
     # open-row change always survives: it sits exactly at its frontier)
     ignored = feed.filter((~F.col("__keep")) & (F.col("__prio") == 1)).count()
@@ -4294,7 +4368,7 @@ def apply_changes_scd2(
         ).unionByName(tail)
     else:
         new_hist = tail
-    new_hist = new_hist.localCheckpoint(eager=True)
+    new_hist = _checkpoint(new_hist)
 
     # skip keys whose row set is unchanged (redelivery / all-stale):
     # compare multisets per key via exceptAll both ways
@@ -4302,17 +4376,14 @@ def apply_changes_scd2(
         stored_rows = stored.select(
             key, *track_cols, "valid_from", "valid_to", "is_current"
         )
-        changed_keys = (
+        changed_keys = _checkpoint(
             new_hist.exceptAll(stored_rows)
             .select(key)
             .unionByName(stored_rows.exceptAll(new_hist).select(key))
             .distinct()
-            .localCheckpoint(eager=True)
         )
     else:
-        changed_keys = new_hist.select(key).distinct().localCheckpoint(
-            eager=True
-        )
+        changed_keys = _checkpoint(new_hist.select(key).distinct())
     n_keys = changed_keys.count()
     if n_keys == 0:
         return {"keys_touched": 0, "rows_written": 0, "ignored_stale": ignored}
@@ -4602,13 +4673,14 @@ def keyed_append(
         # batch is the small side by construction, and a semi-join the
         # other way around would shuffle (or broadcast) the table's key
         # column instead — measured 9.0 s vs 1.3 s on a 9.6M-row table
-        # for a 1,500-key batch
+        # for a 1,500-key batch.  No .distinct(): duplicate batch keys
+        # cannot change a semi-join's result.
         hit = (
             _read_files(
                 spark, target, probe_files, schema=_manifest_schema(manifest)
             )
             .select(key)
-            .join(F.broadcast(bucketed.select(key).distinct()), key, "left_semi")
+            .join(F.broadcast(bucketed.select(key)), key, "left_semi")
             .limit(1)
             .collect()
         )

@@ -7,7 +7,9 @@ a tiny table and pin what the kernel owes all of them:
   zero-retention vacuum then leaves no unreferenced data file;
 - each commit keeps the manifest invariants (``check_manifest``);
 - each path's Spark-job budget for a 2-row change stays at its pinned
-  count.
+  count;
+- each path releases every local checkpoint it took, whether its
+  commit lands or fails (no persisted RDD outlives the op).
 """
 
 from __future__ import annotations
@@ -155,9 +157,9 @@ OPS = {
 #: local mode, 8 shuffle partitions, AQE on).  A change here is a
 #: change to the path's cost: re-measure and say why.
 JOB_BUDGET = {
-    "merge": 7,
-    "merge_mor": 4,
-    "append": 8,
+    "merge": 6,
+    "merge_mor": 3,
+    "append": 6,
     "delete_where": 6,
     "update_where": 5,
     "compact": 3,
@@ -169,7 +171,7 @@ JOB_BUDGET = {
     "zorder": 5,
     "merge_into": 14,
     "merge_into_by_source": 13,
-    "apply_changes": 17,
+    "apply_changes": 16,
 }
 
 
@@ -202,9 +204,11 @@ def test_crash_before_commit_keeps_snapshot_then_retry_lands(
         raise OSError("simulated crash before manifest swap")
 
     monkeypatch.setattr(sink, "_commit_manifest", crash_once)
+    held = _persisted_rdds(spark)
     with pytest.raises(OSError, match="simulated crash"):
         run(spark, target)
     assert sink._commit_manifest is real_commit, "op committed nothing"
+    assert _persisted_rdds(spark) <= held, "failed op left a checkpoint"
     assert sink.table_version(target) == before["version"]
     assert _snapshot(spark, target) == rows_before
 
@@ -267,6 +271,12 @@ def test_apply_changes_crash_before_delete_memory_commit(
     assert "k2" not in {r[0] for r in _snapshot(spark, crashed)}
 
 
+def _persisted_rdds(spark) -> set[int]:
+    """Ids of the RDDs the context holds persisted (local checkpoints
+    included)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _job_ids_of(spark, fn) -> list[int]:
     sc = spark.sparkContext
     group = f"jobpin-{uuid.uuid4().hex[:8]}"
@@ -289,11 +299,13 @@ def test_write_path_job_budget_and_manifest_invariants(spark, tmp_path, op):
     target = str(tmp_path / "t")
     setup(spark, target)
     before = sink._load_manifest(target)
+    held = _persisted_rdds(spark)
     jobs = _jobs_of(spark, lambda: run(spark, target))
     after = sink._load_manifest(target)
     assert after["version"] == before["version"] + 1
     check_manifest(after, before)
     assert jobs == JOB_BUDGET[op], f"{op}: {jobs} jobs"
+    assert _persisted_rdds(spark) <= held, f"{op} left a checkpoint"
 
 
 def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
@@ -337,7 +349,7 @@ def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
             target,
         ),
     )
-    assert len(jobs) == 7
+    assert len(jobs) == 6
 
     after = sink._load_manifest(target)
     check_manifest(after, before)

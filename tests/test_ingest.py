@@ -218,6 +218,23 @@ def test_build_tracking_end_to_end(spark, raw):
     assert dict(out.dtypes)["createdAt"] == "timestamp"
 
 
+def test_build_tracking_keeps_one_row_per_raw_sentinel_key(spark, raw):
+    """After the keep-last dedup the frame holds one row per raw
+    ``oid__id``, so ``build_tracking`` runs no final ``distinct``: rows
+    whose keys T12 maps to NULL (``'None'``, ``'NaN'``, ``'NaT'``) stay
+    one row per raw key even when every other column agrees.  Without
+    the dedup (``keep_last=False``) T13's ``distinct`` still merges
+    them."""
+    row = raw.orderBy("fileName", "oid__id").first().asDict()
+    same = spark.createDataFrame(
+        [{**row, "oid__id": k} for k in ("None", "NaN", "NaT")], raw.schema
+    )
+    kept = build_tracking(same).collect()
+    assert [r["oid__id"] for r in kept] == [None, None, None]
+    assert len({tuple(r) for r in kept}) == 1
+    assert build_tracking(same, keep_last=False).count() == 1
+
+
 def test_build_events_end_to_end(spark, raw):
     out = build_events(raw)
     assert [f.name for f in out.schema.fields] == [

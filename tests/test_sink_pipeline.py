@@ -94,6 +94,40 @@ def test_keyed_overwrite_returns_the_rows_it_merged(spark, tmp_path):
     assert keyed_overwrite_parquet(spark, batch, target, **txn) == 0
 
 
+def test_batch_that_does_not_rerun_identically_lands_what_was_admitted(
+    spark, tmp_path
+):
+    """A batch whose key is nondeterministic (a Python UDF marked so)
+    draws new keys on every execution of its plan.  The merge must land
+    exactly the rows it admitted and counted: it materializes the batch
+    once, so the affected-bucket set and the written rows come from the
+    same execution.  A probe and a write that each ran the plan sent
+    the written rows to buckets the probe never saw, and the commit
+    dropped them: the merge returned 3 and the table gained fewer."""
+    import random
+
+    from pyspark.sql.types import StringType
+
+    target = str(tmp_path / "t")
+    keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame([(f"k{i}", i) for i in range(50)], ["oid__id", "v"]),
+        target,
+        num_buckets=64,
+    )
+    fresh_key = F.udf(
+        lambda i: f"n{i}-{random.random()}", StringType()
+    ).asNondeterministic()
+    batch = spark.range(3).select(
+        fresh_key("id").alias("oid__id"), F.col("id").cast("long").alias("v")
+    )
+    assert keyed_overwrite_parquet(spark, batch, target) == 3
+    got = read_keyed_table(spark, target)
+    assert got.count() == 53
+    new = sorted(r.v for r in got.filter(F.col("oid__id").startswith("n")).collect())
+    assert new == [0, 1, 2]
+
+
 def _bucket_file_state(target):
     """{bucket: {relpath: (size, mtime_ns, md5)}} of the LIVE (manifest-
     referenced) files of the target."""

@@ -9,8 +9,9 @@ comparison.
 
 It then lands one more file and runs one more cycle — the trickle case,
 where a cycle should cost the new file, not the landing directory — and
-reports that cycle's Spark jobs, the input bytes its stages read (CSV
-and the merged buckets' parquet), the new file's and the directory's
+reports that cycle's Spark jobs, the input bytes its stages read (CSV,
+the merged buckets' parquet, and the persisted and checkpointed blocks
+the cycle reads back), the new file's and the directory's
 size, and the CPU seconds of the process tree (driver, JVM and Python
 workers).
 
@@ -36,7 +37,8 @@ from tests.fixtures.gen_raw import generate  # noqa: E402
 
 
 def _input_bytes(spark, job_ids) -> int:
-    """Bytes the stages of ``job_ids`` read from storage (status store)."""
+    """Input bytes of the stages of ``job_ids`` (status store): files read
+    from storage plus persisted and checkpointed blocks read back."""
     store = spark.sparkContext._jsc.sc().statusStore()
     stages = set()
     for jid in job_ids:
