@@ -92,15 +92,10 @@ def add_bloom_index(
     # blooms are keyed by PHYSICAL file+column; the caller names a
     # logical column — translate once (read_keyed_table's where_eq does
     # the same translation when consulting the index)
-    from .sink import _mapping_of, _phys_name
+    from .sink import _live_files, _mapping_of, _phys_name
 
     col = _phys_name(col, _mapping_of(manifest)[0])
-    rels = [f for files in manifest["buckets"].values() for f in files]
-    rels += [
-        e["path"]
-        for entries in manifest.get("deltas", {}).values()
-        for e in entries
-    ]
+    rels = _live_files(manifest)
     if not rels:
         return 0
     rows = (

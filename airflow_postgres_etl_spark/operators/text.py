@@ -441,84 +441,88 @@ def add_documents(
         .agg(F.count("*").cast("long").alias("tf"))
         .localCheckpoint(eager=True)  # the term collect + the merge write
     )
-    # doc length == sum of its term frequencies, so derive it from the
-    # CHECKPOINTED postings instead of re-tokenizing the batch corpus —
-    # every downstream consumer (dup probe, doclen merge, batch stats)
-    # then reuses the one materialized tokenize (measured: the doclen
-    # leg re-ran the regex explode+agg over the whole batch before this)
-    new_dl = new_postings.groupBy(id_col).agg(
-        F.sum("tf").cast("long").alias("dl")
-    )
+    try:
+        # doc length == sum of its term frequencies, so derive it from the
+        # CHECKPOINTED postings instead of re-tokenizing the batch corpus —
+        # every downstream consumer (dup probe, doclen merge, batch stats)
+        # then reuses the one materialized tokenize (measured: the doclen
+        # leg re-ran the regex explode+agg over the whole batch before this)
+        new_dl = new_postings.groupBy(id_col).agg(
+            F.sum("tf").cast("long").alias("dl")
+        )
 
-    meta = store.read_json(_index_meta_path(path))
-    if meta is not None:
-        # refuse re-adds: a doc_id already in doclen would double its
-        # term postings in the per-term union below.  Trickle batches
-        # bucket-prune via lookup_keys; batches past the threshold probe
-        # with ONE broadcast semi-join scan instead — lookup_keys with
-        # thousands of literal keys pays plan-compile, not IO (measured
-        # 2.3 s for 2,500 ids at sf0.1 vs 0.6 s for the semi-join)
-        # bounded single-job probe (r11): limit(cap+1).collect() both
-        # counts and fetches — total rows ≤ cap means we got them ALL,
-        # one more means take the semi-join branch.  Replaces the
-        # checkpoint + count + collect triple (3 Spark jobs → 1); the
-        # frames derive from the already-checkpointed postings, so the
-        # semi-join branch recomputes only a cheap aggregate.
-        new_ids = new_dl.select(id_col)
-        id_probe = new_ids.limit(513).collect()
-        if len(id_probe) <= 512:
-            existing = sink.lookup_keys(
-                spark, doclen_path, [r[0] for r in id_probe], store
-            )
+        meta = store.read_json(_index_meta_path(path))
+        if meta is not None:
+            # refuse re-adds: a doc_id already in doclen would double its
+            # term postings in the per-term union below.  Trickle batches
+            # bucket-prune via lookup_keys; batches past the threshold probe
+            # with ONE broadcast semi-join scan instead — lookup_keys with
+            # thousands of literal keys pays plan-compile, not IO (measured
+            # 2.3 s for 2,500 ids at sf0.1 vs 0.6 s for the semi-join)
+            # bounded single-job probe (r11): limit(cap+1).collect() both
+            # counts and fetches — total rows ≤ cap means we got them ALL,
+            # one more means take the semi-join branch.  Replaces the
+            # checkpoint + count + collect triple (3 Spark jobs → 1); the
+            # frames derive from the already-checkpointed postings, so the
+            # semi-join branch recomputes only a cheap aggregate.
+            new_ids = new_dl.select(id_col)
+            id_probe = new_ids.limit(513).collect()
+            if len(id_probe) <= 512:
+                existing = sink.lookup_keys(
+                    spark, doclen_path, [r[0] for r in id_probe], store
+                )
+            else:
+                existing = sink.read_keyed_table(spark, doclen_path, store).join(
+                    F.broadcast(new_ids), id_col, "left_semi"
+                )
+            dup = existing.limit(1).collect()
+            if dup:
+                raise ValueError(
+                    f"doc_id {dup[0][0]!r} is already indexed; deletions and "
+                    "re-adds need a rebuild"
+                )
+            new_terms = new_postings.select("term").distinct()
+            term_probe = new_terms.limit(2049).collect()
+            if len(term_probe) <= 2048:
+                # trickle batch: bucket-pruned point lookup — reads only the
+                # batch terms' postings buckets
+                terms = [r[0] for r in term_probe]
+                stored = sink.lookup_keys(
+                    spark, postings_path, terms, store
+                ).select("term", id_col, "tf")
+            else:
+                # vocabulary-scale batch (its terms span every bucket anyway):
+                # ONE semi-join scan with the batch vocab broadcast — never a
+                # vocab-sized driver collect nor a thousands-of-literal-keys
+                # lookup plan (the dup-check above measured that cost class
+                # directly; the test corpus' 31-term vocab never trips this
+                # branch, so it is exercised by unit test, not the bench)
+                stored = (
+                    sink.read_keyed_table(spark, postings_path, store)
+                    .join(F.broadcast(new_terms), "term", "left_semi")
+                    .select("term", id_col, "tf")
+                )
+            merged = stored.unionByName(new_postings)
         else:
-            existing = sink.read_keyed_table(spark, doclen_path, store).join(
-                F.broadcast(new_ids), id_col, "left_semi"
-            )
-        dup = existing.limit(1).collect()
-        if dup:
-            raise ValueError(
-                f"doc_id {dup[0][0]!r} is already indexed; deletions and "
-                "re-adds need a rebuild"
-            )
-        new_terms = new_postings.select("term").distinct()
-        term_probe = new_terms.limit(2049).collect()
-        if len(term_probe) <= 2048:
-            # trickle batch: bucket-pruned point lookup — reads only the
-            # batch terms' postings buckets
-            terms = [r[0] for r in term_probe]
-            stored = sink.lookup_keys(
-                spark, postings_path, terms, store
-            ).select("term", id_col, "tf")
-        else:
-            # vocabulary-scale batch (its terms span every bucket anyway):
-            # ONE semi-join scan with the batch vocab broadcast — never a
-            # vocab-sized driver collect nor a thousands-of-literal-keys
-            # lookup plan (the dup-check above measured that cost class
-            # directly; the test corpus' 31-term vocab never trips this
-            # branch, so it is exercised by unit test, not the bench)
-            stored = (
-                sink.read_keyed_table(spark, postings_path, store)
-                .join(F.broadcast(new_terms), "term", "left_semi")
-                .select("term", id_col, "tf")
-            )
-        merged = stored.unionByName(new_postings)
-    else:
-        meta = {"T": 0, "D": 0}
-        merged = new_postings
-    sink.keyed_overwrite_parquet(
-        spark, merged, postings_path, key="term", num_buckets=num_buckets,
-        store=store,
-    )
-    sink.keyed_overwrite_parquet(
-        spark, new_dl, doclen_path, key=id_col, num_buckets=num_buckets,
-        store=store,
-    )
-    batch_stats = new_dl.agg(
-        F.sum("dl").alias("t"), F.count("*").alias("d")
-    ).collect()[0]
-    meta["T"] = int(meta["T"]) + int(batch_stats.t or 0)
-    meta["D"] = int(meta["D"]) + int(batch_stats.d or 0)
-    store.write_json(_index_meta_path(path), meta)
+            meta = {"T": 0, "D": 0}
+            merged = new_postings
+        sink.keyed_overwrite_parquet(
+            spark, merged, postings_path, key="term", num_buckets=num_buckets,
+            store=store,
+        )
+        sink.keyed_overwrite_parquet(
+            spark, new_dl, doclen_path, key=id_col, num_buckets=num_buckets,
+            store=store,
+        )
+        batch_stats = new_dl.agg(
+            F.sum("dl").alias("t"), F.count("*").alias("d")
+        ).collect()[0]
+        meta["T"] = int(meta["T"]) + int(batch_stats.t or 0)
+        meta["D"] = int(meta["D"]) + int(batch_stats.d or 0)
+        store.write_json(_index_meta_path(path), meta)
+    finally:
+        # nothing this call returns reads the checkpoint
+        sink._release([new_postings])
 
 
 def bm25_from_index(

@@ -83,6 +83,18 @@ Two implementations:
   one table, ``_POLICIES``: their setters commit through
   :func:`_policy_commit`, and the manifest carry, :func:`rename_column`
   and :func:`drop_column` (via :func:`_mapping_commit`) loop over it.
+
+  The commits that move no data but re-point a whole snapshot —
+  :func:`restore_keyed_table`, :func:`clone_keyed_table`,
+  :func:`wap_publish` and :func:`adopt_foreign_files` — share one
+  shape: their checks, then :func:`_repoint` (the snapshot's files
+  under new references, with the entries that describe those files:
+  stats, blooms, row counts, schema, layout and column mapping), a
+  ``retired`` list, and one :func:`_commit_manifest`, whose carry takes
+  the table state (writer txns, ambient policies) from the tip.
+  Restore and publish retire through :func:`_retire`, the same rule
+  the kernel uses; a clone has nothing to retire, and adopt keeps the
+  tip's list (foreign originals are not the table's to retire).
 - **JDBC (Postgres) stage-then-merge**: stage the batch with
   ``df.write.jdbc`` (parallel INSERT at COPY-like speed), then one
   driver-side transaction ``DELETE target USING stage; INSERT SELECT`` —
@@ -677,6 +689,62 @@ _POLICIES = {
 }
 
 
+def _live_files(manifest: dict) -> list[str]:
+    """Every file a snapshot reads: base files, then MOR delta files."""
+    return [
+        f for fs in manifest.get("buckets", {}).values() for f in fs
+    ] + _delta_files_of(manifest)
+
+
+def _retire(target: str, tip: dict, live, store) -> list[dict]:
+    """The ``retired`` list of a commit over ``tip`` whose snapshot
+    reads ``live``: the tip's retirees that still exist (vacuum has not
+    collected them; probed through the store) and are not live again,
+    then each tip file that stops being live, stamped now.  The stamp is
+    what makes a retention window possible at all — a file's mtime says
+    when it was WRITTEN, not when it left the snapshot.  It is the
+    writer's clock: skew between writers on shared storage shortens the
+    effective window, so size retention with headroom for it."""
+    live = {os.path.normpath(f) for f in live}
+    now = time.time()
+    return [
+        e
+        for e in tip.get("retired", [])
+        if os.path.normpath(e["path"]) not in live
+        and store.exists(os.path.join(target, e["path"]))
+    ] + [
+        {"path": f, "ts": now}
+        for f in _live_files(tip)
+        if os.path.normpath(f) not in live
+    ]
+
+
+def _repoint(snap: dict, ref) -> dict:
+    """``snap``'s files under the references ``ref(path)`` maps them to
+    — base and delta paths and the keys of the per-file ``stats``,
+    ``blooms`` and ``rows`` — with the entries that describe those
+    files: the recorded schema, the bucket layout and the column
+    mapping (pinned even when empty, so the commit carry never lays
+    the tip's names over them).  The table state (``txns`` and the
+    :data:`_POLICIES`) is left out for :func:`_commit_manifest` to take
+    from the tip.  The caller adds ``version`` and ``retired``."""
+    out = {
+        "buckets": {b: [ref(f) for f in fs] for b, fs in snap["buckets"].items()},
+        "deltas": {
+            b: [{**e, "path": ref(e["path"])} for e in es]
+            for b, es in snap.get("deltas", {}).items()
+        },
+        "column_mapping": snap.get("column_mapping", {}),
+        "dropped_columns": snap.get("dropped_columns", []),
+    }
+    for k in ("stats", "blooms", "rows"):
+        out[k] = {ref(f): v for f, v in (snap.get(k) or {}).items()}
+    for k in ("schema", "num_buckets"):
+        if snap.get(k):
+            out[k] = snap[k]
+    return out
+
+
 def _commit_manifest(
     target: str, manifest: dict, expected_version: int | None, store=LOCAL_STORE
 ) -> None:
@@ -702,17 +770,11 @@ def _commit_manifest(
     spec = store.read_json(_spec_path(target))
     if spec is not None:
         manifest.setdefault("num_buckets", spec["num_buckets"])
-    # carry writer-transaction watermarks (Delta's `txn` action) across
-    # commits that don't touch them: an idempotent writer's "batch N
-    # already applied" fact must survive unrelated merges, compactions,
-    # optimizes and restores.  Writers that SET one (keyed_append with
-    # txn_app=) pass the merged dict explicitly; clone resets it to {}
-    # explicitly (a clone is a new table to every streaming writer).
-    #
-    # The ambient policies (_POLICIES) ride the same carry: an armed
-    # policy survives every ordinary commit, compaction and restore;
-    # rename_column rewrites it explicitly, its setter sets/clears it
-    # explicitly (None clears — key present beats carry).
+    # the table state a commit leaves alone rides over from the tip: the
+    # writer-transaction watermarks (Delta's `txn` action — "batch N
+    # already applied" must survive every unrelated commit), the ambient
+    # policies (_POLICIES) and the column mapping.  A key the commit
+    # sets wins (a setter's None clears its policy).
     carry = [k for k in ("txns", *_POLICIES) if k not in manifest]
     carry_map = (
         "column_mapping" not in manifest and "dropped_columns" not in manifest
@@ -723,24 +785,13 @@ def _commit_manifest(
             for k in carry:
                 if cur.get(k):
                     manifest[k] = cur[k]
-            # carry the column mapping (rename/drop metadata) the same
-            # way as txns: every ordinary commit inherits the tip's
-            # mapping unchanged.  Callers that SET or must pin it write
-            # the keys explicitly — rename/drop/purge write the new
-            # state; restore pins the restored snapshot's (possibly
-            # empty) mapping so a pre-rename snapshot restores its old
-            # names instead of inheriting the tip's; clone copies the
-            # source's.
             if carry_map:
                 if cur.get("column_mapping"):
                     manifest["column_mapping"] = cur["column_mapping"]
                 if cur.get("dropped_columns"):
                     manifest["dropped_columns"] = cur["dropped_columns"]
-    # commit wall-clock — the TIMESTAMP AS OF index (resolve_as_of).
-    # Unconditionally overwritten: restore/clone re-commit an OLD
-    # snapshot dict forward, and their committed_at must say when the
-    # re-point happened, not when the resurrected data was first written.
-    # Same rule for the operation stamp (outermost @_records_op wins).
+    # commit wall-clock — the TIMESTAMP AS OF index (resolve_as_of) —
+    # and the operation stamp (outermost @_records_op wins)
     manifest["committed_at"] = time.time()
     manifest["operation"] = _CURRENT_OP[0] if _CURRENT_OP else "commit"
     # per-file row counts — the metadata-only COUNT(*) index
@@ -749,8 +800,7 @@ def _commit_manifest(
     # local-path leg as _file_stats, same caveat documented there).  A
     # file whose footer can't be read simply gets no entry; table_stats
     # reports row_count=None rather than guessing.
-    live = {f for files in manifest.get("buckets", {}).values() for f in files}
-    live.update(_delta_files_of(manifest))
+    live = set(_live_files(manifest))
     rows = {f: n for f, n in (manifest.get("rows") or {}).items() if f in live}
     missing = sorted(live - set(rows))
     rows.update(_fill_row_counts(target, missing, store))
@@ -1166,9 +1216,7 @@ def _table_schema(spark: SparkSession, target: str, manifest: dict):
     union of the live base and delta files; None when there are none."""
     schema = _manifest_schema(manifest)
     if schema is None:
-        live = [
-            f for fs in manifest["buckets"].values() for f in fs
-        ] + _delta_files_of(manifest)
+        live = _live_files(manifest)
         if live:
             schema = _read_files(spark, target, live).schema
     return schema
@@ -1322,7 +1370,6 @@ def _commit_files(
         version = cur.get("version", 0) + 1
         new_buckets = dict(cur["buckets"])
         deltas = {b: list(es) for b, es in cur.get("deltas", {}).items()}
-        superseded: list[str] = []
         if edit == "delta":
             for b, files in written.items():
                 deltas.setdefault(b, []).extend(
@@ -1332,35 +1379,16 @@ def _commit_files(
             for b, files in written.items():
                 new_buckets[b] = new_buckets.get(b, []) + files
         elif buckets is None:
-            superseded = [
-                f for fs in cur["buckets"].values() for f in fs
-            ] + _delta_files_of(cur)
             new_buckets, deltas = dict(written), {}
         else:
             for b in buckets:
-                superseded += cur["buckets"].get(b, [])
-                superseded += [e["path"] for e in deltas.pop(b, [])]
+                deltas.pop(b, None)
                 if b in written:
                     new_buckets[b] = written[b]
                 else:
                     new_buckets.pop(b, None)
-        # carry forward retirees whose files still exist (vacuum hasn't
-        # collected them yet; probed through the store so a non-local
-        # deployment prunes correctly); stamp the files this commit
-        # supersedes.  The timestamp is what makes a retention window
-        # possible at all — a file's mtime says when it was WRITTEN, not
-        # when it stopped being part of the snapshot.  It is the WRITER's
-        # clock: with multiple writers on shared storage, skew between
-        # writer clocks can shorten the effective retention window — size
-        # retention_s with clock-skew headroom (NTP ≪ the 1 h default).
-        now = time.time()
-        retired = [
-            e
-            for e in cur.get("retired", [])
-            if store.exists(os.path.join(target, e["path"]))
-        ] + [{"path": f, "ts": now} for f in superseded]
-        live = {f for fs in new_buckets.values() for f in fs}
-        live.update(e["path"] for es in deltas.values() for e in es)
+        out = {"version": version, "buckets": new_buckets, "deltas": deltas}
+        live = set(_live_files(out))
         stats = {f: s for f, s in cur.get("stats", {}).items() if f in live}
         tracked = set(stats_cols or ())
         if carry_stats_cols:
@@ -1371,15 +1399,12 @@ def _commit_files(
                     target, new_files, sorted(tracked), spark=spark, store=store
                 )
             )
-        out = {
-            "version": version,
-            "buckets": new_buckets,
-            "deltas": deltas,
-            "retired": retired,
-            "stats": stats,
-            "blooms": _carry_blooms(cur, live),
+        out.update(
+            retired=_retire(target, cur, live, store),
+            stats=stats,
+            blooms=_carry_blooms(cur, live),
             **(extra or {}),
-        }
+        )
         schema = (
             _schema_entry(frame.schema)
             if full_schema
@@ -1576,14 +1601,35 @@ def keyed_overwrite_parquet(
     return n_rows
 
 
-def _vacuum_candidates(
-    target, live, retired_ts, retention_s, now, store, private_subtree
-):
-    """Yield full paths of DATA files vacuum would delete: unreferenced
-    parquet past retention — retirees aged by their manifest ``retired``
-    stamp, crash orphans by mtime (see :func:`vacuum_keyed_table`)."""
+def _private_subtree(target: str, root: str) -> bool:
+    """Whether ``root`` lies in a ``_``-prefixed top-level subdir of the
+    table (``_quarantine``, ``_dq``, ``_branches``): a separate namespace
+    — e.g. the DQ gate's quarantine KEYED TABLE nested under the target
+    — whose parquet is live data owned by its OWN manifest, so this
+    table's vacuum never treats it as orphaned.  (``__bucket=`` dirs are
+    exempt: a pre-manifest legacy layout keeps its data there.)"""
+    rel = os.path.normpath(os.path.relpath(root, target))
+    first = rel.split(os.sep)[0]
+    return (
+        rel != "."
+        and first.startswith("_")
+        and not first.startswith(f"{BUCKET_COL}=")
+    )
+
+
+def _vacuum_candidates(target, manifest, retention_s, now, store):
+    """Yield full paths of DATA files vacuum would delete: parquet the
+    snapshot does not read (pending MOR deltas are live data — folding
+    them is compaction's job), past retention — retirees aged by their
+    manifest ``retired`` stamp, crash orphans by mtime (see
+    :func:`vacuum_keyed_table`)."""
+    live = {os.path.normpath(f) for f in _live_files(manifest)}
+    retired_ts = {
+        os.path.normpath(e["path"]): e["ts"]
+        for e in manifest.get("retired", [])
+    }
     for root, _dirs, files in store.walk(target):
-        if private_subtree(root):
+        if _private_subtree(target, root):
             continue
         for f in files:
             full = os.path.join(root, f)
@@ -1613,35 +1659,10 @@ def vacuum_dry_run(
     manifest = _load_manifest(target, store)
     if manifest is None:
         return []
-    live = {
-        os.path.normpath(f)
-        for files in manifest["buckets"].values()
-        for f in files
-    }
-    live |= {
-        os.path.normpath(e["path"])
-        for entries in manifest.get("deltas", {}).values()
-        for e in entries
-    }
-    retired_ts = {
-        os.path.normpath(e["path"]): e["ts"]
-        for e in manifest.get("retired", [])
-    }
-
-    def _private_subtree(root: str) -> bool:
-        rel = os.path.normpath(os.path.relpath(root, target))
-        first = rel.split(os.sep)[0]
-        return (
-            rel != "."
-            and first.startswith("_")
-            and not first.startswith(f"{BUCKET_COL}=")
-        )
-
     return sorted(
         os.path.normpath(os.path.relpath(full, target))
         for full in _vacuum_candidates(
-            target, live, retired_ts, retention_s, time.time(), store,
-            _private_subtree,
+            target, manifest, retention_s, time.time(), store
         )
     )
 
@@ -1668,48 +1689,16 @@ def vacuum_keyed_table(
     manifest = _load_manifest(target, store)
     if manifest is None:
         return 0
-    live = {
-        os.path.normpath(f)
-        for files in manifest["buckets"].values()
-        for f in files
-    }
-    # pending MOR delta files are live data — folding them is
-    # compact_keyed_table's job, never vacuum's
-    live |= {
-        os.path.normpath(e["path"])
-        for entries in manifest.get("deltas", {}).values()
-        for e in entries
-    }
-    retired_ts = {
-        os.path.normpath(e["path"]): e["ts"]
-        for e in manifest.get("retired", [])
-    }
     now = time.time()
     removed = 0
 
-    def _private_subtree(root: str) -> bool:
-        # `_`-prefixed top-level subdirs (`_quarantine`, `_dq`) are
-        # separate namespaces — e.g. the DQ gate's quarantine KEYED TABLE
-        # nested under the target.  Their parquet is live data owned by
-        # their OWN manifest, invisible to this table's, so this vacuum
-        # must never treat it as orphaned.  (`__bucket=` dirs are exempt:
-        # a pre-manifest legacy layout keeps its data there.)
-        rel = os.path.normpath(os.path.relpath(root, target))
-        first = rel.split(os.sep)[0]
-        return (
-            rel != "."
-            and first.startswith("_")
-            and not first.startswith(f"{BUCKET_COL}=")
-        )
     # every filesystem touch below goes through the storage seam
     # (store.walk/list_dir/mtime/delete_file/...): on an object store the
     # walk is a prefix listing and deletes are DELETE calls — a direct
     # os.* walk would silently no-op retention cleanup there (ADVICE-class
     # hazard, VERDICT r5 residual 4)
     # pass 1: unreferenced data files past their retention
-    for full in _vacuum_candidates(
-        target, live, retired_ts, retention_s, now, store, _private_subtree
-    ):
+    for full in _vacuum_candidates(target, manifest, retention_s, now, store):
         store.delete_file(full)
         removed += 1
     # pass 2a: root-level commit-object litter — half-written manifest
@@ -1742,7 +1731,9 @@ def vacuum_keyed_table(
     root_norm = os.path.normpath(target)
     removed_dirs: set[str] = set()
     for root, dirs, files in store.walk(target, topdown=False):
-        if os.path.normpath(root) == root_norm or _private_subtree(root):
+        if os.path.normpath(root) == root_norm or _private_subtree(
+            target, root
+        ):
             continue
         live_subdirs = [
             d for d in dirs if os.path.join(root, d) not in removed_dirs
@@ -1854,8 +1845,8 @@ def _schema_entry(schema) -> dict:
 
 def _manifest_schema(manifest: dict | None):
     """StructType recorded by the snapshot's commit, or None (legacy
-    manifests, or commits from ops that don't maintain the entry —
-    readers then fall back to the mergeSchema path unchanged)."""
+    manifests — readers then fall back to the mergeSchema path
+    unchanged)."""
     if not manifest:
         return None
     sj = manifest.get("schema")
@@ -4423,6 +4414,13 @@ def restore_keyed_table(
     retention window fails loudly per missing file, never commits a torn
     table.
 
+    What a restore rolls back is what describes the snapshot's files:
+    the data, stats, blooms, row counts, recorded schema and column
+    mapping (a pre-rename snapshot restores its old names).  The table
+    state stays at the tip: writer-txn watermarks never move backwards
+    (a batch applied after ``version`` stays applied, so its replay is
+    still refused) and the ambient policies stay as the tip has them.
+
     Refused across a re-bucketing (the snapshot's bucket ids would prune
     wrongly under the current spec); restoring ACROSS a type widening is
     allowed and restores the old schema, Delta-semantics.
@@ -4451,39 +4449,18 @@ def restore_keyed_table(
             "(a re-bucketing happened in between; restore before re-bucketing "
             "or rebucket back first)"
         )
-    snap_live = [
-        f for fs in snap["buckets"].values() for f in fs
-    ] + _delta_files_of(snap)
+    snap_live = _live_files(snap)
     for f in snap_live:
         if not store.exists(os.path.join(target, f)):
             raise FileNotFoundError(
                 f"cannot restore version {version}: data file {f} was "
                 "vacuumed past retention"
             )
-    snap_set = {os.path.normpath(f) for f in snap_live}
-    cur_live = [
-        f for fs in cur["buckets"].values() for f in fs
-    ] + _delta_files_of(cur)
-    now = time.time()
-    retired = [
-        e
-        for e in cur.get("retired", [])
-        if os.path.normpath(e["path"]) not in snap_set
-        and store.exists(os.path.join(target, e["path"]))
-    ] + [
-        {"path": f, "ts": now}
-        for f in cur_live
-        if os.path.normpath(f) not in snap_set
-    ]
     new_version = cur["version"] + 1
-    manifest = dict(snap)
-    manifest["version"] = new_version
-    manifest["retired"] = retired
-    # restore restores the snapshot's COLUMN NAMES too (Delta restore-
-    # schema semantics): pin the snapshot's mapping explicitly — even
-    # when empty — so the commit-time carry can't inherit the tip's
-    manifest.setdefault("column_mapping", {})
-    manifest.setdefault("dropped_columns", [])
+    manifest = _repoint(snap, lambda f: f)
+    manifest.update(
+        version=new_version, retired=_retire(target, cur, snap_live, store)
+    )
     _commit_manifest(
         target, manifest, expected_version=cur["version"], store=store
     )
@@ -4505,9 +4482,13 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     is absolute — so reads, min/max data skipping, bloom pruning, MOR
     precedence, restore, CDF and the lazy sketch sidecar all work on
     foreign entries with no special-casing.  File-keyed metadata
-    (min/max stats, inline blooms, MOR delta entries with their commit
-    seqs) is carried under the rewritten keys; the bucket spec and CHECK
-    constraints are copied.  The clone's history STARTS at src's current
+    (min/max stats, inline blooms, row counts, MOR delta entries with
+    their commit seqs) is carried under the rewritten keys, with the
+    recorded schema and column mapping (:func:`_repoint`); the bucket
+    spec and CHECK constraints are copied.  Writer-txn watermarks and
+    ambient policies are table state and do not clone (as in Delta): a
+    clone is a new table to every idempotent writer, which must
+    re-apply its batches here.  The clone's history STARTS at src's current
     version number: MOR precedence is "highest seq wins" and cloned
     delta entries keep their source seqs, so the clone's next commits
     must number above them.
@@ -4551,38 +4532,9 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     if constraints:
         store.write_json(_constraints_path(dest), constraints)
     version = manifest["version"]
-    cloned = {
-        "version": version,
-        "buckets": {
-            b: [_foreign(f) for f in fs]
-            for b, fs in manifest["buckets"].items()
-        },
-        "deltas": {
-            b: [{**e, "path": _foreign(e["path"])} for e in entries]
-            for b, entries in manifest.get("deltas", {}).items()
-        },
-        # the clone owns no files yet, so it has nothing awaiting deletion
-        "retired": [],
-        # renames/drops travel with the data they describe (explicit
-        # presence also pins them against the commit-time carry)
-        "column_mapping": manifest.get("column_mapping", {}),
-        "dropped_columns": manifest.get("dropped_columns", []),
-        # writer-txn watermarks do NOT clone (same as Delta: stream
-        # metadata is not copied) — a clone is a new table to every
-        # idempotent writer, which must re-apply its batches here
-        "txns": {},
-        "stats": {
-            _foreign(f): s for f, s in manifest.get("stats", {}).items()
-        },
-        "blooms": {
-            _foreign(f): v for f, v in manifest.get("blooms", {}).items()
-        },
-        # the clone references exactly the source snapshot's files, so
-        # the recorded union schema still describes them verbatim
-        **(
-            {"schema": manifest["schema"]} if manifest.get("schema") else {}
-        ),
-    }
+    # the clone owns no files yet, so it has nothing awaiting deletion
+    cloned = _repoint(manifest, _foreign)
+    cloned.update(version=version, retired=[])
     os.makedirs(dest, exist_ok=True)
     _commit_manifest(dest, cloned, expected_version=None, store=store)
     return version
@@ -4915,56 +4867,16 @@ def wap_publish(
             return rel if not rel.startswith("..") else f
         return os.path.join(branch_abs, f)  # branch-owned file
 
-    buckets = {
-        b: [_publish_ref(f) for f in fs]
-        for b, fs in branch_manifest["buckets"].items()
-    }
-    deltas = {
-        b: [{**e, "path": _publish_ref(e["path"])} for e in entries]
-        for b, entries in branch_manifest.get("deltas", {}).items()
-    }
-    published_live = {os.path.normpath(f) for fs in buckets.values() for f in fs}
-    published_live |= {
-        os.path.normpath(e["path"]) for es in deltas.values() for e in es
-    }
-    # source files the audited snapshot dropped: start their retention
-    # clock now, alongside whatever the source already had pending
-    now = time.time()
-    src_live = {
-        os.path.normpath(f)
-        for fs in src_manifest["buckets"].values()
-        for f in fs
-    }
-    src_live |= {
-        os.path.normpath(e["path"])
-        for es in src_manifest.get("deltas", {}).values()
-        for e in es
-    }
-    retired = [
-        e
-        for e in src_manifest.get("retired", [])
-        if os.path.normpath(e["path"]) not in published_live
-    ]
-    retired += [
-        {"path": f, "ts": now} for f in sorted(src_live - published_live)
-    ]
-    published = {
-        # fast-forward TO the branch's version number: its MOR delta
-        # entries carry commit seqs up to that version, and the source's
-        # next commit must number above every one of them
-        "version": branch_manifest["version"],
-        "buckets": buckets,
-        "deltas": deltas,
-        "retired": retired,
-        "stats": {
-            _publish_ref(f): s
-            for f, s in branch_manifest.get("stats", {}).items()
-        },
-        "blooms": {
-            _publish_ref(f): v
-            for f, v in branch_manifest.get("blooms", {}).items()
-        },
-    }
+    # fast-forward TO the branch's version number: its MOR delta entries
+    # carry commit seqs up to that version, and the source's next commit
+    # must number above every one of them.  Source files the audited
+    # snapshot dropped start their retention clock now.
+    published = _repoint(branch_manifest, _publish_ref)
+    published_live = _live_files(published)
+    published.update(
+        version=branch_manifest["version"],
+        retired=_retire(src, src_manifest, published_live, store),
+    )
     _commit_manifest(
         src, published, expected_version=meta["base_version"], store=store
     )
@@ -4975,7 +4887,7 @@ def wap_publish(
     return {
         "version": branch_manifest["version"],
         "n_published_files": len(published_live),
-        "n_retired": len(retired),
+        "n_retired": len(published["retired"]),
         "report": report_rows,
     }
 
@@ -5001,53 +4913,32 @@ def adopt_foreign_files(target: str, store=LOCAL_STORE) -> int:
     then the branch directory can be removed.
     """
     import shutil
-    import uuid
 
     manifest = _load_manifest(target, store)
     if manifest is None:
         raise FileNotFoundError(f"no committed keyed table at {target}")
-
+    refs = [(b, f) for b, fs in manifest["buckets"].items() for f in fs]
+    refs += [
+        (b, e["path"]) for b, es in manifest.get("deltas", {}).items() for e in es
+    ]
     moved: dict[str, str] = {}
-
-    def _adopt(f: str, bucket: str) -> str:
-        if not os.path.isabs(f):
-            return f
-        new_rel = os.path.join(
-            f"{BUCKET_COL}={bucket}",
-            f"adopt-{uuid.uuid4().hex}-{os.path.basename(f)}",
-        )
-        dst = os.path.join(target, new_rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        shutil.copyfile(f, dst)
-        moved[f] = new_rel
-        return new_rel
-
-    buckets = {
-        b: [_adopt(f, b) for f in fs]
-        for b, fs in manifest["buckets"].items()
-    }
-    deltas = {
-        b: [{**e, "path": _adopt(e["path"], b)} for e in entries]
-        for b, entries in manifest.get("deltas", {}).items()
-    }
+    for b, f in refs:
+        if os.path.isabs(f):
+            moved[f] = os.path.join(
+                f"{BUCKET_COL}={b}",
+                f"adopt-{uuid.uuid4().hex}-{os.path.basename(f)}",
+            )
+            dst = os.path.join(target, moved[f])
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            shutil.copyfile(f, dst)
     if not moved:
         return 0
-    remap = lambda d: {moved.get(f, f): v for f, v in (d or {}).items()}  # noqa: E731
-    adopted = {
-        "version": manifest["version"] + 1,
-        "buckets": buckets,
-        "deltas": deltas,
-        # foreign originals are not ours to retire or vacuum — the
-        # manifest simply stops referencing them
-        "retired": manifest.get("retired", []),
-        "stats": remap(manifest.get("stats")),
-        "blooms": remap(manifest.get("blooms")),
-        "rows": remap(manifest.get("rows")),
-    }
-    if manifest.get("schema"):
-        # adopted files are byte copies of this snapshot's referenced
-        # files — the recorded schema still describes them exactly
-        adopted["schema"] = manifest["schema"]
+    adopted = _repoint(manifest, lambda f: moved.get(f, f))
+    # foreign originals are not ours to retire or vacuum — the manifest
+    # simply stops referencing them
+    adopted.update(
+        version=manifest["version"] + 1, retired=manifest.get("retired", [])
+    )
     _commit_manifest(
         target, adopted, expected_version=manifest["version"], store=store
     )

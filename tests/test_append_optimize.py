@@ -277,6 +277,27 @@ def test_append_txn_bootstrap_and_clone_reset(spark, tmp_path):
     assert keyed_append(spark, b2, dest, txn_app="job", txn_seq=1) >= 1
 
 
+def test_append_txn_watermark_survives_restore(spark, tmp_path):
+    """A restore rolls the files back, never the writer watermark: a
+    batch applied after the restored version stays applied, so its
+    replay writes nothing."""
+    from airflow_postgres_etl_spark.sink import _load_manifest, restore_keyed_table
+
+    target = _mk(spark, tmp_path)
+    for seq in (1, 2, 3):
+        keyed_append(
+            spark,
+            spark.createDataFrame([(f"t{seq}", seq)], ["oid__id", "v"]),
+            target, txn_app="w", txn_seq=seq,
+        )
+    restore_keyed_table(spark, target, 2)
+    assert _load_manifest(target)["txns"] == {"w": 3}
+    assert _rows(spark, target) == {("k1", 1), ("k2", 2), ("k3", 3), ("t1", 1)}
+    replay = spark.createDataFrame([("t3", 3)], ["oid__id", "v"])
+    assert keyed_append(spark, replay, target, txn_app="w", txn_seq=3) == 0
+    assert _rows(spark, target) == {("k1", 1), ("k2", 2), ("k3", 3), ("t1", 1)}
+
+
 def test_append_txn_args_must_pair(spark, tmp_path):
     target = _mk(spark, tmp_path)
     b = spark.createDataFrame([("t1", 10)], ["oid__id", "v"])

@@ -192,3 +192,24 @@ def test_table_facade_clone(spark, tmp_path):
         num_buckets=4,
     )
     assert c.read().count() == 6 and t.read().count() == 5
+
+
+def test_clone_opens_no_footer(spark, tmp_path, monkeypatch):
+    """One spec write + one manifest commit: the source's per-file row
+    counts carry over under the re-pointed keys, so cloning opens no
+    parquet footer however many files the table has."""
+    from airflow_postgres_etl_spark import sink
+
+    src = _mk(spark, tmp_path)
+    dest = str(tmp_path / "dest")
+    opened = []
+    real = sink._footer_num_rows
+    monkeypatch.setattr(
+        sink, "_footer_num_rows", lambda p, *a: opened.append(p) or real(p, *a)
+    )
+    clone_keyed_table(src, dest)
+    assert opened == []
+    src_rows = sink._load_manifest(src)["rows"]
+    assert sink._load_manifest(dest)["rows"] == {
+        os.path.join(os.path.abspath(src), f): n for f, n in src_rows.items()
+    }

@@ -4,7 +4,9 @@ a tiny table and pin what the kernel owes all of them:
 
 - a crash after the data files are written and before the manifest swap
   leaves the committed snapshot untouched, a retry lands, and a
-  zero-retention vacuum then leaves no unreferenced data file;
+  zero-retention vacuum then leaves no unreferenced data file — for the
+  metadata-only commits that re-point a whole snapshot (restore, WAP
+  publish, adopt) as well;
 - each commit keeps the manifest invariants (``check_manifest``);
 - each path's Spark-job budget for a 2-row change stays at its pinned
   count;
@@ -50,8 +52,10 @@ def _live(manifest: dict) -> set[str]:
 def check_manifest(manifest: dict, prev: dict | None = None) -> None:
     """Invariants every committed manifest keeps: live files have a row
     count, stats describe live files only, nothing is both live and
-    retired, and every file the commit superseded is retired with a
-    timestamp."""
+    retired, every table-owned (relative) file the commit superseded is
+    retired with a timestamp — a foreign reference (absolute, into a
+    clone source or a WAP branch) is not the table's to retire — and a
+    commit over a base that records a schema records one too."""
     live = _live(manifest)
     retired = {e["path"]: e for e in manifest.get("retired", [])}
     assert live <= set(manifest.get("rows", {})), "live file without rows"
@@ -59,7 +63,10 @@ def check_manifest(manifest: dict, prev: dict | None = None) -> None:
     assert not live & set(retired), "file both live and retired"
     if prev is not None:
         for f in _live(prev) - live:
-            assert f in retired and "ts" in retired[f], f"{f} not retired"
+            if not os.path.isabs(f):
+                assert f in retired and "ts" in retired[f], f"{f} not retired"
+        if prev.get("schema"):
+            assert manifest.get("schema"), "schema entry dropped"
 
 
 def _setup_mor(spark, t):
@@ -153,6 +160,37 @@ OPS = {
     ),
 }
 
+
+def _setup_history(spark, t):
+    _base(spark, t)
+    sink.keyed_overwrite_parquet(
+        spark, _rows(spark, [("k1", 10, 0.5), ("n1", 1, 0.5)]), t
+    )
+
+
+def _setup_branch(spark, t):
+    _base(spark, t)
+    sink.keyed_overwrite_parquet(
+        spark,
+        _rows(spark, [("k1", 10, 0.5), ("n1", 1, 0.5)]),
+        sink.wap_begin(t, "audit"),
+    )
+
+
+def _setup_published(spark, t):
+    _setup_branch(spark, t)
+    sink.wap_publish(spark, t, "audit")
+
+
+#: metadata-only commits -> (table setup, the op): each re-points a
+#: whole snapshot and writes no data file of its own (adopt copies the
+#: foreign files it re-owns).
+METADATA_OPS = {
+    "restore": (_setup_history, lambda s, t: sink.restore_keyed_table(s, t, 1)),
+    "wap_publish": (_setup_branch, lambda s, t: sink.wap_publish(s, t, "audit")),
+    "adopt_foreign": (_setup_published, lambda s, t: sink.adopt_foreign_files(t)),
+}
+
 #: Spark jobs each path launches for the ops above (spark fixture:
 #: local mode, 8 shuffle partitions, AQE on).  A change here is a
 #: change to the path's cost: re-measure and say why.
@@ -177,21 +215,26 @@ JOB_BUDGET = {
 
 def _table_parquet(target: str) -> set[str]:
     """The table's own parquet files: ``_``-prefixed subtrees are other
-    tables nested under it (``apply_changes``' ``_cdc_tombstones``)."""
+    tables nested under it (``apply_changes``' ``_cdc_tombstones``, WAP
+    ``_branches``); ``__bucket=`` directories are the table's own."""
     rels = (
         os.path.normpath(os.path.relpath(os.path.join(r, f), target))
         for r, _d, fs in os.walk(target)
         for f in fs
         if f.endswith(".parquet")
     )
-    return {rel for rel in rels if not rel.startswith("_")}
+    return {
+        rel
+        for rel in rels
+        if not rel.startswith("_") or rel.startswith(f"{sink.BUCKET_COL}=")
+    }
 
 
-@pytest.mark.parametrize("op", sorted(OPS))
+@pytest.mark.parametrize("op", sorted(OPS) + sorted(METADATA_OPS))
 def test_crash_before_commit_keeps_snapshot_then_retry_lands(
     spark, tmp_path, monkeypatch, op
 ):
-    setup, run = OPS[op]
+    setup, run = {**OPS, **METADATA_OPS}[op]
     target = str(tmp_path / "t")
     setup(spark, target)
     before = sink._load_manifest(target)
@@ -217,7 +260,7 @@ def test_crash_before_commit_keeps_snapshot_then_retry_lands(
     assert after["version"] == before["version"] + 1
     check_manifest(after, before)
     sink.vacuum_keyed_table(target, retention_s=0)
-    live = {os.path.normpath(f) for f in _live(after)}
+    live = {os.path.normpath(f) for f in _live(after) if not os.path.isabs(f)}
     assert _table_parquet(target) == live
 
 

@@ -475,6 +475,26 @@ def test_bm25_index_equals_corpus_scan(spark, tmp_path):
         add_documents(spark, docs.filter(F.col("doc_id") == 0), idx)
 
 
+def test_add_documents_releases_its_checkpoint(spark, tmp_path):
+    """An add_documents call leaves no persisted RDD behind: its
+    postings checkpoint is released whether the call lands or raises."""
+    import pytest as _pytest
+
+    from airflow_postgres_etl_spark.operators.text import add_documents
+
+    docs = spark.createDataFrame(
+        [(1, "hash join scan"), (2, "vector scan")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "idx")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    held = set(persisted().keySet())
+    add_documents(spark, docs.filter("doc_id = 1"), idx)
+    add_documents(spark, docs.filter("doc_id = 2"), idx)
+    with _pytest.raises(ValueError, match="already indexed"):
+        add_documents(spark, docs.filter("doc_id = 1"), idx)
+    assert set(persisted().keySet()) == held
+
+
 def test_hybrid_rrf_fusion_semantics(spark):
     """RRF closed-form on crafted legs: both-leg docs sum their
     contributions, single-leg docs carry a NULL rank for the missing

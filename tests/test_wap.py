@@ -187,3 +187,34 @@ def test_branch_name_traversal_rejected(tmp_path):
     for ok in ("audit-2026", "r8.main", "B_1"):
         p = sink_mod._branch_path(src, ok)
         assert p.startswith(src + "/") and "_branches" in p
+
+
+def test_publish_carries_the_audited_snapshot(spark, tmp_path, monkeypatch):
+    """Publish re-points the branch's snapshot as audited: its recorded
+    schema, row counts and column mapping travel with its files, so the
+    source reads the branch's column names, infers no schema and opens
+    no parquet footer to rebuild row counts."""
+    t = Engine(spark).table(str(tmp_path / "t"))
+    t.merge(
+        spark.createDataFrame([(f"k{i}", i) for i in range(16)], "k string, v long"),
+        key="k", num_buckets=8, vacuum=False,
+    )
+    b = t.branch("audit")
+    b.merge(spark.createDataFrame([("k1", 10)], "k string, v long"), key="k")
+    sink.rename_column(spark, b.path, "v", "value")
+    audited = sink._load_manifest(b.path)
+
+    opened = []
+    real = sink._footer_num_rows
+    monkeypatch.setattr(
+        sink, "_footer_num_rows", lambda p, *a: opened.append(p) or real(p, *a)
+    )
+    t.publish("audit")
+    assert opened == []
+
+    published = sink._load_manifest(t.path)
+    assert published["schema"] == audited["schema"]
+    assert published["column_mapping"] == {"value": "v"}
+    assert sorted(t.read().columns) == sorted(b.read().columns) == ["k", "value"]
+    got = {r["k"]: r["value"] for r in t.read().collect()}
+    assert got == {**{f"k{i}": i for i in range(16)}, "k1": 10}
