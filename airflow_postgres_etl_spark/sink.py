@@ -1789,6 +1789,9 @@ def _read_files(
     # read is constructed with an EXPLICIT schema and no mergeSchema —
     # zero footer reads, zero eager schema-inference Spark jobs per
     # read (measured: every lifecycle query paid 4-21 such inferences).
+    # Reads with no manifest to ask take the same rule through
+    # :func:`sources.parquet_source.footer_schema`, which resolves the
+    # schema on the driver.
     # Equivalent by construction: per-column types are uniform across a
     # table's live files (_align_batch_types conforms every batch before
     # any file lands), so the only cross-file variance is column

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import cache_scope
+from ..sink import _release
 from .delivery import (
     guard_keyed_bootstrap,
     keyed_corpus_commit,
@@ -216,7 +217,7 @@ def stream_dedup_ingest(
                         corpus_df=corpus_df,
                     )
         finally:
-            survivors.unpersist()
+            _release([survivors])
 
     return (
         stream.writeStream.foreachBatch(process)

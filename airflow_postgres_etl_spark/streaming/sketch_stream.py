@@ -73,20 +73,23 @@ def merge_kmv_batch(
     batch_sk = SK.kmv_sketch(batch, [group_col], F.col(item_col), k=k).localCheckpoint(
         eager=True
     )
-    groups = [r[0] for r in batch_sk.select(group_col).collect()]
-    if not groups:
-        return
     try:
-        stored = sink.lookup_keys(spark, target, groups, store).select(
-            group_col, "ks"
+        groups = [r[0] for r in batch_sk.select(group_col).collect()]
+        if not groups:
+            return
+        try:
+            stored = sink.lookup_keys(spark, target, groups, store).select(
+                group_col, "ks"
+            )
+            pool = stored.unionByName(batch_sk.select(group_col, "ks"))
+        except FileNotFoundError:
+            pool = batch_sk.select(group_col, "ks")
+        merged = SK.kmv_merge_sketches(pool, [group_col], k=k)
+        sink.keyed_overwrite_parquet(
+            spark, merged, target, key=group_col, num_buckets=4, store=store
         )
-        pool = stored.unionByName(batch_sk.select(group_col, "ks"))
-    except FileNotFoundError:
-        pool = batch_sk.select(group_col, "ks")
-    merged = SK.kmv_merge_sketches(pool, [group_col], k=k)
-    sink.keyed_overwrite_parquet(
-        spark, merged, target, key=group_col, num_buckets=4, store=store
-    )
+    finally:
+        sink._release([batch_sk])
 
 
 def merge_cms_batch(
@@ -111,23 +114,28 @@ def merge_cms_batch(
         _CMS_KEY,
         F.concat_ws(":", F.col(group_col), F.col("r"), F.col("c")),
     ).localCheckpoint(eager=True)  # one batch scan, not one per action
-    keys = [r[0] for r in cells.select(_CMS_KEY).collect()]
-    if not keys:
-        return
     try:
-        stored = sink.lookup_keys(spark, target, keys, store).select(
-            _CMS_KEY, group_col, "r", "c", "cnt"
+        keys = [r[0] for r in cells.select(_CMS_KEY).collect()]
+        if not keys:
+            return
+        try:
+            stored = sink.lookup_keys(spark, target, keys, store).select(
+                _CMS_KEY, group_col, "r", "c", "cnt"
+            )
+            pool = stored.unionByName(
+                cells.select(_CMS_KEY, group_col, "r", "c", "cnt")
+            )
+        except FileNotFoundError:
+            pool = cells.select(_CMS_KEY, group_col, "r", "c", "cnt")
+        merged = (
+            pool.groupBy(_CMS_KEY, group_col, "r", "c")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        pool = stored.unionByName(cells.select(_CMS_KEY, group_col, "r", "c", "cnt"))
-    except FileNotFoundError:
-        pool = cells.select(_CMS_KEY, group_col, "r", "c", "cnt")
-    merged = (
-        pool.groupBy(_CMS_KEY, group_col, "r", "c")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    sink.keyed_overwrite_parquet(
-        spark, merged, target, key=_CMS_KEY, num_buckets=4, store=store
-    )
+        sink.keyed_overwrite_parquet(
+            spark, merged, target, key=_CMS_KEY, num_buckets=4, store=store
+        )
+    finally:
+        sink._release([cells])
 
 
 def stream_sketch_ingest(

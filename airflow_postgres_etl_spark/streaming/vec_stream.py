@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import cache_scope
+from ..sink import _release
 from .delivery import (
     guard_keyed_bootstrap,
     keyed_corpus_commit,
@@ -301,7 +302,7 @@ def stream_semantic_ingest(
                     for spec in maintain_views:
                         _refresh_view(batch.sparkSession, corpus_out, spec)
         finally:
-            survivors.unpersist()
+            _release([survivors])
 
     return (
         stream.writeStream.foreachBatch(process)

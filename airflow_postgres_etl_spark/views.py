@@ -87,6 +87,7 @@ from .sink import (
     _version_manifest_path,
     read_keyed_table,
 )
+from .sources.parquet_source import footer_schema
 from .storage import LOCAL_STORE
 
 
@@ -313,8 +314,8 @@ def _read_view_frame(spark, mv_path, store) -> DataFrame:
         if f.endswith(".parquet")
     ]
     if not files:  # schema-bearing empty snapshot (zero-group view)
-        return spark.read.parquet(data_dir)
-    return spark.read.parquet(*files)
+        files = [data_dir]
+    return spark.read.schema(footer_schema(spark, *files)).parquet(*files)
 
 
 def _group_merge(mv, part, keys, merged_cols):

@@ -920,3 +920,46 @@ def test_recreated_checkpoint_is_a_new_txn_writer(spark, tmp_path):
     # old docs re-delivered and index-dropped; the NEW doc landed
     # (a path-only txn_app would have silently no-opped it away)
     assert {r.doc_id for r in read_keyed_table(spark, out).collect()} == {1, 2, 9}
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_stream_dedup_ingest_releases_its_batch_checkpoint(spark, tmp_path):
+    """A micro-batch's survivors checkpoint is released when the batch
+    ends: ``unpersist()`` does not drop a local checkpoint's blocks."""
+    from airflow_postgres_etl_spark.streaming import stream_dedup_ingest
+
+    src, idx, out, ck = (
+        str(tmp_path / d) for d in ("src", "index", "corpus", "ck")
+    )
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "spark physical plans and their shuffles")],
+        ["doc_id", "text"],
+    ).coalesce(1).write.parquet(src)
+    held = _persisted(spark)
+    q = stream_dedup_ingest(spark, src, idx, out, ck)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert read_keyed_table(spark, out).count() == 2
+    assert _persisted(spark) == held
+
+
+def test_stream_sketch_ingest_releases_its_batch_checkpoints(spark, tmp_path):
+    """The KMV and CMS merges each release the batch sketch they
+    checkpoint."""
+    from airflow_postgres_etl_spark.streaming import stream_sketch_ingest
+
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    spark.createDataFrame(
+        [(f"g{j % 2}", f"item_{j % 5}") for j in range(20)],
+        "group string, item string",
+    ).coalesce(1).write.parquet(src)
+    held = _persisted(spark)
+    q = stream_sketch_ingest(spark, src, out, ck)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert read_keyed_table(spark, os.path.join(out, "kmv")).count() == 2
+    assert _persisted(spark) == held

@@ -556,3 +556,25 @@ def test_stream_default_path_crash_matrix_exactly_once(
     assert q3.exception() is None
     assert sink.table_version(out) == v1  # no commit, no duplicate
     assert sorted(r.vec_id for r in read_keyed_table(spark, out).collect()) == [1, 2]
+
+
+def test_stream_semantic_ingest_releases_its_batch_checkpoint(spark, tmp_path):
+    """A micro-batch's survivors checkpoint is released when the batch
+    ends: ``unpersist()`` does not drop a local checkpoint's blocks."""
+    src, idx, out, ck = (
+        str(tmp_path / d) for d in ("src", "index", "corpus", "ck")
+    )
+    _vecs(
+        spark,
+        [(1, [1.0, 0.0, 0.0, 0.0], 0), (2, [0.0, 1.0, 0.0, 0.0], 0)],
+    ).coalesce(1).write.parquet(src)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    held = set(persisted().keySet())
+    q = stream_semantic_ingest(
+        spark, src, idx, out, ck, threshold=0.9, n_cells=2,
+        refresh_fraction=None,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert read_keyed_table(spark, out).count() == 2
+    assert set(persisted().keySet()) == held
