@@ -67,15 +67,6 @@ def shingles_from_tokens(w: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles_expr(col: str | Column = "text", n: int = 3) -> Column:
-    """Single-expression form of :func:`shingles_from_tokens` (tokenizer
-    inlined).  Fine for short documents and for expression-level tests;
-    long documents MUST go through the two-step form — see the O(tokens²)
-    warning above.  :func:`_doc_shingles` (what every dedup operator
-    uses) always takes the two-step path."""
-    return shingles_from_tokens(tokens_expr(col), n)
-
-
 def exact_dedup_groups(df: DataFrame, col: str = "text", key: str = "doc_id") -> DataFrame:
     """Exact dedup: group by content hash; ``keep_id`` = min key per group."""
     return (
@@ -657,19 +648,6 @@ def simhash_signatures(
         ]
     )
     return agg.select(F.col(key), bits.alias("simhash"))
-
-
-def simhash_dup_groups(
-    df: DataFrame, col: str = "text", key: str = "doc_id"
-) -> DataFrame:
-    """Documents sharing an identical SimHash (hamming distance 0) —
-    equi-join-friendly near-dup grouping."""
-    sig = simhash_signatures(df, col, key)
-    return (
-        sig.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min(key).alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def simhash_blocks(radius: int, bits: int = SIMHASH_BITS) -> list[tuple[int, int]]:

@@ -15,14 +15,14 @@ passes Spark the exact live file paths from the manifest, so Spark's
 only listing work is one stat per path.  Above
 ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (Spark's
 default: 32 paths) it does those stats in a Spark job with one task per
-path.  The default keyed layout has 64 buckets, so with Spark's default
-every full-table read, and every merge touching more than 32 buckets,
-paid that job.  Measured on local disk (4 cores, 1-row parquet files,
-median of 7): the driver-side stats cost about 0.2 ms a path (64 paths
+path.  A keyed table of 64 buckets has 64 live files or more, so with
+Spark's default every full-table read of it, and every merge touching
+more than 32 of its buckets, paid that job.  Measured on local disk (4
+cores, 1-row parquet files, median of 7): the driver-side stats cost about 0.2 ms a path (64 paths
 61 ms, 1,024 paths 219 ms, 4,096 paths 830 ms) and the listing job
 about 0.45 s plus 4 ms a path (64 paths 593 ms, 1,024 paths 4.7 s,
 4,096 paths 17.3 s): no crossover on local disk up to 4,096 paths.  The
-pinned 1,024 covers the default layout 16 times over (16 files per
+pinned 1,024 covers a 64-bucket layout 16 times over (16 files per
 bucket) and caps the driver's serial stats at about 0.2 s.  The
 trade-off is object storage (not measured here): a stat there is a
 network round trip of milliseconds, not a local syscall, so the serial

@@ -65,6 +65,19 @@ Two implementations:
     :func:`keyed_delete_where`, :func:`keyed_update_where`,
     :func:`merge_into`, :func:`apply_changes`.
 
+  **Layout.**  The manifest records the bucket count its files were
+  hashed with, and every reader and writer takes it from there; the
+  ``_bucket_spec.json`` beside it pins the key.  A table created with
+  ``num_buckets=`` keeps that count until :func:`rebucket_keyed_table`.
+  One created without it is auto-sized: its first commit starts at the
+  smallest power of two whose buckets fit the admitted batch in
+  :data:`TARGET_BUCKET_BYTES`, and a CoW merge, compaction or optimize
+  doubles the layout (one commit rewriting every bucket) once the mean
+  bucket passes the target.  A trickle-fed table thus stays at a few
+  files.  Few buckets also means few disjoint ones: concurrent writers
+  that must land without conflicting (disjoint-bucket merges) should
+  pin ``num_buckets=``.
+
   Conflict rules: the CoW merge and the append rebase over any commit
   that leaves their affected buckets, the bucket count and their txn
   watermark unchanged; delta commits rebase only over row-preserving
@@ -133,9 +146,14 @@ BUCKET_COL = "__bucket"
 #: delta files ever contain it — base files are always tombstone-free.
 TOMBSTONE_COL = "__tombstone"
 
-#: default bucket count.  Must stay fixed for the lifetime of a target
-#: directory (recorded in _bucket_spec.json and validated on every merge).
-DEFAULT_NUM_BUCKETS = 64
+#: stored bytes a bucket of an auto-sized table holds before its layout
+#: doubles — the table-format analogue of Delta's ``targetFileSize``.  A
+#: table created without ``num_buckets=`` starts at the smallest power of
+#: two whose buckets fit it and doubles on a copy-on-write merge,
+#: :func:`compact_keyed_table` or :func:`optimize_keyed_table` once its
+#: mean bucket passes it (:func:`_sized`).  A CoW merge rewrites every
+#: bucket it touches, so this also bounds what a one-row merge rewrites.
+TARGET_BUCKET_BYTES = 32 << 20
 
 #: default retention for superseded files (seconds).  A reader that
 #: resolved the manifest just before a merge still streams the OLD files
@@ -149,10 +167,6 @@ DEFAULT_RETENTION_S = 3600.0
 MANIFEST_NAME = "_manifest.json"
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
-
-
 def _bucket_expr(key: str, num_buckets: int):
     # xxhash64 is deterministic across sessions/executors/versions — the
     # same key always lands in the same bucket, which is what makes
@@ -164,31 +178,106 @@ def _spec_path(target: str) -> str:
     return os.path.join(target, "_bucket_spec.json")
 
 
-def _load_or_check_spec(
-    target: str, key: str, num_buckets: int | None, store=LOCAL_STORE
-) -> int:
-    """Validate the caller's layout against the target's pinned spec and
-    return the effective bucket count.  ``num_buckets=None`` means "adopt
-    the existing table's layout" (default count for a brand-new table) —
-    what a table handle wants for every merge after the first."""
+def _layout_of(target: str, manifest: dict | None, store) -> int | None:
+    """The bucket count ``manifest``'s files were hashed with: the count
+    the manifest records, else the spec's (a table committed before
+    manifests recorded it).  The manifest is the authority because it
+    moves atomically with the files — the spec is written apart from
+    the manifest swap, and a layout change (a split, a rebucket) leaves
+    it behind for a moment or, after a crash, for good."""
+    if manifest is not None and manifest.get("num_buckets"):
+        return manifest["num_buckets"]
     spec = store.read_json(_spec_path(target))
-    if spec is None:
-        return DEFAULT_NUM_BUCKETS if num_buckets is None else num_buckets
+    return None if spec is None else spec["num_buckets"]
+
+
+def _check_layout(
+    target: str, key: str, num_buckets: int | None, manifest: dict | None,
+    store=LOCAL_STORE,
+) -> tuple[int | None, bool]:
+    """Validate the caller's layout against the target's and return
+    ``(bucket count, auto-sized)``.  ``num_buckets=None`` adopts the
+    existing table's layout; on a new table it asks for an auto-sized
+    one, whose count (None here) the first commit takes from the
+    admitted batch."""
+    spec = store.read_json(_spec_path(target))
+    have = _layout_of(target, manifest, store)
+    if have is None:
+        if manifest is not None and num_buckets is None:
+            raise ValueError(
+                f"{target} has a manifest but no recorded bucket layout: "
+                "pass num_buckets="
+            )
+        return num_buckets, num_buckets is None
     if num_buckets is None:
-        num_buckets = spec["num_buckets"]
-    if spec["num_buckets"] != num_buckets or spec["key"] != key:
+        num_buckets = have
+    if num_buckets != have or (spec is not None and spec["key"] != key):
         raise ValueError(
-            f"target {target} was bucketed with {spec}, "
-            f"got key={key!r} num_buckets={num_buckets}; the bucket "
-            "layout must stay fixed for a target's lifetime"
+            f"target {target} is bucketed by {spec and spec['key']!r} into "
+            f"{have}, got key={key!r} num_buckets={num_buckets}; only "
+            "rebucket_keyed_table or an auto-sized table's growth changes "
+            "the bucket layout"
         )
+    return num_buckets, bool(spec and spec.get("auto"))
+
+
+def _auto_sized(target: str, store) -> bool:
+    """Whether the table was created without ``num_buckets=`` (its spec
+    says so), so its layout grows with its bytes.  A spec written before
+    auto-sizing existed never says so: those tables keep their count."""
+    return bool((store.read_json(_spec_path(target)) or {}).get("auto"))
+
+
+def _write_spec(
+    target: str, key: str, num_buckets: int, store=LOCAL_STORE,
+    auto: bool = False,
+) -> None:
+    spec = {"key": key, "num_buckets": num_buckets, "bucket_col": BUCKET_COL}
+    if auto:
+        spec["auto"] = True
+    store.write_json(_spec_path(target), spec)
+
+
+def _sized(n_bytes: int, num_buckets: int = 1) -> int:
+    """The smallest ``num_buckets · 2^k`` whose mean bucket holds at most
+    :data:`TARGET_BUCKET_BYTES` of ``n_bytes``.  Doubling is local:
+    bucket = ``pmod(xxhash64(key), N)``, so bucket b of N becomes b or
+    b+N of 2N (linear hashing's split, Litwin 1980)."""
+    while n_bytes > num_buckets * TARGET_BUCKET_BYTES:
+        num_buckets *= 2
     return num_buckets
 
 
-def _write_spec(target: str, key: str, num_buckets: int, store=LOCAL_STORE) -> None:
-    store.write_json(
-        _spec_path(target),
-        {"key": key, "num_buckets": num_buckets, "bucket_col": BUCKET_COL},
+def _file_bytes(target: str, files) -> int:
+    """Stored bytes of ``files`` (target-relative or absolute); a file
+    gone from disk counts 0."""
+    total = 0
+    for f in files:
+        try:
+            total += os.path.getsize(os.path.join(target, f))
+        except OSError:
+            pass
+    return total
+
+
+def _grown(target: str, manifest: dict, num_buckets: int) -> int | None:
+    """The doubled layout an auto-sized table's next rewrite commits at,
+    or None while its mean bucket (live base and delta bytes over
+    ``num_buckets``) is within the target."""
+    grown = _sized(_file_bytes(target, _live_files(manifest)), num_buckets)
+    return grown if grown > num_buckets else None
+
+
+def _batch_bytes(cp: DataFrame) -> int:
+    """Bytes the block manager holds for a local checkpoint — the size
+    an auto-sized table's first commit starts from, read on the driver
+    without a Spark job.  In-memory rows are larger than their parquet
+    files, so a table starts at or above the layout its files need."""
+    rdd = cp._jdf.queryExecution().analyzed().rdd()
+    return sum(
+        info.memSize() + info.diskSize()
+        for info in rdd.context().getRDDStorageInfo()
+        if info.id() == rdd.id()
     )
 
 
@@ -762,20 +851,14 @@ def _commit_manifest(
     serializes versions, so no two writers ever claim the same N.  A
     crash between CAS and copy loses only that version's time-travel
     entry, never current-state correctness."""
-    # record the layout under which this version was written (absent on
-    # pre-existing tables): restore_keyed_table refuses to resurrect a
-    # snapshot across a re-bucketing, whose bucket ids would prune wrong
-    # under the current spec.  Callers that change the layout (rebucket)
-    # set the field explicitly; setdefault never overrides them.
-    spec = store.read_json(_spec_path(target))
-    if spec is not None:
-        manifest.setdefault("num_buckets", spec["num_buckets"])
     # the table state a commit leaves alone rides over from the tip: the
+    # bucket layout (every data commit records the one it hashed with;
+    # readers and writers take it from here, see _layout_of), the
     # writer-transaction watermarks (Delta's `txn` action — "batch N
     # already applied" must survive every unrelated commit), the ambient
     # policies (_POLICIES) and the column mapping.  A key the commit
     # sets wins (a setter's None clears its policy).
-    carry = [k for k in ("txns", *_POLICIES) if k not in manifest]
+    carry = [k for k in ("num_buckets", "txns", *_POLICIES) if k not in manifest]
     carry_map = (
         "column_mapping" not in manifest and "dropped_columns" not in manifest
     )
@@ -1170,7 +1253,7 @@ def _open_table(target: str, store=LOCAL_STORE) -> tuple[dict, str, int]:
     spec = store.read_json(_spec_path(target))
     if spec is None:
         raise ValueError(f"{target} has a manifest but no bucket spec")
-    return manifest, spec["key"], spec["num_buckets"]
+    return manifest, spec["key"], _layout_of(target, manifest, store)
 
 
 def _open_or_bootstrap(target, key, num_buckets, store, op: str):
@@ -1319,14 +1402,18 @@ def _commit_files(
     full_schema: bool = False,
     range_by: tuple | None = None,
     extra: dict | None = None,
+    auto: bool = False,
     store=LOCAL_STORE,
 ) -> tuple[dict, dict[str, list[str]]]:
     """THE data commit (module docstring, "Commit kernel"): write
     ``frame`` bucketed by ``key`` (the bucket column is derived when
     absent) as one new commit directory, then publish one manifest
     built on ``base`` (None = the table's first commit, which also pins
-    the bucket spec) through :func:`_commit_optimistic`.  Returns the
-    committed manifest and ``{bucket: new files}``.
+    the bucket spec, auto-sized when ``auto``) through
+    :func:`_commit_optimistic`.  The manifest records ``num_buckets``,
+    the layout the frame was hashed with: a commit at a new count (a
+    rebucket, an auto-sized table's growth) rewrites every bucket.
+    Returns the committed manifest and ``{bucket: new files}``.
 
     ``edit`` is the manifest edit: ``"replace"`` swaps ``buckets`` (all
     buckets when None) for the new files — their base files and pending
@@ -1361,7 +1448,7 @@ def _commit_files(
     layout = {} if range_by is None else {"range_by": range_by}
     _write_bucketed(frame, os.path.join(target, commit_rel), num_buckets, **layout)
     if base is None:
-        _write_spec(target, key, num_buckets, store)
+        _write_spec(target, key, num_buckets, store, auto)
     written = _list_commit_buckets(target, commit_rel, store)
     new_files = [f for fs in written.values() for f in fs]
     full_schema = full_schema or (edit == "replace" and buckets is None)
@@ -1387,7 +1474,12 @@ def _commit_files(
                     new_buckets[b] = written[b]
                 else:
                     new_buckets.pop(b, None)
-        out = {"version": version, "buckets": new_buckets, "deltas": deltas}
+        out = {
+            "version": version,
+            "buckets": new_buckets,
+            "deltas": deltas,
+            "num_buckets": num_buckets,
+        }
         live = set(_live_files(out))
         stats = {f: s for f, s in cur.get("stats", {}).items() if f in live}
         tracked = set(stats_cols or ())
@@ -1519,6 +1611,10 @@ def keyed_overwrite_parquet(
     the batch (:func:`_admit_batch`), so it costs no Spark job of its
     own.
 
+    ``num_buckets``: None adopts an existing table's layout, and makes
+    a new table auto-sized (module docstring, "Layout"); a count pins a
+    new table's layout and must match an existing one's.
+
     ``txn_app``/``txn_seq`` (r9): the same idempotent-writer watermark
     as ``keyed_append`` (Delta's ``txn`` action), recorded INSIDE the
     merge's one commit — a replayed epoch whose seq is ≤ the recorded
@@ -1554,25 +1650,37 @@ def keyed_overwrite_parquet(
     """
     txn = _txn_of(txn_app, txn_seq)
     os.makedirs(target, exist_ok=True)
-    num_buckets = _load_or_check_spec(target, key, num_buckets, store)
     manifest = _load_manifest(target, store)
+    num_buckets, auto = _check_layout(target, key, num_buckets, manifest, store)
     if _txn_applied(manifest, txn):
         return 0
     admitted = _admit_batch(
-        spark, batch, target, manifest, key, num_buckets, store, stats_cols
+        spark, batch, target, manifest, key, num_buckets or 1, store, stats_cols
     )
     if admitted is None:
         return 0
     bucketed, affected, stats_cols, n_rows = admitted
     merged = bucketed
-    # file-level pruning: only the affected buckets' live files are read.
-    # An affected bucket with pending MOR deltas contributes its RESOLVED
-    # rows and this commit folds those deltas away; unaffected buckets'
-    # deltas carry forward intact.
+    # an auto-sized table's layout: a new one starts at the size of the
+    # admitted batch, an existing one doubles once its buckets pass the
+    # target.  Either commit writes every bucket at the new count.
+    resized = None
+    if num_buckets is None:
+        resized = _sized(_batch_bytes(bucketed))
+    elif auto and manifest is not None:
+        resized = _grown(target, manifest, num_buckets)
+    grows = manifest is not None and resized is not None
+    # file-level pruning: only the affected buckets' live files are read
+    # (every bucket when the layout grows).  An affected bucket with
+    # pending MOR deltas contributes its RESOLVED rows and this commit
+    # folds those deltas away; unaffected buckets' deltas carry forward
+    # intact.
     current = (
         None
         if manifest is None
-        else _scope_rows(spark, target, manifest, key, affected)
+        else _scope_rows(
+            spark, target, manifest, key, None if grows else affected
+        )
     )
     if current is not None:
         # anti-join on key: keep only rows NOT being replaced.  Spark
@@ -1586,15 +1694,20 @@ def keyed_overwrite_parquet(
             BUCKET_COL, _bucket_expr(key, num_buckets)
         )
         merged = kept.unionByName(bucketed, allowMissingColumns=True)
+    if resized is not None:
+        # _commit_files re-derives the bucket column at the new count
+        merged, num_buckets = merged.drop(BUCKET_COL), resized
     # merged's schema IS the union live schema: the batch must carry
     # every existing column (missing ones raise in _align_batch_types),
     # so kept ∪ batch covers all buckets.  Optimistic rebase: a
     # concurrent commit to OTHER buckets re-bases this one; a concurrent
-    # rewrite of one of THIS merge's buckets is a conflict.
+    # rewrite of one of THIS merge's buckets is a conflict, and a
+    # growth commit, which read every bucket, rebases over nothing.
     _commit_files(
         spark, target, merged, manifest, key, num_buckets, "replace",
-        buckets=None if manifest is None else affected, guard=affected,
-        txn=txn, stats_cols=stats_cols, full_schema=True, store=store,
+        buckets=None if manifest is None or grows else affected,
+        guard=None if grows else affected, txn=txn, stats_cols=stats_cols,
+        full_schema=True, auto=auto, store=store,
     )
     if vacuum and manifest is not None:
         vacuum_keyed_table(target, retention_s=retention_s, store=store)
@@ -1990,7 +2103,7 @@ def keyed_merge_mor(
             spark, batch, target, key=key, num_buckets=num_buckets, store=store
         )
         return
-    num_buckets = _load_or_check_spec(target, key, num_buckets, store)
+    num_buckets, _ = _check_layout(target, key, num_buckets, manifest, store)
     admitted = _admit_batch(spark, batch, target, manifest, key, num_buckets, store)
     if admitted is None:
         return
@@ -2255,19 +2368,43 @@ def compact_keyed_table(
     file-level data skipping on those buckets.  Clean buckets are not
     read, not rewritten, and keep their stats entries byte-for-byte.
 
+    On an auto-sized table whose mean bucket has passed
+    :data:`TARGET_BUCKET_BYTES`, the commit instead rewrites every
+    bucket at the doubled layout (:func:`_rewrite_buckets`).
+
     Returns the number of buckets compacted (0 = nothing to do, and no
     manifest churn).  Commits through the manifest CAS; the folded base
     and delta files retire under the normal retention window so
     in-flight readers finish their snapshot."""
+    return _rewrite_buckets(
+        spark, target, lambda m: sorted(m.get("deltas", {})), store
+    )
+
+
+def _rewrite_buckets(spark, target, pick, store) -> int:
+    """The maintenance rewrite of :func:`compact_keyed_table` and
+    :func:`optimize_keyed_table`: the buckets ``pick(manifest)`` names,
+    back to one base file each with their MOR deltas folded — or, on an
+    auto-sized table whose mean bucket has passed
+    :data:`TARGET_BUCKET_BYTES`, every bucket at the doubled layout.
+    Returns the number of buckets rewritten (0: nothing to do, no
+    commit)."""
     manifest, key, num_buckets = _open_table(target, store)
-    dirty = sorted(manifest.get("deltas", {}))
-    if not dirty:
+    grown = _auto_sized(target, store) and _grown(target, manifest, num_buckets)
+    buckets = (
+        sorted(manifest["buckets"].keys() | manifest.get("deltas", {}).keys())
+        if grown
+        else pick(manifest)
+    )
+    if not buckets:
         return 0
     _commit_files(
-        spark, target, _scope_rows(spark, target, manifest, key, dirty),
-        manifest, key, num_buckets, "replace", buckets=dirty, store=store,
+        spark, target,
+        _scope_rows(spark, target, manifest, key, None if grown else buckets),
+        manifest, key, grown or num_buckets, "replace",
+        buckets=None if grown else buckets, store=store,
     )
-    return len(dirty)
+    return len(buckets)
 
 
 @_records_op("rebucket")
@@ -2280,20 +2417,25 @@ def rebucket_keyed_table(
     """Change a keyed table's bucket count, committed through the commit
     kernel (:func:`_commit_files`) like every data write.
 
-    Why it exists: the bucket layout is pinned for a target's lifetime
-    (``_load_or_check_spec`` rejects mismatched writers), which is right
-    for correctness but wrong forever — a table sized at 64 buckets when
-    small becomes 64 enormous files at 100 TB, capping merge parallelism
-    and making every bucket-pruned read touch GBs.  Re-bucketing is PURE
+    Why it exists: a table created with ``num_buckets=`` keeps that
+    layout (``_check_layout`` rejects mismatched writers), which is
+    right for correctness but wrong forever — a table sized at 64
+    buckets when small becomes 64 enormous files at 100 TB, capping
+    merge parallelism and making every bucket-pruned read touch GBs.
+    An auto-sized table (created without ``num_buckets=``) doubles its
+    layout by itself (:data:`TARGET_BUCKET_BYTES`); this is the manual
+    lever for the fixed ones, and pins an auto-sized one.  Re-bucketing is PURE
     reorganization: every live row is read back, re-hashed into the new
     layout (``xxhash64 % new_n`` — deterministic), and rewritten as one
     commit; visible content must not change (test-pinned).
 
-    Commit order matters: the manifest CAS lands FIRST (readers only
-    resolve the manifest, so they atomically flip to the new layout),
-    the spec is rewritten second.  A merge racing into the gap checks
-    the OLD spec but then loses the manifest CAS on version — it can
-    orphan data files, never corrupt the table; conversely if WE lose
+    The new count is recorded in the commit's manifest, which every
+    reader and writer takes the layout from (:func:`_layout_of`): a
+    merge that opened the table before the CAS hashed with the old
+    count and fails the kernel's "bucket count changed" rule.  The spec
+    is rewritten after the CAS and pins the layout: an auto-sized table
+    stops growing once rebucketed.  A crash between the two leaves the
+    old spec, which only the ``auto`` flag is read from.  If WE lose
     the CAS to a racing merge, ``ConcurrentWriteError`` propagates and
     the old layout stays live (our files become vacuum orphans).
     Superseded files retire under the normal retention window so
@@ -2308,8 +2450,7 @@ def rebucket_keyed_table(
     # files' footers for the columns already tracked.
     _commit_files(
         spark, target, _scope_rows(spark, target, manifest, key), manifest,
-        key, new_num_buckets, "replace",
-        extra={"num_buckets": new_num_buckets}, store=store,
+        key, new_num_buckets, "replace", store=store,
     )
     _write_spec(target, key, new_num_buckets, store)
 
@@ -2992,12 +3133,14 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     no Spark job) — what an operator checks before choosing between
     :func:`compact_keyed_table` (``max_delta_depth`` high),
     :func:`rebucket_keyed_table` (``avg_bucket_bytes`` far from the
-    merge-parallelism sweet spot), :func:`cluster_keyed_table` /
+    merge-parallelism sweet spot on a fixed layout; an ``auto_sized``
+    table doubles its layout by itself once ``avg_bucket_bytes`` passes
+    :data:`TARGET_BUCKET_BYTES`), :func:`cluster_keyed_table` /
     :func:`zorder_keyed_table` (``stats_cols`` empty or files per bucket
     = 1 on a range-queried table), and :func:`vacuum_keyed_table`
     (``retired_files`` large).
 
-    Keys: ``version, num_buckets, key, n_buckets_live, n_files,
+    Keys: ``version, num_buckets, auto_sized, key, n_buckets_live, n_files,
     total_bytes, avg_bucket_bytes, max_files_per_bucket,
     dirty_buckets, max_delta_depth, n_delta_files, retired_files,
     stats_cols, history_versions, column_mapping, dropped_columns``
@@ -3010,19 +3153,12 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     spec = store.read_json(_spec_path(target)) or {}
     buckets = manifest["buckets"]
     deltas = manifest.get("deltas", {})
-    sizes = []
-    for files in buckets.values():
-        b = 0
-        for f in files:
-            try:
-                b += os.path.getsize(os.path.join(target, f))
-            except OSError:
-                pass
-        sizes.append(b)
+    sizes = [_file_bytes(target, files) for files in buckets.values()]
     n_files = sum(len(fs) for fs in buckets.values())
     return {
         "version": manifest["version"],
-        "num_buckets": spec.get("num_buckets"),
+        "num_buckets": _layout_of(target, manifest, store),
+        "auto_sized": bool(spec.get("auto")),
         "key": spec.get("key"),
         "n_buckets_live": len(buckets),
         "n_files": n_files,
@@ -4080,7 +4216,7 @@ def apply_changes(
         twanted = {
             r[0]
             for r in src.select(
-                _bucket_expr("__ck", store.read_json(_spec_path(tomb_path))["num_buckets"])
+                _bucket_expr("__ck", _layout_of(tomb_path, tmanifest, store))
             ).distinct().collect()
         }
         trows = (
@@ -4186,14 +4322,13 @@ def apply_changes(
             F.col("__ck").alias(key), F.col("__cseq").alias(CDC_TOMB_COL)
         )
         if tmanifest is not None:
-            spec_nb = store.read_json(_spec_path(tomb_path))["num_buckets"]
-        elif num_buckets is not None:
-            spec_nb = num_buckets
+            tomb_nb = _layout_of(tomb_path, tmanifest, store)
         else:
-            tgt_spec = store.read_json(_spec_path(target))
-            spec_nb = tgt_spec["num_buckets"] if tgt_spec else 16
+            tomb_nb = _layout_of(
+                target, _load_manifest(target, store), store
+            ) or num_buckets or 16
         keyed_merge_mor(
-            spark, tomb_rows, tomb_path, key=key, num_buckets=spec_nb,
+            spark, tomb_rows, tomb_path, key=key, num_buckets=tomb_nb,
             store=store,
         )
     return {"upserted": upserted, "deleted": deleted, "ignored": ignored}
@@ -4424,9 +4559,13 @@ def restore_keyed_table(
     (a batch applied after ``version`` stays applied, so its replay is
     still refused) and the ambient policies stay as the tip has them.
 
-    Refused across a re-bucketing (the snapshot's bucket ids would prune
-    wrongly under the current spec); restoring ACROSS a type widening is
-    allowed and restores the old schema, Delta-semantics.
+    The restored snapshot keeps the bucket count it was written under
+    (the manifest records it), so restoring an auto-sized table to a
+    version before a growth commit restores the smaller layout; on a
+    fixed layout a restore across :func:`rebucket_keyed_table` is
+    refused, since only a rebucket changes that layout.  Restoring
+    ACROSS a type widening is allowed and restores the old schema,
+    Delta-semantics.
 
     100 TB shape: pure metadata — one manifest read, an existence probe
     per snapshot file (HEAD on an object store), one CAS.  Zero data
@@ -4443,12 +4582,14 @@ def restore_keyed_table(
             f"no snapshot manifest for version {version} at {target} "
             "(expired by vacuum retention, or never committed)"
         )
-    spec = store.read_json(_spec_path(target))
-    snap_nb = snap.get("num_buckets")
-    if spec is not None and snap_nb is not None and snap_nb != spec["num_buckets"]:
+    # the restored manifest carries the snapshot's own layout, so any
+    # snapshot reads and merges correctly; a fixed layout still changes
+    # only through rebucket_keyed_table
+    snap_nb, now_nb = snap.get("num_buckets"), _layout_of(target, cur, store)
+    if snap_nb and snap_nb != now_nb and not _auto_sized(target, store):
         raise ValueError(
             f"cannot restore version {version}: it was written under "
-            f"{snap_nb} buckets but the table now has {spec['num_buckets']} "
+            f"{snap_nb} buckets but the table now has {now_nb} "
             "(a re-bucketing happened in between; restore before re-bucketing "
             "or rebucket back first)"
         )
@@ -4530,7 +4671,10 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
 
     spec = store.read_json(_spec_path(src))
     if spec is not None:
-        _write_spec(dest, spec["key"], spec["num_buckets"], store)
+        _write_spec(
+            dest, spec["key"], _layout_of(src, manifest, store), store,
+            bool(spec.get("auto")),
+        )
     constraints = store.read_json(_constraints_path(src))
     if constraints:
         store.write_json(_constraints_path(dest), constraints)
@@ -4612,7 +4756,7 @@ def keyed_append(
         return sum(len(fs) for fs in m["buckets"].values()) if m else 0
     if _txn_applied(manifest, txn):
         return 0
-    num_buckets = _load_or_check_spec(target, key, num_buckets, store)
+    num_buckets, _ = _check_layout(target, key, num_buckets, manifest, store)
     admitted = _admit_batch(
         spark, batch, target, manifest, key, num_buckets, store, stats_cols
     )
@@ -4680,22 +4824,21 @@ def optimize_keyed_table(
     a bucket rewrites its foreign references into clone-owned files —
     optimize is also how a clone self-contains its hot buckets.
 
+    On an auto-sized table whose mean bucket has passed
+    :data:`TARGET_BUCKET_BYTES`, the commit instead rewrites every
+    bucket at the doubled layout (:func:`_rewrite_buckets`).
+
     Returns the number of buckets packed (0 = nothing to do, no
     manifest churn).
     """
-    manifest, key, num_buckets = _open_table(target, store)
-    packable = sorted(
-        b
-        for b, fs in manifest["buckets"].items()
-        if len(fs) > max_files_per_bucket
+    return _rewrite_buckets(
+        spark,
+        target,
+        lambda m: sorted(
+            b for b, fs in m["buckets"].items() if len(fs) > max_files_per_bucket
+        ),
+        store,
     )
-    if not packable:
-        return 0
-    _commit_files(
-        spark, target, _scope_rows(spark, target, manifest, key, packable),
-        manifest, key, num_buckets, "replace", buckets=packable, store=store,
-    )
-    return len(packable)
 
 
 # ---------------------------------------------------------------------------

@@ -79,6 +79,32 @@ def _setup_append(spark, t):
     sink.keyed_append(spark, _rows(spark, [("n9", 9, 9.0), ("n8", 8, 8.0)]), t)
 
 
+def _base_auto(spark, target):
+    """:func:`_base` on an auto-sized layout (no ``num_buckets=``)."""
+    sink.keyed_overwrite_parquet(
+        spark,
+        _rows(spark, [(f"k{i}", i, float(i % 5)) for i in range(12)]),
+        target,
+        stats_cols=["v"],
+    )
+
+
+def _grow(spark, target):
+    """A 2-row CoW merge on an auto-sized table whose mean bucket has
+    just passed ``TARGET_BUCKET_BYTES``: it commits every bucket at twice
+    the count."""
+    m = sink._load_manifest(target)
+    live = sink._file_bytes(target, sink._live_files(m))
+    saved = sink.TARGET_BUCKET_BYTES
+    sink.TARGET_BUCKET_BYTES = -(-live // (2 * m["num_buckets"]))
+    try:
+        sink.keyed_overwrite_parquet(
+            spark, _rows(spark, [("k1", 10, 0.5), ("k2", 20, 0.5)]), target
+        )
+    finally:
+        sink.TARGET_BUCKET_BYTES = saved
+
+
 def _setup_renamed(spark, t):
     _base(spark, t)
     sink.rename_column(spark, t, "w", "w2")
@@ -95,6 +121,7 @@ OPS = {
             s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t
         ),
     ),
+    "grow": (_base_auto, _grow),
     "merge_mor": (
         _base,
         lambda s, t: sink.keyed_merge_mor(
@@ -196,6 +223,7 @@ METADATA_OPS = {
 #: change to the path's cost: re-measure and say why.
 JOB_BUDGET = {
     "merge": 6,
+    "grow": 6,
     "merge_mor": 3,
     "append": 6,
     "delete_where": 6,
@@ -354,8 +382,8 @@ def test_write_path_job_budget_and_manifest_invariants(spark, tmp_path, op):
 def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
     spark, tmp_path
 ):
-    """At the default 64-bucket layout (more live files than Spark's
-    default listing threshold of 32): a table read and the high-water
+    """At a 64-bucket layout (more live files than Spark's default
+    listing threshold of 32): a table read and the high-water
     mark run no Spark job, and a 2-row merge keeps its job count, adds
     exactly one file to each bucket it touches, and writes through no
     more tasks than buckets touched (the AQE-coalesced exchange)."""
@@ -370,6 +398,7 @@ def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
             [(f"k{i}", f"f{i % 7:03d}.csv", i) for i in range(200)], schema
         ),
         target,
+        num_buckets=64,
         stats_cols=["fileName"],
     )
     before = sink._load_manifest(target)

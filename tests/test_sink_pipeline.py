@@ -535,7 +535,9 @@ def test_high_water_mark_from_manifest_equals_scan(spark, tmp_path):
     schema = "oid__id string, fileName string"
     rows = [(f"k{i}", f"f{i:03d}.csv") for i in range(40)]
     old = str(tmp_path / "pre_stats")
-    keyed_overwrite_parquet(spark, spark.createDataFrame(rows, schema), old)
+    keyed_overwrite_parquet(
+        spark, spark.createDataFrame(rows, schema), old, num_buckets=64
+    )
     # a later stats-keeping merge covers only the buckets it rewrites
     keyed_overwrite_parquet(
         spark,

@@ -944,7 +944,7 @@ def test_stream_dedup_ingest_releases_its_batch_checkpoint(spark, tmp_path):
     q.awaitTermination(120)
     assert q.exception() is None
     assert read_keyed_table(spark, out).count() == 2
-    assert _persisted(spark) == held
+    assert _persisted(spark) <= held
 
 
 def test_stream_sketch_ingest_releases_its_batch_checkpoints(spark, tmp_path):
@@ -962,4 +962,4 @@ def test_stream_sketch_ingest_releases_its_batch_checkpoints(spark, tmp_path):
     q.awaitTermination(300)
     assert q.exception() is None
     assert read_keyed_table(spark, os.path.join(out, "kmv")).count() == 2
-    assert _persisted(spark) == held
+    assert _persisted(spark) <= held

@@ -492,7 +492,7 @@ def test_add_documents_releases_its_checkpoint(spark, tmp_path):
     add_documents(spark, docs.filter("doc_id = 2"), idx)
     with _pytest.raises(ValueError, match="already indexed"):
         add_documents(spark, docs.filter("doc_id = 1"), idx)
-    assert set(persisted().keySet()) == held
+    assert set(persisted().keySet()) <= held
 
 
 def test_hybrid_rrf_fusion_semantics(spark):

@@ -577,4 +577,4 @@ def test_stream_semantic_ingest_releases_its_batch_checkpoint(spark, tmp_path):
     q.awaitTermination(120)
     assert q.exception() is None
     assert read_keyed_table(spark, out).count() == 2
-    assert set(persisted().keySet()) == held
+    assert set(persisted().keySet()) <= held

@@ -1,10 +1,12 @@
 """Scale-stress the table-format layer: does the cost of a SMALL keyed
 batch stay flat while the TABLE grows?
 
-For tables of 50k / 200k / 800k rows (64 buckets), applies the same
-200-key batch through copy-on-write and merge-on-read, then refreshes a
-grouped materialized view incrementally, recording wall time and bytes
-written / files read.  The 100 TB claims under test:
+For tables of 50k / 200k / 800k rows, each on its auto-sized layout
+(sized to its bytes, ``sink.TARGET_BUCKET_BYTES``) and on an explicit
+64-bucket baseline, applies the same 200-key batch through
+copy-on-write and merge-on-read, then refreshes a grouped materialized
+view incrementally, recording the layout, wall time and bytes written /
+files read.  The 100 TB claims under test:
 
 - CoW write volume grows with table size (every affected bucket is
   rewritten; a scattered 200-key batch touches most of them);
@@ -18,6 +20,7 @@ markdown table for SCALE.md)
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 import shutil
 import sys
@@ -28,6 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from airflow_postgres_etl_spark.session import get_spark  # noqa: E402
 from airflow_postgres_etl_spark.sink import (  # noqa: E402
     compact_keyed_table,
+    describe_keyed_table,
     keyed_merge_mor,
     keyed_overwrite_parquet,
 )
@@ -50,9 +54,12 @@ def new_bytes(target: str, before: set[str]) -> int:
 def main() -> None:
     spark = get_spark(app_name="scale-stress-table")
     shutil.rmtree(WORK, ignore_errors=True)
-    print("| rows | CoW merge | CoW MB | MOR merge | MOR MB | compact | view full | view incr | files read |")
-    print("|---|---|---|---|---|---|---|---|---|")
-    for n in (50_000, 200_000, 800_000):
+    print(
+        "| rows | layout | buckets | CoW merge | CoW MB | MOR merge | MOR MB "
+        "| compact | view full | view incr | files read |"
+    )
+    print("|---|---|---|---|---|---|---|---|---|---|---|")
+    for n, num_buckets in itertools.product((50_000, 200_000, 800_000), (None, 64)):
         base = spark.range(n).selectExpr(
             "concat('k', id) AS oid__id",
             "concat('g', id % 7) AS grp",
@@ -70,30 +77,35 @@ def main() -> None:
 
         stats = {}
         for mode, merge in (("cow", keyed_overwrite_parquet), ("mor", keyed_merge_mor)):
-            t = os.path.join(WORK, f"{mode}{n}")
-            keyed_overwrite_parquet(spark, base, t, vacuum=False)
+            t = os.path.join(WORK, f"{mode}{n}_{num_buckets}")
+            keyed_overwrite_parquet(
+                spark, base, t, num_buckets=num_buckets, vacuum=False
+            )
             _, before = table_bytes(t)
             t0 = time.perf_counter()
             merge(spark, batch(1), t)
             stats[f"{mode}_s"] = time.perf_counter() - t0
             stats[f"{mode}_mb"] = new_bytes(t, before) / 1e6
-        t = os.path.join(WORK, f"mor{n}")
+        t = os.path.join(WORK, f"mor{n}_{num_buckets}")
         t0 = time.perf_counter()
         compact_keyed_table(spark, t)
         stats["compact_s"] = time.perf_counter() - t0
 
-        t = os.path.join(WORK, f"cow{n}")
-        mv = os.path.join(WORK, f"mv{n}")
+        t = os.path.join(WORK, f"cow{n}_{num_buckets}")
+        layout = describe_keyed_table(t)["num_buckets"]
+        mv = os.path.join(WORK, f"mv{n}_{num_buckets}")
         t0 = time.perf_counter()
         r_full = refresh_aggregate_view(spark, t, mv, ["grp"], ["v"])
         stats["full_s"] = time.perf_counter() - t0
         assert r_full["mode"] == "full"
         n_table_files = r_full["files_read"]
-        # bucket-correlated batch: 200 keys all hashing to ONE bucket —
-        # the workload where incremental refresh shines (time-correlated
-        # or entity-correlated upserts cluster in few buckets).  A fully
-        # SCATTERED batch rewrites ~every bucket under CoW, so the diff
-        # degenerates to table-sized — that case is the `CoW MB` column.
+        # bucket-correlated batch: 200 keys all hashing to ONE bucket of
+        # the table's own layout — the workload where incremental refresh
+        # shines (time-correlated or entity-correlated upserts cluster in
+        # few buckets).  A fully SCATTERED batch rewrites ~every bucket
+        # under CoW, so the diff degenerates to table-sized — that case
+        # is the `CoW MB` column.  On a one-bucket layout the two cases
+        # coincide: every batch rewrites the whole table.
         from pyspark.sql import functions as F
 
         keys = [
@@ -101,7 +113,8 @@ def main() -> None:
             for r in spark.range(n)
             .selectExpr("concat('k', id) AS oid__id")
             .filter(
-                F.pmod(F.xxhash64(F.col("oid__id").cast("string")), F.lit(64)) == 0
+                F.pmod(F.xxhash64(F.col("oid__id").cast("string")), F.lit(layout))
+                == 0
             )
             .limit(BATCH_KEYS)
             .collect()
@@ -117,7 +130,8 @@ def main() -> None:
         assert r_inc["mode"] == "incremental"
 
         print(
-            f"| {n:,} | {stats['cow_s']:.1f} s | {stats['cow_mb']:.1f} | "
+            f"| {n:,} | {num_buckets or 'auto'} | {layout} | "
+            f"{stats['cow_s']:.1f} s | {stats['cow_mb']:.1f} | "
             f"{stats['mor_s']:.1f} s | {stats['mor_mb']:.2f} | "
             f"{stats['compact_s']:.1f} s | {stats['full_s']:.1f} s "
             f"({n_table_files} files) | "
