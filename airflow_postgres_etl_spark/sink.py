@@ -71,9 +71,13 @@ Two implementations:
   ``num_buckets=`` keeps that count until :func:`rebucket_keyed_table`.
   One created without it is auto-sized: its first commit starts at the
   smallest power of two whose buckets fit the admitted batch in
-  :data:`TARGET_BUCKET_BYTES`, and a CoW merge, compaction or optimize
-  doubles the layout (one commit rewriting every bucket) once the mean
-  bucket passes the target.  A trickle-fed table thus stays at a few
+  :data:`TARGET_BUCKET_BYTES` (at most 64), and a CoW merge, compaction
+  or optimize doubles the layout (one commit rewriting every bucket)
+  once the mean bucket passes the target.  The stored bytes it sums are
+  recorded per file in the manifest (``bytes``) when the file is
+  committed, so the check reads no data file.  The ``auto`` flag lives
+  in the spec, whose count stays the creation count: only the
+  manifest's moves.  A trickle-fed table thus stays at a few
   files.  Few buckets also means few disjoint ones: concurrent writers
   that must land without conflicting (disjoint-bucket merges) should
   pin ``num_buckets=``.
@@ -155,6 +159,13 @@ TOMBSTONE_COL = "__tombstone"
 #: bucket it touches, so this also bounds what a one-row merge rewrites.
 TARGET_BUCKET_BYTES = 32 << 20
 
+#: most buckets an auto-sized table's first commit starts at: the fixed
+#: default before layouts were sized.  The start comes from the admitted
+#: batch's in-memory bytes, which overstate its parquet many times over
+#: (:func:`_batch_bytes`), and layouts never shrink; a table that needs
+#: more grows on a later rewrite, sized by its stored bytes.
+_MAX_START_BUCKETS = 64
+
 #: default retention for superseded files (seconds).  A reader that
 #: resolved the manifest just before a merge still streams the OLD files
 #: afterwards; deleting them immediately would fail that reader mid-scan.
@@ -194,12 +205,11 @@ def _layout_of(target: str, manifest: dict | None, store) -> int | None:
 def _check_layout(
     target: str, key: str, num_buckets: int | None, manifest: dict | None,
     store=LOCAL_STORE,
-) -> tuple[int | None, bool]:
-    """Validate the caller's layout against the target's and return
-    ``(bucket count, auto-sized)``.  ``num_buckets=None`` adopts the
-    existing table's layout; on a new table it asks for an auto-sized
-    one, whose count (None here) the first commit takes from the
-    admitted batch."""
+) -> int | None:
+    """Validate the caller's layout against the target's and return the
+    bucket count.  ``num_buckets=None`` adopts the existing table's
+    layout; on a new table it asks for an auto-sized one, whose count
+    (None here) the first commit takes from the admitted batch."""
     spec = store.read_json(_spec_path(target))
     have = _layout_of(target, manifest, store)
     if have is None:
@@ -208,7 +218,7 @@ def _check_layout(
                 f"{target} has a manifest but no recorded bucket layout: "
                 "pass num_buckets="
             )
-        return num_buckets, num_buckets is None
+        return num_buckets
     if num_buckets is None:
         num_buckets = have
     if num_buckets != have or (spec is not None and spec["key"] != key):
@@ -218,7 +228,7 @@ def _check_layout(
             "rebucket_keyed_table or an auto-sized table's growth changes "
             "the bucket layout"
         )
-    return num_buckets, bool(spec and spec.get("auto"))
+    return num_buckets
 
 
 def _auto_sized(target: str, store) -> bool:
@@ -248,23 +258,25 @@ def _sized(n_bytes: int, num_buckets: int = 1) -> int:
     return num_buckets
 
 
-def _file_bytes(target: str, files) -> int:
-    """Stored bytes of ``files`` (target-relative or absolute); a file
-    gone from disk counts 0."""
-    total = 0
-    for f in files:
-        try:
-            total += os.path.getsize(os.path.join(target, f))
-        except OSError:
-            pass
-    return total
+def _stored_bytes(target: str, manifest: dict, files, store) -> int:
+    """Stored bytes of ``files``: the sizes the manifest recorded when
+    they were committed (``bytes``, filled in :func:`_commit_manifest`),
+    else — a manifest written before sizes were recorded — the store's
+    answer; a file gone from the store counts 0."""
+    sizes = manifest.get("bytes") or {}
+    return sum(
+        sizes[f] if f in sizes else store.size(os.path.join(target, f)) or 0
+        for f in files
+    )
 
 
-def _grown(target: str, manifest: dict, num_buckets: int) -> int | None:
+def _grown(target: str, manifest: dict, num_buckets: int, store) -> int | None:
     """The doubled layout an auto-sized table's next rewrite commits at,
     or None while its mean bucket (live base and delta bytes over
-    ``num_buckets``) is within the target."""
-    grown = _sized(_file_bytes(target, _live_files(manifest)), num_buckets)
+    ``num_buckets``) is within the target.  A manifest read: every
+    committed file's size is recorded in it."""
+    live = _stored_bytes(target, manifest, _live_files(manifest), store)
+    grown = _sized(live, num_buckets)
     return grown if grown > num_buckets else None
 
 
@@ -272,7 +284,8 @@ def _batch_bytes(cp: DataFrame) -> int:
     """Bytes the block manager holds for a local checkpoint — the size
     an auto-sized table's first commit starts from, read on the driver
     without a Spark job.  In-memory rows are larger than their parquet
-    files, so a table starts at or above the layout its files need."""
+    files, so a table starts at or above the layout its files need —
+    capped at :data:`_MAX_START_BUCKETS`."""
     rdd = cp._jdf.queryExecution().analyzed().rdd()
     return sum(
         info.memSize() + info.diskSize()
@@ -811,8 +824,8 @@ def _retire(target: str, tip: dict, live, store) -> list[dict]:
 def _repoint(snap: dict, ref) -> dict:
     """``snap``'s files under the references ``ref(path)`` maps them to
     — base and delta paths and the keys of the per-file ``stats``,
-    ``blooms`` and ``rows`` — with the entries that describe those
-    files: the recorded schema, the bucket layout and the column
+    ``blooms``, ``rows`` and ``bytes`` — with the entries that describe
+    those files: the recorded schema, the bucket layout and the column
     mapping (pinned even when empty, so the commit carry never lays
     the tip's names over them).  The table state (``txns`` and the
     :data:`_POLICIES`) is left out for :func:`_commit_manifest` to take
@@ -826,7 +839,7 @@ def _repoint(snap: dict, ref) -> dict:
         "column_mapping": snap.get("column_mapping", {}),
         "dropped_columns": snap.get("dropped_columns", []),
     }
-    for k in ("stats", "blooms", "rows"):
+    for k in ("stats", "blooms", "rows", "bytes"):
         out[k] = {ref(f): v for f, v in (snap.get(k) or {}).items()}
     for k in ("schema", "num_buckets"):
         if snap.get(k):
@@ -888,6 +901,16 @@ def _commit_manifest(
     missing = sorted(live - set(rows))
     rows.update(_fill_row_counts(target, missing, store))
     manifest["rows"] = rows
+    # per-file stored bytes — what an auto-sized table's growth check
+    # sums (_grown) without touching a data file: carried for surviving
+    # files, sized through the store for the commit's new ones (HEAD on
+    # an object store).  A file the store cannot size gets no entry.
+    sizes = {f: n for f, n in (manifest.get("bytes") or {}).items() if f in live}
+    for f in sorted(live - set(sizes)):
+        n = store.size(os.path.join(target, f))
+        if n is not None:
+            sizes[f] = n
+    manifest["bytes"] = sizes
     store.replace_if_version(_manifest_path(target), manifest, expected_version)
     store.write_json(_version_manifest_path(target, manifest["version"]), manifest)
 
@@ -1495,6 +1518,11 @@ def _commit_files(
             retired=_retire(target, cur, live, store),
             stats=stats,
             blooms=_carry_blooms(cur, live),
+            # per-file row counts and stored bytes never change:
+            # _commit_manifest keeps the live files' and fills the new
+            # files' (without these it re-reads every live file's)
+            rows=cur.get("rows") or {},
+            bytes=cur.get("bytes") or {},
             **(extra or {}),
         )
         schema = (
@@ -1651,7 +1679,8 @@ def keyed_overwrite_parquet(
     txn = _txn_of(txn_app, txn_seq)
     os.makedirs(target, exist_ok=True)
     manifest = _load_manifest(target, store)
-    num_buckets, auto = _check_layout(target, key, num_buckets, manifest, store)
+    num_buckets = _check_layout(target, key, num_buckets, manifest, store)
+    auto = num_buckets is None or _auto_sized(target, store)
     if _txn_applied(manifest, txn):
         return 0
     admitted = _admit_batch(
@@ -1666,9 +1695,9 @@ def keyed_overwrite_parquet(
     # target.  Either commit writes every bucket at the new count.
     resized = None
     if num_buckets is None:
-        resized = _sized(_batch_bytes(bucketed))
+        resized = min(_sized(_batch_bytes(bucketed)), _MAX_START_BUCKETS)
     elif auto and manifest is not None:
-        resized = _grown(target, manifest, num_buckets)
+        resized = _grown(target, manifest, num_buckets, store)
     grows = manifest is not None and resized is not None
     # file-level pruning: only the affected buckets' live files are read
     # (every bucket when the layout grows).  An affected bucket with
@@ -2103,7 +2132,7 @@ def keyed_merge_mor(
             spark, batch, target, key=key, num_buckets=num_buckets, store=store
         )
         return
-    num_buckets, _ = _check_layout(target, key, num_buckets, manifest, store)
+    num_buckets = _check_layout(target, key, num_buckets, manifest, store)
     admitted = _admit_batch(spark, batch, target, manifest, key, num_buckets, store)
     if admitted is None:
         return
@@ -2390,7 +2419,9 @@ def _rewrite_buckets(spark, target, pick, store) -> int:
     Returns the number of buckets rewritten (0: nothing to do, no
     commit)."""
     manifest, key, num_buckets = _open_table(target, store)
-    grown = _auto_sized(target, store) and _grown(target, manifest, num_buckets)
+    grown = _auto_sized(target, store) and _grown(
+        target, manifest, num_buckets, store
+    )
     buckets = (
         sorted(manifest["buckets"].keys() | manifest.get("deltas", {}).keys())
         if grown
@@ -3153,12 +3184,14 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     spec = store.read_json(_spec_path(target)) or {}
     buckets = manifest["buckets"]
     deltas = manifest.get("deltas", {})
-    sizes = [_file_bytes(target, files) for files in buckets.values()]
+    sizes = [
+        _stored_bytes(target, manifest, files, store) for files in buckets.values()
+    ]
     n_files = sum(len(fs) for fs in buckets.values())
     return {
         "version": manifest["version"],
         "num_buckets": _layout_of(target, manifest, store),
-        "auto_sized": bool(spec.get("auto")),
+        "auto_sized": _auto_sized(target, store),
         "key": spec.get("key"),
         "n_buckets_live": len(buckets),
         "n_files": n_files,
@@ -4626,13 +4659,13 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     is absolute — so reads, min/max data skipping, bloom pruning, MOR
     precedence, restore, CDF and the lazy sketch sidecar all work on
     foreign entries with no special-casing.  File-keyed metadata
-    (min/max stats, inline blooms, row counts, MOR delta entries with
-    their commit seqs) is carried under the rewritten keys, with the
-    recorded schema and column mapping (:func:`_repoint`); the bucket
-    spec and CHECK constraints are copied.  Writer-txn watermarks and
-    ambient policies are table state and do not clone (as in Delta): a
-    clone is a new table to every idempotent writer, which must
-    re-apply its batches here.  The clone's history STARTS at src's current
+    (min/max stats, inline blooms, row counts, stored sizes, MOR delta
+    entries with their commit seqs) is carried under the rewritten keys,
+    with the recorded schema, bucket count and column mapping
+    (:func:`_repoint`); the bucket spec and CHECK constraints are copied
+    as they are.  Writer-txn watermarks and ambient policies are table
+    state and do not clone (as in Delta): a clone is a new table to
+    every idempotent writer, which must re-apply its batches here.  The clone's history STARTS at src's current
     version number: MOR precedence is "highest seq wins" and cloned
     delta entries keep their source seqs, so the clone's next commits
     must number above them.
@@ -4669,12 +4702,11 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
         # their true owner — references never chain through intermediaries
         return f if os.path.isabs(f) else os.path.join(src_abs, f)
 
+    # the spec as it is: the current count rides in the manifest
+    # (_repoint), and wap_publish compares the branch's spec with it
     spec = store.read_json(_spec_path(src))
     if spec is not None:
-        _write_spec(
-            dest, spec["key"], _layout_of(src, manifest, store), store,
-            bool(spec.get("auto")),
-        )
+        store.write_json(_spec_path(dest), spec)
     constraints = store.read_json(_constraints_path(src))
     if constraints:
         store.write_json(_constraints_path(dest), constraints)
@@ -4756,7 +4788,7 @@ def keyed_append(
         return sum(len(fs) for fs in m["buckets"].values()) if m else 0
     if _txn_applied(manifest, txn):
         return 0
-    num_buckets, _ = _check_layout(target, key, num_buckets, manifest, store)
+    num_buckets = _check_layout(target, key, num_buckets, manifest, store)
     admitted = _admit_batch(
         spark, batch, target, manifest, key, num_buckets, store, stats_cols
     )

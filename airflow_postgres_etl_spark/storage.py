@@ -116,6 +116,14 @@ class LocalManifestStore:
         except FileNotFoundError:
             return None
 
+    def size(self, path: str) -> int | None:
+        """Stored bytes of a data file, None if gone (HEAD on an object
+        store) — recorded per file in the manifest at commit time."""
+        try:
+            return os.path.getsize(path)
+        except FileNotFoundError:
+            return None
+
     def delete_file(self, path: str) -> None:
         """Delete a file or commit object; missing is fine (idempotent)."""
         try:
@@ -217,6 +225,12 @@ class FakeConditionalStore:
             return self.object_mtimes[path]
         try:
             return os.stat(path).st_mtime
+        except FileNotFoundError:
+            return None
+
+    def size(self, path: str) -> int | None:
+        try:
+            return os.path.getsize(path)
         except FileNotFoundError:
             return None
 

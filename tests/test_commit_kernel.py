@@ -94,7 +94,7 @@ def _grow(spark, target):
     just passed ``TARGET_BUCKET_BYTES``: it commits every bucket at twice
     the count."""
     m = sink._load_manifest(target)
-    live = sink._file_bytes(target, sink._live_files(m))
+    live = sum(m["bytes"][f] for f in sink._live_files(m))
     saved = sink.TARGET_BUCKET_BYTES
     sink.TARGET_BUCKET_BYTES = -(-live // (2 * m["num_buckets"]))
     try:

@@ -20,6 +20,7 @@ from airflow_postgres_etl_spark.storage import (
     LOCAL_STORE,
     ConcurrentWriteError,
     FakeConditionalStore,
+    LocalManifestStore,
 )
 
 
@@ -44,7 +45,7 @@ def _split_target(target, store=LOCAL_STORE) -> int:
     """A target the table's mean bucket passes by less than 2×, so the
     next growth doubles the layout exactly once."""
     m = sink._load_manifest(target, store)
-    live = sink._file_bytes(target, sink._live_files(m))
+    live = sum(m["bytes"][f] for f in sink._live_files(m))
     return -(-live // (2 * m["num_buckets"]))
 
 
@@ -94,6 +95,51 @@ def test_new_table_is_sized_from_its_admitted_batch(spark, tmp_path, monkeypatch
     assert all(int(b) < n for b in m["buckets"])
     assert _file_buckets(spark, sized, m, n) == {b: {int(b)} for b in m["buckets"]}
     assert _state(spark, sized) == {f"k{i}": i for i in range(2000)}
+
+
+def test_start_size_is_capped_at_the_old_fixed_default(spark, tmp_path, monkeypatch):
+    """The start size comes from in-memory bytes, which overstate the
+    parquet; a batch far past the target starts at 64 buckets, the old
+    fixed default, and no wider."""
+    monkeypatch.setattr(sink, "TARGET_BUCKET_BYTES", 1)
+    target = str(tmp_path / "t")
+    _table(spark, target)
+    assert sink._load_manifest(target)["num_buckets"] == 64
+    assert _state(spark, target) == {f"k{i}": i for i in range(200)}
+
+
+def test_growth_check_reads_sizes_from_the_manifest(spark, tmp_path, monkeypatch):
+    """Every commit records its new files' stored bytes in the manifest,
+    sized through the store, so the growth check of a later merge sizes
+    no file: a one-bucket merge on a four-bucket table sizes only the
+    file it wrote."""
+
+    class SizingStore(LocalManifestStore):
+        sized: list[str] = []
+
+        def size(self, path):
+            self.sized.append(path)
+            return super().size(path)
+
+    store = SizingStore()
+    target = str(tmp_path / "t")
+    with monkeypatch.context() as mp:
+        mp.setattr(sink, "_batch_bytes", lambda cp: 4 * sink.TARGET_BUCKET_BYTES)
+        _table(spark, target, store=store)
+    m = sink._load_manifest(target, store)
+    assert m["num_buckets"] == 4
+    assert m["bytes"] == {
+        f: os.path.getsize(os.path.join(target, f)) for f in sink._live_files(m)
+    }
+    store.sized.clear()
+    sink.keyed_overwrite_parquet(
+        spark, _rows(spark, [("k1", -1)]), target, vacuum=False, store=store
+    )
+    after = sink._load_manifest(target, store)
+    assert after["num_buckets"] == 4
+    new = set(sink._live_files(after)) - set(sink._live_files(m))
+    assert len(new) == 1
+    assert store.sized == [os.path.join(target, f) for f in new]
 
 
 def test_cow_merge_grows_the_layout_in_one_commit(spark, tmp_path, monkeypatch):

@@ -374,6 +374,9 @@ def test_compaction_loses_cas_to_concurrent_mor_merge(spark, tmp_path):
         def list_dir(self, path):
             return LOCAL_STORE.list_dir(path)
 
+        def size(self, path):
+            return LOCAL_STORE.size(path)
+
         def replace_if_version(self, path, manifest, expected_version):
             if self.armed and path == _manifest_path(target):
                 self.armed = False
@@ -417,6 +420,9 @@ def test_mor_merge_rebases_over_concurrent_mor_merge(spark, tmp_path):
 
         def list_dir(self, path):
             return LOCAL_STORE.list_dir(path)
+
+        def size(self, path):
+            return LOCAL_STORE.size(path)
 
         def replace_if_version(self, path, manifest, expected_version):
             if self.armed and path == _manifest_path(target):

@@ -250,6 +250,9 @@ def test_rebucket_loses_cas_to_concurrent_merge(spark, tmp_path):
         def list_dir(self, path):
             return LOCAL_STORE.list_dir(path)
 
+        def size(self, path):
+            return LOCAL_STORE.size(path)
+
         def replace_if_version(self, path, manifest, expected_version):
             if self.armed and path == _manifest_path(target):
                 self.armed = False

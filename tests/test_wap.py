@@ -155,6 +155,41 @@ def test_layout_divergence_refused(spark, tmp_path):
         t.publish("rb")
 
 
+def test_publish_a_branch_of_a_grown_auto_sized_table(spark, tmp_path, monkeypatch):
+    """An auto-sized table (no num_buckets=) doubles its layout in the
+    manifest while its spec keeps the creation count.  A branch of the
+    grown table, merged on, publishes: the branch's layout is the
+    source's, and the source lands with the branch's content."""
+
+    def rows(data):
+        return spark.createDataFrame(data, "k string, v long")
+
+    src = str(tmp_path / "t")
+    sink.keyed_overwrite_parquet(
+        spark, rows([(f"k{i}", i) for i in range(200)]), src, key="k",
+        vacuum=False,
+    )
+    live = sum(
+        os.path.getsize(os.path.join(src, f))
+        for f in sink._live_files(sink._load_manifest(src))
+    )
+    with monkeypatch.context() as mp:
+        mp.setattr(sink, "TARGET_BUCKET_BYTES", -(-live // 2))
+        sink.keyed_overwrite_parquet(spark, rows([("k1", -1)]), src, key="k")
+    assert sink._load_manifest(src)["num_buckets"] == 2
+
+    branch = sink.wap_begin(src, "load")
+    sink.keyed_overwrite_parquet(
+        spark, rows([("k2", -2), ("new", 7)]), branch, key="k", vacuum=False
+    )
+    sink.wap_publish(spark, src, "load")
+    want = {f"k{i}": i for i in range(200)}
+    want.update(k1=-1, k2=-2, new=7)
+    got = sink.read_keyed_table(spark, src).collect()
+    assert {r["k"]: r["v"] for r in got} == want and len(got) == len(want)
+    assert sink._load_manifest(src)["num_buckets"] == 2
+
+
 def test_mor_seq_safety_after_publish(spark, tmp_path):
     """Branch MOR commits push its version past base+1; publish
     fast-forwards the source to the BRANCH's version so the source's
