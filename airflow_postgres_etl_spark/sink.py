@@ -3136,26 +3136,33 @@ def _write_bucketed(
     value-contiguous files (cluster / z-order)."""
     if range_by is not None:
         files_per_bucket, cols = range_by
-        df.repartitionByRange(
+        df = df.repartitionByRange(
             num_buckets * files_per_bucket, F.col(BUCKET_COL), *cols
-        ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        return
-    # co-locate each bucket's rows before the partitioned write: without
-    # this every task writes a file into every bucket directory (tasks ×
-    # buckets small files — measured 2.3× slower ingest locally, and the
-    # classic small-file problem on a real cluster).
-    #
-    # The exchange is sized by AQE, not by the bucket count: a
-    # repartition by column alone starts at spark.sql.shuffle.partitions
-    # and AQE's partition coalescing shrinks it to the data (a fixed
-    # repartition(num_buckets, ...) is exempt from coalescing).  A bucket
-    # hashes to exactly one reduce partition and coalescing only merges
-    # whole partitions, so a commit still writes one file per bucket.
-    # Not coalesce(1): it collapses the upstream merge into one task.
-    # Not AQE off around the write: the conf covers the whole query
-    # planned at the write action, so the merge loses AQE's re-planning.
-    df.repartition(F.col(BUCKET_COL)).write.mode("overwrite").partitionBy(
-        BUCKET_COL
+        )
+    else:
+        # co-locate each bucket's rows before the partitioned write:
+        # without this every task writes a file into every bucket
+        # directory (tasks × buckets small files — measured 2.3× slower
+        # ingest locally, and the classic small-file problem on a real
+        # cluster).
+        #
+        # The exchange is sized by AQE, not by the bucket count: a
+        # repartition by column alone starts at
+        # spark.sql.shuffle.partitions and AQE's partition coalescing
+        # shrinks it to the data (a fixed repartition(num_buckets, ...)
+        # is exempt from coalescing).  A bucket hashes to exactly one
+        # reduce partition and coalescing only merges whole partitions,
+        # so a commit still writes one file per bucket.  Not
+        # coalesce(1): it collapses the upstream merge into one task.
+        # Not AQE off around the write: the conf covers the whole query
+        # planned at the write action, so the merge loses AQE's
+        # re-planning.
+        df = df.repartition(F.col(BUCKET_COL))
+    # no _SUCCESS marker: the manifest CAS, not the marker, publishes a
+    # commit, and the marker and its checksum are two more objects in
+    # every commit directory
+    df.write.mode("overwrite").partitionBy(BUCKET_COL).option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
     ).parquet(path)
 
 

@@ -83,6 +83,11 @@ def test_new_table_is_sized_from_its_admitted_batch(spark, tmp_path, monkeypatch
     _table(spark, small)
     m = sink._load_manifest(small)
     assert m["num_buckets"] == 1 and len(sink._live_files(m)) == 1
+    # and no Hadoop _SUCCESS marker: the manifest publishes the commit
+    data_file = m["buckets"]["0"][0]
+    commit = os.path.join(small, os.path.dirname(os.path.dirname(data_file)))
+    names = [f for _, _, fs in os.walk(commit) for f in fs]
+    assert not any("_SUCCESS" in f for f in names), names
     assert sink.describe_keyed_table(small)["auto_sized"] is True
 
     monkeypatch.setattr(sink, "TARGET_BUCKET_BYTES", 1 << 10)
