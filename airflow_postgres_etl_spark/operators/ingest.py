@@ -41,7 +41,7 @@ def filter_after_high_water_mark(df: DataFrame, hwm: str | None) -> DataFrame:
     ``fileName`` derives from ``input_file_name()``, which Spark cannot
     push into the scan, so every file handed to the read is still opened.
     The batch pipeline therefore cuts its file LIST at the high-water
-    mark first (``pipeline._landed_batches``) and keeps this filter as the
+    mark first (``pipeline._landed_rows``) and keeps this filter as the
     row-level guarantee; the streaming variant replaces it with source
     checkpointing.
     """
@@ -221,14 +221,18 @@ def build_tracking(raw: DataFrame, *, keep_last: bool = True) -> DataFrame:
     apart — one NULL-key row per raw sentinel key — and the plan saves
     a shuffle.
     """
-    df = raw
     if keep_last:
-        df = dedup_keep_last(df)
-    df = cast_epoch_seconds(df, TRACKING_DATETIME_COLUMNS)
+        return _tracking_rows(dedup_keep_last(raw))
+    return _tracking_rows(raw).distinct()
+
+
+def _tracking_rows(deduped: DataFrame) -> DataFrame:
+    """T7 → T10 → T11(+audit) → T12: row by row, so the result holds
+    exactly one row per input row."""
+    df = cast_epoch_seconds(deduped, TRACKING_DATETIME_COLUMNS)
     df = add_audit_columns(df)
     df = project(df, TRACKING_COLUMNS + AUDIT_COLUMNS)
-    df = sentinels_to_null(df, ["oid__id", "Op"])
-    return df if keep_last else df.distinct()
+    return sentinels_to_null(df, ["oid__id", "Op"])
 
 
 def build_events(
@@ -238,10 +242,14 @@ def build_events(
 
     Chain: T3 → T4 → T5 → T6/T8/T9 → T10 → T11(+audit) → T12 → T13.
     """
-    df = raw
-    if keep_last:
-        df = dedup_keep_last(df)
-    df = explode_events(df, mode=parse_mode)
+    return _event_rows(
+        dedup_keep_last(raw) if keep_last else raw, parse_mode=parse_mode
+    )
+
+
+def _event_rows(deduped: DataFrame, *, parse_mode: str = "safe") -> DataFrame:
+    """T4 → T5 → T6/T8/T9 → T10 → T11(+audit) → T12 → T13."""
+    df = explode_events(deduped, mode=parse_mode)
     df = flatten_event_struct(df)
     df = add_audit_columns(df)
     df = project(df, EVENTS_COLUMNS + AUDIT_COLUMNS)

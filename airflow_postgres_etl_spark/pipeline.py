@@ -5,23 +5,31 @@ Reference flow (SURVEY §3.1): list files → read high-water mark → filter
 list-then-read order: the landing directory is listed on the driver
 (``csv_source.list_landed``), only the files named past the high-water
 mark are handed to one multi-file scan, and nothing is read — no Spark
-job at all — when none is new.  The new rows are scanned once and feed
-both targets, and each target lands in one keyed-overwrite merge, which
-materializes its batch once (the literal parse included) in the same
-pass that counts the rows it merges.  The micro-batch accumulate/flush
-loop (T2) disappears — partitioned execution is Spark's native memory
-bounding.
+job at all — when none is new.  The new rows are scanned and deduped
+keep-last (T3) ONCE, into one local checkpoint that both targets read
+(:func:`_dedup_once`, shared with the streaming loaders), and each
+target lands in one keyed-overwrite merge, which materializes its batch
+once (the literal parse included, for events) in the same pass that
+counts the rows it merges.  The micro-batch accumulate/flush loop (T2)
+disappears — partitioned execution is Spark's native memory bounding.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import sink
-from .operators.ingest import build_events, build_tracking, filter_after_high_water_mark
+from .operators.ingest import (
+    _event_rows,
+    _tracking_rows,
+    dedup_keep_last,
+    filter_after_high_water_mark,
+)
 from .sink import keyed_overwrite_parquet, read_keyed_table
 from .sources.csv_source import list_landed, read_tracking_csv
 
@@ -55,32 +63,50 @@ def parquet_high_water_mark(
     return read_keyed_table(spark, target).agg(F.max(column)).collect()[0][0]
 
 
-def _landed_batches(
+def _landed_rows(
     spark: SparkSession, csv_dir: str, hwm: str | None
-) -> tuple[DataFrame, DataFrame, DataFrame] | None:
-    """``(raw, tracking, events)`` for the files in ``csv_dir`` named past
-    ``hwm``, ``raw`` persisted — or None, before any Spark job, when no
-    file is new.
+) -> DataFrame | None:
+    """The lazy scan of the files in ``csv_dir`` named past ``hwm`` — or
+    None, before any Spark job, when no file is new.
 
     The cut happens on the listing, so the scan opens only the new
     files; the row-level ``fileName > hwm`` filter stays on the read as
-    the guarantee, and costs nothing once the list is pruned.  The CSV
-    rows are scanned once (``raw``) and each target dedups them keep-last
-    on its own: a persisted dedup would keep its shuffle's full
-    partition count (Spark does not coalesce a cached plan's final
-    shuffle), and the literal parse over it then pays the Python
-    worker's fixed per-task cost (~0.3 s) once per shuffle partition,
-    where AQE coalesces a small batch to one.  ``tracking`` and
-    ``events`` stay lazy: the keyed merge materializes its batch once
-    (``sink._admit_batch``), so the parse already runs once there."""
+    the guarantee, and costs nothing once the list is pruned."""
     paths = [
         p for name, p in list_landed(spark, csv_dir) if hwm is None or name > hwm
     ]
     if not paths:
         return None
-    raw = filter_after_high_water_mark(read_tracking_csv(spark, paths), hwm)
-    raw = raw.persist()
-    return raw, build_tracking(raw), build_events(raw)
+    return filter_after_high_water_mark(read_tracking_csv(spark, paths), hwm)
+
+
+@contextmanager
+def _dedup_once(raw: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, int]]:
+    """``(tracking, events, tracking row count)`` of one landed batch,
+    both targets read off ONE keep-last dedup of ``raw``.
+
+    The dedup is materialized by an eager local checkpoint, released
+    when the block exits, so the scan, the dedup's shuffle and the
+    scan-order tiebreak (the streaming path's
+    ``monotonically_increasing_id``) run once and both targets agree on
+    the surviving row.  Unlike a persisted frame, whose final shuffle
+    Spark never coalesces, the checkpoint keeps the partitions AQE
+    coalesced the shuffle to — one on a trickle batch — so the literal
+    parse over it still runs in one task instead of paying the Python
+    worker's fixed cost (~0.3 s) once per shuffle partition.  The same
+    pass counts the rows: keep-last leaves one tracking row per deduped
+    row.  ``tracking`` and ``events`` stay lazy; each keyed merge
+    materializes its own batch once (``sink._admit_batch``)."""
+    obs = Observation()
+    cp = (
+        dedup_keep_last(raw)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    try:
+        yield _tracking_rows(cp), _event_rows(cp), obs.get["n"]
+    finally:
+        sink._release([cp])
 
 
 def _fetch_one(con, sql: str):
@@ -189,33 +215,33 @@ def incremental_load_relational(
     first, the tracking table (the HWM carrier) advances LAST, so a
     failure between the merges replays both — harmless under
     replace-by-key.  Returns rows merged per table; the relational merge
-    has no probe to count in, so the counts cost a job per table, and
-    both targets are persisted here so the count and the merge share
-    one execution."""
+    has no probe to count in.  The tracking count is the shared dedup's
+    own (one tracking row per deduped row, :func:`_dedup_once`); the
+    events count costs a job, and events are persisted here so the
+    count and the merge share one execution."""
     con = connection_factory()
     try:
         hwm = relational_high_water_mark(con, tracking_table)
     finally:
         con.close()
-    batches = _landed_batches(spark, csv_dir, hwm)
-    if batches is None:
+    raw = _landed_rows(spark, csv_dir, hwm)
+    if raw is None:
         return {"tracking": 0, "events": 0}
-    raw, tracking, events = batches
-    tracking, events = tracking.persist(), events.persist()
-    try:
-        counts = {"tracking": tracking.count(), "events": events.count()}
-        for df, table in ((events, events_table), (tracking, tracking_table)):
-            merge_relational_batch(
-                df,
-                table,
-                connection_factory=connection_factory,
-                stage_writer_factory=stage_writer_factory,
-                url=url,
-                key=key,
-            )
-    finally:
-        for df in (raw, tracking, events):
-            df.unpersist()
+    with _dedup_once(raw) as (tracking, events, n_tracking):
+        events = events.persist()
+        try:
+            counts = {"tracking": n_tracking, "events": events.count()}
+            for df, table in ((events, events_table), (tracking, tracking_table)):
+                merge_relational_batch(
+                    df,
+                    table,
+                    connection_factory=connection_factory,
+                    stage_writer_factory=stage_writer_factory,
+                    url=url,
+                    key=key,
+                )
+        finally:
+            events.unpersist()
     return counts
 
 
@@ -236,11 +262,10 @@ def incremental_load(
     same files (replace-by-key makes the replay harmless).
     """
     hwm = parquet_high_water_mark(spark, tracking_target)
-    batches = _landed_batches(spark, csv_dir, hwm)
-    if batches is None:
+    raw = _landed_rows(spark, csv_dir, hwm)
+    if raw is None:
         return {"tracking": 0, "events": 0}
-    raw, tracking, events = batches
-    try:
+    with _dedup_once(raw) as (tracking, events, _):
         # events first: the HWM is read from the tracking mirror, so it must
         # advance LAST — a failure between the two merges then replays both
         # (harmless under replace-by-key) instead of silently skipping events.
@@ -251,8 +276,6 @@ def incremental_load(
         n_tracking = keyed_overwrite_parquet(
             spark, tracking, tracking_target, key, stats_cols=["fileName"]
         )
-    finally:
-        raw.unpersist()
     return {"tracking": n_tracking, "events": n_events}
 
 

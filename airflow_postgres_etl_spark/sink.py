@@ -1370,15 +1370,13 @@ def _admit_batch(
         batch = _align_batch_types(
             batch, _strip_dropped_fields(schema, manifest), key
         )
-    # Measured (4 cores, etlbench cdc_trickle, 11 interleaved seed
-    # pairs): this checkpoint replaced a groupBy(bucket).count() probe
-    # that ran the batch's plan, and a write that ran it again.  The op
-    # went from 29 to 22 Spark jobs (the events merge 10 → 7; tracking
-    # 9 → 5, with build_tracking's final distinct gone) and its median
-    # CPU-s from 28.3 to 26.7, inside a one-op run's JIT warm-up noise.
-    # A 200k-row batch merged into a 2M-row table read the same CPU-s
-    # either way.  localCheckpoint spills MEMORY_AND_DISK, so an
-    # unbounded backfill batch costs one disk round-trip, never an OOM.
+    # One pass, one Spark job over the batch's own plan (plus its map
+    # stages, if the plan shuffles): no separate probe runs the plan for
+    # the row count or the buckets, and the write reads the checkpoint
+    # instead of running the plan again.  A batch that is itself read
+    # off a checkpoint (pipeline._dedup_once) costs one job here.
+    # localCheckpoint spills MEMORY_AND_DISK, so an unbounded backfill
+    # batch costs one disk round-trip, never an OOM.
     cons = table_constraints(target, store)
     obs = Observation()
     bucketed = _checkpoint(
@@ -3131,14 +3129,26 @@ def _write_bucketed(
     df: DataFrame, path: str, num_buckets: int, range_by: tuple | None = None
 ) -> None:
     """The one parquet write of the commit kernel: one directory per
-    bucket.  ``range_by=(files_per_bucket, [cols])`` range-partitions
-    on (bucket, cols) instead, so each bucket lands as ~files_per_bucket
-    value-contiguous files (cluster / z-order)."""
+    bucket, one file per bucket touched — a one-bucket layout writes
+    through ``coalesce(1)``, every other through an exchange on the
+    bucket column.  ``range_by=(files_per_bucket, [cols])``
+    range-partitions on (bucket, cols) instead, so each bucket lands as
+    ~files_per_bucket value-contiguous files (cluster / z-order)."""
     if range_by is not None:
         files_per_bucket, cols = range_by
         df = df.repartitionByRange(
             num_buckets * files_per_bucket, F.col(BUCKET_COL), *cols
         )
+    elif num_buckets == 1:
+        # one bucket is one file: every row goes to one task either way,
+        # and coalesce(1) gets there without the exchange's map stage
+        # (one Spark job fewer per commit).  It runs the whole merge —
+        # the table's scan and anti-join included — in that one task,
+        # which the layout bounds: an auto-sized table holds one bucket
+        # only while its bytes stay under TARGET_BUCKET_BYTES.  That is
+        # not the coalesce(1) measured slower at 64 buckets, which
+        # collapsed a many-bucket merge into one task.
+        df = df.coalesce(1)
     else:
         # co-locate each bucket's rows before the partitioned write:
         # without this every task writes a file into every bucket

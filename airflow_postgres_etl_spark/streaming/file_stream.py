@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.ingest import build_events, build_tracking
+from ..pipeline import _dedup_once, merge_relational_batch
 from ..schemas import TRACKING_RAW
 from ..sink import (
     compact_keyed_table,
@@ -131,7 +131,6 @@ def stream_ingest(
     raw = _raw_tracking_stream(spark, csv_dir, max_files_per_trigger)
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = _with_batch_pos(batch)
         spark_b = batch.sparkSession
         # per-target rules: {"events": [...], "tracking": [...]} — the two
         # targets have different schemas; a flat list applies to both
@@ -148,7 +147,12 @@ def stream_ingest(
         )
         ev_limits = fail_thresholds.get("events") if per_target else fail_thresholds
         tr_limits = fail_thresholds.get("tracking") if per_target else fail_thresholds
-        if ev_rules or tr_rules:
+        merge = keyed_merge_mor if merge_mode == "mor" else keyed_overwrite_parquet
+
+        def gated(frame, tgt, rules, limits):
+            if not rules:
+                merge(spark_b, frame, tgt)
+                return
             # DQ gate per micro-batch: clean rows merge, violating rows
             # quarantine under each target, the per-rule report persists.
             # Replay-idempotent like the merge itself: the quarantine is
@@ -156,28 +160,17 @@ def stream_ingest(
             # previous quarantine row.
             from ..operators.expectations import gate_and_merge
 
-            def gated(frame, tgt, rules, limits=None):
-                if rules:
-                    gate_and_merge(
-                        spark_b, frame, tgt, rules,
-                        mor=(merge_mode == "mor"),
-                        fail_thresholds=limits,
-                    )
-                else:
-                    merge = (
-                        keyed_merge_mor
-                        if merge_mode == "mor"
-                        else keyed_overwrite_parquet
-                    )
-                    merge(spark_b, frame, tgt)
+            gate_and_merge(
+                spark_b, frame, tgt, rules,
+                mor=(merge_mode == "mor"),
+                fail_thresholds=limits,
+            )
 
-            gated(build_events(batch), events_target, ev_rules, ev_limits)
-            gated(build_tracking(batch), tracking_target, tr_rules, tr_limits)
-        else:
-            merge = keyed_merge_mor if merge_mode == "mor" else keyed_overwrite_parquet
+        # the epoch's files are scanned and deduped once for both targets
+        with _dedup_once(_with_batch_pos(batch)) as (tracking, events, _):
             # events first; tracking (HWM-bearing in the batch analog) last
-            merge(spark_b, build_events(batch), events_target)
-            merge(spark_b, build_tracking(batch), tracking_target)
+            gated(events, events_target, ev_rules, ev_limits)
+            gated(tracking, tracking_target, tr_rules, tr_limits)
         if merge_mode == "mor":
             for tgt in (events_target, tracking_target):
                 if table_delta_depth(tgt) >= compact_at_depth:
@@ -423,24 +416,19 @@ def stream_ingest_relational(
     driver jar exists).  The relational table holds no watermark state —
     a deleted checkpoint reprocesses everything and the replace-by-key
     merge converges to the same rows."""
-    from ..pipeline import merge_relational_batch
-
     raw = _raw_tracking_stream(spark, csv_dir, max_files_per_trigger)
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = _with_batch_pos(batch)
-        for df, table in (
-            (build_events(batch), events_table),
-            (build_tracking(batch), tracking_table),
-        ):
-            merge_relational_batch(
-                df,
-                table,
-                connection_factory=connection_factory,
-                stage_writer_factory=stage_writer_factory,
-                url=url,
-                key=key,
-            )
+        with _dedup_once(_with_batch_pos(batch)) as (tracking, events, _):
+            for df, table in ((events, events_table), (tracking, tracking_table)):
+                merge_relational_batch(
+                    df,
+                    table,
+                    connection_factory=connection_factory,
+                    stage_writer_factory=stage_writer_factory,
+                    url=url,
+                    key=key,
+                )
 
     return (
         raw.writeStream.foreachBatch(merge_batch)

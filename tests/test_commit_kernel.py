@@ -121,6 +121,12 @@ OPS = {
             s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t
         ),
     ),
+    "merge_auto": (
+        _base_auto,
+        lambda s, t: sink.keyed_overwrite_parquet(
+            s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t
+        ),
+    ),
     "grow": (_base_auto, _grow),
     "merge_mor": (
         _base,
@@ -223,6 +229,7 @@ METADATA_OPS = {
 #: change to the path's cost: re-measure and say why.
 JOB_BUDGET = {
     "merge": 6,
+    "merge_auto": 5,
     "grow": 6,
     "merge_mor": 3,
     "append": 6,
@@ -438,3 +445,47 @@ def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
     tracker = sc.statusTracker()
     write_stage = max(tracker.getJobInfo(max(jobs)).stageIds)
     assert tracker.getStageInfo(write_stage).numTasks <= len(changed)
+
+
+def _write_plans(spark, job_ids) -> list[str]:
+    """Physical plans of the parquet writes the given jobs ran, from the
+    SQL status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    jobs, plans = set(job_ids), []
+    recent = store.executionsList(max(0, store.executionsCount() - 50), 50)
+    it = recent.iterator()
+    while it.hasNext():
+        ex = it.next()
+        ran = {int(j) for j in ex.jobs().keys().toList().mkString(",").split(",") if j}
+        plan = ex.physicalPlanDescription()
+        if jobs & ran and "InsertIntoHadoopFsRelationCommand" in plan:
+            plans.append(plan)
+    return plans
+
+
+def test_one_bucket_commit_writes_one_file_without_an_exchange(spark, tmp_path):
+    """A one-bucket layout, fixed or auto-sized, commits each change as
+    exactly one data file through ``coalesce(1)``: the write's plan holds
+    no exchange on the bucket column, whose one reduce partition would
+    route every row to one task anyway."""
+    for name, kw in (("fixed", {"num_buckets": 1}), ("auto", {})):
+        target = str(tmp_path / name)
+        spread = spark.createDataFrame(
+            [(f"k{i}", i, 0.5) for i in range(40)],
+            "oid__id string, v int, w double",
+        ).repartition(4)
+        prev = None
+        for batch in (spread, _rows(spark, [("k1", 10, 0.5), ("n1", 1, 0.5)])):
+            jobs = _job_ids_of(
+                spark,
+                lambda: sink.keyed_overwrite_parquet(spark, batch, target, **kw),
+            )
+            after = sink._load_manifest(target)
+            assert after["num_buckets"] == 1
+            assert len(_live(after) - (_live(prev) if prev else set())) == 1
+            (plan,) = _write_plans(spark, jobs)
+            assert "Coalesce" in plan
+            assert "REPARTITION_BY_COL" not in plan, f"{name}: bucket exchange"
+            prev = after

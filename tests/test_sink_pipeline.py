@@ -366,6 +366,35 @@ def test_incremental_cycle_reads_only_the_files_that_landed(spark, tmp_path):
     _assert_equals_full_load(spark, csv_dir, tr, ev, tmp_path)
 
 
+def test_one_file_cycle_into_one_bucket_targets_runs_nine_jobs(spark, tmp_path):
+    """A one-file cycle into auto-sized targets still at one bucket
+    runs 9 Spark jobs: the shared keep-last dedup's checkpoint 2 (its
+    map stage and the checkpoint), the events merge 4 (the distinct's
+    map stage, the admission checkpoint, the batch keys' broadcast, the
+    write) and the tracking merge 3 (admission, broadcast, write — the
+    one-bucket write has no exchange).  The cycle leaves no persisted
+    RDD behind."""
+    from airflow_postgres_etl_spark.sink import describe_keyed_table
+
+    from .test_commit_kernel import _persisted_rdds
+
+    src, csv_dir = str(tmp_path / "src"), str(tmp_path / "csv")
+    tr, ev = str(tmp_path / "tracking"), str(tmp_path / "events")
+    files = generate(src, n_files=3, rows_per_file=20)
+    _land(src, csv_dir, files[:2])
+    incremental_load(spark, csv_dir, tr, ev)
+    _land(src, csv_dir, files[2:])
+    held = _persisted_rdds(spark)
+    counts, jobs = _cycle(spark, csv_dir, tr, ev)
+    assert counts["tracking"] > 0 and counts["events"] > 0
+    for t in (tr, ev):
+        desc = describe_keyed_table(t)
+        assert desc["auto_sized"] and desc["num_buckets"] == 1
+    assert len(jobs) == 9
+    assert _persisted_rdds(spark) <= held, "the cycle left a checkpoint"
+    _assert_equals_full_load(spark, csv_dir, tr, ev, tmp_path)
+
+
 def test_high_water_mark_compares_names_as_file_name_stores_them(
     spark, tmp_path
 ):
@@ -410,6 +439,8 @@ def test_crash_between_the_two_commits_replays_the_same_files(
     import airflow_postgres_etl_spark.pipeline as pipeline
     from airflow_postgres_etl_spark.sink import table_version
 
+    from .test_commit_kernel import _persisted_rdds
+
     src, csv_dir = str(tmp_path / "src"), str(tmp_path / "csv")
     tr, ev = str(tmp_path / "tracking"), str(tmp_path / "events")
     ref_tr, ref_ev = str(tmp_path / "ref_tr"), str(tmp_path / "ref_ev")
@@ -436,8 +467,10 @@ def test_crash_between_the_two_commits_replays_the_same_files(
     monkeypatch.setattr(pipeline, "read_tracking_csv", spy_read)
     monkeypatch.setattr(pipeline, "keyed_overwrite_parquet", crash_on_tracking)
     ev_version = table_version(ev)
+    held = _persisted_rdds(spark)
     with pytest.raises(RuntimeError, match="injected crash"):
         incremental_load(spark, csv_dir, tr, ev)
+    assert _persisted_rdds(spark) <= held, "the crashed cycle left a checkpoint"
     assert table_version(ev) == ev_version + 1  # the events commit landed
     assert parquet_high_water_mark(spark, tr) == hwm
 
@@ -488,6 +521,8 @@ def test_incremental_load_relational_lists_then_reads(spark, tmp_path):
     _land(src, csv_dir, files[2:])
     c2, jobs = cycle()
     assert _csv_files_read(spark, jobs) == 1
+    # the shared dedup's checkpoint counts the tracking rows: no count job
+    assert len(jobs) == 8
 
     con = duckdb.connect(db)
     try:

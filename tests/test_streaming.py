@@ -963,3 +963,27 @@ def test_stream_sketch_ingest_releases_its_batch_checkpoints(spark, tmp_path):
     assert q.exception() is None
     assert read_keyed_table(spark, os.path.join(out, "kmv")).count() == 2
     assert _persisted(spark) <= held
+
+
+def test_stream_ingest_epoch_scans_and_dedups_once(spark, tmp_path):
+    """One epoch of ``stream_ingest`` scans and dedups its files once
+    for both targets (``pipeline._dedup_once``), then merges each: 7
+    Spark jobs into new one-bucket targets — the dedup's map stage and
+    checkpoint, events 3 (the distinct's map stage, admission, write)
+    and tracking 2 (admission, write).  Deduping per target ran the scan
+    and the dedup's shuffle twice.  The epoch leaves no persisted RDD
+    behind."""
+    src = str(tmp_path / "src")
+    generate(src, n_files=1, rows_per_file=20)
+    tr, ev, ck = (str(tmp_path / d) for d in ("tracking", "events", "ckpt"))
+    held = _persisted(spark)
+    q = stream_ingest(spark, src, tr, ev, ck)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 7
+    assert _persisted(spark) <= held
+    tracking = read_keyed_table(spark, tr)
+    assert tracking.count() == tracking.select("oid__id").distinct().count() > 0
+    events = read_keyed_table(spark, ev)
+    assert events.select("oid__id").distinct().count() == tracking.count()

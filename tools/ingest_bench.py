@@ -13,7 +13,8 @@ reports that cycle's Spark jobs, the input bytes its stages read (CSV,
 the merged buckets' parquet, and the persisted and checkpointed blocks
 the cycle reads back), the new file's and the directory's
 size, and the CPU seconds of the process tree (driver, JVM and Python
-workers).
+workers).  The last figure is the run's peak resident memory: the
+driver's plus the JVM's high-water mark, as etlbench reads it.
 
 Usage: python tools/ingest_bench.py [n_files] [rows_per_file]
 """
@@ -32,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from airflow_postgres_etl_spark.pipeline import incremental_load  # noqa: E402
 from airflow_postgres_etl_spark.session import get_spark  # noqa: E402
-from etlbench.procfs import tree_cpu_s  # noqa: E402
+from etlbench.procfs import tree_cpu_s, vm_hwm_mb  # noqa: E402
 from tests.fixtures.gen_raw import generate  # noqa: E402
 
 
@@ -104,6 +105,8 @@ def main() -> None:
         new_file = os.path.join(csv_dir, "99991231-235959999.csv")
         shutil.copy(os.path.join(extra_dir, extra), new_file)
         cycle = _one_cycle(spark, csv_dir, tr, ev)
+        jvm = getattr(spark.sparkContext._gateway, "proc", None)
+        peak_mb = vm_hwm_mb("self") + (vm_hwm_mb(jvm.pid) if jvm else 0.0)
 
         print(
             json.dumps(
@@ -122,6 +125,7 @@ def main() -> None:
                         "new_file_bytes": os.path.getsize(new_file),
                         "dir_bytes_before": dir_bytes,
                     },
+                    "peak_rss_mb": round(peak_mb),
                 }
             )
         )

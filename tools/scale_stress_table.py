@@ -1,20 +1,21 @@
 """Scale-stress the table-format layer: does the cost of a SMALL keyed
 batch stay flat while the TABLE grows?
 
-For tables of 50k / 200k / 800k rows, each on its auto-sized layout
-(sized to its bytes, ``sink.TARGET_BUCKET_BYTES``) and on an explicit
-64-bucket baseline, applies the same 200-key batch through
-copy-on-write and merge-on-read, then refreshes a grouped materialized
-view incrementally, recording the layout, wall time and bytes written /
-files read.  The 100 TB claims under test:
+For tables of 50k / 200k / 800k rows (or the row counts given), each
+on its auto-sized layout (sized to its bytes,
+``sink.TARGET_BUCKET_BYTES``) and on an explicit 64-bucket baseline,
+applies the same 200-key batch through copy-on-write and merge-on-read,
+then refreshes a grouped materialized view incrementally, recording the
+layout, wall time, the process tree's CPU seconds per merge (driver,
+JVM and Python workers) and bytes written / files read.  The 100 TB claims under test:
 
 - CoW write volume grows with table size (every affected bucket is
   rewritten; a scattered 200-key batch touches most of them);
 - MOR write volume is O(batch) — flat as the table grows 16x;
 - the manifest-diff view refresh reads O(files changed), not O(table).
 
-Usage: python tools/scale_stress_table.py   (appends nothing; prints a
-markdown table for SCALE.md)
+Usage: python tools/scale_stress_table.py [rows ...]   (appends nothing;
+prints a markdown table for SCALE.md)
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from airflow_postgres_etl_spark.sink import (  # noqa: E402
     keyed_overwrite_parquet,
 )
 from airflow_postgres_etl_spark.views import refresh_aggregate_view  # noqa: E402
+from etlbench.procfs import tree_cpu_s  # noqa: E402
 
 WORK = "/tmp/scale_stress_table"
 BATCH_KEYS = 200
@@ -52,14 +54,15 @@ def new_bytes(target: str, before: set[str]) -> int:
 
 
 def main() -> None:
+    sizes = [int(a) for a in sys.argv[1:]] or [50_000, 200_000, 800_000]
     spark = get_spark(app_name="scale-stress-table")
     shutil.rmtree(WORK, ignore_errors=True)
     print(
-        "| rows | layout | buckets | CoW merge | CoW MB | MOR merge | MOR MB "
-        "| compact | view full | view incr | files read |"
+        "| rows | layout | buckets | CoW merge | CoW CPU | CoW MB | MOR merge "
+        "| MOR CPU | MOR MB | compact | view full | view incr | files read |"
     )
-    print("|---|---|---|---|---|---|---|---|---|---|---|")
-    for n, num_buckets in itertools.product((50_000, 200_000, 800_000), (None, 64)):
+    print("|---|---|---|---|---|---|---|---|---|---|---|---|---|")
+    for n, num_buckets in itertools.product(sizes, (None, 64)):
         base = spark.range(n).selectExpr(
             "concat('k', id) AS oid__id",
             "concat('g', id % 7) AS grp",
@@ -82,9 +85,10 @@ def main() -> None:
                 spark, base, t, num_buckets=num_buckets, vacuum=False
             )
             _, before = table_bytes(t)
-            t0 = time.perf_counter()
+            cpu0, t0 = tree_cpu_s(), time.perf_counter()
             merge(spark, batch(1), t)
             stats[f"{mode}_s"] = time.perf_counter() - t0
+            stats[f"{mode}_cpu"] = tree_cpu_s() - cpu0
             stats[f"{mode}_mb"] = new_bytes(t, before) / 1e6
         t = os.path.join(WORK, f"mor{n}_{num_buckets}")
         t0 = time.perf_counter()
@@ -131,8 +135,9 @@ def main() -> None:
 
         print(
             f"| {n:,} | {num_buckets or 'auto'} | {layout} | "
-            f"{stats['cow_s']:.1f} s | {stats['cow_mb']:.1f} | "
-            f"{stats['mor_s']:.1f} s | {stats['mor_mb']:.2f} | "
+            f"{stats['cow_s']:.2f} s | {stats['cow_cpu']:.2f} s | "
+            f"{stats['cow_mb']:.1f} | {stats['mor_s']:.2f} s | "
+            f"{stats['mor_cpu']:.2f} s | {stats['mor_mb']:.2f} | "
             f"{stats['compact_s']:.1f} s | {stats['full_s']:.1f} s "
             f"({n_table_files} files) | "
             f"{stats['incr_s']:.1f} s | {r_inc['files_read']} |"
