@@ -133,8 +133,6 @@ def scd2_from_changes(
     through :func:`scd2_merge` instead; the equivalence of the two paths
     is test-pinned (tests/test_cdc.py).
     """
-    from pyspark.sql.window import Window
-
     if (
         changes.groupBy(key, seq_col)
         .count()
@@ -146,6 +144,24 @@ def scd2_from_changes(
             f"changes contain duplicate ({key}, {seq_col}) pairs: the "
             "replay order is ambiguous"
         )
+    return _scd2_intervals(
+        changes, key, seq_col, track_cols, op_col, delete_op
+    )
+
+
+def _scd2_intervals(
+    changes: DataFrame,
+    key: str,
+    seq_col: str,
+    track_cols: list[str],
+    op_col: str | None = None,
+    delete_op: str = "D",
+) -> DataFrame:
+    """:func:`scd2_from_changes` without its duplicate check, for a
+    caller that has already proved ``(key, seq_col)`` unique (the
+    maintained table, ``sink.apply_changes_scd2``)."""
+    from pyspark.sql.window import Window
+
     w = Window.partitionBy(key).orderBy(seq_col)
     cur_del = (
         F.col(op_col) == F.lit(delete_op) if op_col else F.lit(False)

@@ -20,7 +20,7 @@ import os
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sink
@@ -85,26 +85,21 @@ def _dedup_once(raw: DataFrame) -> Iterator[tuple[DataFrame, DataFrame, int]]:
     """``(tracking, events, tracking row count)`` of one landed batch,
     both targets read off ONE keep-last dedup of ``raw``.
 
-    The dedup is materialized by an eager local checkpoint, released
-    when the block exits, so the scan, the dedup's shuffle and the
-    scan-order tiebreak (the streaming path's
-    ``monotonically_increasing_id``) run once and both targets agree on
-    the surviving row.  Unlike a persisted frame, whose final shuffle
-    Spark never coalesces, the checkpoint keeps the partitions AQE
-    coalesced the shuffle to — one on a trickle batch — so the literal
-    parse over it still runs in one task instead of paying the Python
-    worker's fixed cost (~0.3 s) once per shuffle partition.  The same
-    pass counts the rows: keep-last leaves one tracking row per deduped
-    row.  ``tracking`` and ``events`` stay lazy; each keyed merge
-    materializes its own batch once (``sink._admit_batch``)."""
-    obs = Observation()
-    cp = (
-        dedup_keep_last(raw)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
+    The dedup is materialized by one eager local checkpoint
+    (``sink._checkpoint``), released when the block exits, so the scan,
+    the dedup's shuffle and the scan-order tiebreak (the streaming
+    path's ``monotonically_increasing_id``) run once and both targets
+    agree on the surviving row.  Unlike a persisted frame, whose final
+    shuffle Spark never coalesces, the checkpoint keeps the partitions
+    AQE coalesced the shuffle to — one on a trickle batch — so the
+    literal parse over it still runs in one task instead of paying the
+    Python worker's fixed cost (~0.3 s) once per shuffle partition.  The
+    same pass observes the row count: keep-last leaves one tracking row
+    per deduped row.  ``tracking`` and ``events`` stay lazy; each keyed
+    merge materializes its own batch once (``sink._admit_batch``)."""
+    cp, seen = sink._checkpoint(dedup_keep_last(raw), n=F.count(F.lit(1)))
     try:
-        yield _tracking_rows(cp), _event_rows(cp), obs.get["n"]
+        yield _tracking_rows(cp), _event_rows(cp), seen["n"]
     finally:
         sink._release([cp])
 

@@ -63,7 +63,26 @@ Two implementations:
   - *add base files* — :func:`keyed_append`;
   - *add delta files* — :func:`keyed_merge_mor`,
     :func:`keyed_delete_where`, :func:`keyed_update_where`,
-    :func:`merge_into`, :func:`apply_changes`.
+    :func:`merge_into`, :func:`apply_changes` (both of its commits: the
+    target's delta and the delete memory's) and
+    :func:`apply_changes_scd2`.
+
+  A write path materializes a frame only through :func:`_checkpoint`:
+  one eager local checkpoint whose same pass observes every value the
+  path needs of that frame — row counts, the buckets its keys hash to,
+  duplicate-key and CHECK-constraint tallies — so **no probe job
+  follows a checkpoint**: no count, collect or take runs the frame or
+  its checkpoint again.  A user batch is admitted by
+  :func:`_admit_batch`; MERGE and the CDC ops checkpoint their source
+  and their decided rows the same way and commit through
+  :func:`_commit_files` directly (a table's first commit goes through
+  :func:`keyed_overwrite_parquet`, which sizes its layout).  A
+  checkpoint that fits the broadcast threshold is broadcast as a
+  join's build side (:func:`_broadcastable`).  Two scans remain by
+  design: a CHECK constraint on a table written by MERGE or CDC is
+  checked on the restated rows (one scan per constraint, only on a
+  constrained table), and MERGE's by-source UPDATE counts its
+  whole-table scope with one aggregate.
 
   **Layout.**  The manifest records the bucket count its files were
   hashed with, and every reader and writer takes it from there; the
@@ -640,17 +659,45 @@ _CURRENT_OP: list[str] = []
 _HELD = threading.local()
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """``df.localCheckpoint(eager=True)``, released (unpersisted) when
-    the enclosing ``@_records_op`` entry point returns or raises — its
-    commit has landed or failed by then, and nothing it returns reads
-    the checkpoint.  Outside any op the checkpoint is left to the
-    caller, as a bare ``localCheckpoint`` would be."""
+def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
+    """THE way a write path materializes a frame: ``df``'s eager local
+    checkpoint and the values of ``metrics`` (name → aggregate Column)
+    observed on the same pass, through one ``Observation``.  Every
+    question a path asks of a frame it checkpoints is one of these
+    metrics, so no count, collect or take runs the frame again.  The
+    checkpoint is released (unpersisted) when the enclosing
+    ``@_records_op`` entry point returns or raises — its commit has
+    landed or failed by then, and nothing it returns reads the
+    checkpoint.  Outside any op it is left to the caller, as a bare
+    ``localCheckpoint`` would be.  ``localCheckpoint`` spills
+    MEMORY_AND_DISK, so a large frame costs one disk round-trip, never
+    an OOM."""
+    obs = None
+    if metrics:
+        obs = Observation()
+        df = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
     cp = df.localCheckpoint(eager=True)
     frames = getattr(_HELD, "frames", None)
     if frames:
         frames[-1].append(cp)
-    return cp
+    return cp, (obs.get if obs is not None else {})
+
+
+def _broadcastable(cp: DataFrame, side: DataFrame | None = None) -> DataFrame:
+    """``side`` (default: the checkpoint ``cp`` it reads) as a join's
+    build side, hinted to broadcast when ``cp`` holds no more bytes than
+    the session's ``spark.sql.autoBroadcastJoinThreshold``
+    (:func:`_batch_bytes`, read on the driver).  A checkpoint of local
+    rows (``createDataFrame``) carries no size statistic, so without the
+    hint the planner first shuffles both sides for a sort-merge join
+    that AQE demotes to a broadcast only after those stages ran."""
+    side = cp if side is None else side
+    limit = cp.sparkSession._jsparkSession.sessionState().conf()
+    return (
+        F.broadcast(side)
+        if 0 <= _batch_bytes(cp) <= limit.autoBroadcastJoinThreshold()
+        else side
+    )
 
 
 def _release(checkpoints: list[DataFrame]) -> None:
@@ -1344,10 +1391,10 @@ def _admit_batch(
     the table's schema — BEFORE bucketing, so an implicit key upcast
     happens before ``_bucket_expr`` hashes it (see
     :func:`_align_batch_types`) — then ONE pass over the batch that
-    both materializes it and answers every pre-write question: an
-    eager, observed local checkpoint whose ``Observation`` returns the
-    row count, the affected buckets and each CHECK constraint's
-    violating-row count.
+    both materializes it and answers every pre-write question: a
+    :func:`_checkpoint` observing the row count, the affected buckets
+    and each CHECK constraint's violating-row count, with no probe job
+    after it.
 
     Returns ``(bucketed, affected buckets, physical stats_cols, batch
     row count)``, where ``bucketed`` IS the checkpoint: every later step
@@ -1378,19 +1425,15 @@ def _admit_batch(
     # localCheckpoint spills MEMORY_AND_DISK, so an unbounded backfill
     # batch costs one disk round-trip, never an OOM.
     cons = table_constraints(target, store)
-    obs = Observation()
-    bucketed = _checkpoint(
-        batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets)).observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(BUCKET_COL).alias("buckets"),
-            *[
-                F.count_if(_fails(pred)).alias(f"bad{i}")
-                for i, pred in enumerate(cons.values())
-            ],
-        )
+    bucketed, seen = _checkpoint(
+        batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets)),
+        n=F.count(F.lit(1)),
+        buckets=F.collect_set(BUCKET_COL),
+        **{
+            f"bad{i}": F.count_if(_fails(pred))
+            for i, pred in enumerate(cons.values())
+        },
     )
-    seen = obs.get
     if not seen["n"]:
         return None
     _enforce_constraints(
@@ -1710,16 +1753,17 @@ def keyed_overwrite_parquet(
         )
     )
     if current is not None:
-        # anti-join on key: keep only rows NOT being replaced.  Spark
-        # broadcasts the keys when small; at 100 TB this is a shuffled
-        # hash anti-join over k/N of the table — same cost class as the
-        # insert.  Data files don't store the bucket column (partitionBy
-        # consumed it); re-derive it — xxhash64 is deterministic.
+        # anti-join on key: keep only rows NOT being replaced.  The keys
+        # broadcast when the admitted batch fits the broadcast threshold
+        # (_broadcastable); at 100 TB this is a shuffled hash anti-join
+        # over k/N of the table — same cost class as the insert.  Data
+        # files don't store the bucket column (partitionBy consumed it);
+        # re-derive it — xxhash64 is deterministic.
         # No .distinct() on the build side: duplicate batch keys cannot
         # change an anti-join's result.
-        kept = current.join(bucketed.select(key), key, "left_anti").withColumn(
-            BUCKET_COL, _bucket_expr(key, num_buckets)
-        )
+        kept = current.join(
+            _broadcastable(bucketed, bucketed.select(key)), key, "left_anti"
+        ).withColumn(BUCKET_COL, _bucket_expr(key, num_buckets))
         merged = kept.unionByName(bucketed, allowMissingColumns=True)
     if resized is not None:
         # _commit_files re-derives the bucket column at the new count
@@ -2196,7 +2240,9 @@ def _restate_keys(
     at least one row deleted or assigned: one key window, skipped when
     every row qualifies already (an assignment to every survivor).
     ``materialize`` checkpoints the scoped rows once for the consumers
-    below; ``count`` returns their ``(deleted, assigned)`` row counts.
+    below and returns their ``(deleted, assigned)`` row counts, observed
+    on that checkpoint's pass; ``count`` returns them for an
+    unmaterialized scope too, at one aggregate over it.
 
     Returns ``(delta, visible, counts)``: ``visible`` is the restated
     rows CHECK constraints must pass — tombstones represent absence, not
@@ -2215,14 +2261,18 @@ def _restate_keys(
         marked = marked.withColumn("__any", F.max(hit).over(w)).filter(
             "__any = 1"
         )
-    if materialize:
-        marked = _checkpoint(marked)
+    tally = {
+        "deleted": F.count_if(F.col("__del")),
+        "assigned": F.count_if(F.col("__set")),
+    }
     counts = None
-    if count:
-        r = marked.agg(
-            F.sum(F.col("__del").cast("long")), F.sum(F.col("__set").cast("long"))
-        ).collect()[0]
-        counts = (int(r[0] or 0), int(r[1] or 0))
+    if materialize:
+        marked, seen = _checkpoint(marked, **tally)
+        counts = (seen["deleted"], seen["assigned"])
+    elif count:
+        # an unmaterialized scope (MERGE's by-source UPDATE, the whole
+        # table) pays one aggregate over it for the counts
+        counts = tuple(marked.agg(*tally.values()).collect()[0])
     dtypes = dict(rows.dtypes)
     visible = marked.filter(~F.col("__del")).select(
         *[
@@ -3961,11 +4011,14 @@ def merge_into(
     time travel all apply unchanged.  Keys the merge does not touch are
     not restated (their base rows stay live).
 
-    Scale shape: source keys hash to their buckets (≤ num_buckets scalar
-    collect), ONLY those buckets' live rows are read
-    (:func:`_scope_rows`), the join is key-equi (source side broadcasts
-    when dim-sized), and the write is O(affected keys' rows + inserts) —
-    merging 1k CDC rows into a 100 TB table touches k buckets.
+    Scale shape: the source is materialized once, and that pass
+    observes its row count, the buckets its keys hash to and its
+    largest per-key row count (:func:`_checkpoint`; no probe job
+    follows); ONLY those buckets' live rows are read
+    (:func:`_scope_rows`), the join is key-equi (the source side
+    broadcasts when its checkpoint fits the broadcast threshold), and
+    the write is O(affected keys' rows + inserts) — merging 1k CDC rows
+    into a 100 TB table touches k buckets.
     """
     manifest, key, num_buckets = _open_table(target, store)
     # merge_into re-interprets user SQL against BOTH the table's rows
@@ -3978,39 +4031,30 @@ def merge_into(
     _check_assignments(
         spark, target, manifest, key, store, when_matched_update, nb_upd
     )
-    # materialize the source ONCE (r11, the Delta MERGE move): the
-    # duplicate-key/bucket probe, the matched join, the insert
-    # anti-join + count and the by-source anti-join below each execute
-    # this frame — without the checkpoint each re-ran the source's
-    # upstream from scratch (up to 5 executions per merge).
-    # localCheckpoint spills MEMORY_AND_DISK, so a large source
-    # degrades to one disk round-trip, never an OOM.
-    src = _checkpoint(
+    # the source is materialized ONCE, and that pass answers every
+    # pre-flight question: its row count, the buckets its keys hash to
+    # and the largest number of source rows sharing a key (Delta's
+    # at-most-one-match rule, exact whether or not the key matches).
+    # The matched join, the insert anti-join and the by-source anti-join
+    # all read the checkpoint, never the source's upstream plan.
+    cp, seen = _checkpoint(
         source.select(
             F.col(key).alias("__sk"),
             *[F.col(c).alias(f"s_{c}") for c in source.columns],
-        )
+        ).withColumn(
+            "__n", F.count(F.lit(1)).over(Window.partitionBy("__sk"))
+        ),
+        n=F.count(F.lit(1)),
+        most=F.max("__n"),
+        buckets=F.collect_set(_bucket_expr("__sk", num_buckets)),
     )
-    # ONE probe answers both pre-flight questions (r12, guide §1.2):
-    # the max per-key multiplicity (Delta's at-most-one-match rule) and
-    # the ≤ num_buckets affected-bucket set — previously two separate
-    # collects, the first of which ran on the PRE-checkpoint source and
-    # so executed its upstream a second time.
-    probe = (
-        src.groupBy("__sk")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .agg(
-            F.max("__c").alias("__mx"),
-            F.collect_set(_bucket_expr("__sk", num_buckets)).alias("__bk"),
-        )
-        .collect()[0]
-    )
-    if (probe["__mx"] or 0) > 1:
+    if (seen["most"] or 0) > 1:
         raise ValueError(
             "source has duplicate keys: a target row may match at most "
             "one source row (resolve duplicates before the merge)"
         )
-    wanted = set(probe["__bk"] or [])
+    src = cp.drop("__n")
+    wanted = seen["buckets"]
     rows = _scope_rows(spark, target, manifest, key, wanted) if wanted else None
 
     deleted = updated = inserted = 0
@@ -4028,32 +4072,35 @@ def merge_into(
         visible.append(vis)
 
     if rows is not None and (when_matched_update or when_matched_delete):
-        # the MATCHED join output is materialized once (r12, guide
-        # §1.2/§5): the counts aggregate, the restated rows and the
-        # delta write each execute it — without the checkpoint the
-        # bucket-pruned table read + join ran once per consumer.
-        # Bounded by the matched scope (inner join with the
-        # small-by-contract source), spilling MEMORY_AND_DISK.
+        # the MATCHED join output is materialized once, with its counts:
+        # the restated rows and the delta write both read it.  Bounded
+        # by the matched scope (inner join with the small-by-contract
+        # source).
         restate(
-            rows.join(src, rows[key] == src["__sk"], "inner"),
+            rows.join(
+                _broadcastable(cp, src), rows[key] == F.col("__sk"), "inner"
+            ),
             rows.columns,
             _holds(when_matched_delete),
             when_matched_update,
             True,
         )
     if when_not_matched_insert:
-        ins = src
+        ins_cols = [F.col(f"s_{c}").alias(c) for c in source.columns]
+        ins, inserted = src.select(*ins_cols), seen["n"]
         if rows is not None:
-            ins = src.join(
-                rows.select(key), src["__sk"] == rows[key], "left_anti"
+            # checkpointed with its row count, for the same reason as the
+            # matched scope: the delta write would otherwise run the
+            # anti-join's bucket-pruned table read again.  Bounded by the
+            # source.  With no target rows in the source's buckets every
+            # source row inserts.
+            ins, got = _checkpoint(
+                src.join(
+                    rows.select(key), F.col("__sk") == rows[key], "left_anti"
+                ).select(*ins_cols),
+                n=F.count(F.lit(1)),
             )
-        ins = ins.select(*[F.col(f"s_{c}").alias(c) for c in source.columns])
-        if rows is not None:
-            # checkpointed for the same reason as the matched scope: the
-            # count below and the delta write otherwise each run the
-            # anti-join's bucket-pruned table read.  Bounded by the source.
-            ins = _checkpoint(ins)
-        inserted = ins.count()
+            inserted = got["n"]
         if inserted:
             # insert-ALL semantics (Delta's whenNotMatchedInsertAll):
             # source-only columns evolve the table additively — but only
@@ -4067,15 +4114,16 @@ def merge_into(
         all_rows = _scope_rows(spark, target, manifest, key, range(num_buckets))
         if all_rows is not None:
             # delete-only: the key window bounds the scope to the keys
-            # this clause deletes, so it is materialized once (r12) for
-            # the counts, the restated rows and the delta write, which
-            # otherwise each re-ran the full live-bucket scan +
-            # anti-join.  The update form stays streaming: its scope is
-            # the whole table, and checkpointing a table-sized frame
-            # would double the I/O the write already pays.
+            # this clause deletes, so it is materialized once, with its
+            # counts, for the restated rows and the delta write.  The
+            # update form stays streaming: its scope is the whole table,
+            # and checkpointing a table-sized frame would double the I/O
+            # the write already pays — its counts cost one more scan of
+            # every live bucket instead (ROADMAP direction 3).
             restate(
                 all_rows.join(
-                    src.select("__sk"), all_rows[key] == F.col("__sk"),
+                    _broadcastable(cp, src.select("__sk")),
+                    all_rows[key] == F.col("__sk"),
                     "left_anti",
                 ),
                 all_rows.columns,
@@ -4182,11 +4230,14 @@ def apply_changes(
     write, same fall-through as :func:`keyed_merge_mor`).
 
     Scale shape: net resolution is one window over the batch (CDC
-    batches are small by construction); the batch's keys hash to their
-    buckets (≤ num_buckets scalar collect) and ONLY those buckets' live
-    rows are read for the stored-sequence probe (:func:`_scope_rows`);
-    the write is ONE O(net-change) MOR delta commit — applying 1k CDC
-    rows to a 100 TB table touches k buckets and rewrites nothing.
+    batches are small by construction), materialized once; that pass
+    observes the duplicate pairs and the buckets the net rows hash to,
+    and ONLY those buckets' live rows are read for the stored-sequence
+    probe (:func:`_scope_rows`).  The freshness join is materialized
+    once with its counts (:func:`_checkpoint`; no probe job follows
+    either checkpoint).  The write is ONE O(net-change) MOR delta
+    commit, plus one for the delete memory — applying 1k CDC rows to a
+    100 TB table touches k buckets and rewrites nothing.
     """
     for c in (seq_col, op_col):
         if c not in changes.columns:
@@ -4196,134 +4247,97 @@ def apply_changes(
     )
     if key not in changes.columns:
         raise ValueError(f"changes frame is missing the key column {key!r}")
-    if (
-        changes.groupBy(key, seq_col)
-        .count()
-        .filter("count > 1")
-        .limit(1)
-        .collect()
-    ):
+    payload = [c for c in changes.columns if c != op_col]
+    seq_type = dict(changes.dtypes)[seq_col]
+    tomb_path = _cdc_tomb_path(target)
+    tmanifest = _load_manifest(tomb_path, store)
+    tomb_nb = (
+        None if tmanifest is None else _layout_of(tomb_path, tmanifest, store)
+    )
+    # the table and its delete memory: each key's stored sequence is
+    # read from each, only from the buckets the net rows hash to
+    sides = (
+        (target, manifest, num_buckets, CDC_SEQ_COL, "__cur_seq"),
+        (tomb_path, tmanifest, tomb_nb, CDC_TOMB_COL, "__tomb_seq"),
+    )
+    # net-change resolution, materialized ONCE: one window per key,
+    # newest sequence first.  The same pass finds duplicate (key, seq)
+    # pairs, winning or not (equal neighbours in that order), and both
+    # sides' buckets, so no probe job runs the feed or the checkpoint
+    # again.  CDC batches are small by construction (module contract).
+    w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
+    net = F.col("__rn") == 1
+    feed, seen = _checkpoint(
+        changes.withColumn("__rn", F.row_number().over(w)).select(
+            F.col(key).alias("__ck"),
+            F.col(seq_col).alias("__cseq"),
+            (F.col(op_col) == delete_op).alias("__cdel"),
+            F.struct(*payload).alias("__crow"),
+            "__rn",
+            (
+                (F.col("__rn") > 1)
+                & F.lag(seq_col).over(w).eqNullSafe(F.col(seq_col))
+            ).alias("__dup"),
+        ),
+        dups=F.count_if(F.col("__dup")),
+        **{
+            name: F.collect_set(F.when(net, _bucket_expr("__ck", nb)))
+            for _, snapshot, nb, _, name in sides
+            if snapshot is not None
+        },
+    )
+    if seen["dups"]:
         raise ValueError(
             f"changes contain duplicate ({key}, {seq_col}) pairs: the "
             "feed's ordering is ambiguous — disambiguate the sequence "
             "(e.g. append a change counter) before applying"
         )
-
-    payload = [c for c in changes.columns if c != op_col]
-    net = (
-        changes.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(key).orderBy(F.col(seq_col).desc())
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    seq_type = dict(changes.dtypes)[seq_col]
-    # materialize the net-resolved batch ONCE (r11): the bucket probe,
-    # the tombstone probe and the freshness join below each execute this
-    # frame — without the checkpoint each re-ran the feed's upstream
-    # (the net window included) from scratch, 3 full executions per
-    # apply.  CDC batches are small by construction (module contract),
-    # so the checkpoint is one batch-sized job.
-    src = _checkpoint(
-        net.select(
-            F.col(key).alias("__ck"),
-            F.col(seq_col).alias("__cseq"),
-            (F.col(op_col) == delete_op).alias("__cdel"),
-            F.struct(*payload).alias("__crow"),
-        )
-    )
-
-    if manifest is not None:
-        wanted = {
-            r[0]
-            for r in src.select(
-                _bucket_expr("__ck", num_buckets)
-            ).distinct().collect()
-        }
-        rows = (
-            _scope_rows(spark, target, manifest, key, wanted)
-            if wanted
-            else None
-        )
-    else:
-        wanted, rows = set(), None
-    if rows is not None and CDC_SEQ_COL in rows.columns:
-        cur = rows.groupBy(key).agg(F.max(CDC_SEQ_COL).alias("__cur_seq"))
-    elif rows is not None:
-        cur = rows.groupBy(key).agg(
-            F.lit(None).cast(seq_type).alias("__cur_seq")
-        )
-    else:
-        cur = None
-
-    tomb_path = _cdc_tomb_path(target)
-    tmanifest = _load_manifest(tomb_path, store)
-    tomb = None
-    if tmanifest is not None:
-        twanted = {
-            r[0]
-            for r in src.select(
-                _bucket_expr("__ck", _layout_of(tomb_path, tmanifest, store))
-            ).distinct().collect()
-        }
-        trows = (
-            _scope_rows(spark, tomb_path, tmanifest, key, twanted)
-            if twanted
-            else None
-        )
-        if trows is not None:
-            tomb = trows.groupBy(key).agg(
-                F.max(CDC_TOMB_COL).alias("__tomb_seq")
+    # per key and side: the highest stored sequence (NULL: seeded
+    # without one, or no row) and whether the key has a row there
+    j = feed.filter(net).drop("__rn", "__dup")
+    for table, snapshot, _, col, name in sides:
+        scope = None
+        if seen.get(name):
+            scope = _scope_rows(spark, table, snapshot, key, seen[name])
+        if scope is None:
+            j = j.withColumn(name, F.lit(None).cast(seq_type)).withColumn(
+                f"{name}_row", F.lit(False)
             )
-
-    j = src
-    if cur is not None:
+            continue
+        seq = (
+            F.max(col) if col in scope.columns else F.lit(None).cast(seq_type)
+        )
         j = j.join(
-            cur.select(
-                F.col(key).alias("__ck"),
-                "__cur_seq",
-                F.lit(True).alias("__exists"),
+            scope.groupBy(F.col(key).alias("__ck")).agg(
+                seq.alias(name), F.lit(True).alias(f"{name}_row")
             ),
             "__ck",
             "left",
         )
-    else:
-        j = j.withColumn(
-            "__cur_seq", F.lit(None).cast(seq_type)
-        ).withColumn("__exists", F.lit(None).cast("boolean"))
-    if tomb is not None:
-        j = j.join(
-            tomb.select(F.col(key).alias("__ck"), "__tomb_seq"), "__ck", "left"
-        )
-    else:
-        j = j.withColumn("__tomb_seq", F.lit(None).cast(seq_type))
-    exists = F.coalesce(F.col("__exists"), F.lit(False))
+    exists = F.coalesce(F.col("__cur_seq_row"), F.lit(False))
     # a change wins when it beats BOTH the stored per-key sequence (new
     # key / seeded-without-sequence rows read as minus infinity) and the
     # key's delete memory
     fresh = (
-        (~exists)
-        | F.col("__cur_seq").isNull()
-        | (F.col("__cseq") > F.col("__cur_seq"))
+        F.col("__cur_seq").isNull() | (F.col("__cseq") > F.col("__cur_seq"))
     ) & (
         F.col("__tomb_seq").isNull() | (F.col("__cseq") > F.col("__tomb_seq"))
     )
-    j = _checkpoint(
+    # the freshness decision, materialized once with every count the
+    # commits need: upserts, applied deletes, the net rows (the rest are
+    # ignored) and the deletes of keys that hold rows (the only deletes
+    # the target delta must carry)
+    j, counts = _checkpoint(
         j.withColumn("__up", fresh & ~F.col("__cdel")).withColumn(
             "__del", fresh & F.col("__cdel")
-        )
+        ),
+        upserted=F.count_if(F.col("__up")),
+        deleted=F.count_if(F.col("__del")),
+        net=F.count(F.lit(1)),
+        gone=F.count_if(F.col("__del") & exists),
     )
-    counts = j.agg(
-        F.sum(F.col("__up").cast("long")).alias("u"),
-        F.sum(F.col("__del").cast("long")).alias("d"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    upserted = int(counts.u or 0)
-    deleted = int(counts.d or 0)
-    ignored = int(counts.n) - upserted - deleted
+    upserted, deleted = counts["upserted"], counts["deleted"]
+    ignored = counts["net"] - upserted - deleted
     if not (upserted or deleted):
         return {"upserted": 0, "deleted": 0, "ignored": ignored}
 
@@ -4338,9 +4352,9 @@ def apply_changes(
                 spark, ups, target, key=key, num_buckets=num_buckets,
                 store=store,
             )
-    elif upserted or j.filter(F.col("__del") & exists).take(1):
+    elif upserted or counts["gone"]:
         if upserted:
-            # same guard chain as keyed_merge_mor: a feed missing an
+            # same guard chain as an admitted batch: a feed missing an
             # existing column must raise NOW — on a replace-by-key
             # table a silently-narrower upsert row is data loss, not
             # evolution (additive new columns still pass)
@@ -4367,20 +4381,27 @@ def apply_changes(
 
     if deleted:
         # sequenced delete memory: replace-by-key keeps each key's
-        # LATEST delete point (freshness already guarantees monotony)
+        # LATEST delete point (freshness already guarantees monotony).
+        # A blind delta commit, like an MOR upsert: it guards no bucket.
         tomb_rows = j.filter(F.col("__del")).select(
             F.col("__ck").alias(key), F.col("__cseq").alias(CDC_TOMB_COL)
         )
-        if tmanifest is not None:
-            tomb_nb = _layout_of(tomb_path, tmanifest, store)
+        if tmanifest is None:
+            keyed_overwrite_parquet(
+                spark, tomb_rows, tomb_path, key=key,
+                num_buckets=_layout_of(
+                    target, _load_manifest(target, store), store
+                ) or num_buckets or 16,
+                store=store,
+            )
         else:
-            tomb_nb = _layout_of(
-                target, _load_manifest(target, store), store
-            ) or num_buckets or 16
-        keyed_merge_mor(
-            spark, tomb_rows, tomb_path, key=key, num_buckets=tomb_nb,
-            store=store,
-        )
+            schema = _table_schema(spark, tomb_path, tmanifest)
+            if schema is not None:
+                tomb_rows = _align_batch_types(tomb_rows, schema, key)
+            _commit_files(
+                spark, tomb_path, tomb_rows, tmanifest, key, tomb_nb,
+                "delta", guard=[], store=store,
+            )
     return {"upserted": upserted, "deleted": deleted, "ignored": ignored}
 
 
@@ -4421,12 +4442,14 @@ def apply_changes_scd2(
 
     Returns ``{"keys_touched", "rows_written", "ignored_stale"}``.
 
-    Scale shape: the batch's keys hash to their buckets, ONLY those
-    buckets' history rows are read, the replay is one window over
-    (touched keys' open rows + batch), and the write is one
-    replace-by-key MOR delta commit for keys whose tail actually
-    changed."""
-    from .operators.scd import scd2_from_changes
+    Scale shape: the batch is materialized once, and that pass
+    observes its conflicting pairs and the buckets its keys hash to;
+    ONLY those buckets' history rows are read, the frontier and the
+    replay are windows over (touched keys' history + batch), and one
+    checkpoint per touched key observes the counts returned (no probe
+    job follows either checkpoint).  The write is one replace-by-key
+    MOR delta commit for keys whose tail actually changed."""
+    from .operators.scd import _scd2_intervals
 
     for c in (seq_col, op_col, *track_cols):
         if c not in changes.columns:
@@ -4434,148 +4457,144 @@ def apply_changes_scd2(
     manifest, key, num_buckets = _open_or_bootstrap(
         target, key, num_buckets, store, "apply_changes_scd2"
     )
-    # materialize the deduped batch ONCE (r11): the conflict check, the
-    # bucket probe, the touched-key set and the replay feed below each
-    # execute this frame — without the checkpoint each re-ran the
-    # distinct (a full shuffle of the batch) plus the feed's upstream,
-    # 4 executions per apply.  CDC batches are small by construction.
-    ch = _checkpoint(
-        changes.select(key, seq_col, op_col, *track_cols).distinct()
+    # the batch's distinct changes, materialized ONCE.  The same pass
+    # finds (key, seq) pairs carrying different changes — equal changes
+    # are neighbours in (op, track_cols) order — and the buckets the
+    # batch's keys hash to, so no probe job follows.
+    change = F.struct(op_col, *track_cols)
+    w = Window.partitionBy(key, seq_col).orderBy(op_col, *track_cols)
+    cp, seen = _checkpoint(
+        changes.select(key, seq_col, op_col, *track_cols)
+        .withColumn("__rn", F.row_number().over(w))
+        .withColumn("__same", F.lag(change).over(w).eqNullSafe(change)),
+        conflicts=F.count_if((F.col("__rn") > 1) & ~F.col("__same")),
+        **(
+            {}
+            if manifest is None
+            else {"buckets": F.collect_set(_bucket_expr(key, num_buckets))}
+        ),
     )
-    if (
-        ch.groupBy(key, seq_col).count().filter("count > 1").limit(1).collect()
-    ):
+    if seen["conflicts"]:
         raise ValueError(
             f"changes contain conflicting ({key}, {seq_col}) pairs"
         )
-
-    if manifest is None:
-        hist = scd2_from_changes(
-            ch, key, seq_col, track_cols, op_col=op_col, delete_op=delete_op
-        )
-        n = hist.count()
-        if n:
-            keyed_overwrite_parquet(
-                spark, hist, target, key=key, num_buckets=num_buckets,
-                store=store,
-            )
-        return {"keys_touched": hist.select(key).distinct().count() if n else 0,
-                "rows_written": n, "ignored_stale": 0}
-
-    wanted = {
-        r[0]
-        for r in ch.select(_bucket_expr(key, num_buckets)).distinct().collect()
-    }
-    stored = _scope_rows(spark, target, manifest, key, wanted)
-    batch_keys = ch.select(key).distinct()
-    if stored is not None:
-        stored = _checkpoint(stored.join(batch_keys, key, "inner"))
-        open_rows = stored.filter(F.col("is_current"))
-        frontier = stored.groupBy(key).agg(
-            F.max(
-                F.when(F.col("is_current"), F.col("valid_from")).otherwise(
-                    F.col("valid_to")
-                )
-            ).alias("__frontier"),
-            F.max(F.col("is_current").cast("int")).alias("__has_open"),
-        )
-    else:
-        open_rows = None
-        frontier = None
-
+    ch = cp.filter(~F.col("__same")).drop("__rn", "__same")
     seq_type = dict(ch.dtypes)[seq_col]
-    parts = [
-        ch.select(key, seq_col, op_col, *track_cols).withColumn(
-            "__prio", F.lit(1)
+
+    # one row set per touched key: the batch's changes (kind 2) and the
+    # key's stored history — its open interval (kind 1), re-expressed
+    # as a change at its own valid_from, and its closed ones (kind 0)
+    rows = ch.withColumn("__kind", F.lit(2)).withColumn(
+        "__to", F.lit(None).cast(seq_type)
+    )
+    stored = (
+        _scope_rows(spark, target, manifest, key, seen["buckets"])
+        if seen.get("buckets")
+        else None
+    )
+    if stored is not None:
+        stored = stored.join(
+            _broadcastable(cp, ch.select(key)), key, "left_semi"
         )
-    ]
-    if open_rows is not None:
-        parts.append(
-            open_rows.select(
+        rows = rows.unionByName(
+            stored.select(
                 key,
                 F.col("valid_from").cast(seq_type).alias(seq_col),
                 F.lit("U").alias(op_col),
                 *track_cols,
-            ).withColumn("__prio", F.lit(0))
-        )
-    feed = parts[0]
-    for p in parts[1:]:
-        feed = feed.unionByName(p)
-    if frontier is not None:
-        feed = feed.join(frontier, key, "left")
-        keep = (
-            F.col("__frontier").isNull()
-            | (
-                (F.col("__has_open") == 1)
-                & (F.col(seq_col) >= F.col("__frontier"))
-            )
-            | (
-                (F.col("__has_open") == 0)
-                & (F.col(seq_col) > F.col("__frontier"))
+                F.col("is_current").cast("int").alias("__kind"),
+                F.col("valid_to").cast(seq_type).alias("__to"),
             )
         )
-        feed = feed.withColumn("__keep", keep).drop(
-            "__frontier", "__has_open"
-        )
-    else:
-        feed = feed.withColumn("__keep", F.lit(True))
-    feed = _checkpoint(feed)
-    # ignored counts genuinely stale BATCH rows only (the synthetic
-    # open-row change always survives: it sits exactly at its frontier)
-    ignored = feed.filter((~F.col("__keep")) & (F.col("__prio") == 1)).count()
-    feed = feed.filter(F.col("__keep")).drop("__keep")
-    # a redelivered change that duplicates the synthetic open row
-    # collapses here; a batch row CONFLICTING with the open row at the
-    # same sequence loses to the open row deterministically — history
-    # already committed at that sequence point
-    w_dup = Window.partitionBy(key, seq_col).orderBy("__prio")
-    feed = (
-        feed.withColumn("__rn", F.row_number().over(w_dup))
+    # a change at or below the key's frontier — the open interval's
+    # start, else the last closed interval's end — is STALE: SCD2
+    # cannot splice history mid-interval.  The open row itself sits at
+    # its frontier and survives.
+    kind = F.col("__kind")
+    by_key = Window.partitionBy(key)
+    open_from = F.max(F.when(kind == 1, F.col(seq_col))).over(by_key)
+    closed_to = F.max("__to").over(by_key)
+    rows = rows.withColumn(
+        "__keep",
+        F.when(open_from.isNotNull(), F.col(seq_col) >= open_from)
+        .when(closed_to.isNotNull(), F.col(seq_col) > closed_to)
+        .otherwise(True),
+    )
+    # replay the open interval and the fresh changes.  A redelivered
+    # change that duplicates the open row collapses here; a batch change
+    # CONFLICTING with the open row at the same sequence loses to it —
+    # history already committed at that sequence point
+    first = Window.partitionBy(key, seq_col).orderBy("__kind")
+    tail = _scd2_intervals(
+        rows.filter((kind > 0) & F.col("__keep"))
+        .withColumn("__rn", F.row_number().over(first))
         .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prio")
+        .select(key, seq_col, op_col, *track_cols),
+        key, seq_col, track_cols, op_col=op_col, delete_op=delete_op,
     )
 
-    tail = scd2_from_changes(
-        feed, key, seq_col, track_cols, op_col=op_col, delete_op=delete_op
+    # a key is rewritten only when its replayed tail (kind 3) differs
+    # from its stored open interval (the closed ones pass through
+    # unchanged), so a redelivered or all-stale batch commits nothing.
+    # Materialized once per touched key, with the counts returned.
+    # Every interval is open exactly when it has no end.
+    cols = [key, seq_col, *track_cols, "__to", "__kind", "__keep"]
+    interval = F.struct(
+        *track_cols,
+        F.col(seq_col).alias("valid_from"),
+        F.col("__to").alias("valid_to"),
+        F.col("__to").isNull().alias("is_current"),
     )
-    closed_keep = (
-        stored.filter(~F.col("is_current")) if stored is not None else None
-    )
-    if closed_keep is not None:
-        new_hist = closed_keep.select(
-            key, *track_cols, "valid_from", "valid_to", "is_current"
-        ).unionByName(tail)
-    else:
-        new_hist = tail
-    new_hist = _checkpoint(new_hist)
 
-    # skip keys whose row set is unchanged (redelivery / all-stale):
-    # compare multisets per key via exceptAll both ways
-    if stored is not None:
-        stored_rows = stored.select(
-            key, *track_cols, "valid_from", "valid_to", "is_current"
+    def intervals_of(k):
+        return F.collect_list(F.when(kind == k, interval))
+
+    per_key, seen = _checkpoint(
+        rows.select(*cols)
+        .unionByName(
+            tail.withColumnsRenamed({"valid_from": seq_col, "valid_to": "__to"})
+            .withColumns({"__kind": F.lit(3), "__keep": F.lit(True)})
+            .select(*cols)
         )
-        changed_keys = _checkpoint(
-            new_hist.exceptAll(stored_rows)
-            .select(key)
-            .unionByName(stored_rows.exceptAll(new_hist).select(key))
-            .distinct()
+        .groupBy(key)
+        .agg(
+            F.array_sort(intervals_of(1)).alias("__was"),
+            F.array_sort(intervals_of(3)).alias("__now"),
+            intervals_of(0).alias("__closed"),
+            F.count_if((kind == 2) & ~F.col("__keep")).alias("__stale"),
         )
-    else:
-        changed_keys = _checkpoint(new_hist.select(key).distinct())
-    n_keys = changed_keys.count()
-    if n_keys == 0:
-        return {"keys_touched": 0, "rows_written": 0, "ignored_stale": ignored}
-    out = new_hist.join(changed_keys, key, "inner")
-    n_rows = out.count()
-    keyed_merge_mor(
-        spark, out, target, key=key, num_buckets=num_buckets, store=store
+        .withColumn("__changed", ~F.col("__was").eqNullSafe(F.col("__now"))),
+        keys=F.count_if(F.col("__changed")),
+        rows=F.sum(
+            F.when(F.col("__changed"), F.size("__now") + F.size("__closed"))
+        ),
+        ignored=F.sum("__stale"),
     )
-    return {
-        "keys_touched": n_keys,
-        "rows_written": n_rows,
-        "ignored_stale": ignored,
+    result = {
+        "keys_touched": seen["keys"],
+        "rows_written": int(seen["rows"] or 0),
+        "ignored_stale": int(seen["ignored"] or 0),
     }
+    if not seen["keys"]:
+        return result
+    out = (
+        per_key.filter(F.col("__changed"))
+        .select(key, F.explode(F.concat("__closed", "__now")).alias("__iv"))
+        .select(key, "__iv.*")
+    )
+    if manifest is None:
+        keyed_overwrite_parquet(
+            spark, out, target, key=key, num_buckets=num_buckets, store=store
+        )
+        return result
+    schema = _table_schema(spark, target, manifest)
+    if schema is not None:
+        out = _align_batch_types(out, schema, key)
+    _enforce_constraints(out, target, store)
+    _commit_files(
+        spark, target, out, manifest, key, num_buckets, "delta", store=store
+    )
+    return result
 
 
 @_records_op("restore")

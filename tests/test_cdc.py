@@ -150,6 +150,20 @@ def test_duplicate_key_seq_rejected(spark, tmp_path):
         _apply(spark, target, [("a", 1, "I", 10), ("a", 1, "U", 20)])
 
 
+def test_duplicate_key_seq_at_a_losing_seq_rejected(spark, tmp_path):
+    """A duplicate pair is ambiguous at any sequence, not only at the
+    key's winning one: (a, 1) twice under a winning (a, 2) is rejected
+    too, before anything commits."""
+    target = str(tmp_path / "t")
+    with pytest.raises(ValueError, match="duplicate"):
+        _apply(
+            spark,
+            target,
+            [("a", 1, "I", 10), ("a", 1, "U", 11), ("a", 2, "U", 20)],
+        )
+    assert table_version(target) is None
+
+
 def test_seeded_rows_without_seq_lose_to_any_change(spark, tmp_path):
     target = str(tmp_path / "t")
     seed = spark.createDataFrame([("a", 100), ("b", 101)], ["k", "v"])
@@ -464,6 +478,25 @@ def test_scd2_table_redelivery_and_stale_noop(spark, tmp_path):
     res = _scd2_apply(spark, target, [("c", 2, "U", "zzz")])
     assert res["keys_touched"] == 0 and res["ignored_stale"] == 1
     assert _hist_set(spark, target) == state
+
+
+def test_scd2_table_conflicting_pairs_rejected(spark, tmp_path):
+    """Two different changes at one (key, seq) are rejected, on the
+    first batch and on a later one, and nothing commits; the same change
+    delivered twice in one batch is a duplicate, not a conflict."""
+    target = str(tmp_path / "h")
+    with pytest.raises(ValueError, match="conflicting"):
+        _scd2_apply(spark, target, [("a", 1, "U", "x"), ("a", 1, "U", "y")])
+    assert table_version(target) is None
+    res = _scd2_apply(spark, target, [("a", 1, "U", "x"), ("a", 1, "U", "x")])
+    assert res == {"keys_touched": 1, "rows_written": 1, "ignored_stale": 0}
+    v = table_version(target)
+    with pytest.raises(ValueError, match="conflicting"):
+        _scd2_apply(
+            spark, target, [("b", 2, "U", "p"), ("b", 2, "D", None)]
+        )
+    assert table_version(target) == v
+    assert _hist_set(spark, target) == {("a", "x", 1, None, True)}
 
 
 def test_scd2_table_extends_and_reopens(spark, tmp_path):

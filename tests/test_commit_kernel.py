@@ -10,6 +10,9 @@ a tiny table and pin what the kernel owes all of them:
 - each commit keeps the manifest invariants (``check_manifest``);
 - each path's Spark-job budget for a 2-row change stays at its pinned
   count;
+- a writer that loses the manifest CAS to another writer leaves the
+  table at exactly one of the two versions, and its retry converges
+  (MERGE and both CDC ops, each of ``apply_changes``' two commits);
 - each path releases every local checkpoint it took, whether its
   commit lands or fails (no persisted RDD outlives the op).
 """
@@ -22,19 +25,24 @@ import uuid
 import pytest
 
 import airflow_postgres_etl_spark.sink as sink
+from airflow_postgres_etl_spark.storage import (
+    ConcurrentWriteError,
+    FakeConditionalStore,
+)
 
 
 def _rows(spark, data):
     return spark.createDataFrame(data, "oid__id string, v int, w double")
 
 
-def _base(spark, target):
+def _base(spark, target, store=sink.LOCAL_STORE):
     sink.keyed_overwrite_parquet(
         spark,
         _rows(spark, [(f"k{i}", i, float(i % 5)) for i in range(12)]),
         target,
         num_buckets=4,
         stats_cols=["v"],
+        store=store,
     )
 
 
@@ -110,6 +118,44 @@ def _setup_renamed(spark, t):
     sink.rename_column(spark, t, "w", "w2")
 
 
+_HIST = "k string, seq bigint, op string, v string"
+
+
+def _setup_scd2(spark, t, store=sink.LOCAL_STORE):
+    """A four-key SCD2 history table, one open interval per key."""
+    sink.apply_changes_scd2(
+        spark, t,
+        spark.createDataFrame(
+            [(k, 1, "U", v) for k, v in zip("abcd", "xpqr")], _HIST
+        ),
+        "seq", ["v"], key="k", num_buckets=4, store=store,
+    )
+
+
+def _scd2_change(spark, t, store=sink.LOCAL_STORE):
+    """Closes ``a``'s open interval and opens a new key ``e``."""
+    return sink.apply_changes_scd2(
+        spark, t,
+        spark.createDataFrame([("a", 2, "U", "y"), ("e", 2, "U", "z")], _HIST),
+        "seq", ["v"], store=store,
+    )
+
+
+_CDC = "oid__id string, seq bigint, op string, v int, w double"
+
+
+def _cdc_change(spark, t, store=sink.LOCAL_STORE):
+    """An upsert of ``k1`` and a delete of ``k2``: a target delta commit,
+    then a delete-memory commit."""
+    return sink.apply_changes(
+        spark, t,
+        spark.createDataFrame(
+            [("k1", 1, "U", 10, 0.5), ("k2", 1, "D", None, None)], _CDC
+        ),
+        "seq", store=store,
+    )
+
+
 #: public write path -> (table setup, the op: a 2-row change or one
 #: maintenance call).  Setups leave work for the maintenance ops: MOR
 #: deltas for compact, multi-file buckets for optimize, a rename for
@@ -179,18 +225,8 @@ OPS = {
             when_not_matched_by_source_delete="v IN (2, 3)",
         ),
     ),
-    "apply_changes": (
-        _base,
-        lambda s, t: sink.apply_changes(
-            s,
-            t,
-            s.createDataFrame(
-                [("k1", 1, "U", 10, 0.5), ("k2", 1, "D", None, None)],
-                "oid__id string, seq bigint, op string, v int, w double",
-            ),
-            "seq",
-        ),
-    ),
+    "apply_changes": (_base, _cdc_change),
+    "apply_changes_scd2": (_setup_scd2, _scd2_change),
 }
 
 
@@ -228,9 +264,9 @@ METADATA_OPS = {
 #: local mode, 8 shuffle partitions, AQE on).  A change here is a
 #: change to the path's cost: re-measure and say why.
 JOB_BUDGET = {
-    "merge": 6,
-    "merge_auto": 5,
-    "grow": 6,
+    "merge": 4,
+    "merge_auto": 3,
+    "grow": 4,
     "merge_mor": 3,
     "append": 6,
     "delete_where": 6,
@@ -242,9 +278,10 @@ JOB_BUDGET = {
     "purge_mapping": 2,
     "cluster": 3,
     "zorder": 5,
-    "merge_into": 14,
-    "merge_into_by_source": 13,
-    "apply_changes": 16,
+    "merge_into": 8,
+    "merge_into_by_source": 8,
+    "apply_changes": 10,
+    "apply_changes_scd2": 8,
 }
 
 
@@ -428,7 +465,7 @@ def test_default_layout_reads_are_jobless_and_writes_scale_with_the_commit(
             target,
         ),
     )
-    assert len(jobs) == 6
+    assert len(jobs) == 4
 
     after = sink._load_manifest(target)
     check_manifest(after, before)
@@ -489,3 +526,153 @@ def test_one_bucket_commit_writes_one_file_without_an_exchange(spark, tmp_path):
             assert "Coalesce" in plan
             assert "REPARTITION_BY_COL" not in plan, f"{name}: bucket exchange"
             prev = after
+
+
+def test_small_local_batch_broadcasts_its_keys(spark, tmp_path):
+    """A batch of local rows (``createDataFrame``) checkpoints with no
+    size statistic, so the broadcast is decided from the bytes its
+    admission checkpoint holds: a 2-row merge into a 40-row one-bucket
+    table plans no sort-merge join, neither up front nor after AQE
+    re-plans it."""
+    target = str(tmp_path / "t")
+    sink.keyed_overwrite_parquet(
+        spark,
+        _rows(spark, [(f"k{i}", i, 0.5) for i in range(40)]),
+        target,
+        num_buckets=1,
+    )
+    jobs = _job_ids_of(
+        spark,
+        lambda: sink.keyed_overwrite_parquet(
+            spark, _rows(spark, [("k1", 10, 0.5), ("n1", 1, 0.5)]), target
+        ),
+    )
+    (plan,) = _write_plans(spark, jobs)
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def _tomb_mor(spark, t, store):
+    """Another writer records delete memory for ``k2`` at seq 0 and for
+    ``k7`` at seq 4."""
+    sink.keyed_merge_mor(
+        spark,
+        spark.createDataFrame(
+            [("k2", 0), ("k7", 4)],
+            f"oid__id string, {sink.CDC_TOMB_COL} bigint",
+        ),
+        sink._cdc_tomb_path(t),
+        store=store,
+    )
+
+
+def _setup_cdc(spark, t, store):
+    """:func:`_base` plus delete memory (``k3`` deleted at seq 1)."""
+    _base(spark, t, store)
+    sink.apply_changes(
+        spark, t,
+        spark.createDataFrame([("k3", 1, "D", None, None)], _CDC),
+        "seq", store=store,
+    )
+
+
+def _mor_k1(spark, t, store):
+    sink.keyed_merge_mor(
+        spark, _rows(spark, [("k1", 77, 7.7)]), t, store=store
+    )
+
+
+def _cdc_k1(spark, t, store):
+    """Another CDC writer upserts ``k1`` at a later sequence."""
+    sink.apply_changes(
+        spark, t,
+        spark.createDataFrame([("k1", 5, "U", 55, 5.5)], _CDC),
+        "seq", store=store,
+    )
+
+
+#: case -> (setup, the op, which of the op's manifest CAS attempts the
+#: other writer beats, the other writer's commit).  Each rival touches
+#: a bucket the op writes, or is itself not rebase-safe.
+RACES = {
+    "merge_into": (
+        _base,
+        lambda s, t, store: sink.merge_into(
+            s, t, _rows(s, [("k1", 10, 0.5), ("n1", 1, 0.5)]),
+            when_matched_update={"v": "s_v"}, store=store,
+        ),
+        1,
+        _mor_k1,
+    ),
+    "apply_changes": (_setup_cdc, _cdc_change, 1, _cdc_k1),
+    "apply_changes_memory": (_setup_cdc, _cdc_change, 2, _tomb_mor),
+    "apply_changes_scd2": (
+        _setup_scd2,
+        _scd2_change,
+        1,
+        lambda s, t, store: sink.apply_changes_scd2(
+            s, t, s.createDataFrame([("a", 3, "U", "w")], _HIST), "seq",
+            ["v"], store=store,
+        ),
+    ),
+}
+
+
+def _tables_state(spark, target, store) -> list:
+    """Rows of the table and of its delete memory (None: no table)."""
+    out = []
+    for t in (target, sink._cdc_tomb_path(target)):
+        if sink._load_manifest(t, store) is None:
+            out.append(None)
+            continue
+        df = sink.read_keyed_table(spark, t, store)
+        rows = df.select(*sorted(df.columns)).collect()
+        out.append({tuple(r) for r in rows})
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(RACES))
+def test_lost_cas_race_leaves_one_version_then_retry_converges(
+    spark, tmp_path, case
+):
+    """Another writer commits to the table the op is committing to,
+    between the op's decision and its conditional PUT.  Each table then
+    reads as exactly the version before or after the op's commit (on
+    top of the rival's), the op holds no checkpoint, and a retry of a
+    rejected op converges to the op applied after the rival without a
+    race."""
+    setup, run, nth, rival = RACES[case]
+    clean, raced = str(tmp_path / "clean"), str(tmp_path / "raced")
+    cstore, rstore = FakeConditionalStore(), FakeConditionalStore()
+    setup(spark, clean, cstore)
+    setup(spark, raced, rstore)
+    rival(spark, clean, cstore)
+    pre = _tables_state(spark, clean, cstore)
+    run(spark, clean, cstore)
+    post = _tables_state(spark, clean, cstore)
+    assert pre != post
+
+    casses = []
+
+    def hook():
+        casses.append(1)
+        if len(casses) < nth:
+            rstore.on_replace = hook  # fired hooks disarm: re-arm
+        else:
+            rival(spark, raced, rstore)
+
+    rstore.on_replace = hook
+    held = _persisted_rdds(spark)
+    try:
+        run(spark, raced, rstore)
+        landed = True
+    except ConcurrentWriteError:
+        landed = False
+    assert len(casses) == nth and rstore.on_replace is None, "no race"
+    assert _persisted_rdds(spark) <= held, "raced op left a checkpoint"
+    got = _tables_state(spark, raced, rstore)
+    for table, before, after in zip(got, pre, post):
+        assert table in (before, after)
+    if not landed:
+        run(spark, raced, rstore)
+    assert _tables_state(spark, raced, rstore) == post

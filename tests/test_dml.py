@@ -423,6 +423,22 @@ def test_merge_into_rejects_duplicate_source_keys(spark, tmp_path):
         t.merge_into(src, when_matched_update={"v": "s_v"})
 
 
+def test_merge_into_rejects_duplicate_unmatched_source_key(spark, tmp_path):
+    """The at-most-one-match rule is checked on the whole source, not
+    only on the keys that match: a duplicated key that would insert is
+    ambiguous too, and nothing commits."""
+    import pytest as _pytest
+
+    t = _mi_table(spark, tmp_path)
+    v0 = t.version()
+    src = spark.createDataFrame(
+        [("a", 1), ("z", 2), ("z", 3)], "oid__id string, v long"
+    )
+    with _pytest.raises(ValueError, match="duplicate keys"):
+        t.merge_into(src, when_matched_update={"v": "s_v"})
+    assert t.version() == v0
+
+
 def test_merge_into_validates_assignments_before_matching(spark, tmp_path):
     """Assignment targets are checked whether or not any target row
     matches — here the only source key hashes to an empty bucket — and
