@@ -48,12 +48,16 @@ Two implementations:
 
   **Commit kernel.**  Every commit that writes data files goes through
   one private routine, :func:`_commit_files`: write the frame bucketed
-  under a fresh ``data/<commit>`` directory, list what landed, build
-  the next manifest from the base snapshot (stamp superseded files as
-  retired, carry retirees that still exist, keep stats/blooms of
-  surviving files and compute stats for new ones, record the schema),
-  and publish it through :func:`_commit_optimistic`.  Each public path
-  supplies only its row scope and one of three manifest edits:
+  under a fresh ``data/<commit>`` directory, list what landed, describe
+  the new files once per commit (:func:`_describe_files`: one footer
+  read and one size per file gives its stats, row count and bytes),
+  build the next manifest from the base snapshot (stamp superseded
+  files as retired, carry retirees that still exist, keep
+  stats/blooms/rows/bytes of surviving files and add the new files',
+  record the schema), and publish it through
+  :func:`_commit_optimistic`, whose rebase reuses the description.
+  Each public path supplies only its row scope and one of three
+  manifest edits:
 
   - *replace buckets* — a listed subset (:func:`keyed_overwrite_parquet`,
     :func:`compact_keyed_table`, :func:`optimize_keyed_table`) or every
@@ -279,7 +283,7 @@ def _sized(n_bytes: int, num_buckets: int = 1) -> int:
 
 def _stored_bytes(target: str, manifest: dict, files, store) -> int:
     """Stored bytes of ``files``: the sizes the manifest recorded when
-    they were committed (``bytes``, filled in :func:`_commit_manifest`),
+    they were committed (``bytes``, see :func:`_describe_files`),
     else — a manifest written before sizes were recorded — the store's
     answer; a file gone from the store counts 0."""
     sizes = manifest.get("bytes") or {}
@@ -731,80 +735,6 @@ def _records_op(name: str):
     return deco
 
 
-def _footer_num_rows(path: str, store=LOCAL_STORE) -> int | None:
-    """Row count from one parquet footer — module-level so it pickles
-    by reference into the distributed leg.  The open goes through the
-    storage seam (``store.open_input``): locally that's the path itself
-    (pyarrow mmap fast path), on an object store a ranged-GET reader —
-    the commit path performs no direct os-path parquet opens.  A file
-    whose footer can't be read yields None; table_stats reports
-    row_count=None rather than guessing."""
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(store.open_input(path)).metadata.num_rows
-    except Exception:
-        return None
-
-
-def _num_rows_serial(
-    target: str, rels: list[str], store=LOCAL_STORE
-) -> dict[str, int]:
-    out = {}
-    for rel in rels:
-        n = _footer_num_rows(os.path.join(target, rel), store)
-        if n is not None:
-            out[rel] = n
-    return out
-
-
-def _fill_row_counts(
-    target: str, missing: list[str], store=LOCAL_STORE
-) -> dict[str, int]:
-    """Per-file row counts for the metadata-only COUNT(*) index — the
-    second commit-path footer loop (after ``_file_stats``), given the
-    same two legs: serial on the driver below
-    ``_STATS_DISTRIBUTED_MIN_FILES``, an executor-side map above it, so
-    adopting/committing thousands of files never serializes footer
-    round-trips on the driver.  Uses the active session (commits always
-    run inside one); falls back to the serial loop without one.
-
-    Consumes ``_NUM_ROWS_HINT`` first: any file whose footer the stats
-    pass already decoded this commit costs ZERO additional I/O here —
-    with tracked stats columns the whole fill is usually hint-served."""
-    if not missing:
-        return {}
-    out: dict[str, int] = {}
-    rest: list[str] = []
-    for rel in missing:
-        hint = _NUM_ROWS_HINT.pop(os.path.join(target, rel), None)
-        if hint is not None:
-            out[rel] = hint
-        else:
-            rest.append(rel)
-    missing = rest
-    if not missing:
-        return out
-    spark = SparkSession.getActiveSession()
-    if spark is None or len(missing) < _STATS_DISTRIBUTED_MIN_FILES:
-        out.update(_num_rows_serial(target, missing, store))
-        return out
-    sc = spark.sparkContext
-    n_slices = max(1, min(len(missing), sc.defaultParallelism))
-    pairs = (
-        sc.parallelize(missing, n_slices)
-        .map(
-            lambda rel: (
-                rel,
-                _footer_num_rows(os.path.join(target, rel), store),
-            )
-        )
-        .collect()
-    )
-    out.update({rel: n for rel, n in pairs if n is not None})
-    return out
-
-
 def _field_policy(label: str, *fields: str) -> tuple:
     """:data:`_POLICIES` entry for a policy whose columns are named by
     top-level fields."""
@@ -894,11 +824,98 @@ def _repoint(snap: dict, ref) -> dict:
     return out
 
 
+def _describe_files(
+    target: str, rels, stats_cols, store=LOCAL_STORE
+) -> tuple[dict, dict, dict]:
+    """What a manifest records of each of ``rels`` (target-relative data
+    files), as ``(stats, rows, bytes)`` dicts keyed by them: min/max
+    stats for ``stats_cols``, the row count and the stored bytes.  One
+    serial pass on the driver, no data scan and no Spark job: each file
+    costs one parquet footer read through the storage seam
+    (``store.open_input``: locally the path itself, which pyarrow
+    memory-maps; a ranged-GET reader on an object store) and one
+    ``store.size`` (HEAD on an object store).
+
+    The stats are the Delta/Iceberg data-skipping layer:
+    :func:`read_keyed_table` ``where=`` prunes files whose range cannot
+    match before Spark opens them.  Only JSON-stable scalar types
+    (int/float/str/bool) are recorded, and a column whose footer stat is
+    absent or exotic gets no range.  A file whose footer cannot be read
+    gets no ``rows`` or ``stats`` entry, and one the store cannot size
+    no ``bytes`` entry: readers treat a missing entry as unknown
+    (``table_stats`` reports ``row_count=None``; pruning reads the
+    file), never as a guess."""
+    import pyarrow.parquet as pq
+
+    wanted = set(stats_cols)
+    stats: dict[str, dict[str, list]] = {}
+    rows: dict[str, int] = {}
+    sizes: dict[str, int] = {}
+    for rel in rels:
+        path = os.path.join(target, rel)
+        size = store.size(path)
+        if size is not None:
+            sizes[rel] = size
+        try:
+            with pq.ParquetFile(store.open_input(path)) as pf:
+                meta = pf.metadata
+        except Exception:
+            continue
+        rows[rel] = meta.num_rows
+        names = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
+        per_col: dict[str, list] = {}
+        for col in wanted & set(names):
+            lo = hi = None
+            ok_range = True
+            nulls = rows_total = 0
+            have_nulls = True
+            for rg in range(meta.num_row_groups):
+                st = meta.row_group(rg).column(names[col]).statistics
+                if st is not None and st.has_null_count:
+                    nulls += st.null_count
+                    rows_total += meta.row_group(rg).num_rows
+                else:
+                    have_nulls = False
+                if st is None or not st.has_min_max:
+                    # an ALL-NULL chunk legitimately has no min/max —
+                    # range pruning is off, null accounting continues
+                    ok_range = False
+                    continue
+                mn, mx = st.min, st.max
+                if isinstance(mn, bytes):
+                    try:
+                        mn, mx = mn.decode(), mx.decode()
+                    except UnicodeDecodeError:
+                        ok_range = False
+                        continue
+                if not isinstance(mn, (int, float, str, bool)):
+                    ok_range = False
+                    continue
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+            have_range = ok_range and lo is not None
+            # entry forms: [lo, hi] (range only — older manifests read
+            # the same way), [lo, hi, null_count, row_count] (range +
+            # IS [NOT] NULL skipping), [None, None, n, r] (all-null or
+            # exotic-typed column: null skipping only).  Absent entry =
+            # must-read, as ever.
+            if have_range and have_nulls:
+                per_col[col] = [lo, hi, nulls, rows_total]
+            elif have_range:
+                per_col[col] = [lo, hi]
+            elif have_nulls and rows_total:
+                per_col[col] = [None, None, nulls, rows_total]
+        if per_col:
+            stats[rel] = per_col
+    return stats, rows, sizes
+
+
 def _commit_manifest(
     target: str, manifest: dict, expected_version: int | None, store=LOCAL_STORE
 ) -> None:
     """THE commit: replace ``_manifest.json`` iff it still holds
-    ``expected_version`` (None = initial commit).  The atomic
+    ``expected_version`` (None = the table's first commit, which fails
+    when a manifest already exists).  The atomic
     compare-and-swap itself lives behind the storage seam — ``os.replace``
     locally, a conditional PUT on an object store; a failed check raises
     :class:`ConcurrentWriteError` and this merge's data files become
@@ -937,27 +954,20 @@ def _commit_manifest(
     # and the operation stamp (outermost @_records_op wins)
     manifest["committed_at"] = time.time()
     manifest["operation"] = _CURRENT_OP[0] if _CURRENT_OP else "commit"
-    # per-file row counts — the metadata-only COUNT(*) index
-    # (table_stats): carry entries for surviving files, footer-fill the
-    # commit's new ones (parquet metadata, no data scan — same
-    # local-path leg as _file_stats, same caveat documented there).  A
-    # file whose footer can't be read simply gets no entry; table_stats
-    # reports row_count=None rather than guessing.
+    # per-file row counts (the metadata-only COUNT(*) index, table_stats)
+    # and stored bytes (what an auto-sized table's growth check sums,
+    # _grown): carried for surviving files.  _commit_files describes its
+    # new files before the first CAS attempt; only a file recorded by a
+    # manifest written before these keys existed is described here.
     live = set(_live_files(manifest))
-    rows = {f: n for f, n in (manifest.get("rows") or {}).items() if f in live}
-    missing = sorted(live - set(rows))
-    rows.update(_fill_row_counts(target, missing, store))
-    manifest["rows"] = rows
-    # per-file stored bytes — what an auto-sized table's growth check
-    # sums (_grown) without touching a data file: carried for surviving
-    # files, sized through the store for the commit's new ones (HEAD on
-    # an object store).  A file the store cannot size gets no entry.
-    sizes = {f: n for f, n in (manifest.get("bytes") or {}).items() if f in live}
-    for f in sorted(live - set(sizes)):
-        n = store.size(os.path.join(target, f))
-        if n is not None:
-            sizes[f] = n
-    manifest["bytes"] = sizes
+    known = {
+        k: {f: n for f, n in (manifest.get(k) or {}).items() if f in live}
+        for k in ("rows", "bytes")
+    }
+    missing = sorted(live - (known["rows"].keys() & known["bytes"].keys()))
+    _, rows, sizes = _describe_files(target, missing, (), store)
+    manifest["rows"] = {**rows, **known["rows"]}
+    manifest["bytes"] = {**sizes, **known["bytes"]}
     store.replace_if_version(_manifest_path(target), manifest, expected_version)
     store.write_json(_version_manifest_path(target, manifest["version"]), manifest)
 
@@ -983,7 +993,7 @@ def _commit_optimistic(
     ``build(current)`` and retry.  The commit's DATA files are reused
     verbatim across retries (they were written before any CAS attempt
     and reference only this commit's buckets), so a rebase costs one
-    manifest read + one CAS, never a data rewrite.
+    manifest read + one CAS, never a data rewrite or a footer read.
 
     ``build(base) -> manifest dict`` must be a pure function of the
     base snapshot.  ``conflicts_with(snapshot) -> str | None`` returns a
@@ -1072,205 +1082,6 @@ _REBASE_SAFE_OPS = {
     # never invalidates a concurrent writer's files or bucket layout
     *(f"set_{name}" for name in _POLICIES),
 }
-
-
-def _footer_stats_one(
-    path: str, wanted: frozenset, store=LOCAL_STORE
-) -> tuple[dict, int]:
-    """Footer decode for ONE parquet file — the shared body of both
-    stats legs (serial driver loop and executor-side map), so the two
-    are byte-identical by construction.  Module-level and
-    self-importing so it pickles by reference into RDD tasks.
-
-    The open goes through the storage seam (``store.open_input`` —
-    r10, VERDICT r9 task 1): the local store returns the path itself
-    (pyarrow's mmap fast path), an object store returns a seekable
-    reader so footer decodes are ranged GETs.  With this the commit
-    path performs ZERO direct os-path parquet opens in EITHER leg —
-    the store pickles into the RDD map alongside this function.
-
-    Returns ``(per_col_stats, num_rows)``: the footer is opened ONCE
-    per file per commit — the row count rides along into
-    ``_NUM_ROWS_HINT`` so ``_commit_manifest``'s row-count fill never
-    re-opens a footer the stats pass already decoded (r9 review
-    finding: the double open doubled commit footer I/O and, above the
-    crossover, launched a second Spark job)."""
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(store.open_input(path)).metadata
-    names = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-    per_col: dict[str, list] = {}
-    for col in wanted & set(names):
-        lo = hi = None
-        ok_range = True
-        nulls = rows_total = 0
-        have_nulls = True
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(names[col]).statistics
-            if st is not None and st.has_null_count:
-                nulls += st.null_count
-                rows_total += meta.row_group(rg).num_rows
-            else:
-                have_nulls = False
-            if st is None or not st.has_min_max:
-                # an ALL-NULL chunk legitimately has no min/max —
-                # range pruning is off, null accounting continues
-                ok_range = False
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    ok_range = False
-                    continue
-            if not isinstance(mn, (int, float, str, bool)):
-                ok_range = False
-                continue
-            lo = mn if lo is None else min(lo, mn)
-            hi = mx if hi is None else max(hi, mx)
-        have_range = ok_range and lo is not None
-        # entry forms: [lo, hi] (range only — older manifests read
-        # the same way), [lo, hi, null_count, row_count] (range +
-        # IS [NOT] NULL skipping), [None, None, n, r] (all-null or
-        # exotic-typed column: null skipping only).  Absent entry =
-        # must-read, as ever.
-        if have_range and have_nulls:
-            per_col[col] = [lo, hi, nulls, rows_total]
-        elif have_range:
-            per_col[col] = [lo, hi]
-        elif have_nulls and rows_total:
-            per_col[col] = [None, None, nulls, rows_total]
-    return per_col, meta.num_rows
-
-
-#: row counts the stats pass already decoded this process, keyed by
-#: absolute file path — consumed (popped) by _fill_row_counts so the
-#: commit's footer I/O is one open per file, not two.  Safe as a plain
-#: module dict: data files are uuid-named and never rewritten in place,
-#: and entries are removed on use.  Entries can linger only when a
-#: commit dies between its stats pass and its manifest fill — bounded
-#: by a hard cap so a crash-looping writer can't grow it unboundedly.
-_NUM_ROWS_HINT: dict[str, int] = {}
-_NUM_ROWS_HINT_CAP = 100_000
-
-
-def _hint_num_rows(path: str, n_rows: int) -> None:
-    if len(_NUM_ROWS_HINT) >= _NUM_ROWS_HINT_CAP:
-        # evict the OLDEST half (dict preserves insertion order), never
-        # the whole dict: a single >cap-file commit inserts its hints
-        # last, so its own in-flight entries survive to the manifest
-        # fill instead of being wiped mid-stats-pass and re-doubling
-        # footer I/O for exactly the commits the hint targets (r9
-        # advisor finding)
-        for k in list(_NUM_ROWS_HINT)[: _NUM_ROWS_HINT_CAP // 2]:
-            del _NUM_ROWS_HINT[k]
-    _NUM_ROWS_HINT[path] = n_rows
-
-
-#: File-count crossover between the serial driver footer loop and the
-#: executor-side map.  Measured locally (SCALE.md, r9): one local-disk
-#: footer decode is ~80 µs (512 files = 41 ms serial) while the RDD map
-#: costs a flat ~230 ms of job overhead — the same economics that made
-#: the r8 driver-side thread pool 4-8× WORSE — so on LOCAL paths the
-#: loop wins to ~3,000 files.  The default of 256 instead caps the
-#: driver's serial stats work at ~20 ms: commits of 256+ files have
-#: multi-second write jobs, so the ≤0.2 s job overhead is noise there,
-#: and the cap is what protects the failure mode this leg exists for —
-#: an object-store deployment where footer opens are ms-class round
-#: trips and a thousands-of-files commit would serialize into MINUTES
-#: on the driver (such a deployment lowers the env to ~16, its own
-#: crossover).  Tests force either leg by monkeypatching the constant.
-_STATS_DISTRIBUTED_MIN_FILES = int(
-    os.environ.get("SPARK_GRAFT_STATS_DISTRIBUTED_MIN_FILES", "256")
-)
-
-
-def _file_stats_serial(
-    target: str, rel_paths: list[str], stats_cols: list[str], store=LOCAL_STORE
-) -> dict[str, dict[str, list]]:
-    wanted = frozenset(stats_cols)
-    out: dict[str, dict[str, list]] = {}
-    for rel in rel_paths:
-        path = os.path.join(target, rel)
-        per_col, n_rows = _footer_stats_one(path, wanted, store)
-        _hint_num_rows(path, n_rows)
-        if per_col:
-            out[rel] = per_col
-    return out
-
-
-def _file_stats_distributed(
-    spark: SparkSession,
-    target: str,
-    rel_paths: list[str],
-    stats_cols: list[str],
-    store=LOCAL_STORE,
-) -> dict[str, dict[str, list]]:
-    """Executor-side stats collection: fan the per-file footer decode
-    out as one RDD map (a rare legitimate RDD — per-file imperative
-    metadata work, no row data moves) and collect only the tiny
-    (rel_path, per_col) pairs.  Commit latency becomes
-    O(files / parallelism) instead of a serial driver loop — the
-    object-store fix VERDICT r8 prescribed after measuring that
-    driver-side parallelism (thread pool) was the wrong tool."""
-    sc = spark.sparkContext
-    wanted = frozenset(stats_cols)
-    n_slices = max(1, min(len(rel_paths), sc.defaultParallelism))
-    pairs = (
-        sc.parallelize(sorted(rel_paths), n_slices)
-        .map(
-            lambda rel: (
-                rel,
-                _footer_stats_one(os.path.join(target, rel), wanted, store),
-            )
-        )
-        .collect()
-    )
-    # the hint dict lives on the DRIVER; workers return num_rows in the
-    # map result (a worker-side dict write would be invisible here)
-    for rel, (_per_col, n_rows) in pairs:
-        _hint_num_rows(os.path.join(target, rel), n_rows)
-    return {rel: per_col for rel, (per_col, _n) in pairs if per_col}
-
-
-def _file_stats(
-    target: str,
-    rel_paths: list[str],
-    stats_cols: list[str],
-    spark: SparkSession | None = None,
-    store=LOCAL_STORE,
-) -> dict[str, dict[str, list]]:
-    """Per-file min/max for ``stats_cols``, read from the parquet FOOTERS
-    (already written by Spark's writer — no data scan).  This is the
-    Delta/Iceberg data-skipping layer: the manifest carries the stats,
-    and :func:`read_keyed_table` ``where=`` prunes files whose range
-    can't match before Spark ever opens them.  Only JSON-stable scalar
-    types (int/float/str/bool) are recorded; a column whose footer stat
-    is absent or exotic simply yields no entry — readers treat a missing
-    stat as "might match" (pruning is an optimization, never allowed to
-    change results).
-
-    Two legs, same decode (:func:`_footer_stats_one`): a serial driver
-    loop below ``_STATS_DISTRIBUTED_MIN_FILES`` (a handful of local
-    footer reads is far cheaper than a Spark job's fixed overhead) and
-    an executor-side RDD map above it, so a thousands-of-files commit
-    never serializes footer round-trips on the driver.  Footer opens go
-    through the storage seam in BOTH legs (r10):
-    ``pq.ParquetFile(store.open_input(...))`` inside the one shared
-    helper — the local store's ``open_input`` returns the path itself
-    (pyarrow mmap fast path, zero overhead), an object store returns a
-    ranged-GET reader; the store pickles into the RDD tasks.  The
-    manifest format is identical either way, so nothing downstream
-    changes."""
-    if (
-        spark is not None
-        and len(rel_paths) >= _STATS_DISTRIBUTED_MIN_FILES
-    ):
-        return _file_stats_distributed(
-            spark, target, rel_paths, stats_cols, store
-        )
-    return _file_stats_serial(target, rel_paths, stats_cols, store)
 
 
 def _carry_blooms(manifest: dict, live: set[str]) -> dict:
@@ -1451,7 +1262,6 @@ def _admit_batch(
 
 
 def _commit_files(
-    spark: SparkSession,
     target: str,
     frame: DataFrame,
     base: dict | None,
@@ -1498,9 +1308,11 @@ def _commit_files(
     defaults to the buckets it writes.  A rewrite without ``guard``
     rebases over nothing: any intervening commit fails it.
 
-    Stats are kept for surviving files and computed from the new files'
-    footers for the base's tracked columns (unless
-    ``carry_stats_cols=False``) plus ``stats_cols``; ``range_by=
+    Stats are kept for surviving files; the new files are described
+    once per commit, before the first CAS attempt
+    (:func:`_describe_files`: row count, stored bytes and, outside a
+    delta edit, footer stats for the base's tracked columns unless
+    ``carry_stats_cols=False``, plus ``stats_cols``); ``range_by=
     (files_per_bucket, [cols])`` range-partitions each bucket into
     value-contiguous files (cluster / z-order); ``txn=(app, seq)``
     records the writer watermark monotonically; ``extra`` sets further
@@ -1514,7 +1326,18 @@ def _commit_files(
     if base is None:
         _write_spec(target, key, num_buckets, store, auto)
     written = _list_commit_buckets(target, commit_rel, store)
-    new_files = [f for fs in written.values() for f in fs]
+    # the new files are described once, before the first CAS attempt: a
+    # rebase reuses the answer (the files are immutable).  Delta files
+    # record no stats.
+    tracked = set(stats_cols or ())
+    if carry_stats_cols and base is not None:
+        tracked.update(_stats_cols_of(base))
+    new_stats, new_rows, new_bytes = _describe_files(
+        target,
+        [f for fs in written.values() for f in fs],
+        () if edit == "delta" else sorted(tracked),
+        store,
+    )
     full_schema = full_schema or (edit == "replace" and buckets is None)
 
     def build(cur: dict) -> dict:
@@ -1546,24 +1369,14 @@ def _commit_files(
         }
         live = set(_live_files(out))
         stats = {f: s for f, s in cur.get("stats", {}).items() if f in live}
-        tracked = set(stats_cols or ())
-        if carry_stats_cols:
-            tracked.update(_stats_cols_of(cur))
-        if tracked and edit != "delta":
-            stats.update(
-                _file_stats(
-                    target, new_files, sorted(tracked), spark=spark, store=store
-                )
-            )
         out.update(
             retired=_retire(target, cur, live, store),
-            stats=stats,
+            stats={**stats, **new_stats},
             blooms=_carry_blooms(cur, live),
             # per-file row counts and stored bytes never change:
-            # _commit_manifest keeps the live files' and fills the new
-            # files' (without these it re-reads every live file's)
-            rows=cur.get("rows") or {},
-            bytes=cur.get("bytes") or {},
+            # _commit_manifest keeps the live files' entries
+            rows={**(cur.get("rows") or {}), **new_rows},
+            bytes={**(cur.get("bytes") or {}), **new_bytes},
             **(extra or {}),
         )
         schema = (
@@ -1775,7 +1588,7 @@ def keyed_overwrite_parquet(
     # rewrite of one of THIS merge's buckets is a conflict, and a
     # growth commit, which read every bucket, rebases over nothing.
     _commit_files(
-        spark, target, merged, manifest, key, num_buckets, "replace",
+        target, merged, manifest, key, num_buckets, "replace",
         buckets=None if manifest is None or grows else affected,
         guard=None if grows else affected, txn=txn, stats_cols=stats_cols,
         full_schema=True, auto=auto, store=store,
@@ -2181,7 +1994,7 @@ def keyed_merge_mor(
     # a blind upsert guards no bucket: layering a higher-seq delta over
     # ANY row-preserving concurrent commit is exactly last-writer-wins
     _commit_files(
-        spark, target, admitted[0], manifest, key, num_buckets, "delta",
+        target, admitted[0], manifest, key, num_buckets, "delta",
         guard=[], store=store,
     )
 
@@ -2346,7 +2159,7 @@ def _dml_commit(spark, target, manifest, key, num_buckets, restated, store):
     delta, visible, _counts = restated
     _enforce_constraints(_to_physical_df(visible, cmap), target, store)
     _commit_files(
-        spark, target, _to_physical_df(delta, cmap), manifest, key,
+        target, _to_physical_df(delta, cmap), manifest, key,
         num_buckets, "delta", store=store,
     )
 
@@ -2478,7 +2291,7 @@ def _rewrite_buckets(spark, target, pick, store) -> int:
     if not buckets:
         return 0
     _commit_files(
-        spark, target,
+        target,
         _scope_rows(spark, target, manifest, key, None if grown else buckets),
         manifest, key, grown or num_buckets, "replace",
         buckets=None if grown else buckets, store=store,
@@ -2528,7 +2341,7 @@ def rebucket_keyed_table(
     # survive the layout change: the kernel recomputes them from the new
     # files' footers for the columns already tracked.
     _commit_files(
-        spark, target, _scope_rows(spark, target, manifest, key), manifest,
+        target, _scope_rows(spark, target, manifest, key), manifest,
         key, new_num_buckets, "replace", store=store,
     )
     _write_spec(target, key, new_num_buckets, store)
@@ -2579,7 +2392,7 @@ def widen_keyed_table(
         ]
     )
     _commit_files(
-        spark, target, rows, manifest, key, num_buckets, "replace", store=store
+        target, rows, manifest, key, num_buckets, "replace", store=store
     )
 
 
@@ -3028,7 +2841,7 @@ def purge_column_mapping(
         if c not in set(dropped)
     ]
     committed, _ = _commit_files(
-        spark, target, rows, manifest, key, num_buckets, "replace",
+        target, rows, manifest, key, num_buckets, "replace",
         stats_cols=tracked, carry_stats_cols=False,
         # explicit empties: block the commit-time carry — the mapping
         # is GONE, not inherited
@@ -3077,7 +2890,7 @@ def cluster_keyed_table(
     # value) slice, so each bucket dir receives ~files_per_bucket files,
     # each covering a narrow value range.
     _commit_files(
-        spark, target, _scope_rows(spark, target, manifest, key), manifest,
+        target, _scope_rows(spark, target, manifest, key), manifest,
         key, num_buckets, "replace",
         range_by=(files_per_bucket, [F.col(by_col)]), stats_cols=[by_col],
         store=store,
@@ -3169,7 +2982,7 @@ def zorder_keyed_table(
     # each output task holds one contiguous (bucket, z-curve) slice —
     # ~files_per_bucket files per bucket, each a small value-space cube
     _commit_files(
-        spark, target, base, manifest, key, num_buckets, "replace",
+        target, base, manifest, key, num_buckets, "replace",
         range_by=(files_per_bucket, [_zvalue_expr(cols, mins, maxes)]),
         stats_cols=cols, store=store,
     )
@@ -4137,7 +3950,7 @@ def merge_into(
     _enforce_constraints(_union(visible), target, store)
     if deleted or updated or inserted:
         _commit_files(
-            spark, target, _union(deltas), manifest, key, num_buckets,
+            target, _union(deltas), manifest, key, num_buckets,
             "delta", store=store,
         )
     return {"updated": updated, "deleted": deleted, "inserted": inserted}
@@ -4361,6 +4174,10 @@ def apply_changes(
             schema = _table_schema(spark, target, manifest)
             if schema is not None:
                 ups = _align_batch_types(ups, schema, key)
+        else:
+            # a delete-only batch records no sequence column: the empty
+            # upsert frame's must not widen the table's schema
+            ups = ups.drop(CDC_SEQ_COL)
         dels = (
             j.filter(F.col("__del") & exists)
             .select(F.col("__ck").alias(key))
@@ -4375,7 +4192,7 @@ def apply_changes(
             store,
         )
         _commit_files(
-            spark, target, delta, manifest, key, num_buckets, "delta",
+            target, delta, manifest, key, num_buckets, "delta",
             store=store,
         )
 
@@ -4399,7 +4216,7 @@ def apply_changes(
             if schema is not None:
                 tomb_rows = _align_batch_types(tomb_rows, schema, key)
             _commit_files(
-                spark, tomb_path, tomb_rows, tmanifest, key, tomb_nb,
+                tomb_path, tomb_rows, tmanifest, key, tomb_nb,
                 "delta", guard=[], store=store,
             )
     return {"upserted": upserted, "deleted": deleted, "ignored": ignored}
@@ -4592,7 +4409,7 @@ def apply_changes_scd2(
         out = _align_batch_types(out, schema, key)
     _enforce_constraints(out, target, store)
     _commit_files(
-        spark, target, out, manifest, key, num_buckets, "delta", store=store
+        target, out, manifest, key, num_buckets, "delta", store=store
     )
     return result
 
@@ -4859,7 +4676,7 @@ def keyed_append(
     # the new-key verification probed the BASE's affected buckets — they
     # must be untouched under any winner the commit rebases over
     _, written = _commit_files(
-        spark, target, bucketed, manifest, key, num_buckets, "append",
+        target, bucketed, manifest, key, num_buckets, "append",
         guard=affected, txn=txn, stats_cols=stats_cols, store=store,
     )
     return sum(len(fs) for fs in written.values())
@@ -5118,9 +4935,9 @@ def adopt_foreign_files(target: str, store=LOCAL_STORE) -> int:
     verbatim under the new key.  Cost is O(foreign bytes) — after a WAP
     publish that is exactly the newly-loaded data, not the table (the
     targeted alternative to ``rebucket_keyed_table``'s full rewrite).
-    The copy itself is a local-path data-plane leg (same documented
-    caveat as ``_file_stats``: data files are written and read by Spark
-    on the executor side; only metadata rides the storage seam).
+    The copy itself is a local-path data-plane step: data files are
+    written and read by Spark on the executor side, and only metadata
+    rides the storage seam.
 
     Returns the number of files adopted (0 = already self-contained;
     no commit is made).  After a publish: ``adopt_foreign_files(src)``,

@@ -47,11 +47,11 @@ class LocalManifestStore:
 
     def open_input(self, path: str):
         """Source for a parquet FOOTER read (``pq.ParquetFile(...)``) —
-        the commit path's only data-file I/O.  Locally the path itself
-        is the fast path (pyarrow memory-maps it); an object store
-        returns a seekable binary reader so footer decodes become ranged
-        GETs instead of local opens.  Must be safe to call executor-side
-        (the store pickles into the distributed stats leg)."""
+        the commit path's only data-file I/O, one per new file per
+        commit, on the driver.  Locally the path itself is the fast path
+        (pyarrow memory-maps it); an object store returns a seekable
+        binary reader so footer decodes become ranged GETs instead of
+        local opens."""
         return path
 
     def exists(self, path: str) -> bool:
@@ -73,7 +73,9 @@ class LocalManifestStore:
         """THE commit: atomically replace the manifest object, failing
         with :class:`ConcurrentWriteError` if its on-store version moved
         past ``expected_version``.  ``None`` expected version = initial
-        commit (no predecessor to check)."""
+        commit: create-if-absent, failing the same way when another
+        writer created the object first (``link(2)`` of the fsynced
+        temp file is atomic and refuses an existing path)."""
         if expected_version is not None:
             on_disk = self.read_json(path)
             if on_disk is not None and on_disk.get("version", 0) != expected_version:
@@ -88,7 +90,18 @@ class LocalManifestStore:
             json.dump(manifest, fh)
             fh.flush()
             os.fsync(fh.fileno())
-        os.replace(tmp, path)
+        if expected_version is not None:
+            os.replace(tmp, path)
+            return
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            raise ConcurrentWriteError(
+                f"{path} was created by another writer during this "
+                "initial commit; replay the batch against its snapshot"
+            ) from None
+        finally:
+            os.remove(tmp)
 
     # -- retention-cleanup seam ------------------------------------------
     # Vacuum runs entirely through these, never os.* directly: an object
@@ -189,13 +202,16 @@ class FakeConditionalStore:
         if self.on_replace is not None:
             hook, self.on_replace = self.on_replace, None
             hook()  # a competing writer lands here — before OUR check
-        if expected_version is not None:
-            current = self.objects.get(path)
-            if current is not None and current.get("version", 0) != expected_version:
-                raise ConcurrentWriteError(
-                    f"conditional PUT failed: version "
-                    f"{current.get('version')} != expected {expected_version}"
-                )
+        # None expected = create-if-absent (If-None-Match: *)
+        current = self.objects.get(path)
+        if current is not None and (
+            expected_version is None
+            or current.get("version", 0) != expected_version
+        ):
+            raise ConcurrentWriteError(
+                f"conditional PUT failed: version "
+                f"{current.get('version')} != expected {expected_version}"
+            )
         self.objects[path] = json.loads(json.dumps(manifest))
         self.object_mtimes[path] = time.time()
 

@@ -405,6 +405,39 @@ def test_apply_changes_rejects_missing_column(spark, tmp_path):
         apply_changes(spark, target, narrow, "seq")
 
 
+def test_delete_only_batch_keeps_the_table_schema(spark, tmp_path):
+    """A batch of deletes only records no sequence column on a table
+    written without one, so MOR and CoW merges of the table's own
+    columns still land after it."""
+    from airflow_postgres_etl_spark.sink import _load_manifest, keyed_merge_mor
+
+    target = str(tmp_path / "t")
+    cols = "oid__id string, v int, w double"
+    keyed_overwrite_parquet(
+        spark,
+        spark.createDataFrame([(f"k{i}", i, float(i)) for i in range(6)], cols),
+        target, key="oid__id", num_buckets=4,
+    )
+    schema = _load_manifest(target)["schema"]
+    deletes = spark.createDataFrame(
+        [("k2", 1, "D", None, None)],
+        "oid__id string, seq bigint, op string, v int, w double",
+    )
+    res = apply_changes(spark, target, deletes, "seq")
+    assert res == {"upserted": 0, "deleted": 1, "ignored": 0}
+    assert _load_manifest(target)["schema"] == schema
+    keyed_merge_mor(spark, spark.createDataFrame([("k1", 10, 0.5)], cols), target)
+    keyed_overwrite_parquet(
+        spark, spark.createDataFrame([("k3", 30, 3.5)], cols), target
+    )
+    got = read_keyed_table(spark, target)
+    assert sorted(got.columns) == ["oid__id", "v", "w"]
+    assert {r["oid__id"]: (r["v"], r["w"]) for r in got.collect()} == {
+        "k0": (0, 0.0), "k1": (10, 0.5), "k3": (30, 3.5),
+        "k4": (4, 4.0), "k5": (5, 5.0),
+    }
+
+
 # ---------------------------------------------------------------------------
 # SCD2 maintained table (apply_changes_scd2)
 # ---------------------------------------------------------------------------

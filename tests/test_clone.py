@@ -22,6 +22,7 @@ from airflow_postgres_etl_spark.sink import (
     table_version,
     vacuum_keyed_table,
 )
+from airflow_postgres_etl_spark.storage import LocalManifestStore
 
 
 def _mk(spark, tmp_path, name="src", rows=None, **kw):
@@ -194,7 +195,18 @@ def test_table_facade_clone(spark, tmp_path):
     assert c.read().count() == 6 and t.read().count() == 5
 
 
-def test_clone_opens_no_footer(spark, tmp_path, monkeypatch):
+class OpenSpyStore(LocalManifestStore):
+    """Local store that records every parquet footer the sink opens."""
+
+    def __init__(self) -> None:
+        self.opened: list[str] = []
+
+    def open_input(self, path: str):
+        self.opened.append(path)
+        return path
+
+
+def test_clone_opens_no_footer(spark, tmp_path):
     """One spec write + one manifest commit: the source's per-file row
     counts carry over under the re-pointed keys, so cloning opens no
     parquet footer however many files the table has."""
@@ -202,13 +214,9 @@ def test_clone_opens_no_footer(spark, tmp_path, monkeypatch):
 
     src = _mk(spark, tmp_path)
     dest = str(tmp_path / "dest")
-    opened = []
-    real = sink._footer_num_rows
-    monkeypatch.setattr(
-        sink, "_footer_num_rows", lambda p, *a: opened.append(p) or real(p, *a)
-    )
-    clone_keyed_table(src, dest)
-    assert opened == []
+    spy = OpenSpyStore()
+    clone_keyed_table(src, dest, store=spy)
+    assert spy.opened == []
     src_rows = sink._load_manifest(src)["rows"]
     assert sink._load_manifest(dest)["rows"] == {
         os.path.join(os.path.abspath(src), f): n for f, n in src_rows.items()

@@ -12,7 +12,9 @@ a tiny table and pin what the kernel owes all of them:
   count;
 - a writer that loses the manifest CAS to another writer leaves the
   table at exactly one of the two versions, and its retry converges
-  (MERGE and both CDC ops, each of ``apply_changes``' two commits);
+  (MERGE, both CDC ops and each of ``apply_changes``' two commits, a
+  CoW merge and an append that rebase over a commit to another bucket,
+  an MOR merge, and a table's first commit racing another bootstrap);
 - each path releases every local checkpoint it took, whether its
   commit lands or fails (no persisted RDD outlives the op).
 """
@@ -59,14 +61,16 @@ def _live(manifest: dict) -> set[str]:
 
 def check_manifest(manifest: dict, prev: dict | None = None) -> None:
     """Invariants every committed manifest keeps: live files have a row
-    count, stats describe live files only, nothing is both live and
-    retired, every table-owned (relative) file the commit superseded is
-    retired with a timestamp — a foreign reference (absolute, into a
-    clone source or a WAP branch) is not the table's to retire — and a
-    commit over a base that records a schema records one too."""
+    count and a stored size, stats describe live files only, nothing is
+    both live and retired, every table-owned (relative) file the commit
+    superseded is retired with a timestamp — a foreign reference
+    (absolute, into a clone source or a WAP branch) is not the table's
+    to retire — and a commit over a base that records a schema records
+    one too."""
     live = _live(manifest)
     retired = {e["path"]: e for e in manifest.get("retired", [])}
     assert live <= set(manifest.get("rows", {})), "live file without rows"
+    assert live <= set(manifest.get("bytes", {})), "live file without bytes"
     assert set(manifest.get("stats", {})) <= live, "stats for dead file"
     assert not live & set(retired), "file both live and retired"
     if prev is not None:
@@ -591,10 +595,58 @@ def _cdc_k1(spark, t, store):
     )
 
 
+def _cow_k3(spark, t, store):
+    sink.keyed_overwrite_parquet(
+        spark, _rows(spark, [("k3", 30, 3.5)]), t, store=store
+    )
+
+
+def _cdc_bootstrap(rows):
+    """A CDC writer that creates the table from its first batch."""
+    return lambda s, t, store: sink.apply_changes(
+        s, t, s.createDataFrame(rows, _CDC), "seq", key="oid__id",
+        num_buckets=4, store=store,
+    )
+
+
 #: case -> (setup, the op, which of the op's manifest CAS attempts the
-#: other writer beats, the other writer's commit).  Each rival touches
-#: a bucket the op writes, or is itself not rebase-safe.
+#: other writer beats, the other writer's commit).  At 4 buckets ``k1``
+#: hashes to bucket 1, ``n1`` to 2 and ``k3`` to 3.  A rival that
+#: touches a bucket the op decided from, or is not rebase-safe, fails
+#: the op (its retry lands); one that commits to another bucket, or
+#: under an MOR delta, is rebased over (``*_rebase`` and ``merge_mor``);
+#: a rival table's first commit fails the op's own bootstrap.
 RACES = {
+    "merge_rebase": (
+        _base,
+        lambda s, t, store: sink.keyed_overwrite_parquet(
+            s, _rows(s, [("k1", 10, 0.5)]), t, store=store
+        ),
+        1,
+        _cow_k3,
+    ),
+    "append_rebase": (
+        _base,
+        lambda s, t, store: sink.keyed_append(
+            s, _rows(s, [("n1", 1, 0.5)]), t, store=store
+        ),
+        1,
+        _cow_k3,
+    ),
+    "merge_mor": (
+        _base,
+        lambda s, t, store: sink.keyed_merge_mor(
+            s, _rows(s, [("k1", 10, 0.5)]), t, store=store
+        ),
+        1,
+        _mor_k1,
+    ),
+    "bootstrap": (
+        lambda s, t, store: None,
+        _cdc_bootstrap([("k1", 1, "U", 10, 0.5), ("k2", 1, "U", 20, 1.5)]),
+        1,
+        _cdc_bootstrap([("k1", 2, "U", 11, 0.7), ("k5", 1, "U", 50, 5.0)]),
+    ),
     "merge_into": (
         _base,
         lambda s, t, store: sink.merge_into(
@@ -616,6 +668,10 @@ RACES = {
         ),
     ),
 }
+
+
+#: the raced ops that rebase over their rival and land at once
+LANDS = {"merge_rebase", "append_rebase", "merge_mor", "apply_changes_memory"}
 
 
 def _tables_state(spark, target, store) -> list:
@@ -669,6 +725,7 @@ def test_lost_cas_race_leaves_one_version_then_retry_converges(
     except ConcurrentWriteError:
         landed = False
     assert len(casses) == nth and rstore.on_replace is None, "no race"
+    assert landed == (case in LANDS), f"{case}: landed={landed}"
     assert _persisted_rdds(spark) <= held, "raced op left a checkpoint"
     got = _tables_state(spark, raced, rstore)
     for table, before, after in zip(got, pre, post):

@@ -220,7 +220,7 @@ def test_compact_detects_concurrent_compactor(spark, tmp_path):
                 # a competing compactor lands first
                 current = self.read_json(path)
                 current["version"] += 1
-                super().replace_if_version(path, current, None)
+                super().replace_if_version(path, current, current["version"] - 1)
             super().replace_if_version(path, manifest, expected_version)
 
     with pytest.raises(ConcurrentWriteError):

@@ -12,6 +12,7 @@ client-side re-read) rejects us.
 
 from __future__ import annotations
 
+import collections
 import os
 
 import pytest
@@ -59,6 +60,22 @@ def test_stale_writer_is_rejected(tmp_path):
         with pytest.raises(ConcurrentWriteError):
             store.replace_if_version(path, {"version": 2, "buckets": {"0": ["c"]}}, 1)
         assert store.read_json(path)["buckets"] == {"0": ["b"]}, name
+
+
+def test_second_initial_commit_is_rejected(tmp_path):
+    """An initial commit (expected version None) creates the manifest
+    only if it is absent: a second writer bootstrapping the same table
+    fails instead of silently replacing the first one's commit, and
+    leaves no temp file behind."""
+    for name, store, path in _stores(tmp_path):
+        store.replace_if_version(path, {"version": 1, "buckets": {"0": ["a"]}}, None)
+        with pytest.raises(ConcurrentWriteError):
+            store.replace_if_version(
+                path, {"version": 1, "buckets": {"0": ["b"]}}, None
+            )
+        assert store.read_json(path)["buckets"] == {"0": ["a"]}, name
+    residue = [f for f in os.listdir(tmp_path / "local") if f.endswith(".tmp")]
+    assert residue == []
 
 
 def test_lost_conditional_put_race():
@@ -865,12 +882,8 @@ def test_null_skipping_never_changes_results_on_mixed_files(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Executor-side stats collection (VERDICT r8 task 1): above a file-count
-# crossover the footer decode fans out as an RDD map; below it the serial
-# driver loop wins (a Spark job's fixed overhead dwarfs a handful of
-# ~70 µs local footer reads — the same economics that sank the r8
-# driver-side thread pool).  Both legs share ONE decode helper, so they
-# are byte-identical by construction — and we pin that anyway.
+# Footer stats, row counts and sizes: each commit describes its new
+# files once (sink._describe_files), on the driver.
 # ---------------------------------------------------------------------------
 
 
@@ -905,11 +918,10 @@ def _stats_fixture_table(spark, tmp_path):
 
 
 def test_file_stats_legs_byte_identical(spark, tmp_path):
-    from airflow_postgres_etl_spark.sink import (
-        _file_stats_distributed,
-        _file_stats_serial,
-        _load_manifest,
-    )
+    """Describing a table's committed files again gives exactly what
+    their commit recorded (stats, rows and bytes), and the stats take
+    all three entry forms."""
+    from airflow_postgres_etl_spark.sink import _describe_files, _load_manifest
     from airflow_postgres_etl_spark.storage import LOCAL_STORE
 
     target = _stats_fixture_table(spark, tmp_path)
@@ -917,81 +929,16 @@ def test_file_stats_legs_byte_identical(spark, tmp_path):
     files = [f for fs in m["buckets"].values() for f in fs]
     assert len(files) >= 4
     tracked = ["vi", "vd", "vs", "vn", "vz", "nosuchcol"]
-    serial = _file_stats_serial(target, files, tracked)
-    dist = _file_stats_distributed(spark, target, files, tracked)
-    assert serial == dist
+    stats, rows, sizes = _describe_files(target, files, tracked, LOCAL_STORE)
+    assert (stats, rows, sizes) == (m["stats"], m["rows"], m["bytes"])
     # the fixture really exercised all three entry forms
     forms = {tuple(type(x).__name__ for x in s.get("vz", []))
-             for s in serial.values()}
+             for s in stats.values()}
     assert ("NoneType", "NoneType", "int", "int") in forms  # all-null
     assert any(len(s.get("vn", [])) == 4 and s["vn"][2] > 0
-               for s in serial.values())  # some-null range form
-
-
-def test_large_commit_stats_zero_driver_footer_reads(
-    spark, tmp_path, monkeypatch
-):
-    """Seam-spy: above the crossover, the hot commit path performs ZERO
-    driver-side footer reads — kill the serial leg and the commit still
-    lands with full skipping stats."""
-    from airflow_postgres_etl_spark import sink
-    from airflow_postgres_etl_spark.sink import (
-        _load_manifest,
-        keyed_overwrite_parquet,
-        read_keyed_table,
-    )
-    from airflow_postgres_etl_spark.storage import LOCAL_STORE
-
-    monkeypatch.setattr(sink, "_STATS_DISTRIBUTED_MIN_FILES", 2)
-
-    def no_driver_reads(*a, **k):
-        raise AssertionError("driver-side footer read on the hot path")
-
-    monkeypatch.setattr(sink, "_file_stats_serial", no_driver_reads)
-    # the second commit-path footer loop — the row-count fill — must be
-    # off the driver too above the crossover
-    monkeypatch.setattr(sink, "_num_rows_serial", no_driver_reads)
-
-    target = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(f"k{i}", i) for i in range(40)], ["oid__id", "v"]
-    )
-    keyed_overwrite_parquet(
-        spark, df, target, num_buckets=4, vacuum=False, stats_cols=["v"]
-    )
-    m = _load_manifest(target, LOCAL_STORE)
-    assert m["stats"] and all("v" in s for s in m["stats"].values())
-    # skipping still works off the executor-collected stats
-    full = read_keyed_table(spark, target)
-    hi = read_keyed_table(spark, target, where=("v", 39, None))
-    assert {r.v for r in hi.collect()} == {39}
-    assert len(hi.inputFiles()) < len(full.inputFiles())
-
-
-def test_small_commit_stats_stay_on_the_driver(spark, tmp_path, monkeypatch):
-    """Below the crossover the serial loop is the right tool — the
-    distributed leg must NOT launch a job for a handful of files."""
-    from airflow_postgres_etl_spark import sink
-    from airflow_postgres_etl_spark.sink import (
-        _load_manifest,
-        keyed_overwrite_parquet,
-    )
-    from airflow_postgres_etl_spark.storage import LOCAL_STORE
-
-    def no_job(*a, **k):
-        raise AssertionError("distributed stats job launched below crossover")
-
-    monkeypatch.setattr(sink, "_file_stats_distributed", no_job)
-
-    target = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(f"k{i}", i) for i in range(10)], ["oid__id", "v"]
-    )
-    keyed_overwrite_parquet(
-        spark, df, target, num_buckets=2, vacuum=False, stats_cols=["v"]
-    )
-    m = _load_manifest(target, LOCAL_STORE)
-    assert m["stats"] and all("v" in s for s in m["stats"].values())
+               for s in stats.values())  # some-null range form
+    assert any(len(s.get("vi", [])) == 4 and s["vi"][2] == 0
+               for s in stats.values())  # range form, no nulls
 
 
 def test_merge_txn_watermark_idempotent(spark, tmp_path):
@@ -1046,77 +993,72 @@ def test_merge_txn_watermark_idempotent(spark, tmp_path):
     assert read_keyed_table(spark, t2).count() == 8
 
 
-def test_row_count_fill_reuses_stats_footer_pass(spark, tmp_path, monkeypatch):
-    """r9 review finding: the commit opened each new file's footer
-    twice (stats, then row counts).  With tracked stats columns the
-    row-count fill must be entirely hint-served — zero re-opens."""
-    from airflow_postgres_etl_spark import sink
+class CountingStore(FakeConditionalStore):
+    """Fake conditional-PUT store that counts the footer opens and the
+    sizings of each data file."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.opens: collections.Counter = collections.Counter()
+        self.sizes: collections.Counter = collections.Counter()
+
+    def open_input(self, path: str):
+        self.opens[path] += 1
+        return super().open_input(path)
+
+    def size(self, path: str) -> int | None:
+        self.sizes[path] += 1
+        return super().size(path)
+
+
+@pytest.mark.parametrize("stats_cols", [["v"], None], ids=["stats", "no_stats"])
+def test_commit_opens_and_sizes_each_new_file_once(spark, tmp_path, stats_cols):
+    """Each data file a commit creates has its footer opened once and is
+    sized once, with or without tracked stats columns, including by a
+    CoW merge that loses its first CAS to a commit to another bucket and
+    rebases; and the manifests record every live file's rows and bytes
+    (and stats, when tracked)."""
     from airflow_postgres_etl_spark.sink import (
+        _live_files,
+        _load_manifest,
         keyed_overwrite_parquet,
         table_stats,
     )
 
-    def no_reopen(*a, **k):
-        raise AssertionError("row-count fill re-opened a footer")
-
-    monkeypatch.setattr(sink, "_footer_num_rows", no_reopen)
-    t = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(f"k{i}", i) for i in range(20)], ["oid__id", "v"]
-    )
-    keyed_overwrite_parquet(
-        spark, df, t, num_buckets=4, vacuum=False, stats_cols=["v"]
-    )
-    st = table_stats(t)
-    assert st["row_count"] == 20  # exact, from the single footer pass
-
-
-def test_optimize_stats_zero_driver_footer_reads(spark, tmp_path, monkeypatch):
-    """The review-caught call site: optimize_keyed_table — the op whose
-    whole purpose is packing tables with MANY files — must also collect
-    stats executor-side above the crossover."""
-    from airflow_postgres_etl_spark import sink
-    from airflow_postgres_etl_spark.sink import (
-        _load_manifest,
-        keyed_append,
-        keyed_overwrite_parquet,
-        optimize_keyed_table,
-        read_keyed_table,
-    )
-    from airflow_postgres_etl_spark.storage import LOCAL_STORE
-
+    store = CountingStore()
     target = str(tmp_path / "t")
-    keyed_overwrite_parquet(
-        spark,
-        spark.createDataFrame([(f"k{i}", i) for i in range(20)], ["oid__id", "v"]),
-        target, num_buckets=4, vacuum=False, stats_cols=["v"],
-    )
-    for j in range(2):  # append debt: multiple files per bucket
-        keyed_append(
-            spark,
-            spark.createDataFrame(
-                [(f"a{j}_{i}", 100 + i) for i in range(20)], ["oid__id", "v"]
-            ),
-            target, verify_new=False,
+
+    def merge(rows):
+        keyed_overwrite_parquet(
+            spark, spark.createDataFrame(rows, ["oid__id", "v"]), target,
+            num_buckets=4, vacuum=False, stats_cols=stats_cols, store=store,
         )
 
-    monkeypatch.setattr(sink, "_STATS_DISTRIBUTED_MIN_FILES", 2)
-
-    def no_driver_reads(*a, **k):
-        raise AssertionError("driver-side footer read on the optimize path")
-
-    monkeypatch.setattr(sink, "_file_stats_serial", no_driver_reads)
-    monkeypatch.setattr(sink, "_num_rows_serial", no_driver_reads)
-    optimize_keyed_table(spark, target, max_files_per_bucket=1)
-    m = _load_manifest(target, LOCAL_STORE)
-    assert m["stats"] and all("v" in s for s in m["stats"].values())
-    assert read_keyed_table(spark, target).count() == 60
+    merge([(f"k{i}", i) for i in range(20)])
+    # at 4 buckets k1 hashes to bucket 1, k3 to bucket 3
+    store.on_replace = lambda: merge([("k3", 100)])
+    merge([("k1", 99)])
+    assert store.on_replace is None, "no race"
+    m = _load_manifest(target, store)
+    assert m["version"] == 3  # the merge rebased over the rival
+    new_files = {
+        os.path.join(r, f)
+        for r, _d, fs in os.walk(os.path.join(target, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert len(new_files) == 4 + 1 + 1
+    assert dict(store.opens) == dict.fromkeys(new_files, 1)
+    assert dict(store.sizes) == dict.fromkeys(new_files, 1)
+    live = set(_live_files(m))
+    assert live <= set(m["rows"]) and live <= set(m["bytes"])
+    assert (live <= set(m["stats"])) == bool(stats_cols)
+    assert table_stats(target, store=store)["row_count"] == 20
 
 
 # ---------------------------------------------------------------------------
-# r10 (VERDICT r9 task 1): footer opens route through the storage seam
-# (store.open_input) in BOTH stats legs — zero direct os-path parquet
-# opens anywhere on the commit path.
+# Footer opens route through the storage seam (store.open_input) — zero
+# direct os-path parquet opens anywhere on the commit path.
 # ---------------------------------------------------------------------------
 
 
@@ -1124,9 +1066,7 @@ class RedirectStore(LocalManifestStore):
     """Seam-spy store whose DATA files live at a different physical root
     than the logical paths the sink asks for.  Any footer open that
     bypasses ``open_input`` (a direct os-path pyarrow open) hits a
-    missing file and fails loudly — including EXECUTOR-side opens, since
-    the store pickles into the distributed leg's RDD tasks.  Module
-    level so it pickles by reference into Spark workers."""
+    missing file and fails loudly."""
 
     def __init__(self, src_root: str, dst_root: str) -> None:
         self.src_root = src_root
@@ -1138,16 +1078,15 @@ class RedirectStore(LocalManifestStore):
 
 
 def test_footer_opens_route_through_seam_both_legs(spark, tmp_path):
-    """Write a table, MOVE its data to a hidden root, and re-collect
-    stats through a redirecting store: both legs must produce the exact
-    pre-move stats (proof every open went through open_input — the
-    original paths no longer exist)."""
+    """Write a table, MOVE its data to a hidden root, and describe its
+    files again through a redirecting store: the footer pass must give
+    the exact pre-move stats and row counts (proof every open went
+    through open_input — the original paths no longer exist), while a
+    direct os-path open finds nothing to read."""
     import shutil
 
     from airflow_postgres_etl_spark.sink import (
-        _file_stats_distributed,
-        _file_stats_serial,
-        _footer_num_rows,
+        _describe_files,
         _load_manifest,
         keyed_overwrite_parquet,
     )
@@ -1165,19 +1104,16 @@ def test_footer_opens_route_through_seam_both_legs(spark, tmp_path):
     m = _load_manifest(target, LOCAL_STORE)
     files = [f for fs in m["buckets"].values() for f in fs]
     tracked = ["vi", "vf"]
-    before = _file_stats_serial(target, files, tracked)
+    before = _describe_files(target, files, tracked, LOCAL_STORE)[:2]
+    assert before == (m["stats"], m["rows"])
 
     hidden = str(tmp_path / "hidden_root")
     shutil.move(target, hidden)
     store = RedirectStore(target, hidden)
 
     # direct os-path open now fails: the seam is the ONLY way in
-    assert _footer_num_rows(os.path.join(target, files[0])) is None
-    assert _footer_num_rows(os.path.join(target, files[0]), store) > 0
-
-    serial = _file_stats_serial(target, files, tracked, store=store)
-    dist = _file_stats_distributed(spark, target, files, tracked, store)
-    assert serial == before and dist == before
+    assert _describe_files(target, files, tracked, LOCAL_STORE) == ({}, {}, {})
+    assert _describe_files(target, files, tracked, store)[:2] == before
 
 
 def test_commit_and_optimize_zero_direct_path_opens(
@@ -1186,9 +1122,7 @@ def test_commit_and_optimize_zero_direct_path_opens(
     """Full lifecycle (create → merge → append → optimize) under a spy
     store whose open_input returns FILE OBJECTS, with driver-side
     pyarrow patched to reject raw string paths: the whole commit path
-    must perform zero direct os-path parquet opens (serial leg — the
-    distributed leg is covered by the RedirectStore test above and the
-    zero-driver-reads tests)."""
+    must perform zero direct os-path parquet opens."""
     import pyarrow.parquet as real_pq
 
     from airflow_postgres_etl_spark.sink import (
@@ -1241,23 +1175,9 @@ def test_commit_and_optimize_zero_direct_path_opens(
     assert len(spy.opened) > n_create
     m = _load_manifest(target, spy)
     assert m["stats"] and all("v" in s for s in m["stats"].values())
-    # row counts filled (hint-served off the same seam-routed pass)
+    # row counts recorded off the same seam-routed footer pass
     assert table_stats(target, store=spy)["row_count"] == 22
     got = {(r.oid__id, r.v) for r in read_keyed_table(spark, target, store=spy).collect()}
     assert ("k0", 99) in got and ("a1", 200) in got and len(got) == 22
 
 
-def test_num_rows_hint_evicts_oldest_half_only(monkeypatch):
-    """r10 (r9 advisor finding): at the cap, evict the OLDEST half —
-    never the whole dict — so a single >cap-file commit's own in-flight
-    hints (inserted last) survive to its manifest row-count fill."""
-    from airflow_postgres_etl_spark import sink
-
-    monkeypatch.setattr(sink, "_NUM_ROWS_HINT", {})
-    monkeypatch.setattr(sink, "_NUM_ROWS_HINT_CAP", 10)
-    for i in range(10):
-        sink._hint_num_rows(f"f{i}", i)
-    sink._hint_num_rows("f10", 10)
-    hints = sink._NUM_ROWS_HINT
-    assert len(hints) == 6
-    assert set(hints) == {"f5", "f6", "f7", "f8", "f9", "f10"}

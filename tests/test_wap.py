@@ -16,9 +16,12 @@ import os
 import pytest
 
 from airflow_postgres_etl_spark import sink
-from airflow_postgres_etl_spark.api import Engine
+from airflow_postgres_etl_spark.api import Engine, Table
 from airflow_postgres_etl_spark.operators.expectations import expect
-from airflow_postgres_etl_spark.storage import ConcurrentWriteError
+from airflow_postgres_etl_spark.storage import (
+    ConcurrentWriteError,
+    LocalManifestStore,
+)
 
 
 def _table(spark, tmp_path, rows):
@@ -224,7 +227,7 @@ def test_branch_name_traversal_rejected(tmp_path):
         assert p.startswith(src + "/") and "_branches" in p
 
 
-def test_publish_carries_the_audited_snapshot(spark, tmp_path, monkeypatch):
+def test_publish_carries_the_audited_snapshot(spark, tmp_path):
     """Publish re-points the branch's snapshot as audited: its recorded
     schema, row counts and column mapping travel with its files, so the
     source reads the branch's column names, infers no schema and opens
@@ -239,13 +242,17 @@ def test_publish_carries_the_audited_snapshot(spark, tmp_path, monkeypatch):
     sink.rename_column(spark, b.path, "v", "value")
     audited = sink._load_manifest(b.path)
 
-    opened = []
-    real = sink._footer_num_rows
-    monkeypatch.setattr(
-        sink, "_footer_num_rows", lambda p, *a: opened.append(p) or real(p, *a)
-    )
-    t.publish("audit")
-    assert opened == []
+    class OpenSpyStore(LocalManifestStore):
+        def __init__(self) -> None:
+            self.opened: list[str] = []
+
+        def open_input(self, path: str):
+            self.opened.append(path)
+            return path
+
+    spy = OpenSpyStore()
+    Table(spark, t.path, store=spy).publish("audit")
+    assert spy.opened == []
 
     published = sink._load_manifest(t.path)
     assert published["schema"] == audited["schema"]

@@ -33,8 +33,7 @@ from airflow_postgres_etl_spark.session import get_spark
 
 HELPERS = [
     "_read_files",
-    "_file_stats",
-    "_fill_row_counts",
+    "_describe_files",
     "vacuum_keyed_table",
     "_commit_manifest",
     "_align_batch_types",
