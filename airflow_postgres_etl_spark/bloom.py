@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sink import _commit_manifest, _load_manifest, _read_files
+from .sink import _commit_manifest, _open_table, _read_files
 from .storage import LOCAL_STORE
 
 #: default filter geometry: 4096 bits / 5 hashes -> <1% false positives
@@ -86,9 +86,7 @@ def add_bloom_index(
     One scan of the live files (distinct values per file), a
     driver-side fold of ≤ m bit positions per file — maintenance-class
     work, same cost envelope as clustering."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest = _open_table(target, store)[0]
     # blooms are keyed by PHYSICAL file+column; the caller names a
     # logical column — translate once (read_keyed_table's where_eq does
     # the same translation when consulting the index)

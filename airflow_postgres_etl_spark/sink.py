@@ -88,9 +88,11 @@ Two implementations:
   constrained table), and MERGE's by-source UPDATE counts its
   whole-table scope with one aggregate.
 
-  **Layout.**  The manifest records the bucket count its files were
-  hashed with, and every reader and writer takes it from there; the
-  ``_bucket_spec.json`` beside it pins the key.  A table created with
+  **Layout.**  The manifest is the one record of a table's layout: the
+  bucket ``key``, the ``num_buckets`` its files were hashed with and,
+  on an auto-sized table, ``auto``.  The first commit records them,
+  they move atomically with the files, and every later commit carries
+  them (:func:`_commit_manifest`).  A table created with
   ``num_buckets=`` keeps that count until :func:`rebucket_keyed_table`.
   One created without it is auto-sized: its first commit starts at the
   smallest power of two whose buckets fit the admitted batch in
@@ -98,12 +100,13 @@ Two implementations:
   or optimize doubles the layout (one commit rewriting every bucket)
   once the mean bucket passes the target.  The stored bytes it sums are
   recorded per file in the manifest (``bytes``) when the file is
-  committed, so the check reads no data file.  The ``auto`` flag lives
-  in the spec, whose count stays the creation count: only the
-  manifest's moves.  A trickle-fed table thus stays at a few
-  files.  Few buckets also means few disjoint ones: concurrent writers
-  that must land without conflicting (disjoint-bucket merges) should
-  pin ``num_buckets=``.
+  committed, so the check reads no data file.  A trickle-fed table
+  thus stays at a few files.  Few buckets also means few disjoint
+  ones: concurrent writers that must land without conflicting
+  (disjoint-bucket merges) should pin ``num_buckets=``.  A table
+  written before manifests recorded its key kept it in a spec file
+  beside the manifest; :func:`_load_manifest` folds that file in, and
+  the table's next commit records it.
 
   Conflict rules: the CoW merge and the append rebase over any commit
   that leaves their affected buckets, the bucket count and their txn
@@ -208,33 +211,14 @@ def _bucket_expr(key: str, num_buckets: int):
     return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(num_buckets)).cast("int")
 
 
-def _spec_path(target: str) -> str:
-    return os.path.join(target, "_bucket_spec.json")
-
-
-def _layout_of(target: str, manifest: dict | None, store) -> int | None:
-    """The bucket count ``manifest``'s files were hashed with: the count
-    the manifest records, else the spec's (a table committed before
-    manifests recorded it).  The manifest is the authority because it
-    moves atomically with the files — the spec is written apart from
-    the manifest swap, and a layout change (a split, a rebucket) leaves
-    it behind for a moment or, after a crash, for good."""
-    if manifest is not None and manifest.get("num_buckets"):
-        return manifest["num_buckets"]
-    spec = store.read_json(_spec_path(target))
-    return None if spec is None else spec["num_buckets"]
-
-
 def _check_layout(
-    target: str, key: str, num_buckets: int | None, manifest: dict | None,
-    store=LOCAL_STORE,
+    target: str, key: str, num_buckets: int | None, manifest: dict | None
 ) -> int | None:
     """Validate the caller's layout against the target's and return the
     bucket count.  ``num_buckets=None`` adopts the existing table's
     layout; on a new table it asks for an auto-sized one, whose count
     (None here) the first commit takes from the admitted batch."""
-    spec = store.read_json(_spec_path(target))
-    have = _layout_of(target, manifest, store)
+    have = None if manifest is None else manifest.get("num_buckets")
     if have is None:
         if manifest is not None and num_buckets is None:
             raise ValueError(
@@ -244,31 +228,14 @@ def _check_layout(
         return num_buckets
     if num_buckets is None:
         num_buckets = have
-    if num_buckets != have or (spec is not None and spec["key"] != key):
+    if num_buckets != have or manifest.get("key", key) != key:
         raise ValueError(
-            f"target {target} is bucketed by {spec and spec['key']!r} into "
+            f"target {target} is bucketed by {manifest.get('key')!r} into "
             f"{have}, got key={key!r} num_buckets={num_buckets}; only "
             "rebucket_keyed_table or an auto-sized table's growth changes "
             "the bucket layout"
         )
     return num_buckets
-
-
-def _auto_sized(target: str, store) -> bool:
-    """Whether the table was created without ``num_buckets=`` (its spec
-    says so), so its layout grows with its bytes.  A spec written before
-    auto-sizing existed never says so: those tables keep their count."""
-    return bool((store.read_json(_spec_path(target)) or {}).get("auto"))
-
-
-def _write_spec(
-    target: str, key: str, num_buckets: int, store=LOCAL_STORE,
-    auto: bool = False,
-) -> None:
-    spec = {"key": key, "num_buckets": num_buckets, "bucket_col": BUCKET_COL}
-    if auto:
-        spec["auto"] = True
-    store.write_json(_spec_path(target), spec)
 
 
 def _sized(n_bytes: int, num_buckets: int = 1) -> int:
@@ -351,7 +318,7 @@ def add_table_constraint(
     The EXISTING rows are validated first (one scan); a table that
     already violates the predicate rejects the constraint rather than
     recording a lie.  Constraints live in ``_constraints.json`` beside
-    the spec, so they survive rebucket/cluster/compaction untouched."""
+    the manifest, so they survive rebucket/cluster/compaction untouched."""
     # constraints bind to PHYSICAL column names at enforcement time; on
     # a renamed/dropped table a new predicate's names would be
     # ambiguous between eras — fail closed until a purge
@@ -492,27 +459,43 @@ def _load_manifest(target: str, store=LOCAL_STORE) -> dict | None:
     by an older version of this sink) is adopted in place: its files are
     synthesized into a version-0 manifest so the first merge commits them
     properly — no data rewrite needed to migrate.
+
+    A legacy table — that layout, or a manifest written before manifests
+    recorded the bucket ``key`` — kept its key, its ``auto`` flag and
+    (before manifests recorded the count) its bucket count in
+    ``_bucket_spec.json``.  This is the one place that file is read: it
+    is folded into the returned dict (a count the manifest records
+    wins), and the table's next commit records what it holds.
     """
     manifest = store.read_json(_manifest_path(target))
-    if manifest is not None:
-        return manifest
-    # adoption listing goes through the seam too (store.list_dir returns
-    # [] for a missing prefix, so no existence probe is needed): a
-    # non-local store CAN hold a pre-manifest layout if an older writer
-    # crashed between data write and initial commit.
-    buckets: dict[str, list[str]] = {}
-    for d in store.list_dir(target):
-        if d.startswith(f"{BUCKET_COL}="):
-            files = sorted(
-                os.path.join(d, f)
-                for f in store.list_dir(os.path.join(target, d))
-                if f.endswith(".parquet")
-            )
-            if files:
-                buckets[d.split("=", 1)[1]] = files
-    if buckets:
-        return {"version": 0, "buckets": buckets}
-    return None
+    if manifest is None:
+        # adoption listing goes through the seam too (store.list_dir
+        # returns [] for a missing prefix, so no existence probe is
+        # needed): a non-local store CAN hold a pre-manifest layout if
+        # an older writer crashed between data write and initial commit.
+        buckets: dict[str, list[str]] = {}
+        for d in store.list_dir(target):
+            if d.startswith(f"{BUCKET_COL}="):
+                files = sorted(
+                    os.path.join(d, f)
+                    for f in store.list_dir(os.path.join(target, d))
+                    if f.endswith(".parquet")
+                )
+                if files:
+                    buckets[d.split("=", 1)[1]] = files
+        if not buckets:
+            return None
+        manifest = {"version": 0, "buckets": buckets}
+    if "key" not in manifest:
+        spec = store.read_json(os.path.join(target, "_bucket_spec.json"))
+        if spec is not None:
+            manifest = {
+                "key": spec["key"],
+                "num_buckets": spec["num_buckets"],
+                **({"auto": True} if spec.get("auto") else {}),
+                **manifest,
+            }
+    return manifest
 
 
 def _version_manifest_path(target: str, version: int) -> str:
@@ -802,11 +785,12 @@ def _repoint(snap: dict, ref) -> dict:
     """``snap``'s files under the references ``ref(path)`` maps them to
     — base and delta paths and the keys of the per-file ``stats``,
     ``blooms``, ``rows`` and ``bytes`` — with the entries that describe
-    those files: the recorded schema, the bucket layout and the column
+    those files: the recorded schema, the bucket count and the column
     mapping (pinned even when empty, so the commit carry never lays
-    the tip's names over them).  The table state (``txns`` and the
-    :data:`_POLICIES`) is left out for :func:`_commit_manifest` to take
-    from the tip.  The caller adds ``version`` and ``retired``."""
+    the tip's names over them).  The table state (the bucket ``key``,
+    the ``auto`` flag, ``txns`` and the :data:`_POLICIES`) is left out
+    for :func:`_commit_manifest` to take from the tip.  The caller adds
+    ``version`` and ``retired``."""
     out = {
         "buckets": {b: [ref(f) for f in fs] for b, fs in snap["buckets"].items()},
         "deltas": {
@@ -841,10 +825,12 @@ def _describe_files(
     match before Spark opens them.  Only JSON-stable scalar types
     (int/float/str/bool) are recorded, and a column whose footer stat is
     absent or exotic gets no range.  A file whose footer cannot be read
-    gets no ``rows`` or ``stats`` entry, and one the store cannot size
-    no ``bytes`` entry: readers treat a missing entry as unknown
-    (``table_stats`` reports ``row_count=None``; pruning reads the
-    file), never as a guess."""
+    (the open raises ``OSError``, or pyarrow's ``ArrowInvalid``, a
+    ``ValueError``) gets no ``rows`` or ``stats`` entry, and one the
+    store cannot size no ``bytes`` entry: readers treat a missing entry
+    as unknown (``table_stats`` reports ``row_count=None``; pruning
+    reads the file), never as a guess.  Any other error is a broken
+    store and fails the commit before its CAS."""
     import pyarrow.parquet as pq
 
     wanted = set(stats_cols)
@@ -859,7 +845,7 @@ def _describe_files(
         try:
             with pq.ParquetFile(store.open_input(path)) as pf:
                 meta = pf.metadata
-        except Exception:
+        except (OSError, ValueError):
             continue
         rows[rel] = meta.num_rows
         names = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
@@ -929,18 +915,25 @@ def _commit_manifest(
     crash between CAS and copy loses only that version's time-travel
     entry, never current-state correctness."""
     # the table state a commit leaves alone rides over from the tip: the
-    # bucket layout (every data commit records the one it hashed with;
-    # readers and writers take it from here, see _layout_of), the
-    # writer-transaction watermarks (Delta's `txn` action — "batch N
-    # already applied" must survive every unrelated commit), the ambient
-    # policies (_POLICIES) and the column mapping.  A key the commit
-    # sets wins (a setter's None clears its policy).
-    carry = [k for k in ("num_buckets", "txns", *_POLICIES) if k not in manifest]
+    # bucket layout (key, count and auto flag: every data commit records
+    # the key and count it hashed with, and readers and writers take
+    # them from here), the writer-transaction watermarks (Delta's `txn`
+    # action — "batch N already applied" must survive every unrelated
+    # commit), the ambient policies (_POLICIES) and the column mapping.
+    # A key the commit sets wins (a setter's None clears its policy, a
+    # rebucket's False ends auto-sizing).  The tip is read through
+    # _load_manifest, so a legacy table's next commit records the key
+    # its spec held.
+    carry = [
+        k
+        for k in ("key", "num_buckets", "auto", "txns", *_POLICIES)
+        if k not in manifest
+    ]
     carry_map = (
         "column_mapping" not in manifest and "dropped_columns" not in manifest
     )
     if carry or carry_map:
-        cur = store.read_json(_manifest_path(target))
+        cur = _load_manifest(target, store)
         if cur:
             for k in carry:
                 if cur.get(k):
@@ -1127,14 +1120,14 @@ def _list_commit_buckets(
 
 def _open_table(target: str, store=LOCAL_STORE) -> tuple[dict, str, int]:
     """``(manifest, key, num_buckets)`` of a committed keyed table — the
-    preamble of every operation that needs an existing table."""
+    preamble of every operation that needs an existing table, all read
+    from its manifest (module docstring, "Layout")."""
     manifest = _load_manifest(target, store)
     if manifest is None:
         raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is None:
-        raise ValueError(f"{target} has a manifest but no bucket spec")
-    return manifest, spec["key"], _layout_of(target, manifest, store)
+    if "key" not in manifest:
+        raise ValueError(f"{target} has a manifest but no recorded bucket key")
+    return manifest, manifest["key"], manifest.get("num_buckets")
 
 
 def _open_or_bootstrap(target, key, num_buckets, store, op: str):
@@ -1276,17 +1269,16 @@ def _commit_files(
     full_schema: bool = False,
     range_by: tuple | None = None,
     extra: dict | None = None,
-    auto: bool = False,
     store=LOCAL_STORE,
 ) -> tuple[dict, dict[str, list[str]]]:
     """THE data commit (module docstring, "Commit kernel"): write
     ``frame`` bucketed by ``key`` (the bucket column is derived when
     absent) as one new commit directory, then publish one manifest
-    built on ``base`` (None = the table's first commit, which also pins
-    the bucket spec, auto-sized when ``auto``) through
-    :func:`_commit_optimistic`.  The manifest records ``num_buckets``,
-    the layout the frame was hashed with: a commit at a new count (a
-    rebucket, an auto-sized table's growth) rewrites every bucket.
+    built on ``base`` (None = the table's first commit) through
+    :func:`_commit_optimistic`.  The manifest records ``key`` and
+    ``num_buckets``, the layout the frame was hashed with: a commit at a
+    new count (a rebucket, an auto-sized table's growth) rewrites every
+    bucket.
     Returns the committed manifest and ``{bucket: new files}``.
 
     ``edit`` is the manifest edit: ``"replace"`` swaps ``buckets`` (all
@@ -1323,8 +1315,6 @@ def _commit_files(
     commit_rel = os.path.join("data", uuid.uuid4().hex[:12])
     layout = {} if range_by is None else {"range_by": range_by}
     _write_bucketed(frame, os.path.join(target, commit_rel), num_buckets, **layout)
-    if base is None:
-        _write_spec(target, key, num_buckets, store, auto)
     written = _list_commit_buckets(target, commit_rel, store)
     # the new files are described once, before the first CAS attempt: a
     # rebase reuses the answer (the files are immutable).  Delta files
@@ -1365,6 +1355,7 @@ def _commit_files(
             "version": version,
             "buckets": new_buckets,
             "deltas": deltas,
+            "key": key,
             "num_buckets": num_buckets,
         }
         live = set(_live_files(out))
@@ -1533,8 +1524,7 @@ def keyed_overwrite_parquet(
     txn = _txn_of(txn_app, txn_seq)
     os.makedirs(target, exist_ok=True)
     manifest = _load_manifest(target, store)
-    num_buckets = _check_layout(target, key, num_buckets, manifest, store)
-    auto = num_buckets is None or _auto_sized(target, store)
+    num_buckets = _check_layout(target, key, num_buckets, manifest)
     if _txn_applied(manifest, txn):
         return 0
     admitted = _admit_batch(
@@ -1550,9 +1540,12 @@ def keyed_overwrite_parquet(
     resized = None
     if num_buckets is None:
         resized = min(_sized(_batch_bytes(bucketed)), _MAX_START_BUCKETS)
-    elif auto and manifest is not None:
+    elif manifest is not None and manifest.get("auto"):
         resized = _grown(target, manifest, num_buckets, store)
     grows = manifest is not None and resized is not None
+    # a new auto-sized table records the flag in its first commit; the
+    # carry keeps it from there
+    extra = {"auto": True} if num_buckets is None else None
     # file-level pruning: only the affected buckets' live files are read
     # (every bucket when the layout grows).  An affected bucket with
     # pending MOR deltas contributes its RESOLVED rows and this commit
@@ -1591,7 +1584,7 @@ def keyed_overwrite_parquet(
         target, merged, manifest, key, num_buckets, "replace",
         buckets=None if manifest is None or grows else affected,
         guard=None if grows else affected, txn=txn, stats_cols=stats_cols,
-        full_schema=True, auto=auto, store=store,
+        full_schema=True, extra=extra, store=store,
     )
     if vacuum and manifest is not None:
         vacuum_keyed_table(target, retention_s=retention_s, store=store)
@@ -1987,7 +1980,7 @@ def keyed_merge_mor(
             spark, batch, target, key=key, num_buckets=num_buckets, store=store
         )
         return
-    num_buckets = _check_layout(target, key, num_buckets, manifest, store)
+    num_buckets = _check_layout(target, key, num_buckets, manifest)
     admitted = _admit_batch(spark, batch, target, manifest, key, num_buckets, store)
     if admitted is None:
         return
@@ -2280,9 +2273,7 @@ def _rewrite_buckets(spark, target, pick, store) -> int:
     Returns the number of buckets rewritten (0: nothing to do, no
     commit)."""
     manifest, key, num_buckets = _open_table(target, store)
-    grown = _auto_sized(target, store) and _grown(
-        target, manifest, num_buckets, store
-    )
+    grown = manifest.get("auto") and _grown(target, manifest, num_buckets, store)
     buckets = (
         sorted(manifest["buckets"].keys() | manifest.get("deltas", {}).keys())
         if grown
@@ -2322,16 +2313,15 @@ def rebucket_keyed_table(
     commit; visible content must not change (test-pinned).
 
     The new count is recorded in the commit's manifest, which every
-    reader and writer takes the layout from (:func:`_layout_of`): a
-    merge that opened the table before the CAS hashed with the old
-    count and fails the kernel's "bucket count changed" rule.  The spec
-    is rewritten after the CAS and pins the layout: an auto-sized table
-    stops growing once rebucketed.  A crash between the two leaves the
-    old spec, which only the ``auto`` flag is read from.  If WE lose
-    the CAS to a racing merge, ``ConcurrentWriteError`` propagates and
-    the old layout stays live (our files become vacuum orphans).
-    Superseded files retire under the normal retention window so
-    in-flight readers finish their snapshot.
+    reader and writer takes the layout from: a merge that opened the
+    table before the CAS hashed with the old count and fails the
+    kernel's "bucket count changed" rule.  The same commit pins the
+    layout (``auto: False``): an auto-sized table stops growing once
+    rebucketed.  If WE lose the CAS to a racing merge,
+    ``ConcurrentWriteError`` propagates and the old layout stays live
+    (our files become vacuum orphans).  Superseded files retire under
+    the normal retention window so in-flight readers finish their
+    snapshot.
     """
     manifest, key, num_buckets = _open_table(target, store)
     if num_buckets == new_num_buckets:
@@ -2342,9 +2332,8 @@ def rebucket_keyed_table(
     # files' footers for the columns already tracked.
     _commit_files(
         target, _scope_rows(spark, target, manifest, key), manifest,
-        key, new_num_buckets, "replace", store=store,
+        key, new_num_buckets, "replace", extra={"auto": False}, store=store,
     )
-    _write_spec(target, key, new_num_buckets, store)
 
 
 @_records_op("widen_column")
@@ -2461,9 +2450,7 @@ def _policy_commit(spark, target, name, policy, store) -> int:
     built on — a concurrent rename/drop of one between load and CAS must
     fail THIS commit, not wedge every later maintain — and no
     concurrent commit conflicts with it: it moves no data."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest = _open_table(target, store)[0]
     label, cols_of, _rename = _POLICIES[name]
 
     def build(base: dict) -> dict:
@@ -2483,10 +2470,7 @@ def _policy_commit(spark, target, name, policy, store) -> int:
 
 
 def _stored_policy(target: str, name: str, store) -> dict | None:
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    return manifest.get(name) or None
+    return _open_table(target, store)[0].get(name) or None
 
 
 @_records_op("set_drift_policy")
@@ -2736,13 +2720,10 @@ def rename_column(
     must be plain non-empty identifiers.  CHECK constraints keep
     working (they bind to the physical name); adding NEW constraints on
     a mapped table is gated until :func:`purge_column_mapping`."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest, key, _ = _open_table(target, store)
     if not new or not new.strip() or new in (BUCKET_COL, TOMBSTONE_COL):
         raise ValueError(f"invalid new column name {new!r}")
-    spec = store.read_json(_spec_path(target))
-    if spec is not None and old == spec["key"]:
+    if old == key:
         raise ValueError(
             f"cannot rename the bucket key column {old!r} (bucket "
             "routing and every writer's key= argument bind to it)"
@@ -2788,11 +2769,8 @@ def drop_column(
     the column, so enforcement would crash every merge).  Re-adding a
     column by the dropped name is rejected at merge time until a purge
     (resurrection guard)."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target))
-    if spec is not None and col == spec["key"]:
+    manifest, key, _ = _open_table(target, store)
+    if col == key:
         raise ValueError(f"cannot drop the bucket key column {col!r}")
     logical = _logical_columns(spark, target, manifest, store)
     if col not in logical:
@@ -3058,10 +3036,7 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     (the last two non-empty only after metadata-only renames/drops —
     the operator signal that gated ops need
     :func:`purge_column_mapping` first)."""
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
-    spec = store.read_json(_spec_path(target)) or {}
+    manifest, key, num_buckets = _open_table(target, store)
     buckets = manifest["buckets"]
     deltas = manifest.get("deltas", {})
     sizes = [
@@ -3070,9 +3045,9 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     n_files = sum(len(fs) for fs in buckets.values())
     return {
         "version": manifest["version"],
-        "num_buckets": _layout_of(target, manifest, store),
-        "auto_sized": _auto_sized(target, store),
-        "key": spec.get("key"),
+        "num_buckets": num_buckets,
+        "auto_sized": bool(manifest.get("auto")),
+        "key": key,
         "n_buckets_live": len(buckets),
         "n_files": n_files,
         "total_bytes": sum(sizes),
@@ -3160,9 +3135,7 @@ def read_keyed_table(
             raise ValueError("pass version= or as_of=, not both")
         version = resolve_as_of(target, as_of, store)
     if version is None:
-        manifest = _load_manifest(target, store)
-        if manifest is None:
-            raise FileNotFoundError(f"no committed keyed table at {target}")
+        manifest = _open_table(target, store)[0]
     else:
         manifest = store.read_json(_version_manifest_path(target, version))
         if manifest is None:
@@ -3264,12 +3237,10 @@ def read_keyed_table(
             )
         )
     if deltas:
-        spec = store.read_json(_spec_path(target))
-        if spec is None:
-            raise ValueError(f"{target} has pending deltas but no bucket spec")
-        frames.append(
-            _resolve_dirty(spark, target, manifest, spec["key"], sorted(deltas))
-        )
+        # the key never changes: a snapshot written before manifests
+        # recorded it takes it from the tip
+        key = manifest.get("key") or _open_table(target, store)[1]
+        frames.append(_resolve_dirty(spark, target, manifest, key, sorted(deltas)))
     df = _to_logical_df(_union(frames).drop(BUCKET_COL), cmap, cdropped)
     if prune_all:
         return df.filter(F.lit(False))
@@ -3400,9 +3371,7 @@ def table_stats(target: str, store=LOCAL_STORE) -> dict:
     on a table with renamed or dropped columns a column appears only
     where its physical and logical names are the same column.
     """
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest = _open_table(target, store)[0]
     mapping, dropped = _mapping_of(manifest)
     remapped = set(dropped) | set(mapping) | set(mapping.values())
     live = sorted(
@@ -3507,11 +3476,11 @@ def table_changes(
     span's data, with no change log needing to be captured at write
     time (the manifests ARE the log).
     """
+    tip = _load_manifest(target, store)
     if key is None:
-        # default to the table's own key (the bucket spec records it) —
-        # a hardcoded default silently mis-keys any non-"oid__id" table
-        spec = store.read_json(_spec_path(target))
-        key = spec["key"] if spec else "oid__id"
+        # default to the table's own key (the manifest records it) — a
+        # hardcoded default silently mis-keys any non-"oid__id" table
+        key = (tip or {}).get("key", "oid__id")
 
     def canon(df: DataFrame, out: str) -> DataFrame:
         row = F.struct(*[F.col(c) for c in sorted(df.columns)])
@@ -3527,7 +3496,7 @@ def table_changes(
     m_to = (
         store.read_json(_version_manifest_path(target, to_version))
         if to_version is not None
-        else _load_manifest(target, store)
+        else tip
     )
     if _mapping_of(m_from) != _mapping_of(m_to):
         raise ValueError(
@@ -4064,9 +4033,7 @@ def apply_changes(
     seq_type = dict(changes.dtypes)[seq_col]
     tomb_path = _cdc_tomb_path(target)
     tmanifest = _load_manifest(tomb_path, store)
-    tomb_nb = (
-        None if tmanifest is None else _layout_of(tomb_path, tmanifest, store)
-    )
+    tomb_nb = None if tmanifest is None else tmanifest.get("num_buckets")
     # the table and its delete memory: each key's stored sequence is
     # read from each, only from the buckets the net rows hash to
     sides = (
@@ -4206,8 +4173,8 @@ def apply_changes(
         if tmanifest is None:
             keyed_overwrite_parquet(
                 spark, tomb_rows, tomb_path, key=key,
-                num_buckets=_layout_of(
-                    target, _load_manifest(target, store), store
+                num_buckets=(_load_manifest(target, store) or {}).get(
+                    "num_buckets"
                 ) or num_buckets or 16,
                 store=store,
             )
@@ -4457,9 +4424,7 @@ def restore_keyed_table(
     per snapshot file (HEAD on an object store), one CAS.  Zero data
     moves.
     """
-    cur = _load_manifest(target, store)
-    if cur is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    cur, _, now_nb = _open_table(target, store)
     if version == cur.get("version"):
         return version  # already there: no-op, no version churn
     snap = store.read_json(_version_manifest_path(target, version))
@@ -4471,8 +4436,8 @@ def restore_keyed_table(
     # the restored manifest carries the snapshot's own layout, so any
     # snapshot reads and merges correctly; a fixed layout still changes
     # only through rebucket_keyed_table
-    snap_nb, now_nb = snap.get("num_buckets"), _layout_of(target, cur, store)
-    if snap_nb and snap_nb != now_nb and not _auto_sized(target, store):
+    snap_nb = snap.get("num_buckets")
+    if snap_nb and snap_nb != now_nb and not cur.get("auto"):
         raise ValueError(
             f"cannot restore version {version}: it was written under "
             f"{snap_nb} buckets but the table now has {now_nb} "
@@ -4501,10 +4466,10 @@ def restore_keyed_table(
 def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     """Delta-style SHALLOW CLONE: make ``dest`` an independent keyed
     table whose manifest references ``src``'s current live files *in
-    place* — zero data copied, one spec write + one manifest commit,
-    O(file-count) metadata.  At 100 TB this is what turns "give me a
-    scratch copy of the table to experiment on" from a multi-hour copy
-    into a metadata operation.
+    place* — zero data copied, one manifest commit, O(file-count)
+    metadata.  At 100 TB this is what turns "give me a scratch copy of
+    the table to experiment on" from a multi-hour copy into a metadata
+    operation.
 
     Mechanics: src's live file references are absolutized.  Every
     resolution point in this module goes through
@@ -4515,10 +4480,12 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     (min/max stats, inline blooms, row counts, stored sizes, MOR delta
     entries with their commit seqs) is carried under the rewritten keys,
     with the recorded schema, bucket count and column mapping
-    (:func:`_repoint`); the bucket spec and CHECK constraints are copied
-    as they are.  Writer-txn watermarks and ambient policies are table
-    state and do not clone (as in Delta): a clone is a new table to
-    every idempotent writer, which must re-apply its batches here.  The clone's history STARTS at src's current
+    (:func:`_repoint`); the bucket key and ``auto`` flag are set on the
+    clone's manifest explicitly (it has no tip to carry them from), and
+    CHECK constraints are copied as they are.  Writer-txn watermarks and
+    ambient policies are table state and do not clone (as in Delta): a
+    clone is a new table to every idempotent writer, which must re-apply
+    its batches here.  The clone's history STARTS at src's current
     version number: MOR precedence is "highest seq wins" and cloned
     delta entries keep their source seqs, so the clone's next commits
     must number above them.
@@ -4541,9 +4508,7 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     Returns the clone's initial version.  Refuses a dest that is
     already a keyed table (clone never overwrites).
     """
-    manifest = _load_manifest(src, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {src}")
+    manifest, key, _ = _open_table(src, store)
     # _load_manifest (not a bare manifest read) so a pre-manifest legacy
     # layout at dest also refuses — clone never overwrites data
     if _load_manifest(dest, store) is not None:
@@ -4555,18 +4520,15 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
         # their true owner — references never chain through intermediaries
         return f if os.path.isabs(f) else os.path.join(src_abs, f)
 
-    # the spec as it is: the current count rides in the manifest
-    # (_repoint), and wap_publish compares the branch's spec with it
-    spec = store.read_json(_spec_path(src))
-    if spec is not None:
-        store.write_json(_spec_path(dest), spec)
     constraints = store.read_json(_constraints_path(src))
     if constraints:
         store.write_json(_constraints_path(dest), constraints)
     version = manifest["version"]
     # the clone owns no files yet, so it has nothing awaiting deletion
     cloned = _repoint(manifest, _foreign)
-    cloned.update(version=version, retired=[])
+    cloned.update(
+        version=version, retired=[], key=key, auto=bool(manifest.get("auto"))
+    )
     os.makedirs(dest, exist_ok=True)
     _commit_manifest(dest, cloned, expected_version=None, store=store)
     return version
@@ -4641,7 +4603,7 @@ def keyed_append(
         return sum(len(fs) for fs in m["buckets"].values()) if m else 0
     if _txn_applied(manifest, txn):
         return 0
-    num_buckets = _check_layout(target, key, num_buckets, manifest, store)
+    num_buckets = _check_layout(target, key, num_buckets, manifest)
     admitted = _admit_batch(
         spark, batch, target, manifest, key, num_buckets, store, stats_cols
     )
@@ -4855,12 +4817,20 @@ def wap_publish(
         raise FileNotFoundError(f"source or branch table missing for {name!r}")
     if branch_manifest["version"] == meta["base_version"]:
         raise ValueError(f"branch {name!r} has no commits — nothing to publish")
-    src_spec = store.read_json(_spec_path(src))
-    br_spec = store.read_json(_spec_path(branch))
-    if (src_spec or {}) != (br_spec or {}):
+    # an auto-sized layout's count moves by itself; a fixed one's only
+    # through a rebucket, which also ends auto-sizing
+    src_layout, br_layout = (
+        (
+            m.get("key"),
+            bool(m.get("auto")),
+            None if m.get("auto") else m.get("num_buckets"),
+        )
+        for m in (src_manifest, branch_manifest)
+    )
+    if src_layout != br_layout:
         raise ValueError(
             f"branch {name!r} changed the bucket layout "
-            f"({src_spec} -> {br_spec}); rebucket the source instead"
+            f"({src_layout} -> {br_layout}); rebucket the source instead"
         )
 
     report_rows: list[dict] = []
@@ -4945,9 +4915,7 @@ def adopt_foreign_files(target: str, store=LOCAL_STORE) -> int:
     """
     import shutil
 
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest = _open_table(target, store)[0]
     refs = [(b, f) for b, fs in manifest["buckets"].items() for f in fs]
     refs += [
         (b, e["path"]) for b, es in manifest.get("deltas", {}).items() for e in es
@@ -5006,9 +4974,7 @@ def expire_snapshots(
         raise ValueError("pass keep_last=, older_than_s=, or both")
     if keep_last is not None and keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    manifest = _load_manifest(target, store)
-    if manifest is None:
-        raise FileNotFoundError(f"no committed keyed table at {target}")
+    manifest = _open_table(target, store)[0]
     versions = table_history(target, store)
     current = manifest["version"]
     protected = set(

@@ -14,8 +14,8 @@ module isolates that primitive behind :class:`ManifestStore` so
   lost-conditional-PUT case a local filesystem can't easily produce.
 
 Data files are written by Spark's own parquet writer through whatever
-Hadoop filesystem the path implies; only the tiny commit/spec objects go
-through this seam.
+Hadoop filesystem the path implies; only the tiny commit and metadata
+objects go through this seam.
 """
 
 from __future__ import annotations
@@ -60,7 +60,8 @@ class LocalManifestStore:
         return os.path.exists(path)
 
     def write_json(self, path: str, obj: dict) -> None:
-        """Unconditional durable write (used for the immutable spec)."""
+        """Unconditional durable write (version manifests, constraints,
+        sidecar metadata)."""
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as fh:
             json.dump(obj, fh)

@@ -134,15 +134,13 @@ def _refresh_sidecar(
 
 
 def _resolved_dirty_rows(
-    spark: SparkSession, target: str, manifest: dict, dirty: list[str], store
+    spark: SparkSession, target: str, manifest: dict, dirty: list[str]
 ) -> DataFrame | None:
     if not dirty:
         return None
     from . import sink
 
-    spec = store.read_json(sink._spec_path(target))
-    key = spec["key"]
-    return sink._resolve_dirty(spark, target, manifest, key, dirty)
+    return sink._resolve_dirty(spark, target, manifest, manifest["key"], dirty)
 
 
 
@@ -193,7 +191,7 @@ def table_kmv_distinct(
             if clean_files
             else None
         ]
-        resolved = _resolved_dirty_rows(spark, target, manifest, dirty, store)
+        resolved = _resolved_dirty_rows(spark, target, manifest, dirty)
         if resolved is not None:
             parts.append(
                 SK.kmv_sketch(
@@ -254,7 +252,7 @@ def table_frequencies(
                 "r", "c", "cnt"
             )
         )
-    resolved = _resolved_dirty_rows(spark, target, manifest, dirty, store)
+    resolved = _resolved_dirty_rows(spark, target, manifest, dirty)
     if resolved is not None:
         parts.append(
             SK.cms_sketch(
@@ -290,12 +288,9 @@ def table_quantiles(
     re-ranked from per-file samples — identical rows to a whole-table
     ``bottomk_sample`` (every global bottom-k row survives per-file
     pruning)."""
-    from . import sink
-
     clean_files, dirty, manifest = _live_split(target, store)
     col = _phys(col, manifest)
-    spec = store.read_json(sink._spec_path(target))
-    key = spec["key"]
+    key = manifest["key"]
     side = _sidecar_dir(target, f"bk{k}", col)
 
     def build(files):
@@ -315,7 +310,7 @@ def table_quantiles(
                 "__h", "v"
             )
         )
-    resolved = _resolved_dirty_rows(spark, target, manifest, dirty, store)
+    resolved = _resolved_dirty_rows(spark, target, manifest, dirty)
     if resolved is not None:
         row_key = F.concat_ws(
             "\x1f", F.col(key), F.col(col).cast("string")

@@ -82,6 +82,7 @@ from .sink import (
     _load_manifest,
     _manifest_schema,
     _mapping_of,
+    _open_table,
     _read_files,
     _to_logical_df,
     _version_manifest_path,
@@ -168,10 +169,7 @@ def _endpoint(store, paths, mv_path, group_cols, shape, reserved) -> _Endpoint:
         )
     manifests = []
     for p in paths:
-        m = _load_manifest(p, store)
-        if m is None:
-            raise FileNotFoundError(f"no committed keyed table at {p}")
-        manifests.append(m)
+        manifests.append(_open_table(p, store)[0])
     versions = [m["version"] for m in manifests]
     fields = {"group_cols": list(group_cols), **shape}
     meta = store.read_json(_meta_path(mv_path))

@@ -14,7 +14,9 @@ a tiny table and pin what the kernel owes all of them:
   table at exactly one of the two versions, and its retry converges
   (MERGE, both CDC ops and each of ``apply_changes``' two commits, a
   CoW merge and an append that rebase over a commit to another bucket,
-  an MOR merge, and a table's first commit racing another bootstrap);
+  an MOR merge, a rebucket, an auto-sized table's growth commit, and a
+  table's first commit racing another bootstrap — the loser's layout
+  never outlives its failed commit);
 - each path releases every local checkpoint it took, whether its
   commit lands or fails (no persisted RDD outlives the op).
 """
@@ -65,8 +67,9 @@ def check_manifest(manifest: dict, prev: dict | None = None) -> None:
     both live and retired, every table-owned (relative) file the commit
     superseded is retired with a timestamp — a foreign reference
     (absolute, into a clone source or a WAP branch) is not the table's
-    to retire — and a commit over a base that records a schema records
-    one too."""
+    to retire — a commit over a base that records a schema records
+    one too, and every manifest records its layout's key and count."""
+    assert manifest.get("key") and manifest.get("num_buckets"), "no layout"
     live = _live(manifest)
     retired = {e["path"]: e for e in manifest.get("retired", [])}
     assert live <= set(manifest.get("rows", {})), "live file without rows"
@@ -91,27 +94,29 @@ def _setup_append(spark, t):
     sink.keyed_append(spark, _rows(spark, [("n9", 9, 9.0), ("n8", 8, 8.0)]), t)
 
 
-def _base_auto(spark, target):
+def _base_auto(spark, target, store=sink.LOCAL_STORE):
     """:func:`_base` on an auto-sized layout (no ``num_buckets=``)."""
     sink.keyed_overwrite_parquet(
         spark,
         _rows(spark, [(f"k{i}", i, float(i % 5)) for i in range(12)]),
         target,
         stats_cols=["v"],
+        store=store,
     )
 
 
-def _grow(spark, target):
+def _grow(spark, target, store=sink.LOCAL_STORE):
     """A 2-row CoW merge on an auto-sized table whose mean bucket has
     just passed ``TARGET_BUCKET_BYTES``: it commits every bucket at twice
     the count."""
-    m = sink._load_manifest(target)
+    m = sink._load_manifest(target, store)
     live = sum(m["bytes"][f] for f in sink._live_files(m))
     saved = sink.TARGET_BUCKET_BYTES
     sink.TARGET_BUCKET_BYTES = -(-live // (2 * m["num_buckets"]))
     try:
         sink.keyed_overwrite_parquet(
-            spark, _rows(spark, [("k1", 10, 0.5), ("k2", 20, 0.5)]), target
+            spark, _rows(spark, [("k1", 10, 0.5), ("k2", 20, 0.5)]), target,
+            store=store,
         )
     finally:
         sink.TARGET_BUCKET_BYTES = saved
@@ -615,7 +620,9 @@ def _cdc_bootstrap(rows):
 #: touches a bucket the op decided from, or is not rebase-safe, fails
 #: the op (its retry lands); one that commits to another bucket, or
 #: under an MOR delta, is rebased over (``*_rebase`` and ``merge_mor``);
-#: a rival table's first commit fails the op's own bootstrap.
+#: a rival table's first commit fails the op's own bootstrap.  A layout
+#: change (``rebucket``, ``grow``) rewrote every bucket from its base,
+#: so any rival commit fails it.
 RACES = {
     "merge_rebase": (
         _base,
@@ -656,6 +663,13 @@ RACES = {
         1,
         _mor_k1,
     ),
+    "rebucket": (
+        _base,
+        lambda s, t, store: sink.rebucket_keyed_table(s, t, 8, store=store),
+        1,
+        _cow_k3,
+    ),
+    "grow": (_base_auto, _grow, 1, _mor_k1),
     "apply_changes": (_setup_cdc, _cdc_change, 1, _cdc_k1),
     "apply_changes_memory": (_setup_cdc, _cdc_change, 2, _tomb_mor),
     "apply_changes_scd2": (
@@ -675,15 +689,17 @@ LANDS = {"merge_rebase", "append_rebase", "merge_mor", "apply_changes_memory"}
 
 
 def _tables_state(spark, target, store) -> list:
-    """Rows of the table and of its delete memory (None: no table)."""
+    """Layout (key, bucket count) and rows of the table and of its
+    delete memory (None: no table)."""
     out = []
     for t in (target, sink._cdc_tomb_path(target)):
-        if sink._load_manifest(t, store) is None:
+        m = sink._load_manifest(t, store)
+        if m is None:
             out.append(None)
             continue
         df = sink.read_keyed_table(spark, t, store)
         rows = df.select(*sorted(df.columns)).collect()
-        out.append({tuple(r) for r in rows})
+        out.append((m["key"], m["num_buckets"], {tuple(r) for r in rows}))
     return out
 
 
@@ -733,3 +749,40 @@ def test_lost_cas_race_leaves_one_version_then_retry_converges(
     if not landed:
         run(spark, raced, rstore)
     assert _tables_state(spark, raced, rstore) == post
+
+
+def test_bootstrap_race_keeps_the_winners_layout(spark, tmp_path, monkeypatch):
+    """Two writers create the same table with different layouts: B
+    (``oid__id`` into 2 buckets) commits while A (``v`` into 4) is
+    between its data write and its first CAS.  A fails, and the table
+    is B's, layout included: describe reports B's key and count, and a
+    merge by B's key lands."""
+    store = FakeConditionalStore()
+    target = str(tmp_path / "t")
+    real_write = sink._write_bucketed
+
+    def write_then_rival(*a, **k):
+        monkeypatch.setattr(sink, "_write_bucketed", real_write)
+        real_write(*a, **k)
+        sink.keyed_overwrite_parquet(
+            spark, _rows(spark, [("k1", 1, 0.5), ("k2", 2, 1.5)]), target,
+            num_buckets=2, store=store,
+        )
+
+    monkeypatch.setattr(sink, "_write_bucketed", write_then_rival)
+    with pytest.raises(ConcurrentWriteError):
+        sink.keyed_overwrite_parquet(
+            spark, _rows(spark, [("k3", 3, 2.5)]), target, key="v",
+            num_buckets=4, store=store,
+        )
+    assert sink._write_bucketed is real_write, "no race"
+    d = sink.describe_keyed_table(target, store)
+    assert (d["key"], d["num_buckets"], d["auto_sized"]) == ("oid__id", 2, False)
+
+    sink.keyed_overwrite_parquet(
+        spark, _rows(spark, [("k1", 10, 0.5), ("k4", 4, 3.5)]), target,
+        store=store,
+    )
+    got = sink.read_keyed_table(spark, target, store).collect()
+    assert {(r.oid__id, r.v) for r in got} == {("k1", 10), ("k2", 2), ("k4", 4)}
+    assert len(got) == 3

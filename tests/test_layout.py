@@ -4,9 +4,10 @@ A keyed table created without ``num_buckets=`` is auto-sized: its first
 commit starts at the smallest power of two whose buckets fit the
 admitted batch, and a copy-on-write merge, compaction or optimize
 doubles the layout in one commit once the mean bucket passes the
-target.  An explicit ``num_buckets=`` and a table whose spec predates
-auto-sizing keep their count.  The layout lives in the manifest, which
-moves atomically with the files it describes.
+target.  An explicit ``num_buckets=`` and a table written before
+auto-sizing keep their count.  The layout — key, count and ``auto``
+flag — lives in the manifest, which moves atomically with the files it
+describes.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from airflow_postgres_etl_spark.storage import (
     FakeConditionalStore,
     LocalManifestStore,
 )
+
+from .legacy_layout import write_legacy_spec
 
 
 def _rows(spark, data):
@@ -204,14 +207,14 @@ def test_compact_and_optimize_grow_an_auto_sized_table(spark, tmp_path, monkeypa
 
 
 def test_explicit_and_pre_existing_layouts_never_resize(spark, tmp_path, monkeypatch):
-    """An explicit num_buckets= and a spec written before auto-sizing
-    (no ``auto`` flag) keep their count through merges, compaction and
-    optimize, whatever the target."""
+    """An explicit num_buckets= and a table written before auto-sizing
+    (its spec has no ``auto`` flag, its manifest no key) keep their
+    count through merges, compaction and optimize, whatever the
+    target."""
     explicit, legacy = str(tmp_path / "explicit"), str(tmp_path / "legacy")
     _table(spark, explicit, num_buckets=2)
     _table(spark, legacy)
-    spec = LOCAL_STORE.read_json(sink._spec_path(legacy))
-    sink._write_spec(legacy, spec["key"], spec["num_buckets"])
+    write_legacy_spec(legacy, "oid__id", sink._load_manifest(legacy)["num_buckets"])
     assert not sink.describe_keyed_table(explicit)["auto_sized"]
     monkeypatch.setattr(sink, "TARGET_BUCKET_BYTES", 1)
     for target, n in ((explicit, 2), (legacy, 1)):
@@ -223,6 +226,35 @@ def test_explicit_and_pre_existing_layouts_never_resize(spark, tmp_path, monkeyp
         assert sink._load_manifest(target)["num_buckets"] == n
         assert sink.describe_keyed_table(target)["num_buckets"] == n
         assert len(_state(spark, target)) == 201
+
+
+def test_legacy_table_records_its_key_and_time_travels(spark, tmp_path):
+    """A table whose manifests predate the recorded key reads its key
+    from the spec until its next commit records it in the manifest; a
+    version read of an old snapshot with pending MOR deltas resolves
+    them by that key."""
+    target = str(tmp_path / "t")
+
+    def rows(data):
+        return spark.createDataFrame(data, "id string, v int")
+
+    sink.keyed_overwrite_parquet(
+        spark, rows([(f"k{i}", i) for i in range(10)]), target, key="id",
+        num_buckets=2, vacuum=False,
+    )
+    sink.keyed_merge_mor(spark, rows([("k1", -1)]), target, key="id")
+    v = sink.table_version(target)
+    write_legacy_spec(target, "id", 2)
+    assert sink.describe_keyed_table(target)["key"] == "id"
+
+    sink.keyed_overwrite_parquet(
+        spark, rows([("k2", -2)]), target, key="id", vacuum=False
+    )
+    assert LOCAL_STORE.read_json(sink._manifest_path(target))["key"] == "id"
+    old = sink.read_keyed_table(spark, target, version=v).collect()
+    want = {f"k{i}": i for i in range(10)}
+    want["k1"] = -1
+    assert {r.id: r.v for r in old} == want and len(old) == len(want)
 
 
 def test_merge_racing_a_growth_commit_conflicts(spark, tmp_path):
@@ -249,34 +281,6 @@ def test_merge_racing_a_growth_commit_conflicts(spark, tmp_path):
         )
     assert sink._load_manifest(target, store)["num_buckets"] == 2
     assert _state(spark, target, store) == want
-
-
-def test_merge_after_a_crash_between_rebucket_cas_and_spec_write(
-    spark, tmp_path, monkeypatch
-):
-    """The spec is rewritten after the rebucket's manifest swap.  A crash
-    between the two leaves the old count in the spec; a merge that
-    follows must hash with the manifest's count, or a key lands in two
-    buckets and reads return it twice."""
-    target = str(tmp_path / "t")
-    _table(spark, target, n=50, num_buckets=2)
-
-    def crash(*a, **k):
-        raise OSError("simulated crash before the spec write")
-
-    monkeypatch.setattr(sink, "_write_spec", crash)
-    with pytest.raises(OSError, match="simulated crash"):
-        sink.rebucket_keyed_table(spark, target, 8)
-    monkeypatch.undo()
-    assert LOCAL_STORE.read_json(sink._spec_path(target))["num_buckets"] == 2
-    assert sink._load_manifest(target)["num_buckets"] == 8
-
-    batch = [(f"k{i}", -i) for i in range(10)]
-    sink.keyed_overwrite_parquet(spark, _rows(spark, batch), target)
-    want = {f"k{i}": i for i in range(50)}
-    want.update(dict(batch))
-    assert _state(spark, target) == want
-    assert sink._load_manifest(target)["num_buckets"] == 8
 
 
 def test_restore_before_a_growth_commit(spark, tmp_path, monkeypatch):

@@ -377,6 +377,9 @@ def test_compaction_loses_cas_to_concurrent_mor_merge(spark, tmp_path):
         def size(self, path):
             return LOCAL_STORE.size(path)
 
+        def open_input(self, path):
+            return LOCAL_STORE.open_input(path)
+
         def replace_if_version(self, path, manifest, expected_version):
             if self.armed and path == _manifest_path(target):
                 self.armed = False
@@ -423,6 +426,9 @@ def test_mor_merge_rebases_over_concurrent_mor_merge(spark, tmp_path):
 
         def size(self, path):
             return LOCAL_STORE.size(path)
+
+        def open_input(self, path):
+            return LOCAL_STORE.open_input(path)
 
         def replace_if_version(self, path, manifest, expected_version):
             if self.armed and path == _manifest_path(target):

@@ -28,6 +28,7 @@ from airflow_postgres_etl_spark.sink import (
 )
 
 from .fixtures.gen_raw import generate
+from .legacy_layout import write_legacy_spec
 
 
 def test_keyed_overwrite_replaces_all_rows_per_key(spark, tmp_path):
@@ -1092,7 +1093,7 @@ def test_legacy_unmanifested_layout_is_adopted(spark, tmp_path):
     df.withColumn(BUCKET_COL, sink._bucket_expr("oid__id", 4)).repartition(
         4, F.col(BUCKET_COL)
     ).write.partitionBy(BUCKET_COL).parquet(target)
-    sink._write_spec(target, "oid__id", 4)
+    write_legacy_spec(target, "oid__id", 4)
     assert not os.path.exists(os.path.join(target, "_manifest.json"))
 
     got = {(r.oid__id, r.v) for r in read_keyed_table(spark, target).collect()}

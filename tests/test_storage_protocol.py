@@ -124,9 +124,11 @@ def test_sink_commit_protocol_runs_on_fake_store(spark, tmp_path):
     batch = spark.createDataFrame([("a", 9)], ["oid__id", "v"])
     keyed_overwrite_parquet(spark, batch, target, num_buckets=4, store=store)
 
-    # no _manifest.json / _bucket_spec.json on the local filesystem
+    # no _manifest.json / _bucket_spec.json on the local filesystem, and
+    # no spec object in the store: the manifest holds the layout
     assert not os.path.exists(os.path.join(target, "_manifest.json"))
     assert not os.path.exists(os.path.join(target, "_bucket_spec.json"))
+    assert not [k for k in store.objects if k.endswith("_bucket_spec.json")]
     assert table_version(target, store=store) == 2
     got = {(r.oid__id, r.v) for r in read_keyed_table(spark, target, store=store).collect()}
     assert got == {("a", 9), ("b", 2)}
@@ -182,9 +184,9 @@ def test_vacuum_runs_entirely_through_fake_store(spark, tmp_path):
 
 def test_rebucket_is_pure_reorganization(spark, tmp_path):
     """rebucket_keyed_table: content identical, new bucket layout live
-    (files under new __bucket dirs, spec updated), version bumped once,
-    old files retired not deleted, and merges continue under the new
-    layout while old-layout writers are rejected."""
+    (files under new __bucket dirs, manifest count updated), version
+    bumped once, old files retired not deleted, and merges continue
+    under the new layout while old-layout writers are rejected."""
     from airflow_postgres_etl_spark.sink import (
         _load_manifest,
         keyed_overwrite_parquet,
@@ -215,8 +217,7 @@ def test_rebucket_is_pure_reorganization(spark, tmp_path):
     for f in old_files:
         assert f in retired
         assert os.path.exists(os.path.join(target, f))  # retained for readers
-    spec = LOCAL_STORE.read_json(os.path.join(target, "_bucket_spec.json"))
-    assert spec["num_buckets"] == 8
+    assert m1["num_buckets"] == 8
 
     # same count is a no-op
     rebucket_keyed_table(spark, target, 8)
@@ -234,9 +235,10 @@ def test_rebucket_is_pure_reorganization(spark, tmp_path):
 def test_rebucket_loses_cas_to_concurrent_merge(spark, tmp_path):
     """A merge landing between the re-bucketing's manifest read and its
     commit must win: ConcurrentWriteError propagates, the table keeps
-    the merge's content under the OLD layout, and the spec is untouched
-    (it is only rewritten after a successful CAS)."""
+    the merge's content under the OLD layout, and the manifest keeps the
+    old count."""
     from airflow_postgres_etl_spark.sink import (
+        _load_manifest,
         _manifest_path,
         keyed_overwrite_parquet,
         read_keyed_table,
@@ -270,6 +272,9 @@ def test_rebucket_loses_cas_to_concurrent_merge(spark, tmp_path):
         def size(self, path):
             return LOCAL_STORE.size(path)
 
+        def open_input(self, path):
+            return LOCAL_STORE.open_input(path)
+
         def replace_if_version(self, path, manifest, expected_version):
             if self.armed and path == _manifest_path(target):
                 self.armed = False
@@ -283,8 +288,43 @@ def test_rebucket_loses_cas_to_concurrent_merge(spark, tmp_path):
         rebucket_keyed_table(spark, target, 8, store=RacingStore())
     got = {(r.oid__id, r.v) for r in read_keyed_table(spark, target).collect()}
     assert ("k0", 999) in got
-    spec = LOCAL_STORE.read_json(os.path.join(target, "_bucket_spec.json"))
-    assert spec["num_buckets"] == 2  # old layout still authoritative
+    assert _load_manifest(target)["num_buckets"] == 2  # old layout still live
+
+
+def test_broken_store_fails_the_commit_before_its_cas(spark, tmp_path):
+    """Only an unreadable footer (``OSError``, or pyarrow's
+    ``ArrowInvalid``) leaves a new file without a row count.  Any other
+    error from the store's ``open_input`` is a broken store: the commit
+    fails before its CAS, with no version bump."""
+    from airflow_postgres_etl_spark.sink import (
+        keyed_overwrite_parquet,
+        read_keyed_table,
+        table_version,
+    )
+
+    class BrokenStore(FakeConditionalStore):
+        broken = False
+
+        def open_input(self, path):
+            if self.broken:
+                raise RuntimeError("store cannot open inputs")
+            return super().open_input(path)
+
+    store = BrokenStore()
+    target = str(tmp_path / "t")
+    keyed_overwrite_parquet(
+        spark, spark.createDataFrame([("a", 1), ("b", 2)], ["oid__id", "v"]),
+        target, num_buckets=2, store=store,
+    )
+    store.broken = True
+    with pytest.raises(RuntimeError, match="cannot open inputs"):
+        keyed_overwrite_parquet(
+            spark, spark.createDataFrame([("a", 9)], ["oid__id", "v"]),
+            target, store=store,
+        )
+    assert table_version(target, store=store) == 1
+    got = {(r.oid__id, r.v) for r in read_keyed_table(spark, target, store=store).collect()}
+    assert got == {("a", 1), ("b", 2)}
 
 
 def test_time_travel_reads_historical_snapshots(spark, tmp_path):

@@ -160,9 +160,9 @@ def test_layout_divergence_refused(spark, tmp_path):
 
 def test_publish_a_branch_of_a_grown_auto_sized_table(spark, tmp_path, monkeypatch):
     """An auto-sized table (no num_buckets=) doubles its layout in the
-    manifest while its spec keeps the creation count.  A branch of the
-    grown table, merged on, publishes: the branch's layout is the
-    source's, and the source lands with the branch's content."""
+    manifest.  A branch of the grown table, merged on, publishes: the
+    branch's layout is the source's, and the source lands with the
+    branch's content."""
 
     def rows(data):
         return spark.createDataFrame(data, "k string, v long")
