@@ -659,15 +659,14 @@ def gate_and_merge(
 
     # append this batch's report to the table's DQ history (store seam;
     # single-writer-per-table model, same as the sink's)
-    path = _reports_path(target)
-    history = store.read_json(path) or {"reports": []}
+    history = store.read_json(_reports_path(target)) or {"reports": []}
     history["reports"].append(
         {
             "table_version": sink.table_version(target, store),
             "rules": report_rows,
         }
     )
-    store.write_json(path, history)
+    store.write_json(_reports_path(target), history)
     return report_rows
 
 

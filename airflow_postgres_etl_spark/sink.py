@@ -83,10 +83,10 @@ Two implementations:
   :func:`keyed_overwrite_parquet`, which sizes its layout).  A
   checkpoint that fits the broadcast threshold is broadcast as a
   join's build side (:func:`_broadcastable`).  Two scans remain by
-  design: a CHECK constraint on a table written by MERGE or CDC is
-  checked on the restated rows (one scan per constraint, only on a
-  constrained table), and MERGE's by-source UPDATE counts its
-  whole-table scope with one aggregate.
+  design: on a table whose manifest records CHECK constraints, MERGE
+  and the CDC ops check the restated rows (one scan per constraint),
+  and MERGE's by-source UPDATE counts its whole-table scope with one
+  aggregate.
 
   **Layout.**  The manifest is the one record of a table's layout: the
   bucket ``key``, the ``num_buckets`` its files were hashed with and,
@@ -121,11 +121,23 @@ Two implementations:
   :func:`keyed_delete_where`, :func:`keyed_update_where` and both
   :func:`merge_into` clause families differ only in the rows, the
   delete condition and the assignments they hand it; assignment targets
-  are checked up front (:func:`_check_assignments`).  Metadata-only
-  commits of the ambient policies (drift, IVF, MinHash) are driven by
-  one table, ``_POLICIES``: their setters commit through
-  :func:`_policy_commit`, and the manifest carry, :func:`rename_column`
-  and :func:`drop_column` (via :func:`_mapping_commit`) loop over it.
+  are checked up front (:func:`_check_assignments`).
+
+  **Metadata-only commits.**  The manifest is the only record of a
+  table's state; nothing is written beside it.  The ambient policies
+  (drift, IVF, MinHash) are driven by one table, ``_POLICIES``: their
+  setters commit through :func:`_policy_commit`, and the manifest
+  carry, :func:`rename_column` and :func:`drop_column` (via
+  :func:`_mapping_commit`) loop over it.  CHECK constraints are the
+  manifest key ``constraints`` (``{name: predicate}``):
+  :func:`add_table_constraint` and :func:`drop_table_constraint` each
+  make one commit (:func:`_constraint_commit`), every write path
+  enforces the constraints of the manifest it loaded, a data commit
+  never rebases over a constraint change, and a constraint added
+  after a data commit's admission fails that commit's CAS instead of
+  landing unchecked rows.  A table written before manifests recorded
+  constraints kept them in ``_constraints.json``; only
+  :func:`_load_manifest` reads it.
 
   The commits that move no data but re-point a whole snapshot —
   :func:`restore_keyed_table`, :func:`clone_keyed_table`,
@@ -134,7 +146,8 @@ Two implementations:
   under new references, with the entries that describe those files:
   stats, blooms, row counts, schema, layout and column mapping), a
   ``retired`` list, and one :func:`_commit_manifest`, whose carry takes
-  the table state (writer txns, ambient policies) from the tip.
+  the table state (writer txns, CHECK constraints, ambient policies)
+  from the tip.
   Restore and publish retire through :func:`_retire`, the same rule
   the kernel uses; a clone has nothing to retire, and adopt keeps the
   tip's list (foreign originals are not the table's to retire).
@@ -289,10 +302,6 @@ class ConstraintViolation(ValueError):
     contains rows for which a CHECK predicate is not TRUE."""
 
 
-def _constraints_path(target: str) -> str:
-    return os.path.join(target, "_constraints.json")
-
-
 def _fails(predicate: str):
     """Per-row Column: ``predicate`` is FALSE or NULL — the Delta CHECK
     semantic: a constraint must evaluate to TRUE, so a NULL result is a
@@ -305,58 +314,15 @@ def _violations(df: DataFrame, predicate: str):
     return df.filter(_fails(predicate)).limit(1).collect()
 
 
-def add_table_constraint(
-    spark: SparkSession,
-    target: str,
-    name: str,
-    predicate: str,
-    store=LOCAL_STORE,
-) -> None:
-    """Record a CHECK constraint (a SQL boolean expression over the
-    table's columns), enforced on every subsequent merge — CoW and MOR.
-
-    The EXISTING rows are validated first (one scan); a table that
-    already violates the predicate rejects the constraint rather than
-    recording a lie.  Constraints live in ``_constraints.json`` beside
-    the manifest, so they survive rebucket/cluster/compaction untouched."""
-    # constraints bind to PHYSICAL column names at enforcement time; on
-    # a renamed/dropped table a new predicate's names would be
-    # ambiguous between eras — fail closed until a purge
-    _require_unmapped(_load_manifest(target, store), "add_table_constraint")
-    bad = _violations(read_keyed_table(spark, target, store), predicate)
-    if bad:
-        raise ConstraintViolation(
-            f"cannot add constraint {name!r}: existing row violates "
-            f"{predicate!r}: {bad[0].asDict()}"
-        )
-    cons = store.read_json(_constraints_path(target)) or {}
-    cons[name] = predicate
-    store.write_json(_constraints_path(target), cons)
-
-
-def drop_table_constraint(target: str, name: str, store=LOCAL_STORE) -> None:
-    cons = store.read_json(_constraints_path(target)) or {}
-    cons.pop(name, None)
-    store.write_json(_constraints_path(target), cons)
-
-
-def table_constraints(target: str, store=LOCAL_STORE) -> dict[str, str]:
-    return store.read_json(_constraints_path(target)) or {}
-
-
-def _enforce_constraints(
-    batch: DataFrame, target: str, store, constraints: dict | None = None
-) -> None:
+def _enforce_constraints(batch: DataFrame, constraints: dict) -> None:
     """Reject the whole batch on the first violating row — BEFORE any
     file is written, so a rejected merge leaves no commit dir and no
-    version bump (test-pinned).  Cost: one scan of the batch per
-    constraint checked.  ``constraints`` (default: the table's) narrows
-    the check: :func:`_admit_batch` counts every constraint's violations
-    in the pass that materializes the batch and passes only those it saw
-    violated, so a passing batch costs no job here and a failing one
-    one scan, for the example row."""
-    if constraints is None:
-        constraints = table_constraints(target, store)
+    version bump (test-pinned).  ``constraints`` are those of the
+    manifest the write loaded.  Cost: one scan of the batch per
+    constraint checked.  :func:`_admit_batch` counts every constraint's
+    violations in the pass that materializes the batch and passes only
+    those it saw violated, so a passing batch costs no job here and a
+    failing one one scan, for the example row."""
     for name, pred in constraints.items():
         bad = _violations(batch, pred)
         if bad:
@@ -465,7 +431,10 @@ def _load_manifest(target: str, store=LOCAL_STORE) -> dict | None:
     (before manifests recorded the count) its bucket count in
     ``_bucket_spec.json``.  This is the one place that file is read: it
     is folded into the returned dict (a count the manifest records
-    wins), and the table's next commit records what it holds.
+    wins), and the table's next commit records what it holds.  In the
+    same way a manifest written before manifests recorded CHECK
+    constraints takes them from the legacy ``_constraints.json`` (none
+    when absent): the returned dict always holds ``constraints``.
     """
     manifest = store.read_json(_manifest_path(target))
     if manifest is None:
@@ -495,6 +464,9 @@ def _load_manifest(target: str, store=LOCAL_STORE) -> dict | None:
                 **({"auto": True} if spec.get("auto") else {}),
                 **manifest,
             }
+    if "constraints" not in manifest:
+        legacy = store.read_json(os.path.join(target, "_constraints.json"))
+        manifest["constraints"] = legacy or {}
     return manifest
 
 
@@ -632,17 +604,13 @@ def _require_unmapped(manifest: dict | None, op: str) -> None:
         )
 
 
-# The user-level operation name for DESCRIBE HISTORY: set by the
-# OUTERMOST @_records_op public entry point (so apply_changes_scd2's
-# internal merge commits record "apply_changes_scd2", not "merge" —
-# the Delta history convention).  Single-writer-per-table model, same
-# as the commit protocol itself.
-_CURRENT_OP: list[str] = []
-
-# The local checkpoints each running @_records_op frame holds, innermost
-# frame last; per thread, so concurrent writers never release each
-# other's.  Filled by _checkpoint, emptied when the frame's op returns or
-# raises.
+# The running @_records_op frames of this thread, outermost first, as
+# (op name, local checkpoints held) pairs.  The OUTERMOST frame's name
+# stamps each commit for DESCRIBE HISTORY (so apply_changes_scd2's
+# internal merge commits record "apply_changes_scd2", not "merge" — the
+# Delta history convention); a frame's checkpoints are filled by
+# _checkpoint and released when its op returns or raises.  Per thread,
+# so concurrent writers never stamp or release each other's.
 _HELD = threading.local()
 
 
@@ -666,7 +634,7 @@ def _checkpoint(df: DataFrame, **metrics) -> tuple[DataFrame, dict]:
     cp = df.localCheckpoint(eager=True)
     frames = getattr(_HELD, "frames", None)
     if frames:
-        frames[-1].append(cp)
+        frames[-1][1].append(cp)
     return cp, (obs.get if obs is not None else {})
 
 
@@ -702,15 +670,13 @@ def _records_op(name: str):
     def deco(fn):
         @functools.wraps(fn)
         def wrapped(*a, **kw):
-            _CURRENT_OP.append(name)
             frames = _HELD.__dict__.setdefault("frames", [])
             held: list[DataFrame] = []
-            frames.append(held)
+            frames.append((name, held))
             try:
                 return fn(*a, **kw)
             finally:
                 frames.pop()
-                _CURRENT_OP.pop()
                 _release(held)
 
         return wrapped
@@ -788,7 +754,8 @@ def _repoint(snap: dict, ref) -> dict:
     those files: the recorded schema, the bucket count and the column
     mapping (pinned even when empty, so the commit carry never lays
     the tip's names over them).  The table state (the bucket ``key``,
-    the ``auto`` flag, ``txns`` and the :data:`_POLICIES`) is left out
+    the ``auto`` flag, ``txns``, the CHECK ``constraints`` and the
+    :data:`_POLICIES`) is left out
     for :func:`_commit_manifest` to take from the tip.  The caller adds
     ``version`` and ``retired``."""
     out = {
@@ -919,34 +886,28 @@ def _commit_manifest(
     # the key and count it hashed with, and readers and writers take
     # them from here), the writer-transaction watermarks (Delta's `txn`
     # action — "batch N already applied" must survive every unrelated
-    # commit), the ambient policies (_POLICIES) and the column mapping.
-    # A key the commit sets wins (a setter's None clears its policy, a
-    # rebucket's False ends auto-sizing).  The tip is read through
-    # _load_manifest, so a legacy table's next commit records the key
-    # its spec held.
-    carry = [
-        k
-        for k in ("key", "num_buckets", "auto", "txns", *_POLICIES)
-        if k not in manifest
-    ]
-    carry_map = (
-        "column_mapping" not in manifest and "dropped_columns" not in manifest
-    )
-    if carry or carry_map:
-        cur = _load_manifest(target, store)
-        if cur:
-            for k in carry:
-                if cur.get(k):
-                    manifest[k] = cur[k]
-            if carry_map:
-                if cur.get("column_mapping"):
-                    manifest["column_mapping"] = cur["column_mapping"]
-                if cur.get("dropped_columns"):
-                    manifest["dropped_columns"] = cur["dropped_columns"]
+    # commit), the CHECK constraints (every manifest records them, an
+    # empty dict too, so a dropped legacy rule never folds back in), the
+    # ambient policies (_POLICIES) and the column mapping (both of its
+    # keys, unless the commit sets either).  A key the commit sets wins
+    # (a setter's None clears its policy, a rebucket's False ends
+    # auto-sizing).  The tip is read through _load_manifest, so a legacy
+    # table's next commit records the key its spec held and the
+    # constraints its side file held.
+    keys = ("key", "num_buckets", "auto", "txns", "constraints", *_POLICIES)
+    if "column_mapping" not in manifest and "dropped_columns" not in manifest:
+        keys += ("column_mapping", "dropped_columns")
+    carry = [k for k in keys if k not in manifest]
+    cur = _load_manifest(target, store) if carry else None
+    for k in carry if cur else ():
+        if cur.get(k):
+            manifest[k] = cur[k]
+    manifest.setdefault("constraints", {})
     # commit wall-clock — the TIMESTAMP AS OF index (resolve_as_of) —
-    # and the operation stamp (outermost @_records_op wins)
+    # and the operation stamp (this thread's outermost @_records_op)
+    frames = getattr(_HELD, "frames", None)
     manifest["committed_at"] = time.time()
-    manifest["operation"] = _CURRENT_OP[0] if _CURRENT_OP else "commit"
+    manifest["operation"] = frames[0][0] if frames else "commit"
     # per-file row counts (the metadata-only COUNT(*) index, table_stats)
     # and stored bytes (what an auto-sized table's growth check sums,
     # _grown): carried for surviving files.  _commit_files describes its
@@ -1197,8 +1158,8 @@ def _admit_batch(
     :func:`_align_batch_types`) — then ONE pass over the batch that
     both materializes it and answers every pre-write question: a
     :func:`_checkpoint` observing the row count, the affected buckets
-    and each CHECK constraint's violating-row count, with no probe job
-    after it.
+    and the violating-row count of each CHECK constraint ``manifest``
+    records, with no probe job after it.
 
     Returns ``(bucketed, affected buckets, physical stats_cols, batch
     row count)``, where ``bucketed`` IS the checkpoint: every later step
@@ -1228,7 +1189,7 @@ def _admit_batch(
     # off a checkpoint (pipeline._dedup_once) costs one job here.
     # localCheckpoint spills MEMORY_AND_DISK, so an unbounded backfill
     # batch costs one disk round-trip, never an OOM.
-    cons = table_constraints(target, store)
+    cons = {} if manifest is None else manifest["constraints"]
     bucketed, seen = _checkpoint(
         batch.withColumn(BUCKET_COL, _bucket_expr(key, num_buckets)),
         n=F.count(F.lit(1)),
@@ -1242,8 +1203,6 @@ def _admit_batch(
         return None
     _enforce_constraints(
         bucketed,
-        target,
-        store,
         {
             name: pred
             for i, (name, pred) in enumerate(cons.items())
@@ -1293,11 +1252,12 @@ def _commit_files(
 
     Conflict rule: ``guard`` lists the buckets whose base state the
     commit's rows were decided from — it rebases over any commit that
-    leaves them (and the bucket count, and its ``txn`` watermark)
-    unchanged.  A delta edit additionally rebases only over
-    row-preserving operations (``_REBASE_SAFE_OPS``: a layout/type
-    rewrite invalidates already-written delta files), and its ``guard``
-    defaults to the buckets it writes.  A rewrite without ``guard``
+    leaves them (and the bucket count, its ``txn`` watermark and the
+    CHECK constraints its rows were checked against) unchanged.  A delta
+    edit additionally rebases only over row-preserving operations
+    (``_REBASE_SAFE_OPS``: a layout/type rewrite invalidates
+    already-written delta files), and its ``guard`` defaults to the
+    buckets it writes.  A rewrite without ``guard``
     rebases over nothing: any intervening commit fails it.
 
     Stats are kept for surviving files; the new files are described
@@ -1397,6 +1357,9 @@ def _commit_files(
         # commit's buckets happen to be empty in both snapshots
         if current.get("num_buckets", num_buckets) != num_buckets:
             return "bucket count changed concurrently"
+        # the rows were checked against the base's CHECK constraints
+        if current.get("constraints") != base.get("constraints"):
+            return "CHECK constraints changed concurrently"
         # Delta's ConcurrentTransaction check: an intervening commit that
         # advanced THIS txn app to >= our seq means the batch was already
         # applied (or is stale) — rebasing would re-apply old data
@@ -2150,7 +2113,7 @@ def _dml_commit(spark, target, manifest, key, num_buckets, restated, store):
     names — run on the visible rows, then one delta commit."""
     cmap, _cd = _mapping_of(manifest)
     delta, visible, _counts = restated
-    _enforce_constraints(_to_physical_df(visible, cmap), target, store)
+    _enforce_constraints(_to_physical_df(visible, cmap), manifest["constraints"])
     _commit_files(
         target, _to_physical_df(delta, cmap), manifest, key,
         num_buckets, "delta", store=store,
@@ -2406,14 +2369,26 @@ def _mapping_commit(
     the mapping — physical names are fixed), conflicts with concurrent
     layout/schema ops exactly like a merge would.  Each stored ambient
     policy (:data:`_POLICIES`) follows ``renamed=(old, new)`` instead of
-    wedging on a stale name, and a policy referencing the ``dropping``
-    column fails the drop.  Both are applied to EVERY base the commit is
-    built on — a guard evaluated only against the caller's stale
-    manifest is bypassed by the rebase: a policy armed concurrently,
-    between load and CAS, would let a drop of a column it references
-    rebase through and wedge every later ``maintain``."""
+    wedging on a stale name, and a CHECK constraint or policy
+    referencing the ``dropping`` column fails the drop.  Both are
+    applied to EVERY base the commit is built on — a guard evaluated
+    only against the caller's stale manifest is bypassed by the rebase:
+    a policy armed concurrently, between load and CAS, would let a drop
+    of a column it references rebase through and wedge every later
+    ``maintain``."""
 
     def build(base: dict) -> dict:
+        if dropping is not None:
+            # future batches no longer carry the column, so enforcing a
+            # constraint on it would crash every merge
+            phys = _mapping_of(base)[0].get(dropping, dropping)
+            names = f"{re.escape(dropping)}|{re.escape(phys)}"
+            for cname, sql in base["constraints"].items():
+                if re.search(rf"\b({names})\b", sql):
+                    raise ValueError(
+                        f"column {dropping!r} is referenced by CHECK constraint "
+                        f"{cname!r} ({sql}); drop the constraint first"
+                    )
         m = {
             **base,
             "version": base["version"] + 1,
@@ -2467,6 +2442,82 @@ def _policy_commit(spark, target, name, policy, store) -> int:
     return _commit_optimistic(
         target, manifest, build, lambda _inter: None, store
     )["version"]
+
+
+@_records_op("add_constraint")
+def add_table_constraint(
+    spark: SparkSession,
+    target: str,
+    name: str,
+    predicate: str,
+    store=LOCAL_STORE,
+) -> None:
+    """Record a CHECK constraint (a SQL boolean expression over the
+    table's columns), enforced on every subsequent write — CoW and MOR
+    merges, appends, predicate DML, MERGE and the CDC ops.
+
+    The rows of the snapshot this call loads are validated first (one
+    scan); a table that already violates the predicate rejects the
+    constraint rather than recording a lie.  The constraint is then
+    recorded in the manifest's ``constraints`` by one metadata commit
+    (:func:`_constraint_commit`) — a new table version, shown in
+    history — so it moves atomically with the data it was checked
+    against, rides every later commit and survives
+    rebucket/cluster/compaction and column renames (it binds to the
+    physical name) untouched."""
+    manifest, key, _ = _open_table(target, store)
+    # constraints bind to PHYSICAL column names at enforcement time; on
+    # a renamed/dropped table a new predicate's names would be
+    # ambiguous between eras — fail closed until a purge
+    _require_unmapped(manifest, "add_table_constraint")
+    rows = _scope_rows(spark, target, manifest, key)
+    bad = None if rows is None else _violations(rows, predicate)
+    if bad:
+        raise ConstraintViolation(
+            f"cannot add constraint {name!r}: existing row violates "
+            f"{predicate!r}: {bad[0].asDict()}"
+        )
+    _constraint_commit(target, manifest, name, predicate, store)
+
+
+@_records_op("drop_constraint")
+def drop_table_constraint(target: str, name: str, store=LOCAL_STORE) -> None:
+    """Drop a CHECK constraint in one metadata commit (none when the
+    table records no constraint by that name)."""
+    manifest = _load_manifest(target, store)
+    if manifest is not None and name in manifest["constraints"]:
+        _constraint_commit(target, manifest, name, None, store)
+
+
+def table_constraints(target: str, store=LOCAL_STORE) -> dict[str, str]:
+    """The table's CHECK constraints, ``{name: predicate}``."""
+    return (_load_manifest(target, store) or {}).get("constraints", {})
+
+
+def _constraint_commit(target, manifest, name, predicate, store) -> None:
+    """Set ``manifest["constraints"][name]`` to ``predicate`` (None
+    drops it) in ONE metadata commit.  The new dict is derived from
+    every base the commit is built on, so concurrent constraint commits
+    all land.  An add was validated on ``manifest``'s rows: it rebases
+    only over commits that leave those rows (files and column mapping)
+    as they were, so any data commit landing after that snapshot fails
+    it with :class:`ConcurrentWriteError`.  A data commit in turn never
+    rebases over a constraint commit (:func:`_commit_files`)."""
+
+    def build(base: dict) -> dict:
+        cons = {**base["constraints"], name: predicate}
+        cons = {k: v for k, v in cons.items() if v is not None}
+        return {**base, "version": base["version"] + 1, "constraints": cons}
+
+    def conflict(inter: dict) -> str | None:
+        rows = [
+            (m["buckets"], m.get("deltas"), _mapping_of(m)) for m in (inter, manifest)
+        ]
+        if predicate is not None and rows[0] != rows[1]:
+            return "a concurrent commit changed the rows the constraint was checked on"
+        return None
+
+    _commit_optimistic(target, manifest, build, conflict, store)
 
 
 def _stored_policy(target: str, name: str, store) -> dict | None:
@@ -2718,8 +2769,9 @@ def rename_column(
     argument hang off it — Delta similarly pins partition columns), the
     new name must not collide with a current column, and both names
     must be plain non-empty identifiers.  CHECK constraints keep
-    working (they bind to the physical name); adding NEW constraints on
-    a mapped table is gated until :func:`purge_column_mapping`."""
+    working: the manifest's ``constraints`` ride the commit unchanged
+    and bind to the physical name.  Adding NEW constraints on a mapped
+    table is gated until :func:`purge_column_mapping`."""
     manifest, key, _ = _open_table(target, store)
     if not new or not new.strip() or new in (BUCKET_COL, TOMBSTONE_COL):
         raise ValueError(f"invalid new column name {new!r}")
@@ -2766,7 +2818,9 @@ def drop_column(
 
     The bucket key cannot be dropped.  A CHECK constraint referencing
     the column must be dropped first (future batches no longer carry
-    the column, so enforcement would crash every merge).  Re-adding a
+    the column, so enforcement would crash every merge); like the
+    ambient policies, the constraints are checked against every base
+    the commit is built on (:func:`_mapping_commit`).  Re-adding a
     column by the dropped name is rejected at merge time until a purge
     (resurrection guard)."""
     manifest, key, _ = _open_table(target, store)
@@ -2778,12 +2832,6 @@ def drop_column(
     mapping, dropped = _mapping_of(manifest)
     mapping = dict(mapping)
     phys = mapping.pop(col, col)
-    for name, sql in table_constraints(target, store).items():
-        if re.search(rf"\b{re.escape(col)}\b|\b{re.escape(phys)}\b", sql):
-            raise ValueError(
-                f"column {col!r} is referenced by CHECK constraint "
-                f"{name!r} ({sql}); drop the constraint first"
-            )
     return _mapping_commit(
         target, manifest, mapping, sorted(set(dropped) | {phys}), store,
         dropping=col,
@@ -3916,7 +3964,7 @@ def merge_into(
 
     if not deltas:
         return {"updated": 0, "deleted": 0, "inserted": 0}
-    _enforce_constraints(_union(visible), target, store)
+    _enforce_constraints(_union(visible), manifest["constraints"])
     if deleted or updated or inserted:
         _commit_files(
             target, _union(deltas), manifest, key, num_buckets,
@@ -4155,8 +4203,7 @@ def apply_changes(
         )
         _enforce_constraints(
             delta.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL),
-            target,
-            store,
+            manifest["constraints"],
         )
         _commit_files(
             target, delta, manifest, key, num_buckets, "delta",
@@ -4374,7 +4421,7 @@ def apply_changes_scd2(
     schema = _table_schema(spark, target, manifest)
     if schema is not None:
         out = _align_batch_types(out, schema, key)
-    _enforce_constraints(out, target, store)
+    _enforce_constraints(out, manifest["constraints"])
     _commit_files(
         target, out, manifest, key, num_buckets, "delta", store=store
     )
@@ -4480,9 +4527,9 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     (min/max stats, inline blooms, row counts, stored sizes, MOR delta
     entries with their commit seqs) is carried under the rewritten keys,
     with the recorded schema, bucket count and column mapping
-    (:func:`_repoint`); the bucket key and ``auto`` flag are set on the
-    clone's manifest explicitly (it has no tip to carry them from), and
-    CHECK constraints are copied as they are.  Writer-txn watermarks and
+    (:func:`_repoint`); the bucket key, the ``auto`` flag and the CHECK
+    constraints are set on the clone's manifest explicitly (it has no
+    tip to carry them from).  Writer-txn watermarks and
     ambient policies are table state and do not clone (as in Delta): a
     clone is a new table to every idempotent writer, which must re-apply
     its batches here.  The clone's history STARTS at src's current
@@ -4520,14 +4567,12 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
         # their true owner — references never chain through intermediaries
         return f if os.path.isabs(f) else os.path.join(src_abs, f)
 
-    constraints = store.read_json(_constraints_path(src))
-    if constraints:
-        store.write_json(_constraints_path(dest), constraints)
     version = manifest["version"]
     # the clone owns no files yet, so it has nothing awaiting deletion
     cloned = _repoint(manifest, _foreign)
     cloned.update(
-        version=version, retired=[], key=key, auto=bool(manifest.get("auto"))
+        version=version, retired=[], key=key, auto=bool(manifest.get("auto")),
+        constraints=manifest["constraints"],
     )
     os.makedirs(dest, exist_ok=True)
     _commit_manifest(dest, cloned, expected_version=None, store=store)
@@ -4757,8 +4802,10 @@ def wap_begin(src: str, name: str, store=LOCAL_STORE) -> str:
 
 
 def wap_branches(src: str, store=LOCAL_STORE) -> list[str]:
-    """Branch names currently open under ``src`` (published ones remain
-    until their files are re-owned and the directory is removed)."""
+    """Branch names currently open under ``src``: each directory under
+    ``_branches`` that holds a ``_wap.json``.  A published branch stays
+    listed until its directory is removed — :func:`wap_abandon` refuses
+    it while the source references its files."""
     return sorted(
         d
         for d in store.list_dir(os.path.join(src, WAP_SUBDIR))
@@ -4769,18 +4816,22 @@ def wap_branches(src: str, store=LOCAL_STORE) -> list[str]:
 def wap_abandon(src: str, name: str, store=LOCAL_STORE) -> None:
     """Drop an UNPUBLISHED branch: delete its directory (branch-owned
     files only live there; references into the source are pointers, not
-    files, so the source cannot be harmed).  Refuses a published branch
-    — the source's manifest references its files."""
+    files, so the source cannot be harmed).  Refuses a published branch.
+    "Published" is read from the source's committed manifest: any live
+    or retired entry under the branch directory means a reader of the
+    source needs the branch's files — including after a publish that
+    crashed right after its CAS."""
     branch = _branch_path(src, name)
-    meta = store.read_json(_wap_meta_path(branch))
-    if meta is None:
+    if store.read_json(_wap_meta_path(branch)) is None:
         raise FileNotFoundError(f"no WAP branch {name!r} under {src}")
-    if meta.get("published_as") is not None:
+    manifest = _load_manifest(src, store) or {}
+    refs = _live_files(manifest) + [e["path"] for e in manifest.get("retired", [])]
+    inside = os.path.abspath(branch) + os.sep
+    if any(os.path.join(os.path.abspath(src), f).startswith(inside) for f in refs):
         raise ValueError(
-            f"branch {name!r} was published as version "
-            f"{meta['published_as']}; the table references its files — "
-            "run optimize_keyed_table on the source, verify, then remove "
-            "the branch directory manually"
+            f"branch {name!r} was published: the source's manifest "
+            "references its files — run optimize_keyed_table on the "
+            "source, verify, then remove the branch directory manually"
         )
     store.delete_tree(branch)
 
@@ -4880,10 +4931,6 @@ def wap_publish(
     )
     _commit_manifest(
         src, published, expected_version=meta["base_version"], store=store
-    )
-    store.write_json(
-        _wap_meta_path(branch),
-        {**meta, "published_as": branch_manifest["version"]},
     )
     return {
         "version": branch_manifest["version"],

@@ -60,8 +60,8 @@ class LocalManifestStore:
         return os.path.exists(path)
 
     def write_json(self, path: str, obj: dict) -> None:
-        """Unconditional durable write (version manifests, constraints,
-        sidecar metadata)."""
+        """Unconditional durable write (version manifests, sidecar
+        metadata)."""
         os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as fh:
             json.dump(obj, fh)

@@ -11,19 +11,19 @@ result (replace-by-key per group — the bucket-pruned ``lookup_keys``
 read means a micro-batch touches only ITS groups' sketch rows, never
 the whole sketch table).
 
-Delivery semantics under replay (crash between a merge and its epoch
-marker, or a restarted query re-delivering the last batch):
+Delivery semantics under replay (a crash after a merge and before the
+epoch's checkpoint commit, or a restarted query re-delivering the last
+batch):
 
 - KMV merge is IDEMPOTENT by algebra — re-merging the same batch's
   hashes is a set union with itself — so the KMV path needs no guard.
-- CMS cells SUM, so a double-merge double-counts.  The stream records
-  the last CMS-applied epoch in ``_epochs.json`` through the storage
-  seam and skips the CMS merge for an epoch it has already applied.
-  The marker is written immediately after the CMS commit (before the
-  harmless KMV merge), so the unprotected window is one JSON write; a
-  crash inside it over-counts that batch once — the documented
-  trade-off of additive sketches under at-least-once replay (exactly
-  the HLL/CMS caveat in every streaming-sketch system).
+- CMS cells SUM, so a double-merge would double-count.  The CMS merge
+  commits under the epoch's writer-transaction watermark, the one every
+  stream's exactly-once leg uses (``delivery.keyed_corpus_commit``):
+  ``txn_app`` is the checkpoint's salted identity, ``txn_seq`` the epoch
+  id, recorded in the CMS table's manifest by the same commit as the
+  cells.  A re-delivered epoch is a manifest no-op, so the stored cells
+  count every batch exactly once.
 
 N streamed batches equal one batch build over the union bit-for-bit —
 including across a checkpointed restart — test-pinned in
@@ -43,14 +43,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import sketch as SK
 from ..storage import LOCAL_STORE
+from .delivery import stream_txn_app
 
 ITEM_SCHEMA = "group string, item string"
 
 _CMS_KEY = "cms_key"
-
-
-def _epochs_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_epochs.json")
 
 
 def merge_kmv_batch(
@@ -102,10 +99,13 @@ def merge_cms_batch(
     depth: int = SK.CMS_DEPTH,
     width: int = SK.CMS_WIDTH,
     store=LOCAL_STORE,
+    txn_app: str | None = None,
+    txn_seq: int | None = None,
 ) -> None:
     """Merge one batch's CMS cells into the stored keyed cell table
     (rows: ``cms_key, group, r, c, cnt``; key = "group:r:c").  Cells
-    sum — the caller must guard against replay (see module doc)."""
+    sum, so a replayed batch must not merge twice: ``txn_app``/``txn_seq``
+    commit the merge under that writer watermark (see module doc)."""
     from .. import sink
 
     cells = SK.cms_sketch(
@@ -132,7 +132,8 @@ def merge_cms_batch(
             .agg(F.sum("cnt").alias("cnt"))
         )
         sink.keyed_overwrite_parquet(
-            spark, merged, target, key=_CMS_KEY, num_buckets=4, store=store
+            spark, merged, target, key=_CMS_KEY, num_buckets=4, store=store,
+            txn_app=txn_app, txn_seq=txn_seq,
         )
     finally:
         sink._release([cells])
@@ -168,16 +169,13 @@ def stream_sketch_ingest(
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         spark_b = batch.sparkSession
-        marks = store.read_json(_epochs_path(out_dir)) or {}
-        if marks.get("cms_epoch", -1) < epoch_id:
-            merge_cms_batch(
-                spark_b, batch, cms_target,
-                group_col=group_col, item_col=item_col,
-                depth=depth, width=width, store=store,
-            )
-            marks["cms_epoch"] = epoch_id
-            store.write_json(_epochs_path(out_dir), marks)
-        # KMV after the marker: its merge is idempotent under replay
+        merge_cms_batch(
+            spark_b, batch, cms_target,
+            group_col=group_col, item_col=item_col,
+            depth=depth, width=width, store=store,
+            txn_app=stream_txn_app(checkpoint_dir, spark_b, require_salted=True),
+            txn_seq=int(epoch_id),
+        )
         merge_kmv_batch(
             spark_b, batch, kmv_target,
             group_col=group_col, item_col=item_col, k=k, store=store,

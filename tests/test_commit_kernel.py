@@ -14,9 +14,11 @@ a tiny table and pin what the kernel owes all of them:
   table at exactly one of the two versions, and its retry converges
   (MERGE, both CDC ops and each of ``apply_changes``' two commits, a
   CoW merge and an append that rebase over a commit to another bucket,
-  an MOR merge, a rebucket, an auto-sized table's growth commit, and a
+  an MOR merge, a rebucket, an auto-sized table's growth commit, a
   table's first commit racing another bootstrap — the loser's layout
-  never outlives its failed commit);
+  never outlives its failed commit — and CHECK constraint commits
+  racing a merge or each other: a data commit never lands rows checked
+  against constraints other than the ones it commits under);
 - each path releases every local checkpoint it took, whether its
   commit lands or fails (no persisted RDD outlives the op).
 """
@@ -32,6 +34,7 @@ import airflow_postgres_etl_spark.sink as sink
 from airflow_postgres_etl_spark.storage import (
     ConcurrentWriteError,
     FakeConditionalStore,
+    LocalManifestStore,
 )
 
 
@@ -50,8 +53,8 @@ def _base(spark, target, store=sink.LOCAL_STORE):
     )
 
 
-def _snapshot(spark, target) -> set:
-    df = sink.read_keyed_table(spark, target)
+def _snapshot(spark, target, store=sink.LOCAL_STORE) -> set:
+    df = sink.read_keyed_table(spark, target, store)
     return {tuple(r) for r in df.select(*sorted(df.columns)).collect()}
 
 
@@ -606,6 +609,13 @@ def _cow_k3(spark, t, store):
     )
 
 
+def _constrain(name, predicate):
+    """A writer that adds a CHECK constraint."""
+    return lambda s, t, store: sink.add_table_constraint(
+        s, t, name, predicate, store=store
+    )
+
+
 def _cdc_bootstrap(rows):
     """A CDC writer that creates the table from its first batch."""
     return lambda s, t, store: sink.apply_changes(
@@ -622,7 +632,9 @@ def _cdc_bootstrap(rows):
 #: under an MOR delta, is rebased over (``*_rebase`` and ``merge_mor``);
 #: a rival table's first commit fails the op's own bootstrap.  A layout
 #: change (``rebucket``, ``grow``) rewrote every bucket from its base,
-#: so any rival commit fails it.
+#: so any rival commit fails it.  A constraint commit fails a data
+#: commit admitted before it, and a data commit fails a constraint
+#: commit validated before it; two constraint commits both land.
 RACES = {
     "merge_rebase": (
         _base,
@@ -681,16 +693,37 @@ RACES = {
             ["v"], store=store,
         ),
     ),
+    "merge_vs_constraint": (
+        _base,
+        lambda s, t, store: sink.keyed_overwrite_parquet(
+            s, _rows(s, [("k1", 10, 0.5)]), t, store=store
+        ),
+        1,
+        _constrain("v_small", "v < 100"),
+    ),
+    "constraint_vs_merge": (_base, _constrain("v_small", "v < 100"), 1, _cow_k3),
+    "constraint_vs_constraint": (
+        _base,
+        _constrain("v_small", "v < 100"),
+        1,
+        _constrain("w_small", "w < 10"),
+    ),
 }
 
 
 #: the raced ops that rebase over their rival and land at once
-LANDS = {"merge_rebase", "append_rebase", "merge_mor", "apply_changes_memory"}
+LANDS = {
+    "merge_rebase",
+    "append_rebase",
+    "merge_mor",
+    "apply_changes_memory",
+    "constraint_vs_constraint",
+}
 
 
 def _tables_state(spark, target, store) -> list:
-    """Layout (key, bucket count) and rows of the table and of its
-    delete memory (None: no table)."""
+    """Layout (key, bucket count), CHECK constraints and rows of the
+    table and of its delete memory (None: no table)."""
     out = []
     for t in (target, sink._cdc_tomb_path(target)):
         m = sink._load_manifest(t, store)
@@ -699,7 +732,8 @@ def _tables_state(spark, target, store) -> list:
             continue
         df = sink.read_keyed_table(spark, t, store)
         rows = df.select(*sorted(df.columns)).collect()
-        out.append((m["key"], m["num_buckets"], {tuple(r) for r in rows}))
+        cons = sink.table_constraints(t, store)
+        out.append((m["key"], m["num_buckets"], cons, {tuple(r) for r in rows}))
     return out
 
 
@@ -786,3 +820,118 @@ def test_bootstrap_race_keeps_the_winners_layout(spark, tmp_path, monkeypatch):
     got = sink.read_keyed_table(spark, target, store).collect()
     assert {(r.oid__id, r.v) for r in got} == {("k1", 10), ("k2", 2), ("k4", 4)}
     assert len(got) == 3
+
+
+#: a write of ``v = 500`` to ``k1`` through each path that enforces
+#: CHECK constraints on its own rows
+VIOLATING = {
+    "merge": lambda s, t, store: sink.keyed_overwrite_parquet(
+        s, _rows(s, [("k1", 500, 0.5)]), t, store=store
+    ),
+    "merge_mor": lambda s, t, store: sink.keyed_merge_mor(
+        s, _rows(s, [("k1", 500, 0.5)]), t, store=store
+    ),
+    "merge_into": lambda s, t, store: sink.merge_into(
+        s, t, _rows(s, [("k1", 500, 0.5)]), when_matched_update={"v": "s_v"},
+        store=store,
+    ),
+    "apply_changes": lambda s, t, store: sink.apply_changes(
+        s, t, s.createDataFrame([("k1", 1, "U", 500, 0.5)], _CDC), "seq",
+        store=store,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(VIOLATING))
+def test_constraint_added_before_a_writes_cas_fails_the_write(spark, tmp_path, op):
+    """A constraint ``v < 100`` lands while a write of ``v = 500`` sits
+    between its admission and its CAS: the write must not land (its
+    rows were never checked against the new rule), and a rerun, which
+    admits against it, is rejected."""
+    store, target = FakeConditionalStore(), str(tmp_path / "t")
+    _base(spark, target, store)
+    rows = _snapshot(spark, target, store)
+    store.on_replace = lambda: sink.add_table_constraint(
+        spark, target, "v_small", "v < 100", store=store
+    )
+    with pytest.raises(ConcurrentWriteError, match="CHECK constraints"):
+        VIOLATING[op](spark, target, store)
+    assert store.on_replace is None, "no race"
+    assert sink.table_constraints(target, store) == {"v_small": "v < 100"}
+    assert _snapshot(spark, target, store) == rows
+    with pytest.raises(sink.ConstraintViolation, match="v_small"):
+        VIOLATING[op](spark, target, store)
+
+
+def test_violating_write_before_a_constraints_cas_fails_the_constraint(
+    spark, tmp_path
+):
+    """A write of ``v = 500`` lands while ``add_table_constraint(v <
+    100)`` sits between its validation and its CAS: the constraint is
+    not recorded, and a retry, which validates the new rows, rejects
+    it."""
+    store, target = FakeConditionalStore(), str(tmp_path / "t")
+    _base(spark, target, store)
+    store.on_replace = lambda: VIOLATING["merge"](spark, target, store)
+    with pytest.raises(ConcurrentWriteError, match="checked on"):
+        sink.add_table_constraint(spark, target, "v_small", "v < 100", store=store)
+    assert store.on_replace is None, "no race"
+    assert sink.table_constraints(target, store) == {}
+    assert ("k1", 500, 0.5) in _snapshot(spark, target, store)
+    with pytest.raises(sink.ConstraintViolation, match="existing row"):
+        sink.add_table_constraint(spark, target, "v_small", "v < 100", store=store)
+
+
+class _ReadSpy(LocalManifestStore):
+    """Counts the commit-object reads and listings a write makes."""
+
+    def __init__(self):
+        self.reads: list[str] = []
+        self.listings = 0
+
+    def read_json(self, path):
+        self.reads.append(os.path.basename(path))
+        return super().read_json(path)
+
+    def list_dir(self, path):
+        self.listings += 1
+        return super().list_dir(path)
+
+
+#: op -> (the 2-row change of :data:`OPS`, through ``store``; the
+#: manifest reads and listings it makes on a table created with its
+#: constraints in the manifest).  Each read one ``_constraints.json``
+#: more when constraints lived beside the manifest.
+READS = {
+    "merge": (
+        lambda s, t, store: sink.keyed_overwrite_parquet(
+            s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t, store=store
+        ),
+        (4, 4),
+    ),
+    "merge_mor": (
+        lambda s, t, store: sink.keyed_merge_mor(
+            s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t, store=store
+        ),
+        (3, 3),
+    ),
+    "merge_into": (
+        lambda s, t, store: sink.merge_into(
+            s, t, _rows(s, [("k1", 10, 0.5), ("n1", 1, 0.5)]),
+            when_matched_update={"v": "s_v"}, store=store,
+        ),
+        (3, 3),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(READS))
+def test_writes_read_no_side_file(spark, tmp_path, op):
+    """A write takes its CHECK constraints from the manifest it loaded:
+    it reads no commit object but the manifest."""
+    target, spy = str(tmp_path / "t"), _ReadSpy()
+    _base(spark, target)
+    run, counts = READS[op]
+    run(spark, target, spy)
+    assert set(spy.reads) == {sink.MANIFEST_NAME}
+    assert (len(spy.reads), spy.listings) == counts

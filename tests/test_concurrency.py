@@ -10,6 +10,9 @@ writer lands a full commit between the victim's data write and its CAS.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 import airflow_postgres_etl_spark.sink as sink
@@ -19,9 +22,13 @@ from airflow_postgres_etl_spark.sink import (
     keyed_merge_mor,
     keyed_overwrite_parquet,
     read_keyed_table,
+    table_history_detail,
     table_version,
 )
-from airflow_postgres_etl_spark.storage import ConcurrentWriteError
+from airflow_postgres_etl_spark.storage import (
+    ConcurrentWriteError,
+    FakeConditionalStore,
+)
 
 
 def _bucket_of(spark, key: str, num_buckets: int = 4) -> int:
@@ -57,6 +64,13 @@ def _interlope_once(monkeypatch, action):
             action()
 
     monkeypatch.setattr(sink, "_write_bucketed", write_then_interlope)
+
+
+def _on_own_thread(fn):
+    """``fn()`` run to completion on another thread; its result, or its
+    exception re-raised here."""
+    with ThreadPoolExecutor(1) as pool:
+        return pool.submit(fn).result()
 
 
 def _state(spark, target) -> dict:
@@ -237,8 +251,6 @@ def test_threaded_writers_converge(spark, tmp_path):
     """REAL concurrent writers (threads, no monkeypatching): every
     commit lands exactly once, disjoint-bucket losers rebase, and the
     final state is the union of all writes."""
-    import threading
-
     ka, kb, kc = _keys_in_distinct_buckets(spark)
     target = str(tmp_path / "t")
     keyed_overwrite_parquet(
@@ -288,22 +300,17 @@ def test_intermediate_unsafe_commit_blocks_rebase(spark, tmp_path, monkeypatch):
     )
 
     def widen_then_safe_merge():
-        # a REAL concurrent writer is a separate process with its own
-        # op stack; inside the interloper hook the victim's outermost
-        # @_records_op frame would otherwise mislabel these commits
-        saved = sink._CURRENT_OP[:]
-        sink._CURRENT_OP.clear()
-        try:
-            sink.widen_keyed_table(spark, target, {"v": "bigint"})  # v2: unsafe
-            keyed_overwrite_parquet(                                 # v3: safe
-                spark,
-                spark.createDataFrame([(kb, 20)], ["oid__id", "v"]),
-                target, num_buckets=4,
-            )
-        finally:
-            sink._CURRENT_OP.extend(saved)
+        sink.widen_keyed_table(spark, target, {"v": "bigint"})  # v2: unsafe
+        keyed_overwrite_parquet(                                 # v3: safe
+            spark,
+            spark.createDataFrame([(kb, 20)], ["oid__id", "v"]),
+            target, num_buckets=4,
+        )
 
-    _interlope_once(monkeypatch, widen_then_safe_merge)
+    # a REAL concurrent writer has its own op stack: on the victim's
+    # thread, the victim's outermost @_records_op frame would stamp
+    # these commits
+    _interlope_once(monkeypatch, lambda: _on_own_thread(widen_then_safe_merge))
     with pytest.raises(ConcurrentWriteError, match="widen"):
         keyed_merge_mor(
             spark,
@@ -480,3 +487,36 @@ def test_rebase_merges_lower_intervening_txn_watermark(
     m = sink._load_manifest(target)
     assert m["txns"]["w"] == 5
     assert _state(spark, target) == {ka: 1, kb: 2, kc: 5}
+
+
+def test_each_thread_stamps_its_own_op(spark, tmp_path):
+    """The op stack that stamps each commit's ``operation`` is per
+    thread: while thread A's MOR merge into one table waits at its CAS,
+    the main thread appends to another table, and each table's history
+    row names its own op."""
+    t1, t2 = str(tmp_path / "t1"), str(tmp_path / "t2")
+    s1 = FakeConditionalStore()
+
+    def rows(data):
+        return spark.createDataFrame(data, ["oid__id", "v"])
+
+    keyed_overwrite_parquet(spark, rows([("a", 1)]), t1, num_buckets=2, store=s1)
+    keyed_overwrite_parquet(spark, rows([("a", 1)]), t2, num_buckets=2)
+    entered, release = threading.Event(), threading.Event()
+
+    def block():
+        entered.set()
+        assert release.wait(120)
+
+    s1.on_replace = block
+    a = ThreadPoolExecutor(1)
+    merge = a.submit(keyed_merge_mor, spark, rows([("b", 2)]), t1, store=s1)
+    try:
+        assert entered.wait(120), "thread A never reached its CAS"
+        keyed_append(spark, rows([("c", 3)]), t2)
+    finally:
+        release.set()
+        a.shutdown(wait=True)
+    merge.result()
+    assert table_history_detail(t2)[-1]["operation"] == "append"
+    assert table_history_detail(t1, s1)[-1]["operation"] == "merge_mor"

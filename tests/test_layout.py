@@ -24,7 +24,7 @@ from airflow_postgres_etl_spark.storage import (
     LocalManifestStore,
 )
 
-from .legacy_layout import write_legacy_spec
+from .legacy_layout import write_legacy_constraints, write_legacy_spec
 
 
 def _rows(spark, data):
@@ -255,6 +255,31 @@ def test_legacy_table_records_its_key_and_time_travels(spark, tmp_path):
     want = {f"k{i}": i for i in range(10)}
     want["k1"] = -1
     assert {r.id: r.v for r in old} == want and len(old) == len(want)
+
+
+def test_legacy_constraints_are_enforced_recorded_and_stay_dropped(
+    spark, tmp_path
+):
+    """A table whose manifests predate recorded CHECK constraints keeps
+    them in ``_constraints.json``: its rule is enforced, its next commit
+    records the rule in the manifest, and a rule dropped on such a table
+    never comes back from the old file."""
+    target = str(tmp_path / "t")
+    _table(spark, target, n=4, num_buckets=2)
+    write_legacy_constraints(target, {"v_small": "v < 100"})
+    with pytest.raises(sink.ConstraintViolation, match="v_small"):
+        sink.keyed_merge_mor(spark, _rows(spark, [("k1", 500)]), target)
+    sink.keyed_overwrite_parquet(spark, _rows(spark, [("k1", 50)]), target)
+    manifest = LOCAL_STORE.read_json(sink._manifest_path(target))
+    assert manifest["constraints"] == {"v_small": "v < 100"}
+
+    write_legacy_constraints(target, {"v_small": "v < 100"})
+    sink.drop_table_constraint(target, "v_small")
+    sink.keyed_merge_mor(spark, _rows(spark, [("k1", 500)]), target)
+    sink.keyed_overwrite_parquet(spark, _rows(spark, [("k2", 600)]), target)
+    assert sink.table_constraints(target) == {}
+    assert LOCAL_STORE.read_json(sink._manifest_path(target))["constraints"] == {}
+    assert _state(spark, target) == {"k0": 0, "k1": 500, "k2": 600, "k3": 3}
 
 
 def test_merge_racing_a_growth_commit_conflicts(spark, tmp_path):

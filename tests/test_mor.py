@@ -345,6 +345,49 @@ def test_check_constraints_guard_both_merge_paths(spark, tmp_path):
     assert ("e", -1) in _read_set(spark, target)
 
 
+def test_constraints_are_table_state(spark, tmp_path):
+    """A CHECK constraint is committed in the manifest: adding and
+    dropping one each make a version (named in history), and the
+    constraint survives a column rename and a restore to a version
+    before it, and a clone carries it."""
+    from airflow_postgres_etl_spark.sink import (
+        ConstraintViolation,
+        add_table_constraint,
+        clone_keyed_table,
+        drop_table_constraint,
+        rename_column,
+        restore_keyed_table,
+        table_constraints,
+        table_history_detail,
+    )
+
+    target, clone = str(tmp_path / "t"), str(tmp_path / "clone")
+    rows = [("a", 1, "x"), ("b", 2, "y")]
+    keyed_overwrite_parquet(spark, _rows(spark, rows, ("oid__id", "v", "w")), target)
+    v0 = table_version(target)
+    add_table_constraint(spark, target, "v_positive", "v > 0")
+    assert table_version(target) == v0 + 1
+    assert table_history_detail(target)[-1]["operation"] == "add_constraint"
+
+    rename_column(spark, target, "w", "label")
+    renamed = _rows(spark, [("c", -1, "z")], ("oid__id", "v", "label"))
+    with pytest.raises(ConstraintViolation, match="v_positive"):
+        keyed_merge_mor(spark, renamed, target)
+    restore_keyed_table(spark, target, v0)
+    clone_keyed_table(target, clone)
+    for t in (target, clone):
+        assert table_constraints(t) == {"v_positive": "v > 0"}
+        with pytest.raises(ConstraintViolation, match="v_positive"):
+            keyed_merge_mor(
+                spark, _rows(spark, [("c", -1, "z")], ("oid__id", "v", "w")), t
+            )
+
+    drop_table_constraint(target, "v_positive")
+    assert table_history_detail(target)[-1]["operation"] == "drop_constraint"
+    assert table_constraints(target) == {}
+    assert table_constraints(clone) == {"v_positive": "v > 0"}
+
+
 def test_compaction_loses_cas_to_concurrent_mor_merge(spark, tmp_path):
     """The MOR race that must never lose data: a delta commit lands
     between compaction's manifest read and its CAS.  The compaction must

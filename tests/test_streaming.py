@@ -667,6 +667,58 @@ def test_streamed_sketches_equal_batch_build_across_restart(spark, tmp_path):
     assert got_cms_2 == got_cms
 
 
+def test_sketch_stream_replay_after_a_crash_past_the_cms_commit(
+    spark, tmp_path, monkeypatch
+):
+    """CMS cells sum, so a re-delivered epoch must not merge twice: the
+    query crashes right after the CMS table's commit lands (before the
+    epoch's checkpoint commit), the restarted query re-delivers that
+    epoch, and the stored cells still equal one batch build over the
+    input — the epoch's watermark committed with the cells."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from airflow_postgres_etl_spark import sink
+    from airflow_postgres_etl_spark.operators import sketch as SK
+    from airflow_postgres_etl_spark.streaming import stream_sketch_ingest
+
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    rows = [(f"g{j % 3}", f"item_{j % 7}") for j in range(60)]
+    spark.createDataFrame(rows, "group string, item string").coalesce(
+        1
+    ).write.parquet(src)
+    cms = os.path.join(out, "cms")
+    real_commit = sink._commit_manifest
+
+    def commit_then_crash(target, *a, **k):
+        real_commit(target, *a, **k)
+        if target == cms:
+            monkeypatch.setattr(sink, "_commit_manifest", real_commit)
+            raise OSError("simulated crash after the CMS commit")
+
+    monkeypatch.setattr(sink, "_commit_manifest", commit_then_crash)
+    q = stream_sketch_ingest(spark, src, out, ck)
+    with pytest.raises(StreamingQueryException, match="simulated crash"):
+        q.awaitTermination(300)
+    assert sink._commit_manifest is real_commit, "no crash"
+    v = table_version(cms)
+
+    q2 = stream_sketch_ingest(spark, src, out, ck)
+    q2.awaitTermination(300)
+    assert q2.exception() is None
+    assert table_version(cms) == v  # the replayed epoch: a no-op
+    got = {
+        (r.group, r.r, r.c, r.cnt)
+        for r in read_keyed_table(spark, cms).collect()
+    }
+    union = spark.createDataFrame(rows, "group string, item string")
+    want = {
+        (r.group, r.r, r.c, r.cnt)
+        for r in SK.cms_sketch(union, ["group"], F.col("item")).collect()
+    }
+    assert got == want
+
+
 def test_stream_append_checkpointed_and_replay_safe(spark, tmp_path):
     """Append-mode fact ingest: files stream in as O(batch) blind
     appends with the writer-txn watermark making redelivery a no-op;

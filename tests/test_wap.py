@@ -104,6 +104,49 @@ def test_abandon_unpublished_only(spark, tmp_path):
     assert _state(t) == {"a": 1, "b": 2}
 
 
+class _CrashAfterCas(LocalManifestStore):
+    """Raises on the first write after a manifest CAS, once armed: a
+    crash right after a commit landed."""
+
+    armed = crashing = False
+
+    def replace_if_version(self, *a, **k):
+        super().replace_if_version(*a, **k)
+        self.crashing, self.armed = self.armed, False
+
+    def write_json(self, path, obj):
+        if self.crashing:
+            self.crashing = False
+            raise OSError("simulated crash after the CAS")
+        super().write_json(path, obj)
+
+
+def test_abandon_refuses_a_branch_whose_publish_crashed_after_its_cas(
+    spark, tmp_path
+):
+    """A branch is published once the source's manifest says so: after
+    the publish CAS lands the source reads the branch's files, so
+    abandoning the branch (deleting its directory) must be refused even
+    though the publish crashed before it returned."""
+    store = _CrashAfterCas()
+    t = Table(spark, str(tmp_path / "t"), store=store)
+    t.merge(
+        spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long"),
+        key="k", num_buckets=4, vacuum=False,
+    )
+    b = t.branch("load")
+    b.merge(spark.createDataFrame([("b", 20), ("c", 3)], "k string, v long"), key="k")
+    want = _state(b)
+
+    store.armed = True
+    with pytest.raises(OSError, match="simulated crash"):
+        t.publish("load")
+    with pytest.raises(ValueError, match="published"):
+        t.abandon("load")
+    assert t.branches() == ["load"]
+    assert _state(t) == want
+
+
 def test_vacuum_ownership_across_publish(spark, tmp_path):
     t = _table(spark, tmp_path, [("a", 1), ("b", 2)])
     b = t.branch("v")
