@@ -115,7 +115,7 @@ def add_bloom_index(
         path = unquote(urlparse(uri).path) if ":" in uri.split("/", 1)[0] else uri
         return by_suffix.get(path) or by_suffix.get(os.path.normpath(path))
 
-    blooms = dict(manifest.get("blooms", {}))
+    blooms = dict(manifest["blooms"])
     live = set(rels)
     blooms = {f: v for f, v in blooms.items() if f in live}  # drop dead files
     indexed = 0
@@ -130,9 +130,7 @@ def add_bloom_index(
     new_manifest = dict(manifest)
     new_manifest["version"] = manifest["version"] + 1
     new_manifest["blooms"] = blooms
-    _commit_manifest(
-        target, new_manifest, expected_version=manifest["version"], store=store
-    )
+    _commit_manifest(target, new_manifest, manifest, store)
     return indexed
 
 

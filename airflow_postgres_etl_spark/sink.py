@@ -103,10 +103,7 @@ Two implementations:
   committed, so the check reads no data file.  A trickle-fed table
   thus stays at a few files.  Few buckets also means few disjoint
   ones: concurrent writers that must land without conflicting
-  (disjoint-bucket merges) should pin ``num_buckets=``.  A table
-  written before manifests recorded its key kept it in a spec file
-  beside the manifest; :func:`_load_manifest` folds that file in, and
-  the table's next commit records it.
+  (disjoint-bucket merges) should pin ``num_buckets=``.
 
   Conflict rules: the CoW merge and the append rebase over any commit
   that leaves their affected buckets, the bucket count and their txn
@@ -135,9 +132,7 @@ Two implementations:
   enforces the constraints of the manifest it loaded, a data commit
   never rebases over a constraint change, and a constraint added
   after a data commit's admission fails that commit's CAS instead of
-  landing unchecked rows.  A table written before manifests recorded
-  constraints kept them in ``_constraints.json``; only
-  :func:`_load_manifest` reads it.
+  landing unchecked rows.
 
   The commits that move no data but re-point a whole snapshot —
   :func:`restore_keyed_table`, :func:`clone_keyed_table`,
@@ -147,10 +142,23 @@ Two implementations:
   stats, blooms, row counts, schema, layout and column mapping), a
   ``retired`` list, and one :func:`_commit_manifest`, whose carry takes
   the table state (writer txns, CHECK constraints, ambient policies)
-  from the tip.
+  from the base it was built on, the tip it loaded.
   Restore and publish retire through :func:`_retire`, the same rule
   the kernel uses; a clone has nothing to retire, and adopt keeps the
   tip's list (foreign originals are not the table's to retire).
+
+  **Old manifests.**  Every manifest is read through one of two
+  readers, :func:`_load_manifest` (the tip) and :func:`_read_version`
+  (any snapshot, the tip's through a crash-lost copy), and both return
+  it through :func:`_normalize`, the only code that knows the forms
+  older writers left: a pre-manifest layout (adopted in place), the
+  side files that once held the layout, the CHECK constraints and a
+  WAP branch's fork point (folded in), and the keys added since (filled
+  with their empty values).  Each fold runs only when its key is
+  absent, so a current manifest costs no extra I/O, and the table's
+  next commit records what the folds found.  Key presence identifies
+  each old form; manifests carry no format number that could disagree
+  with their keys.
 - **JDBC (Postgres) stage-then-merge**: stage the batch with
   ``df.write.jdbc`` (parallel INSERT at COPY-like speed), then one
   driver-side transaction ``DELETE target USING stage; INSERT SELECT`` —
@@ -413,45 +421,33 @@ def _manifest_path(target: str) -> str:
     return os.path.join(target, MANIFEST_NAME)
 
 
-def _load_manifest(target: str, store=LOCAL_STORE) -> dict | None:
-    """Current committed snapshot, or None if the target doesn't exist yet.
+def _normalize(manifest: dict | None, target: str, store) -> dict | None:
+    """``manifest`` (as read from the store, None when absent) in the
+    current form, or None when ``target`` holds no table: the one place
+    that knows the old forms.  Each fold runs only when its key is
+    absent, so a current manifest costs no I/O:
 
-    The manifest object is read through the storage seam
-    (:mod:`.storage`); the legacy-layout adoption below is a local-FS
-    migration path only (a pre-manifest layout can't exist on a store
-    that was never written without manifests).
+    - no manifest, but bucket directories at the target root (a
+      pre-manifest layout): its files are adopted in place as a
+      version-0 manifest, which the first merge commits (no data
+      rewrite).  The listing goes through the seam: a non-local store
+      holds such a layout when an older writer crashed between its data
+      write and its initial commit;
+    - no ``key``: the key, the ``auto`` flag and (before manifests
+      recorded the count) the bucket count lived in
+      ``_bucket_spec.json`` (a count the manifest records wins);
+    - no ``constraints``: the CHECK constraints lived in
+      ``_constraints.json`` (none when absent);
+    - no ``wap`` on a table directly under ``<src>/_branches/``: a WAP
+      branch's fork point lived in ``_wap.json``;
+    - keys added since: no MOR ``deltas``, ``retired`` files, ``stats``,
+      ``blooms``, ``rows`` or ``bytes``, and the ``"commit"`` /
+      ``None`` stamp.
 
-    A pre-manifest layout (bucket directories at the target root, written
-    by an older version of this sink) is adopted in place: its files are
-    synthesized into a version-0 manifest so the first merge commits them
-    properly — no data rewrite needed to migrate.
-
-    A legacy table — that layout, or a manifest written before manifests
-    recorded the bucket ``key`` — kept its key, its ``auto`` flag and
-    (before manifests recorded the count) its bucket count in
-    ``_bucket_spec.json``.  This is the one place that file is read: it
-    is folded into the returned dict (a count the manifest records
-    wins), and the table's next commit records what it holds.  In the
-    same way a manifest written before manifests recorded CHECK
-    constraints takes them from the legacy ``_constraints.json`` (none
-    when absent): the returned dict always holds ``constraints``.
-    """
-    manifest = store.read_json(_manifest_path(target))
+    The table's next commit records what the folds found
+    (:func:`_commit_manifest` carries table state from its base)."""
     if manifest is None:
-        # adoption listing goes through the seam too (store.list_dir
-        # returns [] for a missing prefix, so no existence probe is
-        # needed): a non-local store CAN hold a pre-manifest layout if
-        # an older writer crashed between data write and initial commit.
-        buckets: dict[str, list[str]] = {}
-        for d in store.list_dir(target):
-            if d.startswith(f"{BUCKET_COL}="):
-                files = sorted(
-                    os.path.join(d, f)
-                    for f in store.list_dir(os.path.join(target, d))
-                    if f.endswith(".parquet")
-                )
-                if files:
-                    buckets[d.split("=", 1)[1]] = files
+        buckets = _list_commit_buckets(target, "", store)
         if not buckets:
             return None
         manifest = {"version": 0, "buckets": buckets}
@@ -467,11 +463,41 @@ def _load_manifest(target: str, store=LOCAL_STORE) -> dict | None:
     if "constraints" not in manifest:
         legacy = store.read_json(os.path.join(target, "_constraints.json"))
         manifest["constraints"] = legacy or {}
+    if "wap" not in manifest and _is_branch(target):
+        fork = store.read_json(os.path.join(target, "_wap.json"))
+        if fork is not None:
+            manifest["wap"] = fork
+    for k, v in {
+        "deltas": {}, "retired": [], "stats": {}, "blooms": {}, "rows": {},
+        "bytes": {}, "operation": "commit", "committed_at": None,
+    }.items():
+        manifest.setdefault(k, v)
     return manifest
+
+
+def _load_manifest(target: str, store=LOCAL_STORE) -> dict | None:
+    """Current committed snapshot, normalized (:func:`_normalize`), or
+    None if the target doesn't exist yet.  Read through the storage seam
+    (:mod:`.storage`)."""
+    return _normalize(store.read_json(_manifest_path(target)), target, store)
 
 
 def _version_manifest_path(target: str, version: int) -> str:
     return os.path.join(target, f"_manifest.v{version}.json")
+
+
+def _read_version(target: str, version: int, store=LOCAL_STORE) -> dict | None:
+    """The snapshot commit ``version`` published, normalized
+    (:func:`_normalize`), or None when it never committed or its
+    per-version copy expired.  The tip's own snapshot reads through a
+    crash-lost copy: the copy is written after the tip's CAS
+    (:func:`_commit_manifest`), so a crash between the two leaves the
+    tip as the only record of its version."""
+    snap = store.read_json(_version_manifest_path(target, version))
+    if snap is not None:
+        return _normalize(snap, target, store)
+    tip = _load_manifest(target, store)
+    return tip if tip is not None and tip["version"] == version else None
 
 
 # ---------------------------------------------------------------------------
@@ -753,22 +779,23 @@ def _repoint(snap: dict, ref) -> dict:
     ``blooms``, ``rows`` and ``bytes`` — with the entries that describe
     those files: the recorded schema, the bucket count and the column
     mapping (pinned even when empty, so the commit carry never lays
-    the tip's names over them).  The table state (the bucket ``key``,
-    the ``auto`` flag, ``txns``, the CHECK ``constraints`` and the
-    :data:`_POLICIES`) is left out
-    for :func:`_commit_manifest` to take from the tip.  The caller adds
-    ``version`` and ``retired``."""
+    the base's names over them).  The table state (the bucket ``key``,
+    the ``auto`` flag, ``txns``, the CHECK ``constraints``, a WAP fork
+    point and the :data:`_POLICIES`) is left out for
+    :func:`_commit_manifest` to take from the base.  ``snap`` is
+    normalized (:func:`_normalize`); the caller adds ``version`` and
+    ``retired``."""
     out = {
         "buckets": {b: [ref(f) for f in fs] for b, fs in snap["buckets"].items()},
         "deltas": {
             b: [{**e, "path": ref(e["path"])} for e in es]
-            for b, es in snap.get("deltas", {}).items()
+            for b, es in snap["deltas"].items()
         },
         "column_mapping": snap.get("column_mapping", {}),
         "dropped_columns": snap.get("dropped_columns", []),
     }
     for k in ("stats", "blooms", "rows", "bytes"):
-        out[k] = {ref(f): v for f, v in (snap.get(k) or {}).items()}
+        out[k] = {ref(f): v for f, v in snap[k].items()}
     for k in ("schema", "num_buckets"):
         if snap.get(k):
             out[k] = snap[k]
@@ -864,45 +891,45 @@ def _describe_files(
 
 
 def _commit_manifest(
-    target: str, manifest: dict, expected_version: int | None, store=LOCAL_STORE
+    target: str, manifest: dict, base: dict | None, store=LOCAL_STORE
 ) -> None:
-    """THE commit: replace ``_manifest.json`` iff it still holds
-    ``expected_version`` (None = the table's first commit, which fails
-    when a manifest already exists).  The atomic
-    compare-and-swap itself lives behind the storage seam — ``os.replace``
-    locally, a conditional PUT on an object store; a failed check raises
-    :class:`ConcurrentWriteError` and this merge's data files become
-    orphans the next vacuum collects.
+    """THE commit: replace ``_manifest.json`` with ``manifest``, built on
+    ``base`` (the unmodified dict :func:`_load_manifest` or
+    :func:`_read_version` returned; None = the table's first commit),
+    iff the store still holds ``base``'s version (no version = create,
+    which fails when a manifest already exists).  The atomic
+    compare-and-swap itself lives behind the storage seam —
+    ``os.replace`` locally, a conditional PUT on an object store; a
+    failed check raises :class:`ConcurrentWriteError` and this merge's
+    data files become orphans the next vacuum collects.
 
     After a successful CAS an immutable per-version copy
     (``_manifest.v{N}.json``) lands too — the time-travel index
     (:func:`read_keyed_table` ``version=``).  Written strictly AFTER the
     CAS, so a losing writer never publishes a version file; the CAS
     serializes versions, so no two writers ever claim the same N.  A
-    crash between CAS and copy loses only that version's time-travel
-    entry, never current-state correctness."""
-    # the table state a commit leaves alone rides over from the tip: the
-    # bucket layout (key, count and auto flag: every data commit records
-    # the key and count it hashed with, and readers and writers take
-    # them from here), the writer-transaction watermarks (Delta's `txn`
-    # action — "batch N already applied" must survive every unrelated
-    # commit), the CHECK constraints (every manifest records them, an
-    # empty dict too, so a dropped legacy rule never folds back in), the
-    # ambient policies (_POLICIES) and the column mapping (both of its
-    # keys, unless the commit sets either).  A key the commit sets wins
-    # (a setter's None clears its policy, a rebucket's False ends
-    # auto-sizing).  The tip is read through _load_manifest, so a legacy
-    # table's next commit records the key its spec held and the
-    # constraints its side file held.
-    keys = ("key", "num_buckets", "auto", "txns", "constraints", *_POLICIES)
+    crash between CAS and copy loses no snapshot: :func:`_read_version`
+    reads the tip's version through the missing copy."""
+    # the table state a commit leaves alone rides over from its base —
+    # the tip whenever the CAS succeeds: the bucket layout (key, count
+    # and auto flag: every data commit records the key and count it
+    # hashed with, and readers and writers take them from here), the
+    # writer-transaction watermarks (Delta's `txn` action — "batch N
+    # already applied" must survive every unrelated commit), the CHECK
+    # constraints (every manifest records them, an empty dict too, so a
+    # dropped legacy rule never folds back in), a WAP branch's fork
+    # point, the ambient policies (_POLICIES) and the column mapping
+    # (both of its keys, unless the commit sets either).  A key the
+    # commit sets wins (a setter's None clears its policy, a rebucket's
+    # False ends auto-sizing).  A normalized base holds what a legacy
+    # table kept in side files, so its next commit records them.
+    base = base or {}
+    keys = ("key", "num_buckets", "auto", "txns", "constraints", "wap", *_POLICIES)
     if "column_mapping" not in manifest and "dropped_columns" not in manifest:
         keys += ("column_mapping", "dropped_columns")
-    carry = [k for k in keys if k not in manifest]
-    cur = _load_manifest(target, store) if carry else None
-    for k in carry if cur else ():
-        if cur.get(k):
-            manifest[k] = cur[k]
-    manifest.setdefault("constraints", {})
+    for k in keys:
+        if k in base and k not in manifest:
+            manifest[k] = base[k]
     # commit wall-clock — the TIMESTAMP AS OF index (resolve_as_of) —
     # and the operation stamp (this thread's outermost @_records_op)
     frames = getattr(_HELD, "frames", None)
@@ -915,14 +942,14 @@ def _commit_manifest(
     # manifest written before these keys existed is described here.
     live = set(_live_files(manifest))
     known = {
-        k: {f: n for f, n in (manifest.get(k) or {}).items() if f in live}
+        k: {f: n for f, n in manifest[k].items() if f in live}
         for k in ("rows", "bytes")
     }
     missing = sorted(live - (known["rows"].keys() & known["bytes"].keys()))
     _, rows, sizes = _describe_files(target, missing, (), store)
     manifest["rows"] = {**rows, **known["rows"]}
     manifest["bytes"] = {**sizes, **known["bytes"]}
-    store.replace_if_version(_manifest_path(target), manifest, expected_version)
+    store.replace_if_version(_manifest_path(target), manifest, base.get("version"))
     store.write_json(_version_manifest_path(target, manifest["version"]), manifest)
 
 
@@ -977,11 +1004,7 @@ def _commit_optimistic(
     for attempt in range(OPTIMISTIC_RETRIES + 1):
         manifest = build(base)
         try:
-            # a base without a version is the empty table: initial commit
-            _commit_manifest(
-                target, manifest, expected_version=base.get("version"),
-                store=store,
-            )
+            _commit_manifest(target, manifest, base, store)
             return manifest
         except ConcurrentWriteError:
             if attempt == OPTIMISTIC_RETRIES:
@@ -997,7 +1020,7 @@ def _commit_optimistic(
                 inter = (
                     current
                     if v == current["version"]
-                    else store.read_json(_version_manifest_path(target, v))
+                    else _read_version(target, v, store)
                 )
                 if inter is None:
                     raise ConcurrentWriteError(
@@ -1058,7 +1081,9 @@ def _stats_cols_of(manifest: dict) -> list[str]:
 def _list_commit_buckets(
     target: str, commit_rel: str, store=LOCAL_STORE
 ) -> dict[str, list[str]]:
-    """{bucket: [target-relative parquet paths]} written by one commit.
+    """{bucket: [target-relative parquet paths]} under ``commit_rel``:
+    one commit's directory, or ``""`` for the target root of a
+    pre-manifest layout.
 
     Listed through the storage seam — Spark's parquet writer just wrote
     these files through its Hadoop filesystem, and on a non-local
@@ -1348,7 +1373,7 @@ def _commit_files(
         return out
 
     def conflict(current: dict) -> str | None:
-        op = current.get("operation")
+        op = current["operation"]
         if (edit == "delta" and op not in _REBASE_SAFE_OPS) or (
             edit != "delta" and guard is None
         ):
@@ -1375,14 +1400,13 @@ def _commit_files(
         for b in sorted(written) if guard is None else guard:
             if current["buckets"].get(b) != base["buckets"].get(b):
                 return f"bucket {b} was rewritten concurrently"
-            if current.get("deltas", {}).get(b) != base.get(
-                "deltas", {}
-            ).get(b):
+            if current["deltas"].get(b) != base["deltas"].get(b):
                 return f"bucket {b} gained concurrent MOR deltas"
         return None
 
     committed = _commit_optimistic(
-        target, base or {"buckets": {}}, build, conflict, store
+        target, base or {"buckets": {}, "constraints": {}}, build, conflict,
+        store,
     )
     return committed, written
 
@@ -1910,9 +1934,7 @@ def table_delta_depth(target: str, store=LOCAL_STORE) -> int:
     manifest = _load_manifest(target, store)
     if manifest is None:
         return 0
-    return max(
-        (len(v) for v in manifest.get("deltas", {}).values()), default=0
-    )
+    return max(map(len, manifest["deltas"].values()), default=0)
 
 
 @_records_op("merge_mor")
@@ -2223,7 +2245,7 @@ def compact_keyed_table(
     and delta files retire under the normal retention window so
     in-flight readers finish their snapshot."""
     return _rewrite_buckets(
-        spark, target, lambda m: sorted(m.get("deltas", {})), store
+        spark, target, lambda m: sorted(m["deltas"]), store
     )
 
 
@@ -2238,7 +2260,7 @@ def _rewrite_buckets(spark, target, pick, store) -> int:
     manifest, key, num_buckets = _open_table(target, store)
     grown = manifest.get("auto") and _grown(target, manifest, num_buckets, store)
     buckets = (
-        sorted(manifest["buckets"].keys() | manifest.get("deltas", {}).keys())
+        sorted(manifest["buckets"].keys() | manifest["deltas"].keys())
         if grown
         else pick(manifest)
     )
@@ -2408,7 +2430,7 @@ def _mapping_commit(
         return m
 
     def conflict(inter: dict) -> str | None:
-        op = inter.get("operation", "commit")
+        op = inter["operation"]
         if op in _REBASE_SAFE_OPS:
             return None
         return f"concurrent {op} (layout/schema operation)"
@@ -3086,7 +3108,7 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
     :func:`purge_column_mapping` first)."""
     manifest, key, num_buckets = _open_table(target, store)
     buckets = manifest["buckets"]
-    deltas = manifest.get("deltas", {})
+    deltas = manifest["deltas"]
     sizes = [
         _stored_bytes(target, manifest, files, store) for files in buckets.values()
     ]
@@ -3106,7 +3128,7 @@ def describe_keyed_table(target: str, store=LOCAL_STORE) -> dict:
         "dirty_buckets": len(deltas),
         "max_delta_depth": max((len(v) for v in deltas.values()), default=0),
         "n_delta_files": len(_delta_files_of(manifest)),
-        "retired_files": len(manifest.get("retired", [])),
+        "retired_files": len(manifest["retired"]),
         "stats_cols": _stats_cols_of(manifest),
         "history_versions": table_history(target, store),
         "column_mapping": manifest.get("column_mapping") or {},
@@ -3185,13 +3207,13 @@ def read_keyed_table(
     if version is None:
         manifest = _open_table(target, store)[0]
     else:
-        manifest = store.read_json(_version_manifest_path(target, version))
+        manifest = _read_version(target, version, store)
         if manifest is None:
             raise FileNotFoundError(
                 f"no version {version} snapshot at {target} (never "
                 "committed, or its manifest was vacuumed past retention)"
             )
-    deltas = manifest.get("deltas", {})
+    deltas = manifest["deltas"]
     # column mapping of THIS snapshot (version-exact: time travel shows
     # the names the snapshot was committed under).  Stats/blooms are
     # keyed by PHYSICAL names; user predicates speak logical.
@@ -3223,7 +3245,7 @@ def read_keyed_table(
     )
     prune_all = False
     if (preds or eq_preds or isnull_cols or notnull_cols) and clean_rel:
-        stats = manifest.get("stats", {})
+        stats = manifest["stats"]
 
         def may_match(rel: str) -> bool:
             for col, lo, hi in preds:
@@ -3285,10 +3307,9 @@ def read_keyed_table(
             )
         )
     if deltas:
-        # the key never changes: a snapshot written before manifests
-        # recorded it takes it from the tip
-        key = manifest.get("key") or _open_table(target, store)[1]
-        frames.append(_resolve_dirty(spark, target, manifest, key, sorted(deltas)))
+        frames.append(
+            _resolve_dirty(spark, target, manifest, manifest["key"], sorted(deltas))
+        )
     df = _to_logical_df(_union(frames).drop(BUCKET_COL), cmap, cdropped)
     if prune_all:
         return df.filter(F.lit(False))
@@ -3344,18 +3365,22 @@ def lookup_keys(
 
 
 def table_history(target: str, store=LOCAL_STORE) -> list[int]:
-    """Versions readable via ``read_keyed_table(version=...)`` — the
-    per-version manifests still committed, ascending.  The listing goes
-    through the storage seam (``store.list_dir`` = the ``_manifest.v``
-    prefix listing on an object store), matching where the snapshot
-    objects are actually written."""
-    out = []
+    """Versions readable via ``read_keyed_table(version=...)``,
+    ascending: the per-version manifests still committed, and the tip's
+    version (its copy may be crash-lost, :func:`_read_version`).  The
+    listing goes through the storage seam (``store.list_dir`` = the
+    ``_manifest.v`` prefix listing on an object store), matching where
+    the snapshot objects are actually written."""
+    out = set()
     for f in store.list_dir(target):
         if f.startswith("_manifest.v") and f.endswith(".json"):
             try:
-                out.append(int(f[len("_manifest.v") : -len(".json")]))
+                out.add(int(f[len("_manifest.v") : -len(".json")]))
             except ValueError:
                 continue
+    tip = _load_manifest(target, store)
+    if tip is not None:
+        out.add(tip["version"])
     return sorted(out)
 
 
@@ -3378,19 +3403,19 @@ def table_history_detail(target: str, store=LOCAL_STORE) -> list[dict]:
     storage seam; no data moves — same cost model as time travel."""
     out = []
     for v in table_history(target, store):
-        m = store.read_json(_version_manifest_path(target, v)) or {}
-        live = [f for files in m.get("buckets", {}).values() for f in files]
-        rows = m.get("rows") or {}
+        m = _read_version(target, v, store)
+        live = [f for files in m["buckets"].values() for f in files]
+        rows = m["rows"]
         total = (
             sum(rows[f] for f in live)
-            if not m.get("deltas") and all(f in rows for f in live)
+            if not m["deltas"] and all(f in rows for f in live)
             else None
         )
         out.append(
             {
                 "version": v,
-                "operation": m.get("operation", "commit"),
-                "committed_at": m.get("committed_at"),
+                "operation": m["operation"],
+                "committed_at": m["committed_at"],
                 "num_files": len(live),
                 "total_rows": total,
             }
@@ -3422,17 +3447,15 @@ def table_stats(target: str, store=LOCAL_STORE) -> dict:
     manifest = _open_table(target, store)[0]
     mapping, dropped = _mapping_of(manifest)
     remapped = set(dropped) | set(mapping) | set(mapping.values())
-    live = sorted(
-        f for files in manifest.get("buckets", {}).values() for f in files
-    )
-    clean = not manifest.get("deltas")
-    rows = manifest.get("rows") or {}
+    live = sorted(f for files in manifest["buckets"].values() for f in files)
+    clean = not manifest["deltas"]
+    rows = manifest["rows"]
     row_count = (
         sum(rows[f] for f in live)
         if clean and all(f in rows for f in live)
         else None
     )
-    stats = manifest.get("stats", {})
+    stats = manifest["stats"]
     columns: dict[str, dict] = {}
     for col in _stats_cols_of(manifest):
         if col in remapped:
@@ -3480,8 +3503,7 @@ def resolve_as_of(target: str, ts, store=LOCAL_STORE) -> int:
         ts = dt.timestamp()
     best = None
     for v in table_history(target, store):
-        m = store.read_json(_version_manifest_path(target, v)) or {}
-        committed = m.get("committed_at")
+        committed = _read_version(target, v, store)["committed_at"]
         # pre-feature manifests carry no stamp: treat as "before any
         # requested time" (they ARE the oldest commits) — eligible.
         if committed is None or committed <= ts:
@@ -3524,11 +3546,8 @@ def table_changes(
     span's data, with no change log needing to be captured at write
     time (the manifests ARE the log).
     """
-    tip = _load_manifest(target, store)
-    if key is None:
-        # default to the table's own key (the manifest records it) — a
-        # hardcoded default silently mis-keys any non-"oid__id" table
-        key = (tip or {}).get("key", "oid__id")
+    tip, key_of_table, _ = _open_table(target, store)
+    key = key or key_of_table
 
     def canon(df: DataFrame, out: str) -> DataFrame:
         row = F.struct(*[F.col(c) for c in sorted(df.columns)])
@@ -3540,12 +3559,8 @@ def table_changes(
     # "update" on every key (the JSON rows embed column names) — gate
     # the diff to same-mapping spans; diff across the rename in two
     # legs, or purge first
-    m_from = store.read_json(_version_manifest_path(target, from_version))
-    m_to = (
-        store.read_json(_version_manifest_path(target, to_version))
-        if to_version is not None
-        else tip
-    )
+    m_from = _read_version(target, from_version, store)
+    m_to = tip if to_version is None else _read_version(target, to_version, store)
     if _mapping_of(m_from) != _mapping_of(m_to):
         raise ValueError(
             f"table_changes({from_version} -> {to_version}): the column "
@@ -4474,7 +4489,7 @@ def restore_keyed_table(
     cur, _, now_nb = _open_table(target, store)
     if version == cur.get("version"):
         return version  # already there: no-op, no version churn
-    snap = store.read_json(_version_manifest_path(target, version))
+    snap = _read_version(target, version, store)
     if snap is None:
         raise FileNotFoundError(
             f"no snapshot manifest for version {version} at {target} "
@@ -4503,13 +4518,10 @@ def restore_keyed_table(
     manifest.update(
         version=new_version, retired=_retire(target, cur, snap_live, store)
     )
-    _commit_manifest(
-        target, manifest, expected_version=cur["version"], store=store
-    )
+    _commit_manifest(target, manifest, cur, store)
     return new_version
 
 
-@_records_op("clone")
 def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     """Delta-style SHALLOW CLONE: make ``dest`` an independent keyed
     table whose manifest references ``src``'s current live files *in
@@ -4529,7 +4541,7 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     with the recorded schema, bucket count and column mapping
     (:func:`_repoint`); the bucket key, the ``auto`` flag and the CHECK
     constraints are set on the clone's manifest explicitly (it has no
-    tip to carry them from).  Writer-txn watermarks and
+    base to carry them from).  Writer-txn watermarks and
     ambient policies are table state and do not clone (as in Delta): a
     clone is a new table to every idempotent writer, which must re-apply
     its batches here.  The clone's history STARTS at src's current
@@ -4555,7 +4567,21 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
     Returns the clone's initial version.  Refuses a dest that is
     already a keyed table (clone never overwrites).
     """
+    return _clone(src, dest, store)
+
+
+@_records_op("clone")
+def _clone(src: str, dest: str, store, branch: bool = False) -> int:
+    """:func:`clone_keyed_table`; a ``branch`` (:func:`wap_begin`) also
+    records its fork point in the clone's one commit, as the manifest's
+    ``wap`` key."""
     manifest, key, _ = _open_table(src, store)
+    if branch:
+        # publish re-owns branch files into the source manifest —
+        # auditing that flow under two divergent mappings is not worth
+        # the risk; run purge_column_mapping before branching a renamed
+        # table
+        _require_unmapped(manifest, "wap_begin")
     # _load_manifest (not a bare manifest read) so a pre-manifest legacy
     # layout at dest also refuses — clone never overwrites data
     if _load_manifest(dest, store) is not None:
@@ -4574,8 +4600,10 @@ def clone_keyed_table(src: str, dest: str, store=LOCAL_STORE) -> int:
         version=version, retired=[], key=key, auto=bool(manifest.get("auto")),
         constraints=manifest["constraints"],
     )
+    if branch:
+        cloned["wap"] = {"src": src_abs, "base_version": version}
     os.makedirs(dest, exist_ok=True)
-    _commit_manifest(dest, cloned, expected_version=None, store=store)
+    _commit_manifest(dest, cloned, None, store)
     return version
 
 
@@ -4655,7 +4683,7 @@ def keyed_append(
     if admitted is None:
         return 0
     bucketed, affected, stats_cols, _ = admitted
-    deltas = manifest.get("deltas", {})
+    deltas = manifest["deltas"]
     probe_files = [
         f for b in affected for f in manifest["buckets"].get(b, [])
     ] + [e["path"] for b in affected for e in deltas.get(b, [])]
@@ -4779,37 +4807,39 @@ def _branch_path(src: str, name: str) -> str:
     return os.path.join(src, WAP_SUBDIR, name)
 
 
-def _wap_meta_path(branch: str) -> str:
-    return os.path.join(branch, "_wap.json")
+def _is_branch(target: str) -> bool:
+    """Whether ``target`` lies directly under a table's ``_branches``."""
+    return os.path.basename(os.path.dirname(os.path.abspath(target))) == WAP_SUBDIR
+
+
+def _fork_of(branch: str, store) -> dict | None:
+    """A WAP branch's fork point — its manifest's ``wap`` key:
+    ``{"src", "base_version"}`` — or None when ``branch`` is no branch."""
+    return (_load_manifest(branch, store) or {}).get("wap")
 
 
 def wap_begin(src: str, name: str, store=LOCAL_STORE) -> str:
     """Open a WAP branch of ``src``: shallow-clone it to
-    ``<src>/_branches/<name>`` and record the source version the
-    eventual publish must CAS against.  Returns the branch path — write
-    to it with the ordinary keyed-table operations."""
+    ``<src>/_branches/<name>``, recording the fork point (the source
+    version the eventual publish must CAS against) in the clone's one
+    commit, as its manifest's ``wap`` key.  Returns the branch path —
+    write to it with the ordinary keyed-table operations, which carry
+    the key."""
     branch = _branch_path(src, name)
-    # publish re-owns branch files into the source manifest — auditing
-    # that flow under two divergent mappings is not worth the risk;
-    # run purge_column_mapping before branching a renamed table
-    _require_unmapped(_load_manifest(src, store), "wap_begin")
-    base_version = clone_keyed_table(src, branch, store)
-    store.write_json(
-        _wap_meta_path(branch),
-        {"src": os.path.abspath(src), "base_version": base_version},
-    )
+    _clone(src, branch, store, branch=True)
     return branch
 
 
 def wap_branches(src: str, store=LOCAL_STORE) -> list[str]:
     """Branch names currently open under ``src``: each directory under
-    ``_branches`` that holds a ``_wap.json``.  A published branch stays
-    listed until its directory is removed — :func:`wap_abandon` refuses
-    it while the source references its files."""
+    ``_branches`` whose manifest records a fork point.  A published
+    branch stays listed until its directory is removed —
+    :func:`wap_abandon` refuses it while the source references its
+    files."""
     return sorted(
         d
         for d in store.list_dir(os.path.join(src, WAP_SUBDIR))
-        if store.exists(_wap_meta_path(os.path.join(src, WAP_SUBDIR, d)))
+        if _fork_of(os.path.join(src, WAP_SUBDIR, d), store) is not None
     )
 
 
@@ -4822,7 +4852,7 @@ def wap_abandon(src: str, name: str, store=LOCAL_STORE) -> None:
     source needs the branch's files — including after a publish that
     crashed right after its CAS."""
     branch = _branch_path(src, name)
-    if store.read_json(_wap_meta_path(branch)) is None:
+    if _fork_of(branch, store) is None:
         raise FileNotFoundError(f"no WAP branch {name!r} under {src}")
     manifest = _load_manifest(src, store) or {}
     refs = _live_files(manifest) + [e["path"] for e in manifest.get("retired", [])]
@@ -4859,13 +4889,13 @@ def wap_publish(
     diverged from the source's (rebucket on a branch is not
     publishable)."""
     branch = _branch_path(src, name)
-    meta = store.read_json(_wap_meta_path(branch))
+    branch_manifest = _load_manifest(branch, store)
+    meta = (branch_manifest or {}).get("wap")
     if meta is None:
         raise FileNotFoundError(f"no WAP branch {name!r} under {src}")
     src_manifest = _load_manifest(src, store)
-    branch_manifest = _load_manifest(branch, store)
-    if src_manifest is None or branch_manifest is None:
-        raise FileNotFoundError(f"source or branch table missing for {name!r}")
+    if src_manifest is None:
+        raise FileNotFoundError(f"source table missing for {name!r}")
     if branch_manifest["version"] == meta["base_version"]:
         raise ValueError(f"branch {name!r} has no commits — nothing to publish")
     # an auto-sized layout's count moves by itself; a fixed one's only
@@ -4929,9 +4959,7 @@ def wap_publish(
         version=branch_manifest["version"],
         retired=_retire(src, src_manifest, published_live, store),
     )
-    _commit_manifest(
-        src, published, expected_version=meta["base_version"], store=store
-    )
+    _commit_manifest(src, published, src_manifest, store)
     return {
         "version": branch_manifest["version"],
         "n_published_files": len(published_live),
@@ -4965,7 +4993,7 @@ def adopt_foreign_files(target: str, store=LOCAL_STORE) -> int:
     manifest = _open_table(target, store)[0]
     refs = [(b, f) for b, fs in manifest["buckets"].items() for f in fs]
     refs += [
-        (b, e["path"]) for b, es in manifest.get("deltas", {}).items() for e in es
+        (b, e["path"]) for b, es in manifest["deltas"].items() for e in es
     ]
     moved: dict[str, str] = {}
     for b, f in refs:
@@ -4982,12 +5010,8 @@ def adopt_foreign_files(target: str, store=LOCAL_STORE) -> int:
     adopted = _repoint(manifest, lambda f: moved.get(f, f))
     # foreign originals are not ours to retire or vacuum — the manifest
     # simply stops referencing them
-    adopted.update(
-        version=manifest["version"] + 1, retired=manifest.get("retired", [])
-    )
-    _commit_manifest(
-        target, adopted, expected_version=manifest["version"], store=store
-    )
+    adopted.update(version=manifest["version"] + 1, retired=manifest["retired"])
+    _commit_manifest(target, adopted, manifest, store)
     return len(moved)
 
 
@@ -5034,8 +5058,7 @@ def expire_snapshots(
         if v in protected:
             continue
         if older_than_s is not None:
-            snap = store.read_json(_version_manifest_path(target, v)) or {}
-            committed = snap.get("committed_at")
+            committed = _read_version(target, v, store)["committed_at"]
             if committed is not None and now - committed < older_than_s:
                 continue
         store.delete_file(_version_manifest_path(target, v))

@@ -67,7 +67,7 @@ def _live_split(target: str, store) -> tuple[list[str], list[str], dict]:
     manifest = sink._load_manifest(target, store)
     if manifest is None:
         raise FileNotFoundError(f"no keyed table at {target}")
-    deltas = manifest.get("deltas", {})
+    deltas = manifest["deltas"]
     clean_files = [
         f
         for b, fs in manifest["buckets"].items()

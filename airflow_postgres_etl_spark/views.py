@@ -84,8 +84,8 @@ from .sink import (
     _mapping_of,
     _open_table,
     _read_files,
+    _read_version,
     _to_logical_df,
-    _version_manifest_path,
     read_keyed_table,
 )
 from .sources.parquet_source import footer_schema
@@ -132,7 +132,7 @@ def _meta_path(mv_path: str) -> str:
 def _base_files(manifest: dict) -> set[str] | None:
     """The snapshot's file multiset — or None if the snapshot is unclean
     (pending MOR deltas make file-rows != snapshot-rows)."""
-    if manifest.get("deltas"):
+    if manifest["deltas"]:
         return None
     return {f for files in manifest["buckets"].values() for f in files}
 
@@ -199,7 +199,7 @@ def _file_diff(store, path, manifest, old_version):
     removed file already vacuumed past retention)."""
     if old_version == manifest["version"]:
         return [], []
-    old_manifest = store.read_json(_version_manifest_path(path, old_version))
+    old_manifest = _read_version(path, old_version, store)
     new_files = _base_files(manifest)
     old_files = _base_files(old_manifest) if old_manifest else None
     if new_files is None or old_files is None:
@@ -251,16 +251,8 @@ def _read_pinned(spark, target, version, store, **kw) -> DataFrame:
     the view meta, or a writer committing mid-refresh produces a view
     whose content is v(N+1) while its meta says N — and the next
     incremental refresh double-applies the N→N+1 delta (VERDICT r7
-    task 5).  Falls back to the tip read only when the pinned version IS
-    the tip but its per-version manifest copy was crash-lost (the
-    documented CAS/copy gap) — same snapshot either way."""
-    try:
-        return read_keyed_table(spark, target, store, version=version, **kw)
-    except FileNotFoundError:
-        m = _load_manifest(target, store)
-        if m is not None and m["version"] == version:
-            return read_keyed_table(spark, target, store, **kw)
-        raise
+    task 5)."""
+    return read_keyed_table(spark, target, store, version=version, **kw)
 
 
 def _write_meta(store, mv_path, ep: _Endpoint, data: str) -> None:

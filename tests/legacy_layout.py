@@ -1,8 +1,9 @@
 """Fixtures for keyed tables written before the manifest recorded their
 table state: such a table kept its key, its ``auto`` flag and (before
 manifests recorded the count) its bucket count in a ``_bucket_spec.json``
-beside the manifest, and its CHECK constraints in a
-``_constraints.json``.  The sink now only reads both files."""
+beside the manifest, its CHECK constraints in a ``_constraints.json``,
+and a WAP branch its fork point in a ``_wap.json``.  The sink now only
+reads these files (``sink._normalize``)."""
 
 from __future__ import annotations
 
@@ -43,3 +44,12 @@ def write_legacy_constraints(target: str, constraints: dict[str, str]) -> None:
     entry."""
     LOCAL_STORE.write_json(os.path.join(target, "_constraints.json"), constraints)
     _strip(target, "constraints")
+
+
+def write_legacy_fork(branch: str) -> None:
+    """Give the WAP branch at ``branch`` the fork record of one opened
+    before manifests recorded it: the old ``_wap.json`` holding its fork
+    point, and its manifests without a ``wap`` entry."""
+    fork = sink._load_manifest(branch)["wap"]
+    LOCAL_STORE.write_json(os.path.join(branch, "_wap.json"), fork)
+    _strip(branch, "wap")

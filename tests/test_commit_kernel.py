@@ -901,27 +901,31 @@ class _ReadSpy(LocalManifestStore):
 #: op -> (the 2-row change of :data:`OPS`, through ``store``; the
 #: manifest reads and listings it makes on a table created with its
 #: constraints in the manifest).  Each read one ``_constraints.json``
-#: more when constraints lived beside the manifest.
+#: more when constraints lived beside the manifest, and one manifest
+#: more (a listing too, on a first commit) when the commit re-read the
+#: tip to carry the table state instead of taking it from its base.
+#: ``bootstrap`` is a first commit, of a new table beside the base one.
 READS = {
     "merge": (
         lambda s, t, store: sink.keyed_overwrite_parquet(
             s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t, store=store
         ),
-        (4, 4),
+        (3, 4),
     ),
     "merge_mor": (
         lambda s, t, store: sink.keyed_merge_mor(
             s, _rows(s, [("k1", 10, 0.5), ("k2", 20, 0.5)]), t, store=store
         ),
-        (3, 3),
+        (2, 3),
     ),
     "merge_into": (
         lambda s, t, store: sink.merge_into(
             s, t, _rows(s, [("k1", 10, 0.5), ("n1", 1, 0.5)]),
             when_matched_update={"v": "s_v"}, store=store,
         ),
-        (3, 3),
+        (2, 3),
     ),
+    "bootstrap": (lambda s, t, store: _base(s, t + "_new", store), (1, 6)),
 }
 
 
@@ -935,3 +939,50 @@ def test_writes_read_no_side_file(spark, tmp_path, op):
     run(spark, target, spy)
     assert set(spy.reads) == {sink.MANIFEST_NAME}
     assert (len(spy.reads), spy.listings) == counts
+
+
+class _LosesVersionCopy(LocalManifestStore):
+    """Raises on the first per-version manifest write once armed: a
+    crash between a commit's CAS and its version copy."""
+
+    armed = False
+
+    def write_json(self, path, obj):
+        if self.armed and os.path.basename(path).startswith("_manifest.v"):
+            self.armed = False
+            raise OSError("simulated crash after the manifest CAS")
+        super().write_json(path, obj)
+
+
+def test_a_crash_lost_version_copy_reads_through_the_tip(spark, tmp_path):
+    """The tip is the one record of a version whose copy was lost after
+    its CAS: time travel, TIMESTAMP AS OF, the change feed and history
+    all see that version, and the next commit lands over it."""
+    import time
+
+    target, store = str(tmp_path / "t"), _LosesVersionCopy()
+    _base(spark, target, store)
+    store.armed = True
+    with pytest.raises(OSError, match="simulated crash"):
+        sink.keyed_overwrite_parquet(
+            spark, _rows(spark, [("k1", 10, 0.5), ("n1", 1, 0.5)]), target,
+            store=store,
+        )
+    n = sink.table_version(target, store)
+    assert not os.path.exists(sink._version_manifest_path(target, n))
+    df = sink.read_keyed_table(spark, target, store, version=n)
+    assert {tuple(r) for r in df.select(*sorted(df.columns)).collect()} == (
+        _snapshot(spark, target, store)
+    )
+    assert sink.resolve_as_of(target, time.time(), store) == n
+    changes = sink.table_changes(spark, target, n - 1, n, store=store)
+    assert {(r.oid__id, r.change_type) for r in changes.collect()} == {
+        ("k1", "update"), ("n1", "insert"),
+    }
+    last = sink.table_history_detail(target, store)[-1]
+    assert (last["version"], last["operation"], last["total_rows"]) == (
+        n, "merge", 13,
+    )
+    sink.keyed_merge_mor(spark, _rows(spark, [("k2", 20, 0.5)]), target, store=store)
+    assert sink.table_version(target, store) == n + 1
+    assert os.path.exists(sink._version_manifest_path(target, n + 1))

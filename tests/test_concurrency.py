@@ -226,16 +226,12 @@ def test_retry_budget_exhausts(spark, tmp_path, monkeypatch):
     real_commit = sink._commit_manifest
     calls = {"n": 0}
 
-    def always_lose(tgt, manifest, expected_version, store=sink.LOCAL_STORE):
+    def always_lose(tgt, manifest, base, store=sink.LOCAL_STORE):
         calls["n"] += 1
         # someone else always lands first on the real store
         cur = sink._load_manifest(tgt)
-        real_commit(
-            tgt,
-            {**cur, "version": cur["version"] + 1},
-            expected_version=cur["version"],
-        )
-        return real_commit(tgt, manifest, expected_version, store=store)
+        real_commit(tgt, {**cur, "version": cur["version"] + 1}, cur)
+        return real_commit(tgt, manifest, base, store=store)
 
     monkeypatch.setattr(sink, "_commit_manifest", always_lose)
     with pytest.raises(ConcurrentWriteError):

@@ -24,7 +24,12 @@ from airflow_postgres_etl_spark.storage import (
     LocalManifestStore,
 )
 
-from .legacy_layout import write_legacy_constraints, write_legacy_spec
+from .legacy_layout import (
+    _strip,
+    write_legacy_constraints,
+    write_legacy_fork,
+    write_legacy_spec,
+)
 
 
 def _rows(spark, data):
@@ -280,6 +285,70 @@ def test_legacy_constraints_are_enforced_recorded_and_stay_dropped(
     assert sink.table_constraints(target) == {}
     assert LOCAL_STORE.read_json(sink._manifest_path(target))["constraints"] == {}
     assert _state(spark, target) == {"k0": 0, "k1": 500, "k2": 600, "k3": 3}
+
+
+def _premanifest(spark, target) -> None:
+    """Rewrite ``target`` as a sink wrote it before manifests: the same
+    rows in bucket directories at the target root, and its table state
+    in the old side files only."""
+    import shutil
+
+    rows = [tuple(r) for r in sink.read_keyed_table(spark, target).collect()]
+    constraints = sink.table_constraints(target)
+    shutil.rmtree(target)
+    _rows(spark, rows).withColumn(
+        sink.BUCKET_COL, sink._bucket_expr("oid__id", 2)
+    ).write.partitionBy(sink.BUCKET_COL).parquet(target)
+    write_legacy_spec(target, "oid__id", 2)
+    write_legacy_constraints(target, constraints)
+
+
+#: how to make a table's manifests old: each form a manifest had before
+#: the keys it lacks were recorded (``wap``: on a WAP branch)
+LEGACY_FORMS = {
+    "premanifest": _premanifest,
+    "spec": lambda spark, t: write_legacy_spec(t, "oid__id", 2),
+    "constraints": lambda spark, t: write_legacy_constraints(
+        t, sink.table_constraints(t)
+    ),
+    "stamp": lambda spark, t: _strip(t, "committed_at", "operation"),
+    "rows_bytes": lambda spark, t: _strip(t, "rows", "bytes"),
+    "wap": lambda spark, t: write_legacy_fork(t),
+}
+
+#: the table state the folds recover
+_STATE_KEYS = ("key", "num_buckets", "auto", "constraints", "wap")
+
+
+@pytest.mark.parametrize("form", sorted(LEGACY_FORMS))
+def test_every_legacy_form_reads_and_commits_as_current(spark, tmp_path, form):
+    """``_load_manifest`` and ``_read_version`` of an old form return
+    every key the current form of the same state holds, with the same
+    table state, and the old form's next commit records them all.  A
+    pre-manifest layout's reads lack only the recorded schema (no fold
+    can know it without reading data; readers infer it)."""
+    target = str(tmp_path / "t")
+    _table(spark, target, n=8, num_buckets=2)
+    sink.add_table_constraint(spark, target, "v_small", "v < 900")
+    if form == "wap":
+        target = sink.wap_begin(target, "b")
+    current = sink._load_manifest(target)
+    state = {k: current.get(k) for k in _STATE_KEYS}
+    LEGACY_FORMS[form](spark, target)
+    raw = LOCAL_STORE.read_json(sink._manifest_path(target))
+    assert raw is None or set(current) - set(raw), "not an old form"
+
+    tip = sink._load_manifest(target)
+    for m in (tip, sink._read_version(target, tip["version"])):
+        lacking = set(current) - set(m)
+        assert lacking == ({"schema"} if form == "premanifest" else set())
+        assert {k: m.get(k) for k in _STATE_KEYS} == state
+    sink.keyed_overwrite_parquet(spark, _rows(spark, [("k1", 10)]), target)
+    after = LOCAL_STORE.read_json(sink._manifest_path(target))
+    assert set(current) <= set(after)
+    assert {k: after.get(k) for k in _STATE_KEYS} == state
+    live = set(sink._live_files(after))
+    assert live <= set(after["rows"]) and live <= set(after["bytes"])
 
 
 def test_merge_racing_a_growth_commit_conflicts(spark, tmp_path):

@@ -23,6 +23,8 @@ from airflow_postgres_etl_spark.storage import (
     LocalManifestStore,
 )
 
+from .legacy_layout import write_legacy_fork
+
 
 def _table(spark, tmp_path, rows):
     t = Engine(spark).table(str(tmp_path / "t"))
@@ -145,6 +147,51 @@ def test_abandon_refuses_a_branch_whose_publish_crashed_after_its_cas(
         t.abandon("load")
     assert t.branches() == ["load"]
     assert _state(t) == want
+
+
+def test_branch_records_its_fork_in_its_clone_commit(spark, tmp_path):
+    """The fork point is the branch manifest's ``wap`` key, written by
+    the clone's one commit: a crash right after that CAS (in the
+    version-copy write) leaves a branch that lists, abandons and can be
+    opened again — no side file was left to write."""
+    store = _CrashAfterCas()
+    t = Table(spark, str(tmp_path / "t"), store=store)
+    t.merge(
+        spark.createDataFrame([("a", 1)], "k string, v long"),
+        key="k", num_buckets=4, vacuum=False,
+    )
+    store.armed = True
+    with pytest.raises(OSError, match="simulated crash"):
+        t.branch("b")
+    assert t.branches() == ["b"]
+    branch = sink._branch_path(t.path, "b")
+    assert sink._load_manifest(branch, store)["wap"] == {
+        "src": os.path.abspath(t.path), "base_version": 1,
+    }
+    assert not os.path.exists(os.path.join(branch, "_wap.json"))
+    t.abandon("b")
+    assert t.branches() == []
+    b = t.branch("b")
+    b.merge(spark.createDataFrame([("c", 3)], "k string, v long"), key="k")
+    assert sink._load_manifest(branch, store)["wap"]["base_version"] == 1
+    t.publish("b")
+    assert _state(t) == {"a": 1, "c": 3}
+    assert "wap" not in sink._load_manifest(t.path, store)
+
+
+def test_legacy_fork_file_branch_lists_publishes_and_abandons(spark, tmp_path):
+    """A branch opened when its fork point lived in ``_wap.json`` still
+    lists, publishes and abandons."""
+    t = _table(spark, tmp_path, [("a", 1)])
+    for name in ("pub", "drop"):
+        b = t.branch(name)
+        b.merge(spark.createDataFrame([(name, 2)], "k string, v long"), key="k")
+        write_legacy_fork(b.path)
+    assert t.branches() == ["drop", "pub"]
+    t.publish("pub")
+    assert _state(t) == {"a": 1, "pub": 2}
+    t.abandon("drop")
+    assert t.branches() == ["pub"]
 
 
 def test_vacuum_ownership_across_publish(spark, tmp_path):
